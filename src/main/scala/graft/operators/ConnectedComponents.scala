@@ -40,15 +40,15 @@ object ConnectedComponents {
 
   def apply(vertices: DataFrame, edges: DataFrame, maxIter: Int = 20): DataFrame = {
     val spark = vertices.sparkSession
-    // One materialization: count() and the follow-up consumer (collect or
-    // the distributed loop's symmetric closure) would otherwise both
-    // re-execute the upstream pair-mining join.
-    val edgesM = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpoint(true)
-    val edgeCount = edgesM.count()
-    if (edgeCount <= driverThreshold(spark)) {
-      import spark.implicits._
-      val es = edgesM.as[(Long, Long)].collect()
+    import spark.implicits._
+    val threshold = driverThreshold(spark)
+    val edgesL = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    // ONE bounded action both picks the path and, at or under the
+    // threshold, is the driver's whole edge list; only the distributed
+    // loop, which reads the edges every iteration, pays for a checkpoint
+    val es = edgesL.limit(threshold.max(0L).min(Int.MaxValue - 1L).toInt + 1)
+      .as[(Long, Long)].collect()
+    if (es.length <= threshold) {
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -67,7 +67,7 @@ object ConnectedComponents {
         .join(broadcast(mapping), vertices("id") === col("id2"), "left_outer")
         .select(col("id"), coalesce(col("comp"), col("id")).as("component"))
     }
-    distributed(vertices, edgesM, maxIter)
+    distributed(vertices, edgesL.localCheckpoint(true), maxIter)
   }
 
   private[graft] def distributed(vertices: DataFrame, edges: DataFrame,

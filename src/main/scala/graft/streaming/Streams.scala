@@ -1396,9 +1396,16 @@ object Streams {
     * rule is per-pair and time-stable (containers are ALL keepers, which
     * only accumulate), so streaming decisions are monotone and match the
     * batch funnel on every prefix. Candidates ride the near-dup stage's
-    * own inverted-token joins (one extra filter pass, no new join); the
+    * own inverted-token join (one extra filter pass, no new join); the
     * containment-rejected registry (`_state/crej`) is the fourth state
     * family, log-structured like the digest registry.
+    *
+    * Per batch the body builds few, stable physical plans — one eager
+    * checkpoint per stage, batch-bounded join sides broadcast — so their
+    * generated classes stay in Spark's 100-entry codegen cache from one
+    * batch to the next instead of recompiling every batch (StreamingSpec
+    * pins the compilations and jobs per steady batch; SCALING.md has the
+    * measurements).
     *
     * Stage contracts are the FUNNEL'S OWN, not re-implementations: the
     * quality gate is [[graft.queries.Llm.qualityPredicate]] (the shared
@@ -1454,8 +1461,8 @@ object Streams {
       // containment stage threshold, integer num/den like the batch twin
       cNum: Int = 9, cDen: Int = 10,
       // test seam: invoked after each durable write of a batch —
-      // ("digests" | "toks" | "memrep" | "decisions") — the injection
-      // points for the kill-mid-batch recovery golden in StreamingSpec
+      // ("digests" | "toks" | "memrep" | "crej" | "decisions") — the
+      // injection points for the kill-mid-batch recovery golden in StreamingSpec
       onBatchProgress: (Long, String) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.types._
@@ -1470,179 +1477,147 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         val TF = graft.functions.TextFunctions
-        // persists are released in the finally below even when the batch
-        // DIES mid-write (the crash-injection tests keep the JVM alive, and
-        // a real foreachBatch failure is retried in-process by the stream
-        // runner before the query fails) — a crashed attempt must not pin
-        // executor memory for frames no one can reach
-        val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        def pin(df: DataFrame): DataFrame = { persisted += df; df.persist() }
-        // batch-scoped localCheckpoints released alongside the pins: their
-        // blocks outlive the batch otherwise (see releaseLocalCheckpoint)
+        // the batch-scoped localCheckpoints are released in the finally
+        // below even when the batch DIES mid-write (the crash-injection
+        // tests keep the JVM alive, and a real foreachBatch failure is
+        // retried in-process by the stream runner before the query fails) —
+        // a crashed attempt must not pin executor memory for frames no one
+        // can reach (see releaseLocalCheckpoint)
         val checkpointed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        def cp(df: DataFrame): DataFrame = { checkpointed += df; df }
+        // Every eager action is labelled with its sink stage, so traced
+        // spans and the Spark UI attribute a batch's jobs to it. Stage
+        // frames are EAGER localCheckpoints: every state read names its
+        // `batch_id<N` generations explicitly, so this batch's writes to
+        // `batch_id=N` can never change what a read returns (recacheByPath
+        // only refreshes cached relations rooted under the written path,
+        // and none is) — the checkpoints are kept because they are the
+        // fastest plan: a lazy persist in their place measured 30–40%
+        // slower batches and ~30% more retained heap (4-vCPU host).
+        // A checkpoint reports no size, so joins broadcast their
+        // batch-bounded side explicitly and batch-bounded distincts run in
+        // one partition: without that the planner shuffles (and sorts) both
+        // sides, and each extra stage is another job and generated class.
+        def cp(stage: String)(df: => DataFrame): DataFrame = {
+          val c = graft.Caches.labeled(s, s"curation:$stage")(
+            df.localCheckpoint(true))
+          checkpointed += c; c
+        }
+        def write(family: String, dir: String)(df: DataFrame): Unit = {
+          graft.Caches.labeled(s, s"curation:w:$family")(
+            df.write.mode("overwrite").parquet(s"$path/$dir/batch_id=$batchId"))
+          onBatchProgress(batchId, family)
+        }
         try {
-        val in = pin(batch.select("doc_id", "text"))
-        // stage 1: quality — the funnel's own predicate
-        val qual = pin(in.filter(graft.queries.Llm.qualityPredicate)
-          .withColumn("h", md5(col("text"))))
-        // stage 2: exact dedup — min-id keeper per digest within the batch,
-        // then anti-join against the cumulative registry.
-        // EAGER localCheckpoint, not persist, on every state-derived frame:
-        // the stage-4 writes to _state/* trigger Spark's recacheByPath,
-        // which would re-evaluate a merely-cached plan against the NEW file
-        // listing — the batch would anti-join away its own just-appended
-        // digests. Checkpointing truncates the lineage so the pre-write
-        // read is what every later consumer sees.
-        val wD = org.apache.spark.sql.expressions.Window
-          .partitionBy("h").orderBy("doc_id")
+        val in = cp("in")(batch.select("doc_id", "text"))
+        // stages 1+2: quality — the funnel's own predicate — then exact
+        // dedup: the min-id keeper per text (the funnel groups by its md5
+        // digest; every text in a digest group is the same text), anti-
+        // joined against the cumulative digest registry. A keeper carries
+        // its token set, the only part of the text later stages read.
         val seen = readStateBefore(s, s"$path/_state/digests", digestSchema, batchId)
-        val keepers = cp(qual
-          .withColumn("rn", row_number().over(wD)).filter(col("rn") === 1)
+        val keepers = cp("keepers")(in.filter(graft.queries.Llm.qualityPredicate)
+          .groupBy("text").agg(min("doc_id").as("doc_id"))
+          .withColumn("h", md5(col("text")))
           .join(seen, Seq("h"), "left_anti")
-          .select("doc_id", "text", "h").localCheckpoint(true))
-        // stage 3: near-dup + containment share ONE inverted-token candidate
-        // join per side — the grouped (i, na, nb) frames below feed the
-        // Jaccard >= t predicate (CC near-dup edges) AND the proper-
-        // containment predicate (stage 3.5), so the containment gate adds
-        // a filter pass, not a join
+          .select(col("doc_id"), col("h"), TF.tokenSet(col("text")).as("ws")))
+        // stage 3: near-dup and containment share ONE tagged inverted-token
+        // join — each batch keeper (a, na) against the prior keepers' tokens
+        // (cur = false) and the batch's own (cur = true; a < b keeps each
+        // in-batch pair once). A hit is a Jaccard >= t edge or a snippet
+        // pair; nothing else leaves the join.
+        val batchToks = keepers.select(col("doc_id"),
+          size(col("ws")).cast("long").as("n"), explode(col("ws")).as("w"))
         val stateToks = readStateBefore(s, s"$path/_state/toks", tokSchema, batchId)
-        val memRep = cp(
-          readSnapshotBefore(s, s"$path/_state/memrep", repSchema, batchId)
-            .localCheckpoint(true))
-        val crejPrior = cp(
-          readStateBefore(s, s"$path/_state/crej", crejSchema, batchId)
-            .localCheckpoint(true))
-        val newToks = pin(keepers.select(col("doc_id"),
-          explode(TF.tokenSet(col("text"))).as("w")))
-        val newCnt = pin(newToks.groupBy("doc_id").agg(count(lit(1)).as("na")))
-        def jac(i: Column, x: Column, y: Column) =
-          i.cast("double") / (x + y - i).cast("double")
-        // (batch doc, prior keeper) intersections; nb = the PRIOR side's size
-        val crossG = pin(newToks.join(stateToks, "w")
-          .groupBy("doc_id", "member_id", "nb").agg(count(lit(1)).as("i"))
-          .join(newCnt, "doc_id"))
-        // (batch doc, prior cluster rep) edges via the member->rep map
-        val repHits = crossG
-          .filter(jac(col("i"), col("na"), col("nb")) >= t)
-          .join(memRep, "member_id")
-          .select(col("doc_id").as("src"), col("rep_id").as("dst"))
-          .distinct()
-        // in-batch (keeper, keeper) intersections and edges, same verify
-        val pairsG = pin(newToks.toDF("a", "w")
-          .join(newToks.toDF("b", "w"), "w")
-          .filter(col("a") < col("b"))
-          .groupBy("a", "b").agg(count(lit(1)).as("i"))
-          .join(newCnt.toDF("a", "na"), "a")
-          .join(newCnt.toDF("b", "nb2"), "b"))
-        val pairs = pairsG
-          .filter(jac(col("i"), col("na"), col("nb2")) >= t)
-          .select(col("a").as("src"), col("b").as("dst"))
-        // contracted-graph CC: prior clusters are single nodes (their
-        // reps); component label = min id = the funnel's representative
-        val nodes = keepers.select(col("doc_id").as("id"))
-          .union(repHits.select(col("dst").as("id"))).distinct()
-        val comp = cp(graft.operators.ConnectedComponents(
-          nodes, repHits.union(pairs)).localCheckpoint(true))
-        val admitted = comp.filter(col("id") === col("component"))
-          .join(keepers.select(col("doc_id").as("id")), "id")
-          .select(col("id").as("doc_id"))
-        // a prior rep absorbed into a lower-id component is DEMOTED —
-        // tombstone it (appended decisions cannot be unwritten)
-        val retracted = comp.filter(col("id") =!= col("component"))
-          .join(keepers.select(col("doc_id").as("id")), Seq("id"), "left_anti")
-          .select(col("id").as("doc_id"),
-            lit("retracted_near_dup").as("outcome"))
-        // stage 3.5: SNIPPET containment — the batch twin's
-        // Llm.curationContainmentRejects rule (coverage >= t of the smaller
-        // set by a container AT LEAST 2x its size; the 2x guard
+        val memRep = readSnapshotBefore(s, s"$path/_state/memrep", repSchema, batchId)
+        val (na, nb, i) = (col("na"), col("nb"), col("i"))
+        val near = i.cast("double") / (na + nb - i).cast("double") >= t
+        // stage 3.5's SNIPPET rule — the batch twin's
+        // Llm.curationContainmentRejects: coverage >= cNum/cDen of the
+        // smaller set by a container AT LEAST 2x its size (the 2x guard
         // structurally excludes near-dup pairs and chain-mates — see the
-        // batch twin's scaladoc. Containers are ALL keepers, a per-pair
-        // time-stable predicate, so the stream applies it monotonically:
-        // later batches only ADD rejections/retractions).
-        // Both frames are eagerly checkpointed BEFORE the state writes
-        // below — they read _state/toks, which stage 4 is about to extend
-        // (the recacheByPath trap the exact-dedup stage documents).
-        // In crossG the NEW doc is doc_id/na, the PRIOR keeper member_id/nb.
-        def snippet(x: Column, y: Column) =
-          least(x, y) * 2 <= greatest(x, y) &&
-            col("i") * cDen >= least(x, y) * cNum
-        val containedNew = cp(crossG
-          .filter(snippet(col("na"), col("nb")) && col("na") < col("nb"))
-          .select(col("doc_id"))
-          .union(pairsG.filter(snippet(col("na"), col("nb2")))
-            .select(when(col("na") < col("nb2"), col("a"))
-              .otherwise(col("b")).as("doc_id")))
-          .distinct().localCheckpoint(true))
-        // prior keepers now contained in a 2x-larger NEW keeper —
-        // retraction candidates, resolved against post-CC rep status below
-        val cPrior = cp(crossG
-          .filter(snippet(col("na"), col("nb")) && col("nb") < col("na"))
-          .select(col("member_id").as("doc_id")).distinct()
-          .localCheckpoint(true))
-        // containment-rejected = would-be-admitted (CC rep) but contained;
-        // CC non-reps keep their rejected_near_dup outcome (stage order)
-        val contRejected = admitted.join(containedNew, "doc_id")
+        // batch twin's scaladoc)
+        val snippet = least(na, nb) * 2 <= greatest(na, nb) &&
+          i * cDen >= least(na, nb) * cNum
+        val hits = cp("hits")(broadcast(batchToks.toDF("a", "na", "w"))
+          .join(stateToks.select(col("member_id").as("b"), nb, col("w"),
+              lit(false).as("cur"))
+            .union(batchToks.select(col("doc_id").as("b"), col("n").as("nb"),
+              col("w"), lit(true).as("cur"))), "w")
+          .filter(!col("cur") || col("a") < col("b"))
+          .groupBy("a", "na", "b", "nb", "cur").agg(count(lit(1)).as("i"))
+          .filter(near || snippet)
+          // a near-dup edge's target: the in-batch keeper itself, or a prior
+          // keeper's cluster rep (prior clusters are contracted to one node)
+          .join(memRep, col("b") === col("member_id") && !col("cur"), "left")
+          .select(col("a"), na, col("b"), nb, col("cur"), i,
+            when(near, when(col("cur"), col("b")).otherwise(col("rep_id"))).as("rep")))
+        // the contained doc is the smaller side; isNew = it is this batch's.
+        // Containers are ALL keepers, a per-pair time-stable predicate, so
+        // the stream applies it monotonically: later batches only ADD
+        // rejections and retractions.
+        val contained = cp("contained")(hits.filter(snippet)
+          .select(when(na < nb, col("a")).otherwise(col("b")).as("doc_id"),
+            (col("cur") || na < nb).as("isNew"))
+          .coalesce(1).distinct())
+        val edges = hits.filter(col("rep").isNotNull)
+          .select(col("a").as("src"), col("rep").as("dst"))
+        // contracted-graph CC: component label = min id = the funnel's
+        // representative; `kept` marks this batch's keepers
+        val comp = cp("cc")(graft.operators.ConnectedComponents(
+            keepers.select(col("doc_id").as("id"))
+              .union(edges.select(col("dst").as("id"))).coalesce(1).distinct(),
+            edges)
+          .join(broadcast(keepers.select(col("doc_id").as("id"), lit(true).as("kept"))),
+            Seq("id"), "left")
+          .select(col("id"), col("component"), col("kept").isNotNull.as("kept")))
         // stage 4: extend state — ALL new keeper digests + token rows
         // (cluster membership must stay matchable through dropped members),
         // and the member->rep snapshot remapped through this batch's CC
-        keepers.select("h").write.mode("overwrite")
-          .parquet(s"$path/_state/digests/batch_id=$batchId")
-        onBatchProgress(batchId, "digests")
-        newToks.join(newCnt, "doc_id")
-          .select(col("doc_id").as("member_id"), col("na").as("nb"), col("w"))
-          .write.mode("overwrite")
-          .parquet(s"$path/_state/toks/batch_id=$batchId")
-        onBatchProgress(batchId, "toks")
-        val remapped = memRep
-          .join(comp.toDF("rep_id", "newrep"), Seq("rep_id"), "left")
-          .select(col("member_id"),
-            coalesce(col("newrep"), col("rep_id")).as("rep_id"))
-          .union(keepers.select(col("doc_id").as("member_id"))
-            .join(comp.toDF("member_id", "rep_id"), "member_id")
-            .select("member_id", "rep_id"))
-          .localCheckpoint(true)
-        checkpointed += remapped
-        remapped.write.mode("overwrite")
-          .parquet(s"$path/_state/memrep/batch_id=$batchId")
-        onBatchProgress(batchId, "memrep")
-        // a containment retraction targets a prior doc that is STILL a
-        // survivor after this batch's CC (its own rep in the remapped
-        // snapshot, not already containment-rejected); an appended
-        // admission cannot be unwritten, so it gets the tombstone — the
-        // retracted_near_dup contract extended to the containment gate
-        val retractedCont = cPrior
-          .join(remapped.filter(col("member_id") === col("rep_id"))
-            .select(col("member_id").as("doc_id")), "doc_id")
-          .join(crejPrior, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), lit("retracted_containment").as("outcome"))
+        write("digests", "_state/digests")(keepers.select("h"))
+        write("toks", "_state/toks")(batchToks.select(col("doc_id").as("member_id"),
+          col("n").as("nb"), col("w")))
+        val remapped = cp("remapped")(memRep
+          .join(broadcast(comp.select(col("id").as("rep_id"), col("component").as("newrep"))),
+            Seq("rep_id"), "left")
+          .select(col("member_id"), coalesce(col("newrep"), col("rep_id")).as("rep_id"))
+          .union(comp.filter(col("kept"))
+            .select(col("id").as("member_id"), col("component").as("rep_id"))))
+        write("memrep", "_state/memrep")(remapped)
+        // decisions: one row per input doc — a keeper's verdict from CC and
+        // the containment gate (CC non-reps keep rejected_near_dup: stage
+        // order) — plus two tombstone sets, since appended admissions
+        // cannot be unwritten: a prior rep absorbed into a lower-id
+        // component is DEMOTED (retracted_near_dup), and a prior doc newly
+        // contained in a 2x-larger keeper that is STILL a survivor (its own
+        // rep after this batch's CC, not containment-rejected before) is
+        // retracted_containment
+        val verdict = comp.filter(col("kept"))
+          .join(broadcast(contained.filter(col("isNew")).select(col("doc_id").as("id"),
+            lit(true).as("cj"))), Seq("id"), "left")
+          .select(col("id").as("doc_id"),
+            when(col("id") =!= col("component"), "rejected_near_dup")
+              .when(col("cj").isNotNull, "rejected_containment")
+              .otherwise("admitted").as("v"))
+        val out = cp("out")(in.join(broadcast(verdict), Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            when(col("v").isNotNull, col("v"))
+              .when(graft.queries.Llm.qualityPredicate, "rejected_exact_dup")
+              .otherwise("rejected_quality").as("outcome"))
+          .union(comp.filter(!col("kept") && col("id") =!= col("component"))
+            .select(col("id").as("doc_id"), lit("retracted_near_dup")))
+          .union(broadcast(contained.filter(!col("isNew")))
+            .join(remapped.filter(col("member_id") === col("rep_id"))
+              .select(col("member_id").as("doc_id")), "doc_id")
+            .join(readStateBefore(s, s"$path/_state/crej", crejSchema, batchId),
+              Seq("doc_id"), "left_anti")
+            .select(col("doc_id"), lit("retracted_containment"))))
         // the containment-rejected registry (this batch's rejections +
         // retractions) — the state later batches consult so a doc is
         // tombstoned at most once and never counted a survivor again
-        contRejected.select("doc_id")
-          .union(retractedCont.select("doc_id"))
-          .write.mode("overwrite")
-          .parquet(s"$path/_state/crej/batch_id=$batchId")
-        onBatchProgress(batchId, "crej")
-        // decisions: one row per input doc (+ tombstones), exactly-once
-        val out = in.select("doc_id")
-          .join(qual.select(col("doc_id"), lit(1).as("q")), Seq("doc_id"), "left")
-          .join(keepers.select(col("doc_id"), lit(1).as("k")), Seq("doc_id"), "left")
-          .join(admitted.select(col("doc_id"), lit(1).as("a")), Seq("doc_id"), "left")
-          .join(containedNew.select(col("doc_id"), lit(1).as("cj")), Seq("doc_id"), "left")
-          .withColumn("outcome",
-            when(col("q").isNull, "rejected_quality")
-              .when(col("k").isNull, "rejected_exact_dup")
-              .when(col("a").isNull, "rejected_near_dup")
-              .when(col("cj").isNotNull, "rejected_containment")
-              .otherwise("admitted"))
-          .select("doc_id", "outcome")
-          .union(retracted)
-          .union(retractedCont)
-        out.write.mode("overwrite").parquet(s"$path/decisions/batch_id=$batchId")
-        onBatchProgress(batchId, "decisions")
+        write("crej", "_state/crej")(out.filter(col("outcome")
+          .isin("rejected_containment", "retracted_containment")).select("doc_id"))
+        write("decisions", "decisions")(out)
         } finally {
-          persisted.foreach(_.unpersist(blocking = false))
           checkpointed.foreach(releaseLocalCheckpoint)
           graft.Caches.drain(s) // operators' query-local persists
         }

@@ -69,13 +69,15 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(r == Seq(("g1", 1L, 9), ("g1", 2L, 5), ("g2", 1L, 2), ("g2", 2L, 1)))
   }
 
+  // chain 1-2-3-4, clique {6,7,8}, edge 9-10, singleton 5
+  private def ccGraph = ((1L to 10L).toDF("id"),
+    Seq((1L, 2L), (2L, 3L), (3L, 4L), (6L, 7L), (7L, 8L),
+      (6L, 8L), (10L, 9L)).toDF("src", "dst"),
+    Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L,
+      6L -> 6L, 7L -> 6L, 8L -> 6L, 9L -> 9L, 10L -> 9L))
+
   test("ConnectedComponents labels chains, cliques, and singletons correctly") {
-    val vertices = (1L to 10L).toDF("id")
-    // chain 1-2-3-4, clique {6,7,8}, edge 9-10, singleton 5
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (6L, 7L), (7L, 8L),
-      (6L, 8L), (10L, 9L)).toDF("src", "dst")
-    val expect = Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L,
-      6L -> 6L, 7L -> 6L, 8L -> 6L, 9L -> 9L, 10L -> 9L)
+    val (vertices, edges, expect) = ccGraph
     // adaptive entry point (driver union-find at this size)
     val r = graft.operators.ConnectedComponents(vertices, edges)
       .orderBy("id").as[(Long, Long)].collect().toSeq
@@ -84,6 +86,39 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val rd = graft.operators.ConnectedComponents.distributed(vertices, edges)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(rd == expect)
+  }
+
+  test("ConnectedComponents resolves on the driver AT its edge threshold " +
+      "and in the distributed loop one edge over it") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (vertices, edges, expect) = ccGraph
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).foreach(labels.add)
+    }
+    // the distributed loop labels its convergence jobs "cc:init"/"cc:iter<i>"
+    def run(threshold: Long): (Seq[(Long, Long)], Boolean) = {
+      spark.conf.set("graft.cc.driverThreshold", threshold)
+      labels.clear()
+      try {
+        val r = graft.operators.ConnectedComponents(vertices, edges)
+          .orderBy("id").as[(Long, Long)].collect().toSeq
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        (r, labels.contains("cc:init"))
+      } finally spark.conf.unset("graft.cc.driverThreshold")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val e = edges.count()
+      val (atThreshold, loopAt) = run(e)
+      assert(atThreshold == expect)
+      assert(!loopAt, s"$e edges at threshold $e must resolve on the driver")
+      val (overThreshold, loopOver) = run(e - 1)
+      assert(overThreshold == expect)
+      assert(loopOver, s"$e edges over threshold ${e - 1} must take the loop")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("AsOfJoin attaches the whole right row atomically when carried columns hold nulls") {

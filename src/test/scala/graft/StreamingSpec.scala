@@ -1973,4 +1973,57 @@ class StreamingSpec extends AnyFunSuite {
     assert(survivors == bSurv,
       "post-recovery survivor set diverged from the batch funnel")
   }
+
+  test("curation pipeline: steady batches fit Spark's codegen cache and a " +
+      "per-batch job budget") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    // Spark caches compiled classes by (class loader, source text) in a
+    // 100-entry LRU of four segments. A batch whose plans generate more
+    // classes than a segment holds recompiles them every batch, identical
+    // to the last. Steady batches that fit compile next to nothing.
+    // 20-doc batches of the documents table, like the benchmark's ingest.
+    val docs = graft.Tables.load(spark, SparkTestSession.sfDir, "documents")
+      .select(col("doc_id"), col("text")).orderBy("doc_id")
+      .as[(Long, String)].collect().take(160)
+    val (warm, steady) = docs.grouped(20).toSeq.splitAt(3)
+    val dir = java.nio.file.Files.createTempDirectory("graft_cur_codegen").toString
+    val in = MemoryStream[(Long, String)](spark)
+    val q = Streams.curationPipelineSink(
+      in.toDF().toDF("doc_id", "text"), s"$dir/out", s"$dir/ckpt", t = 0.9)
+    // the stream runs every batch's jobs under its run id as job group
+    val runId = q.runId.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == runId)
+          jobs.incrementAndGet()
+    }
+    def compilations = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      warm.foreach { c => in.addData(c.toSeq); q.processAllAvailable() }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      val (jobs0, comp0) = (jobs.get(), compilations)
+      steady.foreach { c => in.addData(c.toSeq); q.processAllAvailable() }
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      val jobsPerBatch = (jobs.get() - jobs0).toDouble / steady.length
+      val compPerBatch = (compilations - comp0).toDouble / steady.length
+      info(f"steady batch: $jobsPerBatch%.1f jobs, $compPerBatch%.1f compilations")
+      // Measured: 25 jobs; 0.4 compilations, or 23 in the ~1 in 10 test
+      // JVMs where one cache segment overflows (a key hashes the class
+      // loader too, so the segments differ per JVM). The old sink ran 63.2
+      // jobs and 146 compilations: plans that no longer fit recompile
+      // every class, every batch.
+      assert(compPerBatch <= 40,
+        s"$compPerBatch compilations per steady batch: the sink's plans " +
+          "no longer fit the codegen cache")
+      assert(jobsPerBatch <= 30, s"$jobsPerBatch jobs per steady batch")
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }
