@@ -18,13 +18,7 @@ import org.apache.spark.sql.functions.broadcast
   *   - the limit resolves `graft.broadcast.<site>` →
   *     `graft.broadcast.default` → the site's built-in default, so one conf
   *     flips a site (or, via `default`, the fleet — how tests pin the
-  *     shuffle fallback plan) without touching code;
-  *   - legacy rows-denominated confs (`graft.ivf.broadcastThreshold`,
-  *     `graft.jaccard.broadcastThreshold`, `graft.lsh.broadcastThreshold`,
-  *     `graft.containment.broadcastThreshold`,
-  *     `graft.dsir.flagBroadcastThreshold`) keep working when explicitly
-  *     set — they sit between the site conf and the default in precedence —
-  *     so existing harnesses and pinned tests are unchanged.
+  *     shuffle fallback plan) without touching code.
   *
   * Above the limit the caller's join runs WITHOUT the hint: an honest
   * shuffle (equi-keys) or a distributed cartesian (bound-scan shapes) that
@@ -42,23 +36,16 @@ object Broadcasts {
       .map(_.toLong).getOrElse(defaultBytes)
 
   /** True iff a frame of `rows × rowBytes` estimated bytes may broadcast at
-    * `site`. `legacyRowsConf`, when set in the session, is honored as a
-    * ROW threshold (back-compat) unless the site's byte conf overrides it.
+    * `site`.
     */
   def fits(s: SparkSession, site: String, rows: Long, rowBytes: Long,
-      defaultBytes: Long, legacyRowsConf: String = null): Boolean = {
-    val legacy =
-      if (legacyRowsConf == null) None else s.conf.getOption(legacyRowsConf)
-    if (s.conf.getOption(s"graft.broadcast.$site").isEmpty && legacy.isDefined)
-      rows <= legacy.get.toLong
-    else
-      // checked multiply: byte estimates scale with corpus statistics
-      // (e.g. vocabulary-width bitset rows), and a silent Long overflow
-      // would flip the gate OPEN — the one direction it must never fail.
-      // A product beyond Long.MaxValue bytes fits nowhere by definition.
-      try Math.multiplyExact(rows, rowBytes) <= limitBytes(s, site, defaultBytes)
-      catch { case _: ArithmeticException => false }
-  }
+      defaultBytes: Long): Boolean =
+    // checked multiply: byte estimates scale with corpus statistics
+    // (e.g. vocabulary-width bitset rows), and a silent Long overflow
+    // would flip the gate OPEN — the one direction it must never fail.
+    // A product beyond Long.MaxValue bytes fits nowhere by definition.
+    try Math.multiplyExact(rows, rowBytes) <= limitBytes(s, site, defaultBytes)
+    catch { case _: ArithmeticException => false }
 
   /** The gate itself: `broadcast` below the limit, `identity` above it —
     * drop-in for the `bs(frame)` pattern at every join site.
@@ -73,9 +60,8 @@ object Broadcasts {
     * here overrides them with construction-time guesses.
     */
   def gate(s: SparkSession, site: String, rows: Long, rowBytes: Long,
-      defaultBytes: Long, legacyRowsConf: String = null)
-      : DataFrame => DataFrame =
-    if (fits(s, site, rows, rowBytes, defaultBytes, legacyRowsConf))
+      defaultBytes: Long): DataFrame => DataFrame =
+    if (fits(s, site, rows, rowBytes, defaultBytes))
       (df: DataFrame) => broadcast(df)
     else identity
 

@@ -1,10 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.classic.ColumnConversions
+import org.apache.spark.sql.graft.ExpressionColumns
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, FloatType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,7 +28,7 @@ case class DotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   require(Seq(left, right).forall(e => !e.resolved ||
     e.dataType == ArrayType(DoubleType) || e.dataType == ArrayType(DoubleType, false)),
-    "graft_dot requires array<double> inputs")
+    "dot requires array<double> inputs")
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData].toDoubleArray()
@@ -537,7 +539,7 @@ case class ShingleStrings(child: Expression, k: Int)
 /** Hashed k-word shingles of a token array: each adjacent k-window is
   * hashed (per-token FNV-1a 64 folded with a golden-ratio multiply, then a
   * splitmix64 finalizer), deduplicated, and returned SORTED — the exact
-  * input shape `graft_minhash` and `graft_isect` consume. One primitive
+  * input shape `minhash` and `isect` consume. One primitive
   * pass per document; replaces THREE interpreted HOF traversals
   * (transform+slice+concat_ws, array_distinct, transform+xxhash64) that
   * dominated the MinHash-LSH pipeline. A doc with fewer than k tokens
@@ -931,7 +933,9 @@ case class HyperplaneBandKeys(child: Expression, bands: Int, bitsPerBand: Int)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  private val isFloat =
+  // lazy: a kernel built from a Column holds an unresolved child until
+  // analysis, and an unresolved child has no dataType
+  private lazy val isFloat =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def nullSafeEval(a: Any): Any = {
@@ -1026,7 +1030,7 @@ case class HyperplaneProbeKeys(child: Expression, bands: Int, bitsPerBand: Int,
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  private val isFloat =
+  private lazy val isFloat =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def nullSafeEval(a: Any): Any = {
@@ -1080,100 +1084,56 @@ case class HyperplaneProbeKeys(child: Expression, bands: Int, bitsPerBand: Int,
     copy(child = newChild)
 }
 
+/** Typed Column constructors for the native kernels above — one per
+  * kernel, each building its Catalyst expression directly, so a kernel
+  * resolves in any session without a function registry. Arguments that
+  * size a kernel (hash families, bands, widths) are Scala `Int`s: the
+  * compiler checks them, and they stay plan constants, not columns.
+  */
 object NativeExpressions {
-  /** Session-scoped registration of the native functions; idempotent.
-    * Registered through the classic FunctionRegistry so call sites can use
-    * `call_function("graft_dot", a, b)` without constructing Columns from
-    * internal Expressions (that constructor is private in Spark 4).
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "graft_dot", (args: Seq[Expression]) => DotProduct(args(0), args(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_isect",
-      (args: Seq[Expression]) => SortedIntersectCount(args(0), args(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_isect_geq",
-      // (a, b, num, den) — num/den fold into one packed literal so the
-      // kernel stays ternary; both must be Int literals at call sites
-      (args: Seq[Expression]) => SortedIntersectQualifies(args(0), args(1),
-        Literal((args(2).eval().asInstanceOf[Int].toLong << 32) |
-          args(3).eval().asInstanceOf[Int].toLong)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_first_eq",
-      (args: Seq[Expression]) => FirstEqualIndex(args(0), args(1), args(2)),
-      "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_xor_popcnt",
-      (args: Seq[Expression]) => XorPopcount(args(0), args(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_pq_encode",
-      (args: Seq[Expression]) => PqEncode(args(0), args(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_pq_qtab",
-      (args: Seq[Expression]) => PqQueryTable(args(0), args(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_adc",
-      (args: Seq[Expression]) => AdcDistance(args(0), args(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_minhash",
-      (args: Seq[Expression]) => MinHashSignature64(args(0),
-        args(1).eval().asInstanceOf[Int]), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_mask",
-      (args: Seq[Expression]) => MaskFromIndices(args(0),
-        args(1).eval().asInstanceOf[Int]), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_mask_isect",
-      (args: Seq[Expression]) => BitmaskIntersectCount(args(0), args(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_simhash",
-      (args: Seq[Expression]) => SimHash64(args(0)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_bigrams",
-      (args: Seq[Expression]) => BigramSet(args(0)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_shingles",
-      (args: Seq[Expression]) => ShingleHashes(args(0),
-        args(1).eval().asInstanceOf[Int]), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_shingle_strings",
-      (args: Seq[Expression]) => ShingleStrings(args(0),
-        args(1).eval().asInstanceOf[Int]), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_bands",
-      (args: Seq[Expression]) => BandKeys64(args(0),
-        args(1).eval().asInstanceOf[Int]), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_wordhash62",
-      (args: Seq[Expression]) => PortableWordHashes(args(0)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_shingles_portable",
-      (args: Seq[Expression]) => PortableShingleHashes(args(0),
-        args(1).eval().asInstanceOf[Int]), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_span_hashes",
-      (args: Seq[Expression]) => PortableSpanHashes(args(0),
-        args(1).eval().asInstanceOf[Int]), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_minhash_portable",
-      (args: Seq[Expression]) => PortableMinHash(args(0),
-        args(1).eval().asInstanceOf[Int]), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_hyperplane_bands",
-      (args: Seq[Expression]) => HyperplaneBandKeys(args(0),
-        args(1).eval().asInstanceOf[Int],
-        args(2).eval().asInstanceOf[Int]), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_bigram_strings",
-      (args: Seq[Expression]) => BigramStringsAll(args(0)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_hyperplane_probes",
-      (args: Seq[Expression]) => HyperplaneProbeKeys(args(0),
-        args(1).eval().asInstanceOf[Int],
-        args(2).eval().asInstanceOf[Int],
-        args(3).eval().asInstanceOf[Int]), "built-in")
-  }
+  private def e(c: Column): Expression = ColumnConversions.expression(c)
+  private def c(x: Expression): Column = ExpressionColumns(x)
+
+  def dot(a: Column, b: Column): Column = c(DotProduct(e(a), e(b)))
+  def isect(a: Column, b: Column): Column = c(SortedIntersectCount(e(a), e(b)))
+  /** |a ∩ b| · den ≥ min(|a|,|b|) · num; num/den pack into one literal so
+    * the kernel stays ternary. */
+  def isectGeq(a: Column, b: Column, num: Int, den: Int): Column =
+    c(SortedIntersectQualifies(e(a), e(b),
+      Literal((num.toLong << 32) | den.toLong)))
+  /** `limit` is an int column: banded joins pass a per-row band budget. */
+  def firstEq(a: Column, b: Column, limit: Column): Column =
+    c(FirstEqualIndex(e(a), e(b), e(limit)))
+  def xorPopcount(a: Column, b: Column): Column = c(XorPopcount(e(a), e(b)))
+  def pqEncode(q8: Column, codebook: Column): Column =
+    c(PqEncode(e(q8), e(codebook)))
+  def pqQueryTable(q8: Column, codebook: Column): Column =
+    c(PqQueryTable(e(q8), e(codebook)))
+  def adc(code: Column, qtab: Column): Column = c(AdcDistance(e(code), e(qtab)))
+  def minhash(set: Column, numHashes: Int): Column =
+    c(MinHashSignature64(e(set), numHashes))
+  def mask(indices: Column, words: Int): Column =
+    c(MaskFromIndices(e(indices), words))
+  def maskIsect(a: Column, b: Column): Column =
+    c(BitmaskIntersectCount(e(a), e(b)))
+  def simhash(hashes: Column): Column = c(SimHash64(e(hashes)))
+  def bigrams(tokens: Column): Column = c(BigramSet(e(tokens)))
+  def shingles(tokens: Column, k: Int): Column = c(ShingleHashes(e(tokens), k))
+  def shingleStrings(tokens: Column, k: Int): Column =
+    c(ShingleStrings(e(tokens), k))
+  def bands(signature: Column, bands: Int): Column =
+    c(BandKeys64(e(signature), bands))
+  def wordHash62(tokens: Column): Column = c(PortableWordHashes(e(tokens)))
+  def shinglesPortable(tokens: Column, k: Int): Column =
+    c(PortableShingleHashes(e(tokens), k))
+  def spanHashes(tokens: Column, k: Int): Column =
+    c(PortableSpanHashes(e(tokens), k))
+  def minhashPortable(set: Column, numHashes: Int): Column =
+    c(PortableMinHash(e(set), numHashes))
+  def hyperplaneBands(v: Column, bands: Int, bitsPerBand: Int): Column =
+    c(HyperplaneBandKeys(e(v), bands, bitsPerBand))
+  def hyperplaneProbes(v: Column, bands: Int, bitsPerBand: Int,
+      flips: Int): Column =
+    c(HyperplaneProbeKeys(e(v), bands, bitsPerBand, flips))
+  def bigramStrings(tokens: Column): Column = c(BigramStringsAll(e(tokens)))
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.functions.{NativeExpressions => NX}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -16,7 +17,7 @@ object TextFunctions {
   def tokenSet(text: Column): Column = array_distinct(tokens(text))
 
   /** Count-min-sketch cell index for hash row `r` (0-based) and a portable
-    * word hash `hw` (graft_wordhash62): the PortableMinHash affine family
+    * word hash `hw` (NX.wordHash62): the PortableMinHash affine family
     * mod 2^31-1, reduced to the sketch's 1024-cell width. Shared by the
     * batch sketch (x4_heavy_hitters_cms) and the streaming sketch
     * (Streams.cmsSketch) so both land tokens in identical cells — and by
@@ -38,26 +39,24 @@ object TextFunctions {
     array_distinct(transform(idx, i => concat_ws(" ", slice(toks, i, lit(k)))))
   }
 
-  /** Distinct k-shingle STRINGS in one native pass (graft_shingle_strings)
+  /** Distinct k-shingle STRINGS in one native pass (NX.shingleStrings)
     * — same output as [[shingles]] (NativeKernelsSpec pins it), one array
-    * traversal instead of three interpreted HOF passes. Caller must have
-    * run NativeExpressions.register.
+    * traversal instead of three interpreted HOF passes.
     */
   def shingleStrings(text: Column, k: Int): Column =
-    call_function("graft_shingle_strings", tokens(text), lit(k))
+    NX.shingleStrings(tokens(text), k)
 
-  /** Sorted distinct hashed k-shingles in one native pass (graft_shingles)
-    * — the fast input shape for `graft_minhash` / `graft_isect`. Caller
-    * must have run NativeExpressions.register.
+  /** Sorted distinct hashed k-shingles in one native pass (NX.shingles)
+    * — the fast input shape for `NX.minhash` / `NX.isect`.
     */
   def shingleHashes(text: Column, k: Int): Column =
-    call_function("graft_shingles", tokens(text), lit(k))
+    NX.shingles(tokens(text), k)
 
   /** One 64-bit LSH band key per band, band index mixed into the key
-    * (graft_bands) — explode and equi-join on the long directly.
+    * (NX.bands) — explode and equi-join on the long directly.
     */
   def bandKeys64(signature: Column, bands: Int): Column =
-    call_function("graft_bands", signature, lit(bands))
+    NX.bands(signature, bands)
 
   /** MinHash signature: for each of `numHashes` hash families, the minimum
     * xxhash64 over the shingle set, the family index mixed in as an extra

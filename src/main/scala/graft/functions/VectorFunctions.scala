@@ -18,10 +18,9 @@ object VectorFunctions {
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   /** Native codegen'd dot product (same accumulation order, ~100× faster in
-    * all-pairs joins). Requires NativeExpressions.register(spark) once per
-    * session — call sites in graft.queries do so.
+    * all-pairs joins).
     */
-  def dotNative(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  def dotNative(a: Column, b: Column): Column = NativeExpressions.dot(a, b)
 
   /** L2 norm. */
   def l2Norm(a: Column): Column =

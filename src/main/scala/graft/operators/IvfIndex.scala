@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{NativeExpressions, VectorFunctions => VF}
+import graft.functions.{VectorFunctions => VF}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -84,7 +84,6 @@ object IvfIndex {
     * occupancy so a deployment can schedule a real rebuild when cells skew.
     */
   def append(idx: Index, e0: DataFrame): Index = {
-    NativeExpressions.register(e0.sparkSession)
     val e = e0.select(col("vec_id"), col("v"))
       .withColumn("nrm", VF.l2Norm(col("v")))
     val assignedNew = e.join(broadcast(idx.cells.select("cell", "cv", "cnrm")), lit(true))
@@ -127,7 +126,6 @@ object IvfIndex {
     * were actually hit — never a rebuild, never a shuffle of the corpus.
     */
   def forget(idx: Index, keys0: DataFrame): Index = {
-    NativeExpressions.register(idx.assigned.sparkSession)
     val keys = broadcast(
       keys0.select(col(keys0.columns.head).cast("long").as("vec_id")).distinct())
     val survivors = graft.Caches.persist(
@@ -210,9 +208,6 @@ object IvfIndex {
 
   def loadOrBuild(e0: DataFrame, key: String): Index = {
     val spark = e0.sparkSession
-    // the load path skips build() — register the kernels here too, or the
-    // first IVF query of a fresh session can't resolve graft_dot
-    NativeExpressions.register(spark)
     // memoized (r13): the cache-key count is a full source scan, and every
     // x3_* query build pays it — the memo holds per (session, canonical
     // plan). PRECONDITION (r14, unenforceable here): e0 must come from an
@@ -369,8 +364,6 @@ object IvfIndex {
     * which cell a vector files under.
     */
   def build(e0: DataFrame): Index = {
-    val spark = e0.sparkSession
-    NativeExpressions.register(spark)
     val maxabs = array_max(transform(col("v"), x => abs(x)))
     val e = graft.Caches.persist(e0.select(col("vec_id"), col("v"))
       .withColumn("nrm", VF.l2Norm(col("v")))
@@ -458,8 +451,6 @@ object IvfIndex {
     */
   def buildSharded(e0: DataFrame, shards: Int): Index = {
     if (shards <= 1) return build(e0)
-    val spark = e0.sparkSession
-    NativeExpressions.register(spark)
     val maxabs = array_max(transform(col("v"), x => abs(x)))
     val base = e0.select(col("vec_id"), col("v"))
       .withColumn("nrm", VF.l2Norm(col("v")))
@@ -527,7 +518,6 @@ object IvfIndex {
   def loadOrBuildSharded(e0: DataFrame, key: String, shards: Int): Index = {
     if (shards <= 1) return loadOrBuild(e0, key)
     val spark = e0.sparkSession
-    NativeExpressions.register(spark)
     val n = graft.Caches.countOnce(e0) // memoized — see loadOrBuild
     val safe = key.replaceAll("[^A-Za-z0-9._-]", "_")
     val dir = s"${cacheRoot(spark)}/$safe-sh$shards-n$n-v$fmtVersion"
@@ -556,23 +546,21 @@ object IvfIndex {
     *
     * The QUERY-proportional frames (the query vectors, the per-query probe
     * lists, the per-query bounds) are broadcast only while the query set is
-    * small (`graft.ivf.broadcastThreshold` rows, default 100k): the query
-    * set here grows with the corpus (n/50), so an unconditional broadcast is
-    * linear in the data — a driver/executor OOM at 100×. Above the threshold
-    * every query-keyed join falls back to a shuffle on `query_id`/`cell`,
-    * which Spark distributes. The CELL frame (k ≈ √n rows) stays broadcast
-    * unconditionally — sublinear in the corpus.
+    * small (the `graft.broadcast.ivfQueries` byte gate, default 55 MB ≈ 100k
+    * queries): the query set here grows with the corpus (n/50), so an
+    * unconditional broadcast is linear in the data — a driver/executor OOM
+    * at 100×. Above the gate every query-keyed join falls back to a shuffle
+    * on `query_id`/`cell`, which Spark distributes. The CELL frame (k ≈ √n
+    * rows) stays broadcast unconditionally — sublinear in the corpus.
     */
   def knnExact(idx: Index, queries: DataFrame, k: Int, nprobe: Int = 3): DataFrame = {
     val spark = queries.sparkSession
-    NativeExpressions.register(spark)
     // two cheap counts decide the plan shape — AQE-style statistics calls.
     // Query rows carry a dim-length double vector (~550 B at dim 64): the
     // 55 MB default admits ~100k queries, byte-equivalent to the old pin.
     val bq = graft.Broadcasts.gate(spark, "ivfQueries",
       graft.Caches.countOnce(queries),
-      rowBytes = 552, defaultBytes = 55L << 20,
-      legacyRowsConf = "graft.ivf.broadcastThreshold")
+      rowBytes = 552, defaultBytes = 55L << 20)
     val minCells = spark.conf.getOption("graft.ivf.minCellsForPruning")
       .map(_.toLong).getOrElse(128L)
     val qn = queries.withColumn("qnrm", VF.l2Norm(col("qv")))
@@ -645,11 +633,9 @@ object IvfIndex {
     */
   def knnApprox(idx: Index, queries: DataFrame, k: Int, nprobe: Int = 8): DataFrame = {
     val spark = queries.sparkSession
-    NativeExpressions.register(spark)
     val bq = graft.Broadcasts.gate(spark, "ivfQueries",
       graft.Caches.countOnce(queries),
-      rowBytes = 552, defaultBytes = 55L << 20,
-      legacyRowsConf = "graft.ivf.broadcastThreshold")
+      rowBytes = 552, defaultBytes = 55L << 20)
     val qn = queries.withColumn("qnrm", VF.l2Norm(col("qv")))
     val qc = qn.join(broadcast(idx.cells.select(col("cell"), col("cv"), col("cnrm"))),
         lit(true))
@@ -674,7 +660,6 @@ object IvfIndex {
     * effectiveness assertions in OperatorsSpec.
     */
   def survivingCellPairs(idx: Index, t: Double): DataFrame = {
-    NativeExpressions.register(idx.cells.sparkSession)
     val a = idx.cells.select(col("cell").as("ca"), col("cv").as("cva"),
       col("cnrm").as("cna"), col("r").as("ra"))
     val b = idx.cells.select(col("cell").as("cb"), col("cv").as("cvb"),
@@ -692,7 +677,6 @@ object IvfIndex {
     */
   def pairsExact(idx: Index, t: Double): DataFrame = {
     val spark = idx.assigned.sparkSession
-    NativeExpressions.register(spark)
     // STATISTICS GATE (one tiny collect over ≤ k ≈ √n cell rows): when
     // the triangle test stops pruning — adversarially mixed geometry
     // widens radii until most cell pairs survive (the r09 sf3 probe: one
@@ -798,7 +782,7 @@ object IvfIndex {
     val takeBlock = scanned.toDouble >= gate * total.toDouble * total.toDouble &&
       total > minRows &&
       graft.Broadcasts.fits(spark, "ivfPairs", total, rowBytes = 552,
-        defaultBytes = 55L << 20, legacyRowsConf = "graft.ivf.broadcastThreshold")
+        defaultBytes = 55L << 20)
     // make the plan choice OBSERVABLE: tests pin it, and a bench run can be
     // audited after the fact instead of inferring the path from timings
     recordPairsPath(spark,

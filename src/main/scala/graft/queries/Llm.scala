@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.functions.{NativeExpressions => NX, TextFunctions => TF, VectorFunctions => VF}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -175,7 +175,6 @@ object Llm {
     * whole composition). Also exposed for LlmSpec's recall check.
     */
   private[graft] def knnIvfPqRaw(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NativeExpressions.register(s)
     val idx = ivfIndex(s, dir)
     // one shared PQ build (quantize/train/encode/ADC-table) with the flat
     // x3_knn_pq — the IVF difference is ONLY the probe filter below
@@ -202,7 +201,7 @@ object Llm {
       .filter(col("vec_id") =!= col("query_id"))
       .join(broadcast(qtabs), Seq("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        call_function("graft_adc", col("code"), col("qtab")).as("adist"))
+        NX.adc(col("code"), col("qtab")).as("adist"))
       .withColumn("prk", row_number().over(wpool))
       .filter(col("prk") <= 100)
       .select("query_id", "neighbor_id")
@@ -230,12 +229,10 @@ object Llm {
     */
   private[graft] def knnLsh(s: SparkSession, emb: DataFrame, queryPred: Column,
       k: Int, bands: Int = 8, bitsPerBand: Int = 8, flips: Int = 0): DataFrame = {
-    graft.functions.NativeExpressions.register(s)
     val e = graft.Caches.persist(
       emb.select(col("vec_id"),
           VF.toDouble(col("embedding")).as("v"),
-          call_function("graft_hyperplane_bands",
-            col("embedding"), lit(bands), lit(bitsPerBand)).as("bks"))
+          NX.hyperplaneBands(col("embedding"), bands, bitsPerBand).as("bks"))
         .withColumn("nrm", VF.l2Norm(col("v"))))
     val bnd = e.select(col("vec_id"), posexplode(col("bks")).as(Seq("b", "bv")))
     // flips > 0 = query-directed multiprobe (Lv et al.): the query also
@@ -251,8 +248,7 @@ object Llm {
       else
         e.filter(queryPred)
           .select(col("vec_id").as("query_id"),
-            explode(call_function("graft_hyperplane_probes", col("v"),
-              lit(bands), lit(bitsPerBand), lit(flips))).as("bk"))
+            explode(NX.hyperplaneProbes(col("v"), bands, bitsPerBand, flips)).as("bk"))
           .select(col("query_id"),
             shiftright(col("bk"), bitsPerBand).cast("int").as("b"),
             col("bk").bitwiseAND(lit((1L << bitsPerBand) - 1)).as("bv"))
@@ -282,7 +278,7 @@ object Llm {
     * arithmetic — the same kernel as x3_knn_lsh, so the DuckDB oracle
     * replays the candidate set bit-for-bit); a pair is a candidate iff
     * some band agrees, emitted exactly once at its FIRST agreeing band
-    * (graft_first_eq — no dedup exchange), then verified at exact cosine
+    * (NX.firstEq — no dedup exchange), then verified at exact cosine
     * ≥ `t`.
     *
     * The contract is the published LSH trade: the edge set is a
@@ -338,14 +334,12 @@ object Llm {
 
   private[graft] def hyperplaneEdgePairs(s: SparkSession, emb: DataFrame,
       t: Double): DataFrame = {
-    graft.functions.NativeExpressions.register(s)
     val e0 = graft.Caches.persist(emb.select(col("vec_id"),
       VF.toDouble(col("embedding")).as("v")))
     val n = graft.Caches.countOnce(e0)
     val (bands, bitsPerBand) = hyperplaneEdgeGeometry(n)
     val e = graft.Caches.persist(e0.select(col("vec_id"), col("v"),
-        call_function("graft_hyperplane_bands", col("v"),
-          lit(bands), lit(bitsPerBand)).as("bks"))
+        NX.hyperplaneBands(col("v"), bands, bitsPerBand).as("bks"))
       .withColumn("nrm", VF.l2Norm(col("v"))))
     // the verify attach: candidates outnumber vectors ~300:1 on mid-sim-
     // heavy geometry, so shuffling 64-dim vectors onto every candidate row
@@ -355,19 +349,18 @@ object Llm {
     // Above the threshold the shuffle join returns — the honest
     // distributed plan at 100 TB, linear in candidates.
     val bs = graft.Broadcasts.gate(s, "lsh", n, rowBytes = 536,
-      defaultBytes = 512L << 20, legacyRowsConf = "graft.lsh.broadcastThreshold")
+      defaultBytes = 512L << 20)
     val bnd = e.select(col("vec_id"), col("bks"),
       posexplode(col("bks")).as(Seq("b", "bv")))
     val cand = bnd.as("a").join(bnd.as("b"),
         col("a.b") === col("b.b") && col("a.bv") === col("b.bv") &&
           col("a.vec_id") < col("b.vec_id"))
-      .filter(col("a.b") + 1 === call_function("graft_first_eq",
-        col("a.bks"), col("b.bks"), lit(bands)))
+      .filter(col("a.b") + 1 === NX.firstEq(col("a.bks"), col("b.bks"), lit(bands)))
       // Hamming prefilter over the signatures ALREADY on the row: random
       // bucket collisions (the overwhelming majority on weakly-clustered
       // geometry) die here, before any 64-dim vector is shuffled into the
       // verify joins — measured 171 s → ~14 s at the 100× probe
-      .filter(call_function("graft_xor_popcnt", col("a.bks"), col("b.bks"))
+      .filter(NX.xorPopcount(col("a.bks"), col("b.bks"))
         <= lit(hyperplaneMaxDisagree(t, bitsPerBand)))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
     cand
@@ -406,7 +399,7 @@ object Llm {
   /** MinHash-LSH near-dup pairs over a (doc_id, text) frame: band-bucket
     * candidates, exact 3-shingle-Jaccard verification at `t`. The entire
     * signature pipeline is portable mod-prime arithmetic
-    * (graft_shingles_portable / graft_minhash_portable), so a SQL oracle
+    * (NX.shinglesPortable / NX.minhashPortable), so a SQL oracle
     * replays it bit-for-bit.
     *
     * HOT-BAND SKEW GUARD: the band self-join runs over DISTINCT shingle
@@ -430,7 +423,6 @@ object Llm {
 
   private[graft] def minhashLshPairsUnsorted(s: SparkSession, d0: DataFrame,
       t: Double): DataFrame = {
-    graft.functions.NativeExpressions.register(s)
     val numHashes = 32; val bands = 16
     val P31 = 2147483647L
     // Persisted: the distinct-set frame is ~100x smaller than the text and
@@ -438,15 +430,13 @@ object Llm {
     // expansions; without it Spark re-runs text->shingle->hash per consumer.
     val sets = graft.Caches.persist(
       d0.select(col("doc_id"),
-          call_function("graft_shingles_portable",
-            TF.tokens(col("text")), lit(3)).as("sh"))
+          NX.shinglesPortable(TF.tokens(col("text")), 3).as("sh"))
         .groupBy("sh")
         .agg(min("doc_id").as("set_id"),
           collect_list("doc_id").as("members"),
           count(lit(1)).as("m")))
     val sig = sets.select(col("set_id"),
-      call_function("graft_minhash_portable",
-        col("sh"), lit(numHashes)).as("sig"))
+      NX.minhashPortable(col("sh"), numHashes).as("sig"))
     // Band key = sig[2b]*p + sig[2b+1] (joined together with the band
     // index) — plain integers both engines build identically. The join
     // carries set ids ONLY; shingle arrays are re-joined post-dedup.
@@ -466,7 +456,7 @@ object Llm {
         col("members").as("mem_a")), "sa")
       .join(sets.select(col("set_id").as("sb"), col("sh").as("sh_b"),
         col("members").as("mem_b")), "sb")
-      .withColumn("i", call_function("graft_isect", col("sh_a"), col("sh_b")))
+      .withColumn("i", NX.isect(col("sh_a"), col("sh_b")))
       .withColumn("j", col("i").cast("double") /
         (size(col("sh_a")) + size(col("sh_b")) - col("i")).cast("double"))
       .filter(col("j") >= t)
@@ -518,7 +508,6 @@ object Llm {
   }
 
   private def jaccardPairs(s: SparkSession, tok0: DataFrame, t: Double): DataFrame = {
-    graft.functions.NativeExpressions.register(s)
     // persisted: consumed by the vocab count action, the vocabulary index,
     // and the mask build — tokenization (interpreted HOFs over text) would
     // otherwise re-run per consumer; registered so the harness drains it
@@ -676,8 +665,7 @@ object Llm {
     // set (avg prefix length × the (sb, nb, bk2, pb, pw2) row) — byte gate
     val nSets = graft.Caches.countOnce(sets)
     val bs = graft.Broadcasts.gate(tok.sparkSession, "jaccard",
-      nSets, rowBytes = 400, defaultBytes = 40L << 20,
-      legacyRowsConf = "graft.jaccard.broadcastThreshold")
+      nSets, rowBytes = 400, defaultBytes = 40L << 20)
     val tMicros = math.round(t * 1e6)
     val words = (vocab + 63) / 64
     // dense-regime kernel: when the collapsed sets fit the pairscan gate,
@@ -693,7 +681,7 @@ object Llm {
       if (graft.operators.SetPairScan.fits(tok.sparkSession, nSets, words))
         graft.operators.SetPairScan.pairs(
           sets.select(col("sid"),
-            call_function("graft_mask", col("arr"), lit(words)).as("mask"),
+            NX.mask(col("arr"), words).as("mask"),
             col("n")),
           graft.operators.SetPairScan.Jaccard(tMicros))
           .withColumn("j", col("i").cast("double") /
@@ -709,7 +697,7 @@ object Llm {
             col("n").as("na"))), "sa")
           .join(bs(sets.select(col("sid").as("sb"), col("arr").as("arrb"),
             col("n").as("nb"))), "sb")
-          .withColumn("i", call_function("graft_isect", col("arra"), col("arrb")))
+          .withColumn("i", NX.isect(col("arra"), col("arrb")))
           .filter(col("i") * lit(1000000L + tMicros) >=
             lit(tMicros) * (col("na") + col("nb")))
           .withColumn("j", col("i").cast("double") /
@@ -881,7 +869,6 @@ object Llm {
     */
   private[graft] def containmentPairsSized(s: SparkSession, tok0: DataFrame,
       num: Int, den: Int, minRatio: Int): DataFrame = {
-    graft.functions.NativeExpressions.register(s)
     val tok = graft.Caches.persist(tok0)
     val (vocabSize, sumDf2) = setDispatchStats(tok)
     if (vocabSize <= vocabThreshold(s) || prefixWouldExplode(s, vocabSize, sumDf2))
@@ -901,9 +888,7 @@ object Llm {
     // n ≤ vocab elements of 8 B (a conservative bound; dense closed-vocab
     // sets really do approach it)
     val bs = graft.Broadcasts.gate(tok.sparkSession, "jaccard",
-      nSets, rowBytes = 8L * math.max(vocab, 1) + 32, defaultBytes = 40L << 20,
-      legacyRowsConf = "graft.jaccard.broadcastThreshold")
-    def isect(l: Column, r: Column) = call_function("graft_isect", l, r)
+      nSets, rowBytes = 8L * math.max(vocab, 1) + 32, defaultBytes = 40L << 20)
     // dense-regime kernel vs relational NLJ — both exact S² plans; the
     // kernel drops the ~300 ns/pair row-iterator+expression-eval constant
     // to ~words popcounts (see SetPairScan). The NLJ survives as the
@@ -912,7 +897,7 @@ object Llm {
       if (graft.operators.SetPairScan.fits(tok.sparkSession, nSets, words))
         graft.operators.SetPairScan.pairs(
           sets.select(col("sid"),
-            call_function("graft_mask", col("arr"), lit(words)).as("mask"),
+            NX.mask(col("arr"), words).as("mask"),
             col("n")),
           graft.operators.SetPairScan.Containment(num, den, minRatio))
       else {
@@ -935,9 +920,8 @@ object Llm {
               // as the containment outcome is decided — instead of a full
               // merge scan + two array copies — is the dominant per-pair
               // cost here; the exact count below runs on survivors only
-              call_function("graft_isect_geq", col("arra"), col("arrb"),
-                lit(num), lit(den)))
-          .withColumn("i", isect(col("arra"), col("arrb")))
+              NX.isectGeq(col("arra"), col("arrb"), num, den))
+          .withColumn("i", NX.isect(col("arra"), col("arrb")))
           .select(col("sa"), col("sb"), col("i"), col("na"), col("nb"))
       }
     pairs
@@ -1084,7 +1068,7 @@ object Llm {
     *
     * Construction:
     *  1. Docs collapse to DISTINCT token-hash sets (portable
-    *     graft_wordhash62, sorted) exactly as the Jaccard family does —
+    *     NX.wordHash62, sorted) exactly as the Jaccard family does —
     *     identical sets pair trivially at C = 1 via the block-pair
     *     expansion, never through the index.
     *  2. Sets land in geometric size strata s = ⌊log2 n⌋, computed as
@@ -1126,13 +1110,11 @@ object Llm {
     */
   private[graft] def containmentLshVerified(s: SparkSession, d0: DataFrame,
       num: Int, den: Int): DataFrame = {
-    graft.functions.NativeExpressions.register(s)
     val K = 32; val bands2 = 16
     val P31 = 2147483647L
     val sets = graft.Caches.persist(
       d0.select(col("doc_id"),
-          sort_array(array_distinct(call_function("graft_wordhash62",
-            TF.tokenSet(col("text"))))).as("hs"))
+          sort_array(array_distinct(NX.wordHash62(TF.tokenSet(col("text"))))).as("hs"))
         .groupBy("hs")
         .agg(min("doc_id").as("sid"), collect_list("doc_id").as("members"),
           count(lit(1)).as("m"))
@@ -1140,7 +1122,7 @@ object Llm {
         // integer ⌊log2 n⌋ = binary digit length − 1 (exact; n ≥ 1)
         .withColumn("strat", (length(conv(col("n"), 10, 2)) - 1).cast("int")))
     val sig = graft.Caches.persist(sets.select(col("sid"), col("strat"),
-      call_function("graft_minhash_portable", col("hs"), lit(K)).as("sig")))
+      NX.minhashPortable(col("hs"), K).as("sig")))
     // ONE eager aggregate primes the persisted sets cache AND returns every
     // scalar the construction needs — set count (broadcast gate) + stratum
     // range (tier-2 gap budgets) were two sequential jobs over the same
@@ -1162,8 +1144,7 @@ object Llm {
       // first agreeing band (1-based kernel; band is 0-based): a pair
       // agreeing in several bands is kept exactly once, with no dedup
       // exchange and no per-element lambda interpretation
-      .filter(col("a.band") + 1 === call_function("graft_first_eq",
-        col("a.bks"), col("b.bks"), lit(bands2)))
+      .filter(col("a.band") + 1 === NX.firstEq(col("a.bks"), col("b.bks"), lit(bands2)))
       .select(col("a.sid").as("sa"), col("b.sid").as("sb"))
     // ---- tier 2: cross-strata, r=1 with per-gap band budgets. The PROBE
     // side replicates each set toward every higher stratum within reach
@@ -1187,8 +1168,7 @@ object Llm {
             col("a.tgt") === col("b.strat"))
         // first agreeing signature within this gap's budget — candidates
         // surface exactly once however many of the budgeted hashes agree
-        .filter(col("a.k") + 1 === call_function("graft_first_eq",
-          col("a.sig"), col("b.sig"), col("a.bud")))
+        .filter(col("a.k") + 1 === NX.firstEq(col("a.sig"), col("b.sig"), col("a.bud")))
         .select(least(col("a.sid"), col("b.sid")).as("sa"),
           greatest(col("a.sid"), col("b.sid")).as("sb"))
     }
@@ -1203,8 +1183,7 @@ object Llm {
     // 100 TB.
     val bs = graft.Broadcasts.gate(s, "containment",
       nSets,
-      rowBytes = 400, defaultBytes = 400L << 20,
-      legacyRowsConf = "graft.containment.broadcastThreshold")
+      rowBytes = 400, defaultBytes = 400L << 20)
     val verified = cand
       .join(bs(sets.select(col("sid").as("sa"), col("hs").as("ha"),
         col("n").as("na"), col("members").as("mem_a"))), "sa")
@@ -1216,9 +1195,8 @@ object Llm {
       // pushed into the join condition AND kept in the projection — every
       // banded candidate (5.5M at sf0.1) paid two full merge scans plus
       // four array copies; the exact count now runs only on survivors
-      .filter(call_function("graft_isect_geq", col("ha"), col("hb"),
-        lit(num), lit(den)))
-      .withColumn("i", call_function("graft_isect", col("ha"), col("hb")))
+      .filter(NX.isectGeq(col("ha"), col("hb"), num, den))
+      .withColumn("i", NX.isect(col("ha"), col("hb")))
       .withColumn("containment_e4", expr("i * 10000 div least(na, nb)"))
       .withColumn("jaccard_e4", expr("i * 10000 div (na + nb - i)"))
     val crossPairs = verified
@@ -1359,7 +1337,6 @@ object Llm {
     * set. Above it, AllPairs prefix filtering generates doc-level edges.
     */
   private[graft] def dedupClusters(s: SparkSession, d: DataFrame): DataFrame = {
-    graft.functions.NativeExpressions.register(s)
     val tok = graft.Caches.persist(d
       .select(col("doc_id"), explode(TF.tokenSet(col("text"))).as("w")))
     val (vocabSize, sumDf2) = setDispatchStats(tok)
@@ -1400,7 +1377,7 @@ object Llm {
     * shared by the batch x4_dsir query and the delta-table trainer the
     * streaming [[graft.streaming.Streams.dsirScreen]] consumes, so the
     * online and offline featurizations are structurally incapable of
-    * diverging. Requires NativeExpressions registered.
+    * diverging.
     */
   private[graft] def dsirTok(d: DataFrame): DataFrame = {
     // tgt is per-DOC, but computed inline it lands in a projection ABOVE
@@ -1417,8 +1394,7 @@ object Llm {
     // approve a ~200 MB broadcast the way the old 10M-doc threshold could
     val bs = graft.Broadcasts.gate(d.sparkSession, "dsirFlags",
       graft.Caches.countOnce(d),
-      rowBytes = 20, defaultBytes = 64L << 20,
-      legacyRowsConf = "graft.dsir.flagBroadcastThreshold")
+      rowBytes = 20, defaultBytes = 64L << 20)
     dsirBuckets(d)
       .join(bs(flags), "doc_id")
       .select(col("doc_id"), col("tgt"), col("b"))
@@ -1430,8 +1406,7 @@ object Llm {
     */
   private[graft] def dsirBuckets(d: DataFrame): DataFrame =
     d.select(col("doc_id"),
-        explode(call_function("graft_wordhash62",
-          TF.tokens(col("text")))).as("h"))
+        explode(NX.wordHash62(TF.tokens(col("text")))).as("h"))
       .select(col("doc_id"), expr("pmod(h, 1024)").as("b"))
 
   /** Per-bucket DSIR importance deltas from a [[dsirTok]] frame:
@@ -1463,7 +1438,6 @@ object Llm {
     */
   private[graft] def dsirDeltaMap(s: SparkSession, d: DataFrame)
       : (Map[Long, Long], Long) = {
-    graft.functions.NativeExpressions.register(s)
     val tok = dsirTok(d)
     val m = dsirDeltasFromTok(tok).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -1540,12 +1514,11 @@ object Llm {
     */
   private[graft] def qualityClassifierScores(s: SparkSession,
       d: DataFrame): DataFrame = {
-    graft.functions.NativeExpressions.register(s)
     import s.implicits._
     val w = broadcast(qualityClfWeights.zipWithIndex
       .map { case (wt, p) => (p.toLong, wt) }.toDF("pos", "wt"))
     d.select(col("doc_id"),
-        explode(call_function("graft_wordhash62", TF.tokens(col("text"))))
+        explode(NX.wordHash62(TF.tokens(col("text"))))
           .as("h"))
       .select(col("doc_id"), expr("pmod(h, 32)").as("pos"))
       .groupBy("doc_id", "pos").agg(count(lit(1)).as("cnt"))
@@ -1716,7 +1689,7 @@ object Llm {
 
   /** The PQ trainer's BOUNDED deterministic sample — the statistics gate
     * that keeps codebook training driver-safe at any corpus size (the
-    * pattern of `graft.cc.driverThreshold` / `graft.ivf.broadcastThreshold`):
+    * pattern of `graft.cc.driverThreshold` / `graft.broadcast.ivfQueries`):
     * keep `vec_id % m == 0` with m = max(1, n/cap) to spread the sample
     * across the id range, then a hard `ORDER BY vec_id LIMIT cap` so the
     * collect is PROVABLY <= `graft.pq.trainSampleCap` rows (default 65536,
@@ -1746,7 +1719,6 @@ object Llm {
     */
   private def pqBuild(s: SparkSession, vecs: DataFrame)
       : (DataFrame, DataFrame) = {
-    graft.functions.NativeExpressions.register(s)
     val maxabs = array_max(transform(col("v"), x => abs(x)))
     val e8 = graft.Caches.persist(vecs
       .withColumn("ma", when(maxabs === 0.0, 1.0).otherwise(maxabs))
@@ -1765,12 +1737,12 @@ object Llm {
     // cross-checks against the relational reference).
     val cbLit = typedLit(pqCodebookFlat(s, pqTrainSample(s, e8)).toSeq)
     val codes = e8.select(col("vec_id"),
-      call_function("graft_pq_encode", col("q8"), cbLit).as("code"))
+      NX.pqEncode(col("q8"), cbLit).as("code"))
     // ADC: per-query 256-entry lookup table (subvector -> every centroid);
     // query set bounded by the fixed budget (knnQueryStride), never q ∝ n
     val qtabs = e8.filter(col("vec_id") % knnQueryStride(graft.Caches.countOnce(e8)) === 0)
       .select(col("vec_id").as("query_id"),
-        call_function("graft_pq_qtab", col("q8"), cbLit).as("qtab"))
+        NX.pqQueryTable(col("q8"), cbLit).as("qtab"))
     (codes, qtabs)
   }
 
@@ -1916,7 +1888,6 @@ object Llm {
     */
   private[graft] def lexicalJaccardTopK(s: SparkSession, d: DataFrame,
       queryPred: Column, k: Int): DataFrame = {
-    graft.functions.NativeExpressions.register(s)
     // tokenize ONCE into a projected column below the Generate (r14): a
     // select mixing explode(tokenSet(text)) with size(tokenSet(text))
     // evaluates the sibling expression per EXPLODED row — ~|tokens|
@@ -1936,14 +1907,13 @@ object Llm {
           .select(col("w"), (row_number().over(wv) - 1).cast("long").as("i"))
         val masks = graft.Caches.persist(tok.join(broadcast(idx), "w")
           .groupBy("doc_id")
-          .agg(call_function("graft_mask", collect_list("i"), lit(words)).as("mask"),
+          .agg(NX.mask(collect_list("i"), words).as("mask"),
             count(lit(1)).as("n")))
         val q = masks.filter(queryPred)
           .select(col("doc_id").as("query_id"), col("mask").as("qmask"),
             col("n").as("nq"))
-        def isect(l: Column, r: Column) = call_function("graft_mask_isect", l, r)
         masks.join(broadcast(q), col("doc_id") =!= col("query_id"))
-          .withColumn("i", isect(col("mask"), col("qmask")))
+          .withColumn("i", NX.maskIsect(col("mask"), col("qmask")))
           .filter(col("i") > 0)
           .select(col("query_id"), col("doc_id").as("neighbor_id"),
             expr("i * 1000000000L div (n + nq - i)").as("jr_e9"))
@@ -1970,10 +1940,8 @@ object Llm {
     * count is a window over that exchange), then a per-doc re-aggregation.
     */
   private[graft] def spanDedup(s: SparkSession, d: DataFrame): DataFrame = {
-    graft.functions.NativeExpressions.register(s)
     val spans = d.select(col("doc_id"),
-      posexplode(call_function("graft_span_hashes",
-        TF.tokens(col("text")), lit(8))).as(Seq("pos", "h")))
+      posexplode(NX.spanHashes(TF.tokens(col("text")), 8)).as(Seq("pos", "h")))
     val byHash = Window.partitionBy("h")
     spans
       .withColumn("occ", count(lit(1)).over(byHash))
@@ -2020,7 +1988,7 @@ object Llm {
       |          CAST(b.embedding AS DOUBLE[])) >= 0.35)""".stripMargin)
 
   /** The hyperplane-LSH candidate CTE chain for the `_lsh` graph variants:
-    * replays graft_hyperplane_bands (quantized-integer sign projections —
+    * replays NX.hyperplaneBands (quantized-integer sign projections —
     * deterministic portable arithmetic) under the SAME statistics-gated
     * geometry as [[hyperplaneEdgeGeometry]] — bits = max(8,
     * bitlength((n−1) div 32)) and bands = 16/32, both derived from
@@ -2240,7 +2208,7 @@ object Llm {
     // Better", at token granularity): a doc can be globally unique yet be
     // assembled from spans copied verbatim from other docs — doc-level
     // exact/near dedup never sees it. Every 8-token window gets a PORTABLE
-    // positional rolling hash (graft_span_hashes, one compiled pass/doc);
+    // positional rolling hash (NX.spanHashes, one compiled pass/doc);
     // a window value occurring at >=2 positions anywhere in the corpus is a
     // repeated substring, and each doc reports its duplicated-window share —
     // the statistic the span-removal/filter decision consumes. Scale shape:
@@ -2374,14 +2342,13 @@ object Llm {
     // so it stays O(candidates) in DuckDB too.
     Q("x2_jaccard_bigram",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
-        // one native pass per doc (graft_bigrams) — the HOF formulation
+        // one native pass per doc (NX.bigrams) — the HOF formulation
         // (transform+slice+concat_ws+array_distinct) evaluates its lambda
         // interpreted per element and dominated this query's runtime; a
         // <2-token doc yields an empty array (no bigrams), matching the
         // oracle's range(1, 1) = empty list
         val tok = docs(s, dir).select(col("doc_id"),
-          explode(call_function("graft_bigrams", TF.tokens(col("text")))).as("w"))
+          explode(NX.bigrams(TF.tokens(col("text")))).as("w"))
         jaccardPairs(s, tok, 0.7)
       },
       Some("""WITH b AS (SELECT doc_id,
@@ -2426,7 +2393,7 @@ object Llm {
     // ---- X2 MinHash + LSH near-dup (the scale path: candidates via band
     // buckets instead of all pairs; candidates then verified with exact
     // 3-shingle Jaccard). The whole signature pipeline is PORTABLE mod-prime
-    // arithmetic (graft_shingles_portable / graft_minhash_portable — compiled
+    // arithmetic (NX.shinglesPortable / NX.minhashPortable — compiled
     // kernels, but SQL-replayable folds), so the DuckDB oracle reproduces
     // candidates and scores bit-for-bit; recall vs the exact twin is
     // additionally asserted in LlmSpec.
@@ -2537,7 +2504,7 @@ object Llm {
 
     // ---- X2 SimHash fingerprints: 62-bit, from distinct-token PORTABLE
     // word-hash bit votes, computed in ONE native pass per document
-    // (graft_simhash over graft_wordhash62). The explode formulation ((doc,
+    // (NX.simhash over NX.wordHash62). The explode formulation ((doc,
     // token, bit) vote rows -> groupBy shuffle) inflates rows 64× through the
     // shuffle; the native kernel shuffles nothing beyond the final sort and
     // is bit-identical (NativeKernelsSpec cross-checks it against the
@@ -2547,13 +2514,11 @@ object Llm {
     // signature fits in 62 bits.
     Q("x2_simhash",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         // loadParallel: the 64-vote fingerprint kernel is the whole query —
         // single-row-group scans serialized it into one task (r13 A/B)
         Tables.loadParallel(s, dir, "documents").select(
           col("doc_id"),
-          call_function("graft_simhash",
-            call_function("graft_wordhash62", TF.tokenSet(col("text"))))
+          NX.simhash(NX.wordHash62(TF.tokenSet(col("text"))))
             .as("simhash"))
           .orderBy("doc_id")
       },
@@ -2591,7 +2556,6 @@ object Llm {
     // the pigeonhole candidates is hash-checked at every SF.
     Q("x2_simhash_neardup",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         // statistics-gated exact enumeration (HammingJoin): pigeonhole
         // block join while buckets are small, flip-variant join when the
         // biased top bits of the mod-prime word hash heap one block value
@@ -2599,8 +2563,7 @@ object Llm {
         // loadParallel: fingerprinting dominates — see x2_simhash (r13)
         val sh = Tables.loadParallel(s, dir, "documents").select(
           col("doc_id"),
-          call_function("graft_simhash",
-            call_function("graft_wordhash62", TF.tokenSet(col("text"))))
+          NX.simhash(NX.wordHash62(TF.tokenSet(col("text"))))
             .as("fp"))
         graft.operators.HammingJoin.pairs(sh, maxHamming = 3)
           .orderBy("doc_a", "doc_b")
@@ -2633,7 +2596,6 @@ object Llm {
     // LSH/IVF variant below is the 100 TB path)
     Q("x5_embedding_neardup",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         // Norms computed once per vector BEFORE the pair join (not per pair),
         // with the identical expression, so sim is bit-equal to the naive form.
         val e = graft.Caches.persist(
@@ -2919,7 +2881,6 @@ object Llm {
     // shuffle). O(q * k^2) total, never a function of corpus size.
     Q("x3_mmr_rerank",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         import s.implicits._
         // candidate top-20 rides the SHARED IVF index (knnExact is EXACT —
         // recall 1.0 with the identical (s desc, id asc) tie-break — so the
@@ -3003,7 +2964,6 @@ object Llm {
     // via ranking window. This is the exact baseline for ANN.
     Q("x3_knn_brute",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         val e = graft.Caches.persist(
           embsPlain(s, dir)
             .select(col("vec_id"), VF.toDouble(col("embedding")).as("v"))
@@ -3412,7 +3372,6 @@ object Llm {
     // LlmSpec).
     Q("x3_knn_int8",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         val maxabs = array_max(transform(col("v"), x => abs(x)))
         val e = graft.Caches.persist(
           embs(s, dir).select(col("vec_id"), VF.toDouble(col("embedding")).as("v"))
@@ -3465,7 +3424,6 @@ object Llm {
     // uncascaded exact search is pinned in LlmSpec.
     Q("x3_knn_cascade",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         val maxabs = array_max(transform(col("v"), x => abs(x)))
         val ef = graft.Caches.persist(
           embs(s, dir).select(col("vec_id"), VF.toDouble(col("embedding")).as("v"))
@@ -3569,21 +3527,20 @@ object Llm {
     // x3_knn_cascade.
     Q("x3_knn_pq",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         val ef = graft.Caches.persist(
           embs(s, dir).select(col("vec_id"), VF.toDouble(col("embedding")).as("v"))
             .withColumn("nrm", VF.l2Norm(col("v"))))
         // quantize/train/encode/ADC-table: ONE shared build (pqBuild)
         // with x3_knn_ivfpq — this flat search scans the WHOLE code table:
         // corpus x queries rows, each ONE native 16-lookup fold
-        // (graft_adc); the per-query top-100 rank prunes inside
+        // (NX.adc); the per-query top-100 rank prunes inside
         // WindowGroupLimit before any exchange
         val (codes, qtabs) = pqBuild(s, ef.select("vec_id", "v"))
         val wp = Window.partitionBy("query_id").orderBy(asc("adist"), asc("neighbor_id"))
         val pool = codes.crossJoin(broadcast(qtabs))
           .filter(col("vec_id") =!= col("query_id"))
           .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            call_function("graft_adc", col("code"), col("qtab")).as("adist"))
+            NX.adc(col("code"), col("qtab")).as("adist"))
           .withColumn("rk8", row_number().over(wp))
           .filter(col("rk8") <= 100)
           .select("query_id", "neighbor_id")
@@ -4088,10 +4045,9 @@ object Llm {
     // (doc, bucket)-keyed count shuffle with map-side partial aggregation.
     Q("x4_hash_embed",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         docs(s, dir)
           .select(col("doc_id"),
-            explode(call_function("graft_wordhash62", TF.tokens(col("text"))))
+            explode(NX.wordHash62(TF.tokens(col("text"))))
               .as("h"))
           .select(col("doc_id"), expr("pmod(h, 32)").as("pos"))
           .groupBy("doc_id", "pos").agg(count(lit(1)).as("cnt"))
@@ -4238,17 +4194,16 @@ object Llm {
     // joins — the model table IS the corpus aggregate, no training pass.
     Q("x4_lm_score_bigram",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         val d = docs(s, dir)
         val toksOf = TF.tokens(col("text"))
         // one compiled pass builds every "prev cur" position string
-        // (graft_bigram_strings — the HOF transform/struct formulation was
+        // (NX.bigramStrings — the HOF transform/struct formulation was
         // the whole query's cost, see the expression's scaladoc); the space
         // join is injective over space-split tokens, so the string IS the
         // pair identity
         val bg = graft.Caches.persist(
           d.select(col("doc_id"),
-            explode(call_function("graft_bigram_strings", toksOf)).as("bgs")))
+            explode(NX.bigramStrings(toksOf)).as("bgs")))
         val tok = d.select(explode(toksOf).as("w"))
         val uni = tok.groupBy("w").agg(count(lit(1)).as("c"))
         val tot = tok.agg(count(lit(1)).as("n"))
@@ -4296,7 +4251,7 @@ object Llm {
     // "Data Selection for Language Models via Importance Resampling") —
     // select raw documents that RESEMBLE a target distribution. Feature
     // space: 1024 hashed-unigram buckets via the portable
-    // graft_wordhash62 (x4_hash_embed's hash, so both engines bucket
+    // NX.wordHash62 (x4_hash_embed's hash, so both engines bucket
     // identically). Per-bucket importance delta = ln p_target(b) −
     // ln p_raw(b) with add-one smoothing, rounded to integer e6 BEFORE
     // the per-doc sum (order-independent integer aggregation, x4_lm_score
@@ -4316,7 +4271,6 @@ object Llm {
     // global sort materialization.
     Q("x4_dsir",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         // the exploded token stream is deliberately NOT persisted (caching
         // it is ~20 B/token of block-manager pressure; the re-tokenize is
         // one linear native-kernel scan) — instead each leg gets exactly
@@ -4514,14 +4468,13 @@ object Llm {
     // bigram asc) makes the cut deterministic cross-engine.
     Q("x4_ngram_topk",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
-        // one compiled pass per doc (graft_bigram_strings) — the HOF
+        // one compiled pass per doc (NX.bigramStrings) — the HOF
         // transform+slice+concat_ws formulation evaluates its lambda
         // interpreted per element and dominated this query's runtime; a
         // <2-token doc yields an empty array, same rows as the old
         // size>=2 prefilter
         val counts = docs(s, dir)
-          .select(col("lang"), explode(call_function("graft_bigram_strings",
+          .select(col("lang"), explode(NX.bigramStrings(
             TF.tokens(col("text")))).as("ng"))
           .groupBy("lang", "ng").agg(count(lit(1)).as("n"))
         val w = Window.partitionBy("lang").orderBy(desc("n"), asc("ng"))
@@ -4620,7 +4573,7 @@ object Llm {
     // the share of its distinct trigrams that are boilerplate. Plan shape:
     // explode distinct trigrams -> document-frequency aggregation (map-side
     // partial) -> join back on the trigram -> per-doc aggregation. All
-    // equi-key shuffles; at 100 TB the join key would be graft_shingles'
+    // equi-key shuffles; at 100 TB the join key would be NX.shingles'
     // 64-bit hash instead of the raw string (same plan, narrower shuffle) —
     // strings here keep the DuckDB oracle exact.
     Q("x4_boilerplate",
@@ -4629,10 +4582,9 @@ object Llm {
         // persisted: the shingle explode feeds BOTH the document-frequency
         // aggregation and the join back — unpersisted it re-runs per
         // consumer; registered, so the harness drains it after the query.
-        // Native one-pass shingle strings (graft_shingle_strings) — the
+        // Native one-pass shingle strings (NX.shingleStrings) — the
         // interpreted transform+concat_ws+array_distinct chain was 60% of
         // this query's time at sf0.1
-        graft.functions.NativeExpressions.register(s)
         val tri = graft.Caches.persist(d.select(col("doc_id"),
           explode(TF.shingleStrings(col("text"), 3)).as("g")))
         val df_ = tri.groupBy("g").agg(count(lit(1)).as("df"))
@@ -4669,7 +4621,6 @@ object Llm {
     // shuffle join — both sides scale linearly, nothing is quadratic).
     Q("x4_decontam",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         val h = ((col("doc_id") % 8000000000L) * 1103515245L + 12345L) % 1000000L
         val d = docs(s, dir).withColumn("split",
           when(h < 800000L, "train").when(h < 900000L, "val").otherwise("test"))
@@ -4838,13 +4789,12 @@ object Llm {
     // scales with distinct tokens (and exists to audit the sketch).
     Q("x4_heavy_hitters_cms",
       (s, dir) => {
-        graft.functions.NativeExpressions.register(s)
         def bkt(r: Column, hw: Column): Column = TF.cmsBucket(r, hw)
         val tc = graft.Caches.persist(
           docs(s, dir).select(explode(TF.tokens(col("text"))).as("w"))
             .groupBy("w").agg(count(lit(1)).as("c"))
             .withColumn("hw",
-              element_at(call_function("graft_wordhash62", array(col("w"))), 1)))
+              element_at(NX.wordHash62(array(col("w"))), 1)))
         val rows = tc.select(col("c"), col("hw"),
             explode(array((0 until 4).map(lit): _*)).as("r"))
           .withColumn("bkt", bkt(col("r"), col("hw")))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.{NativeExpressions => NX}
 import graft.model._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -255,10 +256,10 @@ object Streams {
     * gate"). All stateless stream-static equi-joins, so it runs in append
     * mode with no watermark state:
     *
-    *   stream:  shingle → native minhash (`graft_minhash`) → explode bands
+    *   stream:  shingle → native minhash (`NX.minhash`) → explode bands
     *   join:    band key against the PRECOMPUTED corpus band index
     *            (broadcastable at ~b rows per corpus doc)
-    *   verify:  exact shingle-intersection (`graft_isect`) against the
+    *   verify:  exact shingle-intersection (`NX.isect`) against the
     *            corpus doc's hashed shingles; j ≥ t ⇒ flagged
     *
     * Returns (doc_id, dup_of, jaccard) — one row per (new doc, corpus doc)
@@ -285,13 +286,12 @@ object Streams {
 
   def corpusIndex(corpus: DataFrame, numHashes: Int = 32, bands: Int = 16)
       : CorpusIndex = {
-    graft.functions.NativeExpressions.register(corpus.sparkSession)
     val sh = corpus.select(col("doc_id").as("corpus_id"),
       graft.functions.TextFunctions.shingleHashes(col("text"), 3).as("corpus_sh"))
       .persist()
     val banded = sh.select(col("corpus_id"),
       explode(graft.functions.TextFunctions.bandKeys64(
-        call_function("graft_minhash", col("corpus_sh"), lit(numHashes)),
+        NX.minhash(col("corpus_sh"), numHashes),
         bands)).as("bk"))
     // one statistics pass over the just-persisted frame sizes both halves:
     // bands = n × `bands` (corpus_id, bk) rows; shingles = the hash arrays
@@ -335,12 +335,11 @@ object Streams {
   def nearDupScreen(incoming: DataFrame, index: CorpusIndex, t: Double = 0.5,
       numHashes: Int = 32, bands: Int = 16): DataFrame = {
     val s = incoming.sparkSession
-    graft.functions.NativeExpressions.register(s)
     val sh = incoming.select(col("doc_id"),
       graft.functions.TextFunctions.shingleHashes(col("text"), 3).as("sh"))
     val banded = sh.select(col("doc_id"), col("sh"),
       explode(graft.functions.TextFunctions.bandKeys64(
-        call_function("graft_minhash", col("sh"), lit(numHashes)),
+        NX.minhash(col("sh"), numHashes),
         bands)).as("bk"))
     // byte-gated, never unconditional: against a 100 TB corpus index both
     // joins flip to shuffles sharded by band key / corpus_id — same plan
@@ -351,7 +350,7 @@ object Streams {
       .join(bs(index.bands, index.bandsBytes), "bk")
       .dropDuplicates("doc_id", "corpus_id")
       .join(bs(index.shingles, index.shinglesBytes), "corpus_id")
-      .withColumn("i", call_function("graft_isect", col("sh"), col("corpus_sh")))
+      .withColumn("i", NX.isect(col("sh"), col("corpus_sh")))
       .withColumn("jaccard", col("i").cast("double") /
         (size(col("sh")) + size(col("corpus_sh")) - col("i")).cast("double"))
       .filter(col("jaccard") >= t)
@@ -364,8 +363,8 @@ object Streams {
     * screened for being ≥90% COVERED by some corpus document (a snippet of
     * it, or a near-copy), the asymmetric criterion the Jaccard screen
     * ([[corpusIndex]]/[[nearDupScreen]]) cannot see. Construction reuses
-    * the exact batch machinery (portable `graft_wordhash62` distinct sets,
-    * `graft_minhash_portable` signatures, geometric size strata, the
+    * the exact batch machinery (portable `NX.wordHash62` distinct sets,
+    * `NX.minhashPortable` signatures, geometric size strata, the
     * LSH-Ensemble per-gap band budgets of
     * [[graft.queries.Llm.containmentBandsForGap]]), so screen decisions
     * carry the same recall contract as the batch pass.
@@ -402,16 +401,15 @@ object Streams {
     */
   private def containmentSets(d: DataFrame): DataFrame =
     d.select(col("doc_id"),
-        sort_array(array_distinct(call_function("graft_wordhash62",
+        sort_array(array_distinct(NX.wordHash62(
           graft.functions.TextFunctions.tokenSet(col("text"))))).as("hs"))
       .withColumn("n", size(col("hs")).cast("long"))
       // integer ⌊log2 n⌋ = binary digit length − 1 (exact; n ≥ 1)
       .withColumn("strat", (length(conv(col("n"), 10, 2)) - 1).cast("int"))
       .withColumn("sig",
-        call_function("graft_minhash_portable", col("hs"), lit(ContainK)))
+        NX.minhashPortable(col("hs"), ContainK))
 
   def containmentIndex(corpus: DataFrame): ContainmentIndex = {
-    graft.functions.NativeExpressions.register(corpus.sparkSession)
     val sets = containmentSets(corpus)
       .select(col("doc_id").as("corpus_id"), col("hs").as("chs"),
         col("n").as("cn"), col("strat").as("cstrat"), col("sig").as("csig"))
@@ -477,7 +475,6 @@ object Streams {
   def containmentScreen(incoming: DataFrame, index: ContainmentIndex,
       num: Int = 9, den: Int = 10): DataFrame = {
     val s = incoming.sparkSession
-    graft.functions.NativeExpressions.register(s)
     // index joins are byte-gated ([[graft.Broadcasts]], sized at build):
     // against a 100 TB corpus index each flips to a shuffle sharded by its
     // equi-key (band / (k, sv, stratum) / corpus_id) — same plan shape,
@@ -524,7 +521,7 @@ object Streams {
     val verified = cand
       .join(in.select(col("doc_id"), col("hs"), col("n")), "doc_id")
       .join(bs(index.sets, index.setsBytes), "corpus_id")
-      .withColumn("i", call_function("graft_isect", col("hs"), col("chs")))
+      .withColumn("i", NX.isect(col("hs"), col("chs")))
       .filter(col("i") * den >= col("n") * num)
       .withColumn("coverage_e4", expr("i * 10000 div n"))
       .withColumn("jaccard_e4", expr("i * 10000 div (n + cn - i)"))
@@ -568,10 +565,8 @@ object Streams {
   final case class SimHashIndex(blocks: DataFrame, blocksBytes: Long)
 
   def simhashIndex(corpus: DataFrame): SimHashIndex = {
-    graft.functions.NativeExpressions.register(corpus.sparkSession)
     val fp = corpus.select(col("doc_id").as("corpus_id"),
-      call_function("graft_simhash",
-        call_function("graft_wordhash62",
+      NX.simhash(NX.wordHash62(
           graft.functions.TextFunctions.tokenSet(col("text"))))
         .as("corpus_fp"))
     // 4 (corpus_id, fp, blk, key) rows per corpus doc, ~40 B each — sized
@@ -620,10 +615,8 @@ object Streams {
       maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4-block pigeonhole is complete only to hamming 3")
     val s = incoming.sparkSession
-    graft.functions.NativeExpressions.register(s)
     val banded = incoming.select(col("doc_id"),
-        call_function("graft_simhash",
-          call_function("graft_wordhash62",
+        NX.simhash(NX.wordHash62(
             graft.functions.TextFunctions.tokenSet(col("text"))))
           .as("fp"))
       .select(col("doc_id"), col("fp"),
@@ -794,11 +787,10 @@ object Streams {
     * StreamingSpec.
     */
   def cmsSketch(incoming: DataFrame): DataFrame = {
-    graft.functions.NativeExpressions.register(incoming.sparkSession)
     val TF = graft.functions.TextFunctions
     incoming.select(explode(TF.tokens(col("text"))).as("w"))
       .withColumn("hw",
-        element_at(call_function("graft_wordhash62", array(col("w"))), 1))
+        element_at(NX.wordHash62(array(col("w"))), 1))
       .select(col("hw"),
         explode(array((0 until 4).map(lit): _*)).as("r"))
       .withColumn("bkt", TF.cmsBucket(col("r"), col("hw")))
@@ -815,12 +807,10 @@ object Streams {
 
   def lshIndex(corpus: DataFrame, numBands: Int = 8,
       bitsPerBand: Int = 8): LshIndex = {
-    graft.functions.NativeExpressions.register(corpus.sparkSession)
     val VF = graft.functions.VectorFunctions
     val coded = corpus.select(col("vec_id"),
         VF.toDouble(col("embedding")).as("nv"),
-        call_function("graft_hyperplane_bands",
-          col("embedding"), lit(numBands), lit(bitsPerBand)).as("cbks"))
+        NX.hyperplaneBands(col("embedding"), numBands, bitsPerBand).as("cbks"))
       .withColumn("nn", VF.l2Norm(col("nv")))
     LshIndex(coded.select(col("vec_id"), col("nv"), col("nn"), col("cbks"),
       posexplode(col("cbks")).as(Seq("b", "bv"))), numBands, bitsPerBand)
@@ -845,12 +835,11 @@ object Streams {
     * Returns (doc_id, dup_of, sim), one row per flagged pair.
     */
   def lshScreen(incoming: DataFrame, index: LshIndex, t: Double): DataFrame = {
-    graft.functions.NativeExpressions.register(incoming.sparkSession)
     val VF = graft.functions.VectorFunctions
     val banded = incoming.select(col("doc_id"),
         VF.toDouble(col("embedding")).as("qv"),
-        call_function("graft_hyperplane_bands", col("embedding"),
-          lit(index.numBands), lit(index.bitsPerBand)).as("qbks"))
+        NX.hyperplaneBands(col("embedding"),
+          index.numBands, index.bitsPerBand).as("qbks"))
       .withColumn("qnrm", VF.l2Norm(col("qv")))
       .select(col("doc_id"), col("qv"), col("qnrm"), col("qbks"),
         posexplode(col("qbks")).as(Seq("b", "bv")))
@@ -884,7 +873,6 @@ object Streams {
     */
   def embeddingScreen(incoming: DataFrame,
       idx: graft.operators.IvfIndex.Index, t: Double): DataFrame = {
-    graft.functions.NativeExpressions.register(incoming.sparkSession)
     val VF = graft.functions.VectorFunctions
     val qn = incoming.select(col("doc_id"),
         VF.toDouble(col("embedding")).as("qv"))
@@ -930,7 +918,6 @@ object Streams {
     */
   def annLookup(incoming: DataFrame, idx: graft.operators.IvfIndex.Index,
       k: Int = 1): DataFrame = {
-    graft.functions.NativeExpressions.register(incoming.sparkSession)
     val VF = graft.functions.VectorFunctions
     val q = incoming.select(col("doc_id").as("query_id"),
       VF.toDouble(col("embedding")).as("qv"))
@@ -1181,10 +1168,9 @@ object Streams {
     */
   def dsirScreen(incoming: DataFrame, deltaE6: Map[Long, Long],
       defaultE6: Long, minLogwE6: Long): DataFrame = {
-    graft.functions.NativeExpressions.register(incoming.sparkSession)
     val toks = split(col("text"), " ")
     val buckets = transform(
-      call_function("graft_wordhash62", toks), h => pmod(h, lit(1024L)))
+      NX.wordHash62(toks), h => pmod(h, lit(1024L)))
     // an empty map would type as map<null,null> and fail element_at's
     // analysis with a bigint key — short-circuit to the all-default score
     val logw =

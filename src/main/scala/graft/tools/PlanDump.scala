@@ -48,14 +48,14 @@ object PlanDump {
       |  predicate (codegen'd popcount kernel) inside the join condition — only
       |  qualifying pairs materialize.
       |- x3_knn_brute: BroadcastNestedLoopJoin over the broadcast query set with
-      |  codegen'd graft_dot in the projection.
+      |  codegen'd `DotProduct` in the projection.
       |- x3_knn_ivf: the exact IVF search over the PARQUET-BACKED index
       |  (FileScan of the graft-ivf cache, never the k-means build). At this
       |  cell count the statistics gate picks the single-phase exact scan;
       |  above `graft.ivf.minCellsForPruning` cells the two-phase
       |  triangle-pruning plan appears (probe window -> bound -> survivor
-      |  scan), with query-side joins broadcast only below
-      |  `graft.ivf.broadcastThreshold`.
+      |  scan), with query-side joins broadcast only below the
+      |  `graft.broadcast.ivfQueries` byte gate.
       |- x4_pack: PrefixSum's two-pass scan — range exchange, pid-keyed local
       |  windows, P-row offset aggregate broadcast back; no unaggregated
       |  single-partition exchange.
@@ -72,7 +72,7 @@ object PlanDump {
       |- x1_dedup_clusters: the set-level dispatch — masks grouped to DISTINCT
       |  SETS, the qualifying-pair join over sets (never docs), CC's iteration
       |  plans absent (converged), label projection via one explode.
-      |- x2_jaccard_bigram: the native graft_bigrams kernel in the tokenize
+      |- x2_jaccard_bigram: the native `BigramSet` kernel in the tokenize
       |  projection (no interpreted HOF lambda), then the same broadcast
       |  set-pair join as x2_jaccard_exact.
       |- x4_ngram_topk: partial+final hash agg on (lang, ngram) then

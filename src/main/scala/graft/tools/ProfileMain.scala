@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{NativeExpressions => NX, TextFunctions => TF}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -130,9 +130,8 @@ object ProfileMain {
     */
   private def bigramStats(spark: SparkSession, dir: String): Unit = {
     val t = 0.7
-    graft.functions.NativeExpressions.register(spark)
     val tok = graft.Tables.load(spark, dir, "documents").select(col("doc_id"),
-      explode(call_function("graft_bigrams", TF.tokens(col("text")))).as("w"))
+      explode(NX.bigrams(TF.tokens(col("text")))).as("w"))
     println(s"[diag] tok rows      = ${tok.count()}")
     println(s"[diag] vocab         = ${tok.select("w").distinct().count()}")
     val dfreq = tok.groupBy("w").agg(count(lit(1)).as("df"))
@@ -188,7 +187,6 @@ object ProfileMain {
   }
 
   private def clusterPieces(spark: SparkSession, dir: String): Unit = {
-    graft.functions.NativeExpressions.register(spark)
     (1 to 2).foreach { round =>
       println(s"[profile] --- clusters round $round ---")
       val tok = graft.Caches.persist(graft.Tables.load(spark, dir, "documents")
@@ -224,7 +222,6 @@ object ProfileMain {
     * Dev-only duplication; the production code stays in queries.Llm.
     */
   private def containmentLshPieces(spark: SparkSession, dir: String): Unit = {
-    graft.functions.NativeExpressions.register(spark)
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     (1 to 2).foreach { round =>
@@ -233,7 +230,7 @@ object ProfileMain {
       val K = 32; val bands2 = 16; val P31 = 2147483647L
       val sets = graft.Caches.persist(
         d0.select(col("doc_id"),
-            sort_array(array_distinct(call_function("graft_wordhash62",
+            sort_array(array_distinct(NX.wordHash62(
               TF.tokenSet(col("text"))))).as("hs"))
           .groupBy("hs")
           .agg(min("doc_id").as("sid"), collect_list("doc_id").as("members"),
@@ -242,7 +239,7 @@ object ProfileMain {
           .withColumn("strat", (length(conv(col("n"), 10, 2)) - 1).cast("int")))
       time("sets materialize") { sets.count() }
       val sig = graft.Caches.persist(sets.select(col("sid"), col("strat"),
-        call_function("graft_minhash_portable", col("hs"), lit(K)).as("sig")))
+        NX.minhashPortable(col("hs"), K).as("sig")))
       time("sig materialize") { sig.count() }
       val setStats = sets.agg(count(lit(1)), min("strat"), max("strat")).head()
       val bkArr = array((0 until bands2).map { b =>
@@ -254,7 +251,7 @@ object ProfileMain {
       val cand0 = b2.as("a").join(b2.as("b"),
           col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&
             col("a.strat") === col("b.strat") && col("a.sid") < col("b.sid"))
-        .filter(col("a.band") + 1 === call_function("graft_first_eq",
+        .filter(col("a.band") + 1 === NX.firstEq(
           col("a.bks"), col("b.bks"), lit(bands2)))
         .select(col("a.sid").as("sa"), col("b.sid").as("sb"))
       time("tier1 cand0") { noop(cand0) }
@@ -275,7 +272,7 @@ object ProfileMain {
         probe.as("a").join(b1.as("b"),
             col("a.k") === col("b.k") && col("a.sv") === col("b.sv") &&
               col("a.tgt") === col("b.strat"))
-          .filter(col("a.k") + 1 === call_function("graft_first_eq",
+          .filter(col("a.k") + 1 === NX.firstEq(
             col("a.sig"), col("b.sig"), col("a.bud")))
           .select(least(col("a.sid"), col("b.sid")).as("sa"),
             greatest(col("a.sid"), col("b.sid")).as("sb"))
@@ -284,14 +281,13 @@ object ProfileMain {
       val cand = if (candG == null) cand0 else cand0.unionAll(candG)
       val nSets = setStats.getLong(0)
       val bs = graft.Broadcasts.gate(spark, "containment", nSets,
-        rowBytes = 400, defaultBytes = 400L << 20,
-        legacyRowsConf = "graft.containment.broadcastThreshold")
+        rowBytes = 400, defaultBytes = 400L << 20)
       val verified = cand
         .join(bs(sets.select(col("sid").as("sa"), col("hs").as("ha"),
           col("n").as("na"), col("members").as("mem_a"))), "sa")
         .join(bs(sets.select(col("sid").as("sb"), col("hs").as("hb"),
           col("n").as("nb"), col("members").as("mem_b"))), "sb")
-        .withColumn("i", call_function("graft_isect", col("ha"), col("hb")))
+        .withColumn("i", NX.isect(col("ha"), col("hb")))
         .filter(col("i") * 10 >= least(col("na"), col("nb")) * 9)
         .withColumn("containment_e4", expr("i * 10000 div least(na, nb)"))
         .withColumn("jaccard_e4", expr("i * 10000 div (na + nb - i)"))
@@ -312,7 +308,6 @@ object ProfileMain {
   }
 
   private def rrfPieces(spark: SparkSession, dir: String): Unit = {
-    graft.functions.NativeExpressions.register(spark)
     import org.apache.spark.sql.expressions.Window
     (1 to 2).foreach { round =>
       println(s"[profile] --- rrf round $round ---")
@@ -404,7 +399,6 @@ object ProfileMain {
     */
   private def lshSkewSweep(spark: SparkSession): Unit = {
     import org.apache.spark.sql.DataFrame
-    graft.functions.NativeExpressions.register(spark)
     val template = (1 to 30).map(i => s"tpl$i").mkString(" ")
     def corpus(m: Int): DataFrame =
       spark.range(m).select(col("id").as("doc_id"), lit(template).as("text"))
@@ -415,10 +409,9 @@ object ProfileMain {
     def docLevel(d0: DataFrame): DataFrame = {
       val P31 = 2147483647L
       val d = graft.Caches.persist(d0.select(col("doc_id"),
-        call_function("graft_shingles_portable",
-          TF.tokens(col("text")), lit(3)).as("sh")))
+        NX.shinglesPortable(TF.tokens(col("text")), 3).as("sh")))
       val sig = d.select(col("doc_id"),
-        call_function("graft_minhash_portable", col("sh"), lit(32)).as("sig"))
+        NX.minhashPortable(col("sh"), 32).as("sig"))
       val banded = sig.select(col("doc_id"),
         posexplode(array((0 until 16).map { b =>
           element_at(col("sig"), 2 * b + 1) * P31 +
@@ -433,7 +426,7 @@ object ProfileMain {
       cand
         .join(d.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
         .join(d.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-        .withColumn("i", call_function("graft_isect", col("sh_a"), col("sh_b")))
+        .withColumn("i", NX.isect(col("sh_a"), col("sh_b")))
         .withColumn("j", col("i").cast("double") /
           (size(col("sh_a")) + size(col("sh_b")) - col("i")).cast("double"))
         .filter(col("j") >= 0.5)
@@ -468,7 +461,6 @@ object ProfileMain {
   private def lshKnnSweep(spark: SparkSession): Unit = {
     import spark.implicits._
     import graft.functions.{VectorFunctions => VF}
-    graft.functions.NativeExpressions.register(spark)
     for ((n, bpb) <- Seq((4000, 8), (8000, 9), (16000, 10), (32000, 11))) {
       val rng = new scala.util.Random(71)
       val centers = Array.fill(n / 30)(Array.fill(16)(rng.nextGaussian()))
@@ -486,8 +478,7 @@ object ProfileMain {
       }
       // candidate volume: the banded join's output before rerank
       val bands = emb.select(col("vec_id"),
-        posexplode(call_function("graft_hyperplane_bands",
-          col("embedding"), lit(8), lit(bpb))).as(Seq("b", "bv")))
+        posexplode(NX.hyperplaneBands(col("embedding"), 8, bpb)).as(Seq("b", "bv")))
       val cands = bands.filter(pred)
         .select(col("vec_id").as("query_id"), col("b"), col("bv"))
         .join(bands.withColumnRenamed("vec_id", "neighbor_id"), Seq("b", "bv"))
@@ -692,7 +683,6 @@ object ProfileMain {
   }
 
   private def dsirPieces(spark: SparkSession, dir: String): Unit = {
-    graft.functions.NativeExpressions.register(spark)
     (1 to 2).foreach { round =>
       println(s"[profile] --- round $round ---")
       val d = graft.Tables.load(spark, dir, "documents")
@@ -762,8 +752,7 @@ object ProfileMain {
   }
 
   private def bigramPieces(spark: SparkSession, dir: String): Unit = {
-    graft.functions.NativeExpressions.register(spark)
-    val bigrams = call_function("graft_bigrams", TF.tokens(col("text")))
+    val bigrams = NX.bigrams(TF.tokens(col("text")))
     (1 to 2).foreach { round =>
       println(s"[profile] --- round $round ---")
       val tok = graft.Caches.persist(

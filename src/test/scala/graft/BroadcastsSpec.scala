@@ -15,24 +15,15 @@ class BroadcastsSpec extends AnyFunSuite {
       defaultBytes = 999))
   }
 
-  test("precedence: site byte conf > legacy rows conf > default bytes") {
-    spark.conf.set("graft.bs.legacyRows", "9")
+  test("precedence: site byte conf > default bytes") {
+    spark.conf.set("graft.broadcast.bs_test", "1000")
     try {
-      // legacy conf set: it wins over the default and counts ROWS
-      assert(!Broadcasts.fits(spark, "bs_test", rows = 10, rowBytes = 100,
-        defaultBytes = Long.MaxValue, legacyRowsConf = "graft.bs.legacyRows"))
-      assert(Broadcasts.fits(spark, "bs_test", rows = 9, rowBytes = 100,
-        defaultBytes = 1, legacyRowsConf = "graft.bs.legacyRows"))
-      // site byte conf set: it wins over the legacy conf and counts BYTES
-      spark.conf.set("graft.broadcast.bs_test", "1000")
+      // site byte conf set: it wins over the default and counts BYTES
       assert(Broadcasts.fits(spark, "bs_test", rows = 10, rowBytes = 100,
-        defaultBytes = 1, legacyRowsConf = "graft.bs.legacyRows"))
+        defaultBytes = 1))
       assert(!Broadcasts.fits(spark, "bs_test", rows = 11, rowBytes = 100,
-        defaultBytes = Long.MaxValue, legacyRowsConf = "graft.bs.legacyRows"))
-    } finally {
-      spark.conf.unset("graft.bs.legacyRows")
-      spark.conf.unset("graft.broadcast.bs_test")
-    }
+        defaultBytes = Long.MaxValue))
+    } finally spark.conf.unset("graft.broadcast.bs_test")
   }
 
   test("rows × rowBytes overflow saturates — the gate CLOSES, never opens") {

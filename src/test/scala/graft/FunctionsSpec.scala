@@ -1,40 +1,11 @@
 package graft
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class FunctionsSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
-
-  test("VectorMeanAggregator matches the posexplode centroid formulation") {
-    import graft.functions.VectorMeanAggregator
-    val spark = SparkTestSession.spark
-    import spark.implicits._
-    val e = Tables.load(spark, SparkTestSession.sfDir, "embeddings")
-    val typed = e.select(col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-      .as[(Int, Array[Double])]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(VectorMeanAggregator.toColumn.name("centroid"))
-      .collect().toMap
-    val relational = e
-      .select(col("label"),
-        posexplode(transform(col("embedding"), x => x.cast("double"))).as(Seq("pos", "x")))
-      .groupBy("label", "pos").agg(avg("x").as("m"))
-      .collect().groupBy(_.getInt(0))
-      .map { case (l, rows) =>
-        l -> rows.sortBy(_.getInt(1)).map(_.getDouble(2))
-      }
-    assert(typed.keySet == relational.keySet)
-    typed.foreach { case (l, c) =>
-      c.zip(relational(l)).foreach { case (a, b) =>
-        assert(math.abs(a - b) < 1e-9, s"label $l")
-      }
-    }
-  }
 
   test("vector dot / norm / cosine on known values") {
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{NativeExpressions => NX, TextFunctions => TF}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -304,10 +304,9 @@ class LlmSpec extends AnyFunSuite {
     val VF = graft.functions.VectorFunctions
     val e = emb.select(col("vec_id"), VF.toDouble(col("embedding")).as("v"))
       .withColumn("nrm", VF.l2Norm(col("v")))
-    graft.functions.NativeExpressions.register(spark)
     val exact = e.as("a").crossJoin(e.as("b"))
       .filter(col("a.vec_id") < col("b.vec_id"))
-      .withColumn("sim", call_function("graft_dot", col("a.v"), col("b.v"))
+      .withColumn("sim", NX.dot(col("a.v"), col("b.v"))
         / (col("a.nrm") * col("b.nrm")))
       .filter(col("sim") >= 0.35)
       .select(col("a.vec_id"), col("b.vec_id"), col("sim"))
@@ -337,7 +336,7 @@ class LlmSpec extends AnyFunSuite {
       .withColumn("nrm", VF.l2Norm(col("v")))
     val pExact = pe.as("a").crossJoin(pe.as("b"))
       .filter(col("a.vec_id") < col("b.vec_id"))
-      .withColumn("sim", call_function("graft_dot", col("a.v"), col("b.v"))
+      .withColumn("sim", NX.dot(col("a.v"), col("b.v"))
         / (col("a.nrm") * col("b.nrm")))
       .filter(col("sim") >= 0.9)
       .select(col("a.vec_id"), col("b.vec_id"))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.NativeExpressions
+import graft.functions.{NativeExpressions => NX}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
@@ -15,7 +15,6 @@ import scala.util.Random
 class NativeKernelsSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   import spark.implicits._
-  NativeExpressions.register(spark)
 
   private val modes = Seq("CODEGEN_ONLY", "NO_CODEGEN")
 
@@ -39,7 +38,7 @@ class NativeKernelsSpec extends AnyFunSuite {
       for (mode <- modes) {
         val got = withCodegen(mode) {
           Seq((a, b)).toDF("a", "b")
-            .select(call_function("graft_dot", col("a"), col("b")))
+            .select(NX.dot(col("a"), col("b")))
             .as[Double].head()
         }
         assert(got == expected, s"mode=$mode")
@@ -57,7 +56,7 @@ class NativeKernelsSpec extends AnyFunSuite {
       for (mode <- modes) {
         val got = withCodegen(mode) {
           Seq((a, b)).toDF("a", "b")
-            .select(call_function("graft_isect", col("a"), col("b")))
+            .select(NX.isect(col("a"), col("b")))
             .as[Long].head()
         }
         assert(got == expected, s"mode=$mode a=$a b=$b")
@@ -84,8 +83,7 @@ class NativeKernelsSpec extends AnyFunSuite {
       for (mode <- modes) {
         val got = withCodegen(mode) {
           Seq((a, b)).toDF("a", "b")
-            .select(call_function("graft_isect_geq", col("a"), col("b"),
-              lit(num), lit(den)))
+            .select(NX.isectGeq(col("a"), col("b"), num, den))
             .as[Boolean].head()
         }
         assert(got == expected, s"mode=$mode num=$num den=$den a=$a b=$b")
@@ -103,9 +101,7 @@ class NativeKernelsSpec extends AnyFunSuite {
       for (mode <- modes) {
         val got = withCodegen(mode) {
           Seq((a, b)).toDF("a", "b")
-            .select(call_function("graft_mask_isect",
-              call_function("graft_mask", col("a"), lit(4)),
-              call_function("graft_mask", col("b"), lit(4))))
+            .select(NX.maskIsect(NX.mask(col("a"), 4), NX.mask(col("b"), 4)))
             .as[Long].head()
         }
         assert(got == expected, s"mode=$mode")
@@ -119,7 +115,7 @@ class NativeKernelsSpec extends AnyFunSuite {
       val a = List.fill(1 + rng.nextInt(50))(rng.nextLong()).distinct
       def sig(xs: List[Long]) =
         Seq(Tuple1(xs)).toDF("a")
-          .select(call_function("graft_minhash", col("a"), lit(8)).as("sig"))
+          .select(NX.minhash(col("a"), 8).as("sig"))
           .as[Seq[Long]].head()
       val s1 = sig(a)
       assert(s1.length == 8)
@@ -150,7 +146,7 @@ class NativeKernelsSpec extends AnyFunSuite {
       .groupBy("doc_id").agg(sum("contrib").as("simhash"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val native = hashed
-      .select(col("doc_id"), call_function("graft_simhash", col("hs")).as("simhash"))
+      .select(col("doc_id"), NX.simhash(col("hs")).as("simhash"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native == explodeForm)
   }
@@ -171,7 +167,7 @@ class NativeKernelsSpec extends AnyFunSuite {
     }.toDF("doc_id", "text")
     for (mode <- modes) withCodegen(mode) {
       val both = docs.select(
-        call_function("graft_wordhash62", split(col("text"), " ")).as("k"),
+        NX.wordHash62(split(col("text"), " ")).as("k"),
         transform(split(col("text"), " "), hofWordHash _).as("h"))
         .as[(Seq[Long], Seq[Long])].collect()
       both.foreach { case (k, h) => assert(k == h) }
@@ -194,7 +190,7 @@ class NativeKernelsSpec extends AnyFunSuite {
     val hof = zip_with(foldSlice(1000003L, 1000000007L), foldSlice(1000033L, 2147483647L),
       (s1, s2) => s1 * lit(2147483648L) + s2)
     val both = docs.select(
-      call_function("graft_shingles_portable", toks, lit(3)).as("k"),
+      NX.shinglesPortable(toks, 3).as("k"),
       array_sort(array_distinct(hof)).as("h")).as[(Seq[Long], Seq[Long])].collect()
     both.foreach { case (k, h) => assert(k == h) }
   }
@@ -215,9 +211,9 @@ class NativeKernelsSpec extends AnyFunSuite {
       val hof = zip_with(foldSlice(1000003L, 1000000007L), foldSlice(1000033L, 2147483647L),
         (s1, s2) => s1 * lit(2147483648L) + s2)
       val rows = docs.select(
-        call_function("graft_span_hashes", toks, lit(k)).as("got"),
+        NX.spanHashes(toks, k).as("got"),
         hof.as("want"),
-        call_function("graft_shingles_portable", toks, lit(k)).as("sh"))
+        NX.shinglesPortable(toks, k).as("sh"))
         .as[(Seq[Long], Seq[Long], Seq[Long])].collect()
       rows.foreach { case (got, want, sh) =>
         assert(got == want, s"k=$k: positional hashes diverge from the HOF fold")
@@ -240,7 +236,7 @@ class NativeKernelsSpec extends AnyFunSuite {
         xs.map(h => (ak * (h % p) + bk) % p).min
       }
       val got = Seq(Tuple1(xs)).toDF("a")
-        .select(call_function("graft_minhash_portable", col("a"), lit(32)).as("sig"))
+        .select(NX.minhashPortable(col("a"), 32).as("sig"))
         .as[Seq[Long]].head()
       assert(got == expected)
     }
@@ -259,7 +255,7 @@ class NativeKernelsSpec extends AnyFunSuite {
         i => concat_ws(" ", slice(toks, i, lit(2))))))
       .otherwise(array().cast("array<string>"))
     val got = df.select(col("doc_id"),
-        call_function("graft_bigrams", toks).as("bg"))
+        NX.bigrams(toks).as("bg"))
       .as[(Long, Seq[String])].collect().toMap
     val expected = df.select(col("doc_id"), hof.as("bg"))
       .as[(Long, Seq[String])].collect().toMap
@@ -320,7 +316,7 @@ class NativeKernelsSpec extends AnyFunSuite {
     // equi-keyed on the size band, so the plan must degrade to a
     // DISTRIBUTED band-keyed shuffle join (both sides partitioned on the
     // band) — never a cartesian, never a broadcast — with the same answer.
-    spark.conf.set("graft.jaccard.broadcastThreshold", "0")
+    spark.conf.set("graft.broadcast.jaccard", "0")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val df = graft.queries.Llm.jaccardPairsForTest(spark, tok, 0.5)
@@ -334,7 +330,7 @@ class NativeKernelsSpec extends AnyFunSuite {
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
         s"expected a shuffled band-keyed join; plan=\n$p")
     } finally {
-      spark.conf.unset("graft.jaccard.broadcastThreshold")
+      spark.conf.unset("graft.broadcast.jaccard")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       graft.Caches.drain(spark)
     }
@@ -507,13 +503,12 @@ class NativeKernelsSpec extends AnyFunSuite {
 
   test("graft_bigram_strings equals the HOF transform formulation, " +
       "including <2-token and empty edge cases") {
-    graft.functions.NativeExpressions.register(spark)
     val docs = Seq("the cat sat on the mat", "a b", "single", "",
       "x  y", "repeat repeat repeat").toDF("text")
     val toks = split(col("text"), " ")
     val n = size(toks)
     val rows = docs.select(
-        call_function("graft_bigram_strings", toks).as("native"),
+        NX.bigramStrings(toks).as("native"),
         coalesce(when(n >= 2, transform(sequence(lit(2), n), i =>
           concat_ws(" ", element_at(toks, i - 1), element_at(toks, i)))),
           array().cast("array<string>")).as("hof"))
@@ -526,14 +521,13 @@ class NativeKernelsSpec extends AnyFunSuite {
 
   test("graft_hyperplane_probes at flips=0 equals the composite band keys, " +
       "and each flip level is a strict prefix of the next") {
-    graft.functions.NativeExpressions.register(spark)
     val rng = new scala.util.Random(53)
     val vecs = (0L until 40L).map(i => (i, Seq.fill(16)(rng.nextGaussian())))
     val df = vecs.toDF("vec_id", "embedding")
-    val rows = df.selectExpr(
-        "graft_hyperplane_bands(embedding, 8, 8) AS bks",
-        "graft_hyperplane_probes(embedding, 8, 8, 0) AS p0",
-        "graft_hyperplane_probes(embedding, 8, 8, 2) AS p2")
+    val rows = df.select(
+        NX.hyperplaneBands(col("embedding"), 8, 8).as("bks"),
+        NX.hyperplaneProbes(col("embedding"), 8, 8, 0).as("p0"),
+        NX.hyperplaneProbes(col("embedding"), 8, 8, 2).as("p2"))
       .collect()
     rows.foreach { r =>
       val bks = r.getSeq[Long](0)
@@ -677,7 +671,7 @@ class NativeKernelsSpec extends AnyFunSuite {
       .select(col("vec_id"), expr("transform(sc, p -> p.cid)").as("code"))
       .as[(Long, Seq[Long])].collect().toMap
     val gotCodes = e8.select(col("vec_id"),
-        call_function("graft_pq_encode", col("q8"), cbLit).as("code"))
+        NX.pqEncode(col("q8"), cbLit).as("code"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(gotCodes == refCodes, "native encode diverged from relational")
     // relational reference: per-query table + summed ADC distance
@@ -694,12 +688,12 @@ class NativeKernelsSpec extends AnyFunSuite {
       .map(r => (r._1, r._2) -> r._3).toMap
     val qtabs = e8.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"),
-        call_function("graft_pq_qtab", col("q8"), cbLit).as("qtab"))
+        NX.pqQueryTable(col("q8"), cbLit).as("qtab"))
     val gotAdist = e8.select(col("vec_id"),
-        call_function("graft_pq_encode", col("q8"), cbLit).as("code"))
+        NX.pqEncode(col("q8"), cbLit).as("code"))
       .crossJoin(broadcast(qtabs))
       .select(col("query_id"), col("vec_id"),
-        call_function("graft_adc", col("code"), col("qtab")).as("adist"))
+        NX.adc(col("code"), col("qtab")).as("adist"))
       .as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     assert(gotAdist == refAdist, "native ADC distances diverged from relational")

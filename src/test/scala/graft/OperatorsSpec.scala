@@ -552,7 +552,7 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val baseline = graft.operators.IvfIndex.knnExact(idx, q, k = 3, nprobe = 2)
       .select("query_id", "rk", "neighbor_id").as[(Long, Long, Long)]
       .collect().toSeq.sorted
-    spark.conf.set("graft.ivf.broadcastThreshold", "0")
+    spark.conf.set("graft.broadcast.ivfQueries", "0")
     try withPruningPath {
       val df = graft.operators.IvfIndex.knnExact(idx, q, k = 3, nprobe = 2)
       val got = df.select("query_id", "rk", "neighbor_id").as[(Long, Long, Long)]
@@ -563,7 +563,7 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       // that grows linearly with the corpus
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
         s"expected a shuffled query-side join above threshold; plan=\n$p")
-    } finally spark.conf.unset("graft.ivf.broadcastThreshold")
+    } finally spark.conf.unset("graft.broadcast.ivfQueries")
   }
 
   test("Bucketed.colocatedJoin plans with zero shuffle exchanges") {

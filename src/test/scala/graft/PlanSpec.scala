@@ -249,7 +249,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // the PQ contract after the native-ADC rewrite: the scan is the code
     // table × the FIXED-BUDGET query-table broadcast — ONE nested-loop
     // whose inner side is bounded (knnQueryStride) at any corpus size,
-    // with graft_adc evaluated in the scan's projection — and the only
+    // with the native ADC kernel evaluated in the scan's projection — and the only
     // exchanges before the rank window carry (query, neighbor, adist)
     // rows, never codes, tables, or full-precision vectors. More than one
     // NLJ (or any cartesian over two corpus-sized sides) would mean the
@@ -261,7 +261,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .findAllIn(p.split("== Initial Plan ==").head).size
     assert(cartesians == 1,
       s"expected exactly the bounded codes x queries NLJ:\n$p")
-    assert(p.contains("graft_adc") || p.contains("adcdistance"),
+    assert(p.contains("adcdistance"),
       s"expected the native ADC fold in the scan projection:\n$p")
     graft.Caches.drain(spark)
   }
@@ -282,7 +282,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(cartesians <= 2, s"unexpected all-pairs joins in the IVFPQ plan:\n$p")
     assert(p.contains("cell"),
       s"expected the (cell) probe equi-join key:\n$p")
-    assert(p.contains("graft_adc") || p.contains("adcdistance"),
+    assert(p.contains("adcdistance"),
       s"expected the native ADC fold in the scan projection:\n$p")
   }
 

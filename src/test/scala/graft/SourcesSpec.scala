@@ -215,39 +215,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(one.count() == flat.filter(col("device_id") === devices.head).count())
   }
 
-  test("z-order layout localizes BOTH dimensions; single-column sort only one") {
-    // 64k uniform points in a 1024x1024 grid, 32 files per layout. The
-    // metric is layout locality: how many files hold rows matching a narrow
-    // predicate — the lower bound on files ANY reader must touch (parquet
-    // min/max stats turn the untouched ones into skipped IO).
-    val n = 65536
-    val df = spark.range(n).select(
-      ((col("id") * 2654435761L) % 1024).as("x"),
-      ((col("id") * 97 + 13) % 1024).as("y"))
-    val zDir = "/tmp/graft_zorder_z"
-    val xDir = "/tmp/graft_zorder_x"
-    graft.sources.ZOrder.write(df, "x", "y", 0, 1023, 0, 1023, zDir, 32)
-    df.repartitionByRange(32, col("x")).sortWithinPartitions("x")
-      .write.mode("overwrite").parquet(xDir)
-    def filesTouched(dir: String, pred: org.apache.spark.sql.Column): Long =
-      spark.read.parquet(dir).filter(pred)
-        .select(input_file_name()).distinct().count()
-    val yPred = col("y") >= 200 && col("y") < 260
-    val xPred = col("x") >= 200 && col("x") < 260
-    val (zy, xy) = (filesTouched(zDir, yPred), filesTouched(xDir, yPred))
-    val (zx, xx) = (filesTouched(zDir, xPred), filesTouched(xDir, xPred))
-    // the x-sorted layout cannot localize y at all: every file has matches
-    assert(xy == 32, s"x-sorted layout unexpectedly localized y: $xy")
-    // z-order holds a ~6% box of each dimension inside a strict file subset
-    assert(zy <= 16, s"z-order touched $zy/32 files for the y predicate")
-    assert(zx <= 16, s"z-order touched $zx/32 files for the x predicate")
-    // and the single-column layout is near-optimal only for its own column
-    assert(xx <= 4, s"x-sorted layout touched $xx/32 files for x")
-    // correctness: layouts change placement, never content
-    assert(spark.read.parquet(zDir).filter(yPred).count() ==
-      df.filter(yPred).count())
-  }
-
   test("Snapshot.update is compare-and-swap: a racing rewrite aborts " +
       "cleanly, never clobbers the winner") {
     import graft.sources.Snapshot

@@ -8,7 +8,6 @@ object SparkTestSession {
     val s = SparkSession.builder()
       .master("local[8]")
       .appName("graft-test")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
