@@ -3,14 +3,28 @@
 # this exiting 0. Rounds 3 and 6 were forfeited because the final commit did
 # not compile — this script makes that structurally impossible.
 #
-#   dev/preflight.sh            # compile + QueriesSpec/NativeColumnsSpec smoke (<2 min)
+#   dev/preflight.sh            # compile + QueriesSpec/NativeColumnsSpec/ReadMemoSpec smoke (<2 min)
 #   dev/preflight.sh full       # compile + the entire ScalaTest suite
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# One parquet reader: every engine read of a path goes through
+# Caches.readParquet, which memoizes the inferred schema by file fingerprint.
+stray=$(grep -rn '\.read\.parquet(' src/main/scala | grep -v '^src/main/scala/graft/Caches\.scala:' || true)
+if [[ -n "$stray" ]]; then
+  echo "[preflight] parquet read outside Caches.readParquet:" >&2
+  echo "$stray" >&2
+  exit 1
+fi
+readers=$(grep -c '\.read\.parquet(' src/main/scala/graft/Caches.scala || true)
+if [[ "$readers" != 1 ]]; then
+  echo "[preflight] Caches.scala must hold exactly one parquet read, found $readers" >&2
+  exit 1
+fi
+
 if [[ "${1:-smoke}" == "full" ]]; then
   sbt -batch compile Test/compile test
 else
-  sbt -batch compile Test/compile "testOnly graft.QueriesSpec graft.NativeColumnsSpec"
+  sbt -batch compile Test/compile "testOnly graft.QueriesSpec graft.NativeColumnsSpec graft.ReadMemoSpec"
 fi
 echo "[preflight] OK — safe to commit"

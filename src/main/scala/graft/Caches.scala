@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** Session-scoped registry of query-local `persist()`s.
   *
@@ -15,8 +17,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - operators call `Caches.persist(df)` instead of `df.persist()`;
   *   - Bench / Verify / tests call `Caches.drain(spark)` after each query.
   *
-  * Intentional cross-query memos (Dashboard's generated frame) stay outside
-  * this registry and keep their own release hooks.
+  * It is also the session's one memo registry. Each memo and its key:
+  *
+  *   - parquet schemas ([[readParquet]]): (path) → schema, valid while the
+  *     path's leaf files (names, sizes, mtimes) and the schema-relevant
+  *     parquet confs match; survives `drain`;
+  *   - statistics (`countOnce`/`rowOnce` on unpersisted frames): the
+  *     canonical analyzed plan, file relations keyed by the same leaf-file
+  *     fingerprint; survives `drain`;
+  *   - primed statistics (the same calls on persisted frames): the same
+  *     key, valid only while the cache entry is materialized; `drain` and
+  *     `scoped` exit clear it.
+  *
+  * `invalidateCounts` drops all of a session's memos. Intentional
+  * cross-query frames (Dashboard's generated frame) stay outside this
+  * registry and keep their own release hooks.
   */
 object Caches {
   // plain map, honest semantics: entries live until drain() — the registered
@@ -103,17 +118,79 @@ object Caches {
     primedRows.synchronized(primedRows.filterInPlace { case ((ks, _), _) => ks != s })
   }
 
+  // ---- parquet reads ----------------------------------------------------
+  // A plain parquet read of a path infers the schema on every call: a
+  // one-task footer job plus driver time, and a warm x3_hybrid_search build
+  // reads four paths. Every engine parquet read goes through
+  // readParquet, which infers once per (path, file fingerprint, schema-
+  // relevant confs) and reads later with that schema — no job.
+  private final case class SchemaMemo(
+      confs: Seq[Option[String]], files: Any, schema: StructType)
+  private val schemas = scala.collection.mutable.HashMap[(SparkSession, String), SchemaMemo]()
+
+  // confs that change what parquet schema inference returns for the same
+  // files (Tables.load sets nanosAsLong for events)
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive")
+
+  /** What a file relation's scan would read: its root paths plus every
+    * leaf file's (path, size, mtime), taken from the relation's own
+    * already-listed `FileIndex` — no second listing.
+    */
+  private def fingerprint(fs: HadoopFsRelation): Any = fs.location match {
+    case idx: PartitioningAwareFileIndex =>
+      (idx.rootPaths.map(_.toString),
+        idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+          .sortBy(_._1))
+    case idx => idx.rootPaths.map(_.toString)
+  }
+
+  private def fingerprint(df: DataFrame): Seq[Any] =
+    df.queryExecution.analyzed.collect { case lr: LogicalRelation => lr.relation }
+      .collect { case fs: HadoopFsRelation => fingerprint(fs) }
+
+  /** A parquet read of `path`, with the inferred schema memoized per
+    * session. A memo hit reads with `.schema(memo)` (no inference job) and
+    * is kept only if the files it listed match the memo's [[fingerprint]]
+    * and the schema-relevant confs are unchanged; otherwise the path is
+    * re-inferred and its one entry replaced. A path deleted since it was
+    * memoized fails the hit-path read and falls through to the plain read,
+    * so it fails exactly as an uncached read does; an emptied directory
+    * lists no files, misses, and fails inference as before.
+    * [[invalidateCounts]] drops the entries; [[drain]] keeps them.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = (spark, path)
+    val confs = schemaConfs.map(spark.conf.getOption)
+    val hit = schemas.synchronized(schemas.get(key)).filter(_.confs == confs).flatMap { m =>
+      try Some(spark.read.schema(m.schema).parquet(path)).filter(fingerprint(_) == m.files)
+      catch { case _: AnalysisException => None }
+    }
+    hit.getOrElse {
+      val df = spark.read.parquet(path)
+      schemas.synchronized(schemas.put(key, SchemaMemo(confs, fingerprint(df), df.schema)))
+      df
+    }
+  }
+
   // ---- memoized statistics counts ------------------------------------
   // Every Broadcasts.gate site pays an eager .count() at plan-construction
   // time. At sf0.1 that is 0.2-0.3 s of constant; at 100 TB a count over a
   // derived frame (tokenized sets, an index's assigned frame) is a full
   // scan per QUERY BUILD — and several queries build over the same input
   // in one session (Bench runs 158). Keyed by the ANALYZED plan's
-  // canonical form, the scan runs once per distinct input per session;
-  // drain() leaves the memo alone (the underlying data hasn't changed —
-  // only the cache blocks are released). Paths that MUTATE a frame in
-  // place must go through new plans (new artifact generation dirs /
-  // unioned frames), which miss the memo by construction.
+  // canonical form with file relations keyed by their leaf files
+  // (planKey), the scan runs once per distinct input per session; drain()
+  // leaves the memo alone (the underlying data hasn't changed — only the
+  // cache blocks are released), and an in-place rewrite lists new files,
+  // so it misses.
   private val counts = scala.collection.mutable.HashMap[(SparkSession, Any), Long]()
 
   // counts of PERSISTED frames whose shared cache entry has already been
@@ -126,22 +203,22 @@ object Caches {
   /** The memo key: the canonicalized analyzed plan, with every file
     * relation replaced by a structural stand-in. Canonicalization alone
     * is NOT enough — `HadoopFsRelation` carries a `FileIndex` compared by
-    * REFERENCE, so two `spark.read.parquet(path)` calls over the same
-    * path never compare equal and every query build would re-pay its
-    * count. Keying the file relations by (root paths, schema, format)
-    * and everything else (including LocalRelation DATA — two in-memory
-    * frames with equal schemas but different rows must not collide) by
-    * canonical structure gives value-equality exactly when the scan
-    * would return the same rows.
+    * REFERENCE, so two reads of the same path never compare equal and
+    * every query build would re-pay its count. Keying the file relations
+    * by (file [[fingerprint]], schema, format) and everything else
+    * (including LocalRelation DATA — two in-memory frames with equal
+    * schemas but different rows must not collide) by canonical structure
+    * gives value-equality exactly when the scan would return the same
+    * rows — and a table rewritten in place at the same path (FileSwap)
+    * lists new leaf files, so it misses the memo without any
+    * [[invalidateCounts]].
     */
   private def planKey(df: DataFrame): (SparkSession, Any) = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val p = df.queryExecution.analyzed.canonicalized
     val rels = p.collect {
       case lr: LogicalRelation => lr.relation match {
         case fs: HadoopFsRelation =>
-          (fs.location.rootPaths.map(_.toString), fs.dataSchema,
-            fs.fileFormat.getClass.getName): Any
+          (fingerprint(fs), fs.dataSchema, fs.fileFormat.getClass.getName): Any
         case o => o: Any
       }
     }
@@ -249,8 +326,9 @@ object Caches {
     }
   }
 
-  /** Drop `s`'s memoized counts (tests; sessions replacing data in place). */
+  /** Drop `s`'s memoized counts, rows and parquet schemas. */
   def invalidateCounts(s: SparkSession): Unit = {
+    schemas.synchronized(schemas.filterInPlace { case ((ks, _), _) => ks != s })
     counts.synchronized(counts.filterInPlace { case ((ks, _), _) => ks != s })
     rows.synchronized(rows.filterInPlace { case ((ks, _), _) => ks != s })
     primed.synchronized(primed.filterInPlace { case ((ks, _), _) => ks != s })

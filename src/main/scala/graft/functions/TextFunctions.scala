@@ -52,12 +52,6 @@ object TextFunctions {
   def shingleHashes(text: Column, k: Int): Column =
     NX.shingles(tokens(text), k)
 
-  /** One 64-bit LSH band key per band, band index mixed into the key
-    * (NX.bands) — explode and equi-join on the long directly.
-    */
-  def bandKeys64(signature: Column, bands: Int): Column =
-    NX.bands(signature, bands)
-
   /** MinHash signature: for each of `numHashes` hash families, the minimum
     * xxhash64 over the shingle set, the family index mixed in as an extra
     * hash input. One pass over the array per family; no shuffle.

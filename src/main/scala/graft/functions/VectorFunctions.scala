@@ -17,11 +17,6 @@ object VectorFunctions {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
-  /** Native codegen'd dot product (same accumulation order, ~100× faster in
-    * all-pairs joins).
-    */
-  def dotNative(a: Column, b: Column): Column = NativeExpressions.dot(a, b)
-
   /** L2 norm. */
   def l2Norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v * v))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{VectorFunctions => VF}
+import graft.functions.{NativeExpressions => NX, VectorFunctions => VF}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -87,7 +87,7 @@ object IvfIndex {
     val e = e0.select(col("vec_id"), col("v"))
       .withColumn("nrm", VF.l2Norm(col("v")))
     val assignedNew = e.join(broadcast(idx.cells.select("cell", "cv", "cnrm")), lit(true))
-      .withColumn("c1", VF.dotNative(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
+      .withColumn("c1", NX.dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
       .groupBy("vec_id")
       .agg(max_by(struct(col("cell"), col("c1"), col("v"), col("nrm")),
         struct(col("c1"), (-col("cell")).as("nc"))).as("best"))
@@ -181,8 +181,8 @@ object IvfIndex {
       .filter(f => f.isDirectory && shape.pattern.matcher(f.getName).matches())
       .foreach { dir =>
         val idx = Index(
-          spark.read.parquet(new java.io.File(dir, "assigned").getPath),
-          spark.read.parquet(new java.io.File(dir, "cells").getPath))
+          graft.Caches.readParquet(spark, new java.io.File(dir, "assigned").getPath),
+          graft.Caches.readParquet(spark, new java.io.File(dir, "cells").getPath))
         val before = idx.assigned.count()
         val post = forget(idx, keys)
         val nNew = post.assigned.count()
@@ -210,13 +210,11 @@ object IvfIndex {
     val spark = e0.sparkSession
     // memoized (r13): the cache-key count is a full source scan, and every
     // x3_* query build pays it — the memo holds per (session, canonical
-    // plan). PRECONDITION (r14, unenforceable here): e0 must come from an
-    // immutable source for the session — a driver testdata table or a
-    // sources/Snapshot generation dir. Source MUTATIONS must arrive as new
-    // paths (new generation dirs), i.e. new canonical plans; replacing
-    // parquet IN PLACE at the same path would leave a stale memoized n
-    // selecting a stale index dir. Callers that rewrite data in place must
-    // call Caches.invalidateCounts first (tests do).
+    // plan, source leaf files), so an in-place rewrite re-counts. The
+    // artifact directory is still keyed by the COUNT only: a rewrite that
+    // keeps the row count selects the stale index dir. PRECONDITION,
+    // unenforced here: a same-count source mutation must arrive as a new
+    // path (a sources/Snapshot generation dir) or with a new `key`.
     val n = graft.Caches.countOnce(e0)
     val root = cacheRoot(spark)
     val safe = key.replaceAll("[^A-Za-z0-9._-]", "_")
@@ -231,7 +229,7 @@ object IvfIndex {
       idx.assigned.write.mode("overwrite").parquet(aPath)
       idx.cells.write.mode("overwrite").parquet(cPath)
     }
-    Index(spark.read.parquet(aPath), spark.read.parquet(cPath))
+    Index(graft.Caches.readParquet(spark, aPath), graft.Caches.readParquet(spark, cPath))
   }
 
   private def cacheRoot(spark: SparkSession): String =
@@ -370,7 +368,7 @@ object IvfIndex {
       .withColumn("ma", when(maxabs === 0.0, 1.0).otherwise(maxabs))
       .withColumn("q8", transform(col("v"),
         x => floor(x * lit(127.0) / col("ma") + lit(0.5)).cast("double")))
-      .withColumn("sq", VF.dotNative(col("q8"), col("q8")))
+      .withColumn("sq", NX.dot(col("q8"), col("q8")))
       .drop("ma"))
     val n = e.count()
     val stride = math.max(1L, math.ceil(math.sqrt(n.toDouble)).toLong)
@@ -382,7 +380,7 @@ object IvfIndex {
     // join-back to `e` after the aggregation.
     val assign0 = e.join(broadcast(seeds), lit(true))
       .withColumn("d0", col("sq") + col("ss")
-        - lit(2.0) * VF.dotNative(col("q8"), col("s8")))
+        - lit(2.0) * NX.dot(col("q8"), col("s8")))
       .groupBy("vec_id")
       .agg(min_by(struct(col("cell0"), col("q8")),
         struct(col("d0"), col("cell0"))).as("best"))
@@ -397,18 +395,18 @@ object IvfIndex {
       .groupBy("cell0")
       .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
       .select(col("cell0").as("cell"), expr("transform(pm, p -> p.m)").as("cv"))
-      .withColumn("cs", VF.dotNative(col("cv"), col("cv")))
+      .withColumn("cs", NX.dot(col("cv"), col("cv")))
       .withColumn("cnrm", VF.l2Norm(col("cv")))
     val assigned = e.join(broadcast(cent), lit(true))
       .withColumn("d1", col("sq") + col("cs")
-        - lit(2.0) * VF.dotNative(col("q8"), col("cv")))
+        - lit(2.0) * NX.dot(col("q8"), col("cv")))
       .groupBy("vec_id")
       .agg(min_by(struct(col("cell"), col("cv"), col("cnrm"), col("v"), col("nrm")),
         struct(col("d1"), col("cell"))).as("best"))
       // c1 (the float cosine to the winning centroid) is what the radius
       // bound and the pruning math consume — computed once here
       .select(col("vec_id"), col("best.cell").as("cell"),
-        (VF.dotNative(col("best.v"), col("best.cv")) /
+        (NX.dot(col("best.v"), col("best.cv")) /
           (col("best.nrm") * col("best.cnrm"))).as("c1"),
         col("best.v").as("v"), col("best.nrm").as("nrm"))
     val assignedP = graft.Caches.persist(assigned)
@@ -457,7 +455,7 @@ object IvfIndex {
       .withColumn("ma", when(maxabs === 0.0, 1.0).otherwise(maxabs))
       .withColumn("q8", transform(col("v"),
         x => floor(x * lit(127.0) / col("ma") + lit(0.5)).cast("double")))
-      .withColumn("sq", VF.dotNative(col("q8"), col("q8")))
+      .withColumn("sq", NX.dot(col("q8"), col("q8")))
       .drop("ma")
     val e = graft.Caches.persist(
       RangedNtile(base, shards, Seq(col("vec_id")), out = "shard"))
@@ -477,7 +475,7 @@ object IvfIndex {
     // with the all-pairs join keyed by shard instead of unconditional
     val assign0 = e.join(broadcast(seeds), Seq("shard"))
       .withColumn("d0", col("sq") + col("ss")
-        - lit(2.0) * VF.dotNative(col("q8"), col("s8")))
+        - lit(2.0) * NX.dot(col("q8"), col("s8")))
       .groupBy("vec_id", "shard")
       .agg(min_by(struct(col("cell0"), col("q8")),
         struct(col("d0"), col("cell0"))).as("best"))
@@ -491,16 +489,16 @@ object IvfIndex {
       .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
       .select(col("shard"), col("cell0").as("cell"),
         expr("transform(pm, p -> p.m)").as("cv"))
-      .withColumn("cs", VF.dotNative(col("cv"), col("cv")))
+      .withColumn("cs", NX.dot(col("cv"), col("cv")))
       .withColumn("cnrm", VF.l2Norm(col("cv")))
     val assigned = e.join(broadcast(cent), Seq("shard"))
       .withColumn("d1", col("sq") + col("cs")
-        - lit(2.0) * VF.dotNative(col("q8"), col("cv")))
+        - lit(2.0) * NX.dot(col("q8"), col("cv")))
       .groupBy("vec_id")
       .agg(min_by(struct(col("cell"), col("cv"), col("cnrm"), col("v"), col("nrm")),
         struct(col("d1"), col("cell"))).as("best"))
       .select(col("vec_id"), col("best.cell").as("cell"),
-        (VF.dotNative(col("best.v"), col("best.cv")) /
+        (NX.dot(col("best.v"), col("best.cv")) /
           (col("best.nrm") * col("best.cnrm"))).as("c1"),
         col("best.v").as("v"), col("best.nrm").as("nrm"))
     val assignedP = graft.Caches.persist(assigned)
@@ -529,7 +527,7 @@ object IvfIndex {
       idx.assigned.write.mode("overwrite").parquet(aPath)
       idx.cells.write.mode("overwrite").parquet(cPath)
     }
-    Index(spark.read.parquet(aPath), spark.read.parquet(cPath))
+    Index(graft.Caches.readParquet(spark, aPath), graft.Caches.readParquet(spark, cPath))
   }
 
   /** Exact top-k cosine neighbors for each query row (`query_id`, `qv`).
@@ -576,7 +574,7 @@ object IvfIndex {
       return idx.assigned
         .select(col("vec_id").as("neighbor_id"), col("v").as("nv"), col("nrm").as("nn"))
         .join(bq(qn), col("neighbor_id") =!= col("query_id"))
-        .withColumn("s", VF.dotNative(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
+        .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
         .withColumn("rk", row_number().over(wkAll).cast("long"))
         .filter(col("rk") <= k)
         .select(col("query_id"), col("rk"), col("neighbor_id"), col("s"))
@@ -586,7 +584,7 @@ object IvfIndex {
     // (materialization jobs cost more than the recompute); leave them lazy
     val qc = qn.join(broadcast(idx.cells.select(col("cell"), col("cv"), col("cnrm"), col("r"))),
         lit(true))
-      .withColumn("qcos", VF.dotNative(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
+      .withColumn("qcos", NX.dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
       .withColumn("qtheta", clampAcos(col("qcos")))
     val wp = Window.partitionBy("query_id").orderBy(desc("qcos"), asc("cell"))
     val probed = qc.withColumn("prk", row_number().over(wp)).filter(col("prk") <= nprobe)
@@ -597,7 +595,7 @@ object IvfIndex {
       members.join(bq(cellsToScan), "cell")
         .filter(col("neighbor_id") =!= col("query_id"))
         .join(bq(qn), "query_id")
-        .withColumn("s", VF.dotNative(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
+        .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
     val wk = Window.partitionBy("query_id").orderBy(desc("s"), asc("neighbor_id"))
     // phase 1: lower bound from the probed cells (-2 < any cosine when a
     // query has fewer than k probed candidates — then nothing is pruned)
@@ -639,7 +637,7 @@ object IvfIndex {
     val qn = queries.withColumn("qnrm", VF.l2Norm(col("qv")))
     val qc = qn.join(broadcast(idx.cells.select(col("cell"), col("cv"), col("cnrm"))),
         lit(true))
-      .withColumn("qcos", VF.dotNative(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
+      .withColumn("qcos", NX.dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
     val wp = Window.partitionBy("query_id").orderBy(desc("qcos"), asc("cell"))
     val probed = qc.withColumn("prk", row_number().over(wp)).filter(col("prk") <= nprobe)
       .select(col("query_id"), col("cell"))
@@ -649,7 +647,7 @@ object IvfIndex {
     members.join(bq(probed), "cell")
       .filter(col("neighbor_id") =!= col("query_id"))
       .join(bq(qn), "query_id")
-      .withColumn("s", VF.dotNative(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
+      .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
       .withColumn("rk", row_number().over(wk).cast("long"))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("rk"), col("neighbor_id"), col("s"))
@@ -666,7 +664,7 @@ object IvfIndex {
       col("cnrm").as("cnb"), col("r").as("rb"))
     a.join(broadcast(b), lit(true))
       .withColumn("th",
-        clampAcos(VF.dotNative(col("cva"), col("cvb")) / (col("cna") * col("cnb"))))
+        clampAcos(NX.dot(col("cva"), col("cvb")) / (col("cna") * col("cnb"))))
       .filter(cos(greatest(col("th") - col("ra") - col("rb"), lit(0.0)))
         >= lit(t) - lit(1e-9))
       .select(col("ca"), col("cb"))
@@ -798,7 +796,7 @@ object IvfIndex {
         col("nrm").as("nb"))
       a.join(broadcast(b), col("id_a") < col("id_b"))
         .withColumn("sim",
-          VF.dotNative(col("va"), col("vb")) / (col("na") * col("nb")))
+          NX.dot(col("va"), col("vb")) / (col("na") * col("nb")))
         .filter(col("sim") >= t)
         .select(col("id_a"), col("id_b"), col("sim"))
     } else pairsCellPlan(idx, cp, t)
@@ -814,7 +812,7 @@ object IvfIndex {
       .join(mb, Seq("cb"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("sim",
-        VF.dotNative(col("va"), col("vb")) / (col("na") * col("nb")))
+        NX.dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(col("sim") >= t)
       .select(col("id_a"), col("id_b"), col("sim"))
   }

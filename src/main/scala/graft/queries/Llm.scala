@@ -188,7 +188,7 @@ object Llm {
         col("nrm").as("qnrm"))
     val qc = qn.join(broadcast(idx.cells.select("cell", "cv", "cnrm")), lit(true))
       .withColumn("qcos",
-        VF.dotNative(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
+        NX.dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
     val wp = Window.partitionBy("query_id").orderBy(desc("qcos"), asc("cell"))
     val probed = qc.withColumn("prk", row_number().over(wp))
       .filter(col("prk") <= 8)
@@ -211,7 +211,7 @@ object Llm {
       .join(idx.assigned.select(col("vec_id").as("neighbor_id"),
         col("v").as("nv"), col("nrm").as("nn")), Seq("neighbor_id"))
       .join(broadcast(qn), Seq("query_id"))
-      .withColumn("s", VF.dotNative(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
+      .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
       .withColumn("rk", row_number().over(wk).cast("long"))
       .filter(col("rk") <= 10)
       .select(col("query_id"), col("rk"), col("neighbor_id"),
@@ -263,7 +263,7 @@ object Llm {
         Seq("query_id"))
       .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("nv"), col("nrm").as("nn")),
         Seq("neighbor_id"))
-      .withColumn("s", VF.dotNative(col("qv"), col("nv")) / (col("qn") * col("nn")))
+      .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("rk"), col("neighbor_id"),
@@ -368,7 +368,7 @@ object Llm {
         col("nrm").as("na"))), "id_a")
       .join(bs(e.select(col("vec_id").as("id_b"), col("v").as("vb"),
         col("nrm").as("nb"))), "id_b")
-      .withColumn("sim", VF.dotNative(col("va"), col("vb")) / (col("na") * col("nb")))
+      .withColumn("sim", NX.dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(col("sim") >= t)
       .select(col("id_a"), col("id_b"), col("sim"))
   }
@@ -2604,7 +2604,7 @@ object Llm {
         val a = e.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
         val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
         a.join(broadcast(b), col("id_a") < col("id_b"))
-          .withColumn("sim", VF.dotNative(col("va"), col("vb")) / (col("na") * col("nb")))
+          .withColumn("sim", NX.dot(col("va"), col("vb")) / (col("na") * col("nb")))
           .filter(col("sim") >= 0.35)
           .select(col("id_a"), col("id_b"), round(col("sim"), 4).as("sim"))
           .orderBy("id_a", "id_b")
@@ -2964,16 +2964,19 @@ object Llm {
     // via ranking window. This is the exact baseline for ANN.
     Q("x3_knn_brute",
       (s, dir) => {
-        val e = graft.Caches.persist(
-          embsPlain(s, dir)
-            .select(col("vec_id"), VF.toDouble(col("embedding")).as("v"))
-            .withColumn("nrm", VF.l2Norm(col("v"))))
+        // unpersisted: the stride's countOnce is then a statistics-memo hit
+        // on a warm build (on a persisted frame it is a cache-prime job on
+        // every build), and keeping the persist measured no faster at sf0.1
+        // (SCALING.md "Schema inference at query build")
+        val e = embsPlain(s, dir)
+          .select(col("vec_id"), VF.toDouble(col("embedding")).as("v"))
+          .withColumn("nrm", VF.l2Norm(col("v")))
         val q = e.filter(col("vec_id") % knnQueryStride(graft.Caches.countOnce(e)) === 0)
           .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
         val w = Window.partitionBy("query_id").orderBy(desc("s"), asc("neighbor_id"))
         e.select(col("vec_id").as("neighbor_id"), col("v").as("nv"), col("nrm").as("nn"))
           .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-          .withColumn("s", VF.dotNative(col("qv"), col("nv")) / (col("qn") * col("nn")))
+          .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
           .withColumn("rk", row_number().over(w).cast("long"))
           .filter(col("rk") <= 10)
           .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("s"), 4).as("sim"))
@@ -3385,7 +3388,7 @@ object Llm {
         val w = Window.partitionBy("query_id").orderBy(desc("s"), asc("neighbor_id"))
         e.select(col("vec_id").as("neighbor_id"), col("q8").as("nv"), col("n8").as("nn"))
           .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-          .withColumn("s", VF.dotNative(col("qv"), col("nv")) / (col("qn") * col("nn")))
+          .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
           .withColumn("rk", row_number().over(w).cast("long"))
           .filter(col("rk") <= 10)
           .select(col("query_id"), col("rk"), col("neighbor_id"),
@@ -3441,7 +3444,7 @@ object Llm {
         val pool = e8
           .select(col("vec_id").as("neighbor_id"), col("q8").as("nv"), col("n8").as("nn"))
           .join(broadcast(q8), col("neighbor_id") =!= col("query_id"))
-          .withColumn("s8", VF.dotNative(col("qv"), col("nv")) / (col("qn") * col("nn")))
+          .withColumn("s8", NX.dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
           .withColumn("rk8", row_number().over(w8))
           .filter(col("rk8") <= 50)
           .select("query_id", "neighbor_id")
@@ -3452,7 +3455,7 @@ object Llm {
           .join(ef.select(col("vec_id").as("neighbor_id"),
             col("v").as("fnv"), col("nrm").as("fnn")), Seq("neighbor_id"))
           .join(broadcast(qf), Seq("query_id"))
-          .withColumn("s", VF.dotNative(col("fqv"), col("fnv")) / (col("fqn") * col("fnn")))
+          .withColumn("s", NX.dot(col("fqv"), col("fnv")) / (col("fqn") * col("fnn")))
           .withColumn("rk", row_number().over(w).cast("long"))
           .filter(col("rk") <= 10)
           .select(col("query_id"), col("rk"), col("neighbor_id"),
@@ -3553,7 +3556,7 @@ object Llm {
           .join(ef.select(col("vec_id").as("neighbor_id"),
             col("v").as("fnv"), col("nrm").as("fnn")), Seq("neighbor_id"))
           .join(broadcast(qf), Seq("query_id"))
-          .withColumn("s", VF.dotNative(col("fqv"), col("fnv")) / (col("fqn") * col("fnn")))
+          .withColumn("s", NX.dot(col("fqv"), col("fnv")) / (col("fqn") * col("fnn")))
           .withColumn("rk", row_number().over(w).cast("long"))
           .filter(col("rk") <= 10)
           .select(col("query_id"), col("rk"), col("neighbor_id"),

@@ -32,13 +32,13 @@ object Tables {
       // double division would lose precision at 1.7e18); a native timestamp
       // column is cast (NTZ wall-clock == UTC instant under the UTC session).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = Caches.readParquet(spark, s"$dir/$name.parquet")
       if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         raw.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
           org.apache.spark.sql.functions.expr("ts div 1000")))
       else raw.withColumn("ts",
         org.apache.spark.sql.functions.col("ts").cast("timestamp"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else Caches.readParquet(spark, s"$dir/$name.parquet")
   }
 
   /** Register every table as a temp view so queries can use spark.sql. */

@@ -18,7 +18,7 @@ object Compact {
       size(new java.io.File(path))
     }
     val files = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    val df = spark.read.parquet(path)
+    val df = graft.Caches.readParquet(spark, path)
     val tmp = path + ".compact"
     df.coalesce(files).write.mode(SaveMode.Overwrite).parquet(tmp)
     FileSwap.replace(new java.io.File(path), new java.io.File(tmp))

@@ -103,7 +103,7 @@ object Forget {
 
   private def rewrite(spark: SparkSession, path: String, keyCol: String,
       keyDf: DataFrame): (Long, Long) = {
-    val df = spark.read.parquet(path)
+    val df = graft.Caches.readParquet(spark, path)
     // ONE scan: mark each row hit/kept, persist, derive both audit counts
     // and the rewrite from the same pass
     val marked = graft.Caches.persist(markHits(df, keyCol, keyDf))

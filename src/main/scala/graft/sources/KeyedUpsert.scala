@@ -19,7 +19,7 @@ object KeyedUpsert {
   def apply(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String], versionCol: String): Unit = {
     val existing =
-      if (new java.io.File(path).exists()) Some(spark.read.parquet(path))
+      if (new java.io.File(path).exists()) Some(graft.Caches.readParquet(spark, path))
       else None
     val all = existing.map(_.unionByName(updates)).getOrElse(updates)
     val w = Window.partitionBy(keys.map(col): _*)

@@ -69,7 +69,7 @@ object Snapshot {
   def read(spark: SparkSession, path: String): DataFrame = {
     val gen = currentGen(path).getOrElse(
       throw new IllegalArgumentException(s"not a snapshot table: $path"))
-    spark.read.parquet(genDir(path, gen).getPath)
+    graft.Caches.readParquet(spark, genDir(path, gen).getPath)
   }
 
   /** TIME TRAVEL: read a specific (possibly superseded) generation — the
@@ -81,7 +81,7 @@ object Snapshot {
     val dir = genDir(path, gen)
     require(dir.isDirectory,
       s"generation $gen of $path does not exist (vacuumed, or never written)")
-    spark.read.parquet(dir.getPath)
+    graft.Caches.readParquet(spark, dir.getPath)
   }
 
   private def rm(x: java.io.File): Unit = {

@@ -76,7 +76,7 @@ object IndexStore {
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, "meta.json"),
         (json + "\n").getBytes("UTF-8"))
     }
-    val frames = frameNames.map(fn => fn -> spark.read.parquet(s"$dir/$fn")).toMap
+    val frames = frameNames.map(fn => fn -> graft.Caches.readParquet(spark, s"$dir/$fn")).toMap
     val metaTxt = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "meta.json")), "UTF-8")
     val meta = "\"([^\"]+)\"\\s*:\\s*(-?\\d+)".r.findAllMatchIn(metaTxt)

@@ -290,7 +290,7 @@ object Streams {
       graft.functions.TextFunctions.shingleHashes(col("text"), 3).as("corpus_sh"))
       .persist()
     val banded = sh.select(col("corpus_id"),
-      explode(graft.functions.TextFunctions.bandKeys64(
+      explode(NX.bands(
         NX.minhash(col("corpus_sh"), numHashes),
         bands)).as("bk"))
     // one statistics pass over the just-persisted frame sizes both halves:
@@ -338,7 +338,7 @@ object Streams {
     val sh = incoming.select(col("doc_id"),
       graft.functions.TextFunctions.shingleHashes(col("text"), 3).as("sh"))
     val banded = sh.select(col("doc_id"), col("sh"),
-      explode(graft.functions.TextFunctions.bandKeys64(
+      explode(NX.bands(
         NX.minhash(col("sh"), numHashes),
         bands)).as("bk"))
     // byte-gated, never unconditional: against a 100 TB corpus index both
@@ -851,7 +851,7 @@ object Streams {
         array_position(zip_with(col("qbks"), col("cbks"),
           (a, b) => a === b), lit(true)) - 1)
       .filter(col("b") === col("first_agree"))
-      .withColumn("sim", VF.dotNative(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
+      .withColumn("sim", NX.dot(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
       .filter(col("sim") >= t)
       .select(col("doc_id"), col("vec_id").as("dup_of"),
         round(col("sim"), 4).as("sim"))
@@ -891,7 +891,7 @@ object Streams {
     val qc = qn.join(bc(idx.cells.select(col("cell"), col("cv"), col("cnrm"), col("r"))),
         lit(true))
       .withColumn("qtheta", acos(least(greatest(
-        VF.dotNative(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")),
+        NX.dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")),
         lit(-1.0)), lit(1.0))))
       .filter(cos(greatest(col("qtheta") - col("r"), lit(0.0))) >= lit(t) - lit(1e-9))
       .select(col("doc_id"), col("qv"), col("qnrm"), col("cell"))
@@ -899,7 +899,7 @@ object Streams {
     // a stream-static equi join on `cell` lets Spark plan it by statistics
     qc.join(idx.assigned.select(col("vec_id"), col("cell"),
         col("v").as("nv"), col("nrm").as("nn")), Seq("cell"))
-      .withColumn("sim", VF.dotNative(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
+      .withColumn("sim", NX.dot(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
       .filter(col("sim") >= t)
       .select(col("doc_id"), col("vec_id").as("dup_of"),
         round(col("sim"), 4).as("sim"))

@@ -41,7 +41,7 @@ object CurateMain {
     val (_, _, reps) = graft.queries.Llm.curationStages(spark, d)
     val curated = d.join(reps.select("doc_id"), "doc_id")
     curated.write.mode("overwrite").parquet(s"$outDir/corpus")
-    println(s"curated corpus: ${spark.read.parquet(s"$outDir/corpus").count()} docs -> $outDir/corpus")
+    println(s"curated corpus: ${graft.Caches.readParquet(spark, s"$outDir/corpus").count()} docs -> $outDir/corpus")
 
     SparkEntry.queries("x4_curation_report")(spark, sfDir)
       .write.mode("overwrite").parquet(s"$outDir/report")

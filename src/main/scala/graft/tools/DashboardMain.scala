@@ -28,7 +28,7 @@ object DashboardMain {
     // fetch with limit (iot_dashboard.py:46-66): scan cap, default 500
     val limit = a.getOrElse("--limit", "500").toInt
     val all = a.get("--in") match {
-      case Some(p) => spark.read.parquet(p)
+      case Some(p) => graft.Caches.readParquet(spark, p)
       case None => Generator.flatten(Generator.readings(spark, 20, 60))
     }
     val df = all.orderBy("device_id", "timestamp").limit(limit).cache()

@@ -495,7 +495,7 @@ object ProfileMain {
         e.select(col("vec_id").as("neighbor_id"), col("v").as("nv"),
             col("nrm").as("nn"))
           .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-          .withColumn("s", VF.dotNative(col("qv"), col("nv")) / (col("qn") * col("nn")))
+          .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") <= 10)
           .select(col("query_id"), col("neighbor_id")).collect()
@@ -531,7 +531,7 @@ object ProfileMain {
         .partitionBy("query_id").orderBy(desc("s"), asc("neighbor_id"))
       e.select(col("vec_id").as("neighbor_id"), col("v").as("nv"), col("nrm").as("nn"))
         .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-        .withColumn("s", VF.dotNative(col("qv"), col("nv")) / (col("qn") * col("nn")))
+        .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 10)
         .select(col("query_id"), col("neighbor_id")).collect()

@@ -490,7 +490,7 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     for ((label, vecs) <- Seq("clustered" -> clustered, "isotropic" -> isotropic)) {
       val byId = vecs.map { case (i, v) => i -> v.toArray }.toMap
       def cos(a: Array[Double], b: Array[Double]): Double = {
-        // same sequential folds as VF.dotNative / VF.l2Norm → bit-identical
+        // same sequential folds as NX.dot / VF.l2Norm → bit-identical
         var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
         while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
         d / (math.sqrt(na) * math.sqrt(nb))
