@@ -22,6 +22,22 @@ if [[ "$readers" != 1 ]]; then
   exit 1
 fi
 
+# One artifact store: only IndexStore reads the artifact roots and tests an
+# entry's meta.json commit marker; only FileSwap defines the recursive delete.
+store='^src/main/scala/graft/sources/IndexStore\.scala:'
+check() { # <message> <pattern> <allowed-file regex>
+  local hits
+  hits=$(grep -rnE "$2" src/main/scala | grep -Ev "$3" || true)
+  if [[ -n "$hits" ]]; then
+    echo "[preflight] $1:" >&2
+    echo "$hits" >&2
+    exit 1
+  fi
+}
+check "artifact root conf read outside IndexStore" '"graft\.(ivf|screen)\.cacheDir"' "$store"
+check "meta.json commit marker tested outside IndexStore" '"meta\.json"' "$store"
+check "recursive delete defined outside FileSwap" 'def rm\(' '^src/main/scala/graft/sources/FileSwap\.scala:'
+
 if [[ "${1:-smoke}" == "full" ]]; then
   sbt -batch compile Test/compile test
 else

@@ -11,16 +11,16 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_CONF: semicolon-separated key=value session confs for
-    // one-off ablations (e.g. graft.ivf.shardTarget=1000000000 to probe a
-    // scale point with sharding disabled) — full runs leave it unset
+    // one-off ablations (e.g. graft.ivf.pairScanRatio=1000000000 to keep
+    // every pair query on the pruned cell-pair plan) — full runs leave it
+    // unset
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2); spark.conf.set(k.trim, v.trim)
       })
-    // stale IVF parquet caches from older fmtVersions accumulate across
+    // stale index artifacts from older fmtVersions accumulate across
     // harness runs — prune once per run (current-version entries are kept)
-    graft.operators.IvfIndex.pruneStaleCache(spark)
-    graft.streaming.IndexStore.pruneStale(spark)
+    graft.sources.IndexStore.pruneStale(spark)
     // Warm-up: initialize codegen/JIT, parquet reader, and shuffle machinery
     // once, outside any per-query timing (otherwise the first map entry —
     // arbitrary — absorbs ~4 s of session start-up cost).

@@ -252,8 +252,6 @@ object Caches {
       s"countOnce:${df.schema.fieldNames.take(4).mkString(",")}" +
         (if (df.storageLevel !=
           org.apache.spark.storage.StorageLevel.NONE) " (cache-prime)" else ""))(body)
-    if (df.sparkSession.conf.getOption("graft.caches.countMemo").contains("false"))
-      return labeled(df.count())
     if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
       // persisted frames: the FIRST count per canonical plan is the serial
       // cache-prime the owner depends on (see the x2_jaccard_bigram note
@@ -302,8 +300,6 @@ object Caches {
     * evaluation is cache-priming, not just statistics).
     */
   def rowOnce(df: DataFrame, desc: String): org.apache.spark.sql.Row = {
-    if (df.sparkSession.conf.getOption("graft.caches.countMemo").contains("false"))
-      return labeled(df.sparkSession, desc)(df.head())
     if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
       // primed-window memo, exactly like countOnce: first call per shared
       // cache entry primes it, repeats within the drain-window are served

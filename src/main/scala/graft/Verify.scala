@@ -27,10 +27,9 @@ object Verify {
         val Array(k, v) = kv.split("=", 2); spark.conf.set(k.trim, v.trim)
       })
     new java.io.File(outDir).mkdirs()
-    // stale IVF parquet caches from older fmtVersions accumulate across
+    // stale index artifacts from older fmtVersions accumulate across
     // harness runs — prune once per run (current-version entries are kept)
-    graft.operators.IvfIndex.pruneStaleCache(spark)
-    graft.streaming.IndexStore.pruneStale(spark)
+    graft.sources.IndexStore.pruneStale(spark)
     // the q_iot_* oracles read the deterministic generated frame from a
     // fixed scratch path — materialize it before the driver's DuckDB pass
     try graft.queries.Dashboard.materializeOracleInput(spark)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{NativeExpressions => NX, VectorFunctions => VF}
+import graft.sources.{FileSwap, IndexStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -10,8 +11,9 @@ import org.apache.spark.sql.functions._
   * embedding near-dup over `embeddings.embedding`.
   *
   * Cell construction (k ∝ √n, all statistics-driven, no label dependence):
-  *   1. one `count()` gives n; stride = ⌈√n⌉; every vector whose id divides
-  *      the stride seeds a cell — k ≈ √n cells that GROW with the data
+  *   1. one statistics job gives n and the minimum id; stride = ⌈√n⌉;
+  *      every vector whose id divides the stride, and the minimum id, seeds
+  *      a cell — k ≈ √n cells that GROW with the data
   *      (the r01 design used per-label centroids, whose fixed cell count
   *      left Θ(n²/L) within-cell work at 100×; this is the fix).
   *   2. one k-means (Lloyd) refinement: assign all vectors to their nearest
@@ -47,8 +49,6 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndex {
 
-  private[graft] val fmtVersion = 2
-
   /** `assigned`: (vec_id, v, nrm, cell, c1=cos(v, centroid)).
     * `cells`: (cell, cv, cnrm, r, cnt) — k ≈ √n rows, broadcastable.
     * From `build` both are query-local persists (registered in
@@ -56,22 +56,38 @@ object IvfIndex {
     */
   final case class Index(assigned: DataFrame, cells: DataFrame)
 
-  /** Load the index for `(key, n)` from its parquet cache, building (and
-    * saving) it on first touch. A vector index is a build-once-query-many
-    * artifact: the k-means build is ~10 passes over the corpus, while every
-    * consumer (knn, near-dup pairs, clustering) only needs the resulting
-    * (assignment, cells) tables — so those are written out once, keyed by
-    * the source path and row count, and every later query or session reads
-    * two parquet scans instead of re-running the build. Keying by `n`
-    * invalidates the cache if the underlying table changes size; at
-    * production scale this directory would live beside the source table on
-    * shared storage (here: a local scratch dir, overridable via
-    * `graft.ivf.cacheDir`).
+  /** Load the index for `(key, n, shards)` from the build-once artifact
+    * store ([[IndexStore.Ivf]]), building (and saving) it on first touch.
+    * A vector index is a build-once-query-many artifact: the k-means build
+    * is ~10 passes over the corpus, while every consumer (knn, near-dup
+    * pairs, clustering) only needs the resulting (assignment, cells)
+    * tables — so those are written out once, keyed by the source key and
+    * row count, and every later query or session reads two parquet scans
+    * instead of re-running the build. Keying by `n` invalidates the entry
+    * if the underlying table changes size. `shards > 1` stores the
+    * per-slice layout of [[build]] under its own `-sh<S>` entry.
     *
     * The returned frames are parquet scans — nothing to persist, nothing to
     * leak; the build path's transient persists are registered in
     * [[graft.Caches]] and drained by the harness after the query.
     */
+  def loadOrBuild(e0: DataFrame, key: String, shards: Int = 1): Index = {
+    // memoized (r13): the cache-key count is a full source scan, and every
+    // x3_* query build pays it — the memo holds per (session, canonical
+    // plan, source leaf files), so an in-place rewrite re-counts. The
+    // artifact directory is still keyed by the COUNT only: a rewrite that
+    // keeps the row count selects the stale index dir. PRECONDITION,
+    // unenforced here: a same-count source mutation must arrive as a new
+    // path (a sources/Snapshot generation dir) or with a new `key`.
+    val n = graft.Caches.countOnce(e0)
+    val (frames, _) = IndexStore.loadOrBuild(e0.sparkSession, IndexStore.Ivf,
+        key, n, Seq("assigned", "cells"), shards = shards) {
+      val idx = build(e0, shards)
+      (Map("assigned" -> idx.assigned, "cells" -> idx.cells), Map.empty)
+    }
+    Index(frames("assigned"), frames("cells"))
+  }
+
   /** Append new vectors to an existing index WITHOUT a rebuild — the ingest
     * path of a live vector store. Each new vector is assigned to its
     * nearest EXISTING centroid (centroids do not move, classic IVF append)
@@ -156,48 +172,35 @@ object IvfIndex {
     * the source table, the next `loadOrBuild` counts exactly that many
     * rows and cache-HITS the forgotten index instead of rebuilding.
     * Commit order is crash-safe in the write-new-then-retire-old style of
-    * the snapshot tables: the survivor index is fully written (with
-    * `_SUCCESS` markers) before the directory still holding the forgotten
-    * vectors is removed — a crash in between leaves both copies (re-run
-    * to finish retirement; nothing reads the stale key once the source
-    * shrank). Returns (indexes rewritten, member rows removed).
+    * the snapshot tables: the survivor index is fully written (with its
+    * `meta.json` commit marker) before the directory still holding the
+    * forgotten vectors is removed — a crash in between leaves both copies
+    * (re-run to finish retirement; nothing reads the stale key once the
+    * source shrank). Returns (indexes rewritten, member rows removed).
     */
   def forgetStored(spark: SparkSession, key: String, keys: DataFrame): (Int, Long) = {
-    val root = new java.io.File(cacheRoot(spark))
-    val safe = key.replaceAll("[^A-Za-z0-9._-]", "_")
-    // anchored both ends and matched whole-name: key "test" must not also
-    // claim another key's directory like "embtest-n120-v3". The optional
-    // -sh<S> group covers the SHARDED artifacts of the same key
-    // ([[loadOrBuildSharded]] writes key-sh<S>-n<N>-v<fmt>) — erasure must
-    // reach every stored copy, not just the global layout's.
-    val shape = ("^" + java.util.regex.Pattern.quote(safe) +
-      raw"(-sh\d+)?-n\d+-v$fmtVersion$$").r
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
-    }
+    // whole-key match: key "test" must not also claim another key's entry
+    // like "embtest-n120-v2". Every shard layout of the key is covered —
+    // erasure must reach every stored copy, not just the global layout's.
+    val safe = IndexStore.safeKey(key)
     var rewritten = 0
     var removedTotal = 0L
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && shape.pattern.matcher(f.getName).matches())
-      .foreach { dir =>
+    IndexStore.entries(spark, IndexStore.Ivf)
+      .filter(e => e.key == safe && e.version == IndexStore.Ivf.fmtVersion)
+      .foreach { entry =>
         val idx = Index(
-          graft.Caches.readParquet(spark, new java.io.File(dir, "assigned").getPath),
-          graft.Caches.readParquet(spark, new java.io.File(dir, "cells").getPath))
+          graft.Caches.readParquet(spark, new java.io.File(entry.dir, "assigned").getPath),
+          graft.Caches.readParquet(spark, new java.io.File(entry.dir, "cells").getPath))
         val before = idx.assigned.count()
         val post = forget(idx, keys)
         val nNew = post.assigned.count()
         if (nNew != before) {
-          // re-key under the survivor count, preserving the -sh<S> segment
-          // so the shrunken source cache-HITS the same (sharded or global)
-          // layout it used before the forget
-          val sh = shape.findFirstMatchIn(dir.getName)
-            .flatMap(m => Option(m.group(1))).getOrElse("")
-          val out = new java.io.File(root, s"$safe$sh-n$nNew-v$fmtVersion")
-          post.assigned.write.mode("overwrite")
-            .parquet(new java.io.File(out, "assigned").getPath)
-          post.cells.write.mode("overwrite")
-            .parquet(new java.io.File(out, "cells").getPath)
-          rm(dir) // retire the copy still holding the forgotten vectors
+          // re-key under the survivor count in the same shard layout, so
+          // the shrunken source cache-HITS the layout it used before
+          IndexStore.save(spark, IndexStore.Ivf, key, nNew, entry.shards,
+            Seq("assigned" -> post.assigned, "cells" -> post.cells))
+          // retire the copy still holding the forgotten vectors
+          FileSwap.rm(entry.dir)
           rewritten += 1
           removedTotal += before - nNew
         }
@@ -206,120 +209,27 @@ object IvfIndex {
     (rewritten, removedTotal)
   }
 
-  def loadOrBuild(e0: DataFrame, key: String): Index = {
-    val spark = e0.sparkSession
-    // memoized (r13): the cache-key count is a full source scan, and every
-    // x3_* query build pays it — the memo holds per (session, canonical
-    // plan, source leaf files), so an in-place rewrite re-counts. The
-    // artifact directory is still keyed by the COUNT only: a rewrite that
-    // keeps the row count selects the stale index dir. PRECONDITION,
-    // unenforced here: a same-count source mutation must arrive as a new
-    // path (a sources/Snapshot generation dir) or with a new `key`.
-    val n = graft.Caches.countOnce(e0)
-    val root = cacheRoot(spark)
-    val safe = key.replaceAll("[^A-Za-z0-9._-]", "_")
-    // fmtVersion invalidates caches written by an older build algorithm —
-    // bump it whenever build()'s output changes
-    val dir = s"$root/$safe-n$n-v$fmtVersion"
-    val aPath = s"$dir/assigned"
-    val cPath = s"$dir/cells"
-    def complete(p: String) = new java.io.File(p, "_SUCCESS").isFile
-    if (!complete(aPath) || !complete(cPath)) {
-      val idx = build(e0)
-      idx.assigned.write.mode("overwrite").parquet(aPath)
-      idx.cells.write.mode("overwrite").parquet(cPath)
-    }
-    Index(graft.Caches.readParquet(spark, aPath), graft.Caches.readParquet(spark, cPath))
-  }
-
-  private def cacheRoot(spark: SparkSession): String =
-    spark.conf.getOption("graft.ivf.cacheDir")
-      .orElse(sys.env.get("SPARK_GRAFT_IVF_CACHE"))
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-ivf")
-
-  /** Delete cache entries written by a different (older) `fmtVersion`.
-    * Cache keys are `key-nN-vV`: a version bump strands every `-v(V-1)`
-    * entry forever, and repeated harness runs accumulate them in the
-    * scratch dir. Verify and Bench call this once at startup;
-    * current-version entries are kept — they ARE the build-once artifact
-    * the cache exists for.
-    *
-    * Deletion is deliberately conservative: the cache root is
-    * user-configurable (and may be a shared scratch directory), so only
-    * directories that (a) match the full `*-nN-vV` cache-key shape with a
-    * version OTHER than the current one and (b) contain the expected
-    * `assigned`/`cells` children (and nothing that isn't index-shaped) are
-    * removed — never arbitrary subdirectories that happen to live beside
-    * the cache.
-    */
-  def pruneStaleCache(spark: SparkSession): Unit = {
-    val root = new java.io.File(cacheRoot(spark))
-    val keyShape = raw".*-n\d+-v(\d+)$$".r
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    def indexShaped(f: java.io.File): Boolean = {
-      val children = Option(f.listFiles()).getOrElse(Array.empty)
-      children.nonEmpty &&
-        children.forall(c => c.isDirectory &&
-          (c.getName == "assigned" || c.getName == "cells"))
-    }
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .filter { f =>
-        f.getName match {
-          case keyShape(v) => v != fmtVersion.toString && indexShaped(f)
-          case _ => false
-        }
-      }
-      .foreach(rm)
-  }
-
-  /** Evict SUPERSEDED same-version cache generations: the cache key embeds
+  /** Evict SUPERSEDED same-version index generations: the entry key embeds
     * the source row count, so every ingest/forget that changes the count
-    * writes a NEW `key-nN-v<fmt>` directory and strands the old one —
-    * [[pruneStaleCache]] only reclaims other-VERSION entries, and nothing
-    * else evicts, so a long-lived deployment accrues one index per corpus
-    * size forever. For each (key, shard-layout) group, keep the `keepLast`
-    * most recently written generations (the newest is the live one — both
-    * the build and the forgetStored rewrite stamp a fresh mtime) and
-    * delete the rest. Same conservatism as the version prune: only
-    * full-key-shaped directories whose children are exactly the
-    * `assigned`/`cells` pair are touched. The [[graft.sources.Snapshot]]
-    * `vacuum` pattern, applied to the index artifact store. Returns the
-    * number of generations removed.
+    * writes a NEW `key-nN-v<fmt>` entry and strands the old one —
+    * [[IndexStore.pruneStale]] only reclaims other-VERSION entries, and
+    * nothing else evicts, so a long-lived deployment accrues one index per
+    * corpus size forever. For each (key, shard-layout) group, keep the
+    * `keepLast` most recently written generations (the newest is the live
+    * one — both the build and the forgetStored rewrite stamp a fresh
+    * mtime) and delete the rest. Only entries that pass the store's shape
+    * rule are touched. The [[graft.sources.Snapshot]] `vacuum` pattern,
+    * applied to the index artifact store. Returns the number of
+    * generations removed.
     */
   def vacuumCache(spark: SparkSession, keepLast: Int = 1): Int = {
     require(keepLast >= 1, "vacuum must keep at least the live generation")
-    val root = new java.io.File(cacheRoot(spark))
-    val keyShape = raw"^(.*?)((?:-sh\d+)?)-n\d+-v$fmtVersion$$".r
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    def indexShaped(f: java.io.File): Boolean = {
-      val children = Option(f.listFiles()).getOrElse(Array.empty)
-      children.nonEmpty &&
-        children.forall(c => c.isDirectory &&
-          (c.getName == "assigned" || c.getName == "cells"))
-    }
-    val groups = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .flatMap { f =>
-        f.getName match {
-          case keyShape(key, sh) if indexShaped(f) => Some(((key, sh), f))
-          case _ => None
-        }
-      }
-      .groupBy(_._1)
-    var removed = 0
-    groups.values.foreach { entries =>
-      entries.map(_._2).sortBy(-_.lastModified())
-        .drop(keepLast)
-        .foreach { f => rm(f); removed += 1 }
-    }
-    removed
+    val superseded = IndexStore.entries(spark, IndexStore.Ivf)
+      .filter(_.version == IndexStore.Ivf.fmtVersion)
+      .groupBy(e => (e.key, e.shards)).values.toSeq
+      .flatMap(_.sortBy(-_.dir.lastModified()).drop(keepLast))
+    superseded.foreach(e => FileSwap.rm(e.dir))
+    superseded.size
   }
 
   /** Record a pairsExact plan decision. `graft.ivf.lastPairsPath` keeps the
@@ -344,8 +254,14 @@ object IvfIndex {
   private def clampAcos(c: org.apache.spark.sql.Column) =
     acos(least(greatest(c, lit(-1.0)), lit(1.0)))
 
-  /** Build the index over `e0(vec_id, v: array<double>)`. Runs one count()
-    * (the statistics call) and persists the assignment.
+  /** Build the index over `e0(vec_id, v: array<double>)`. Runs one
+    * statistics job (the row count and each shard's minimum id, which also
+    * primes the persisted input) and persists the assignment.
+    *
+    * SEEDS: stride = ⌈√m⌉ for m = n/shards rows per shard; every vector
+    * whose id divides the stride seeds a cell, plus each shard's minimum
+    * id — so no shard is ever seedless, not even the single shard of an id
+    * set with no multiple of the stride (odd ids 1…199: stride 10).
     *
     * ROUTING IS INTEGER-EXACT AND PORTABLE: vectors are int8-quantized
     * (the same floor(x*127/maxabs + 0.5) rule as the PQ build) and the
@@ -354,101 +270,32 @@ object IvfIndex {
     * 2·a·b, every term an exact integer in doubles, so the sum is
     * order-independent), FLOOR(SUM/COUNT) centroid means (exact at
     * int8-sum magnitudes), ties to the smallest cell id. A SQL engine
-    * therefore replays the layout bit-for-bit — x3_knn_ivf_approx and
-    * x3_knn_ivfpq hash-check REAL neighbor lists against DuckDB instead
+    * therefore replays the one-shard layout bit-for-bit — x3_knn_ivf_approx
+    * and x3_knn_ivfpq hash-check REAL neighbor lists against DuckDB instead
     * of a self-audit. Search still scores FLOAT vectors: the exactness of
     * [[knnExact]]/[[pairsExact]] needs only r ≥ angle(member, centroid),
     * which holds for ANY centroid point — quantized routing just picks
     * which cell a vector files under.
-    */
-  def build(e0: DataFrame): Index = {
-    val maxabs = array_max(transform(col("v"), x => abs(x)))
-    val e = graft.Caches.persist(e0.select(col("vec_id"), col("v"))
-      .withColumn("nrm", VF.l2Norm(col("v")))
-      .withColumn("ma", when(maxabs === 0.0, 1.0).otherwise(maxabs))
-      .withColumn("q8", transform(col("v"),
-        x => floor(x * lit(127.0) / col("ma") + lit(0.5)).cast("double")))
-      .withColumn("sq", NX.dot(col("q8"), col("q8")))
-      .drop("ma"))
-    val n = e.count()
-    val stride = math.max(1L, math.ceil(math.sqrt(n.toDouble)).toLong)
-    val seeds = e.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("cell0"), col("q8").as("s8"), col("sq").as("ss"))
-    // nearest seed per vector: min_by over (d, cell) — partial-aggregates
-    // map-side, so the n·k comparison fan-in shuffles n rows, not n·k. The
-    // vector rides inside the min_by tuple (constant per group), saving a
-    // join-back to `e` after the aggregation.
-    val assign0 = e.join(broadcast(seeds), lit(true))
-      .withColumn("d0", col("sq") + col("ss")
-        - lit(2.0) * NX.dot(col("q8"), col("s8")))
-      .groupBy("vec_id")
-      .agg(min_by(struct(col("cell0"), col("q8")),
-        struct(col("d0"), col("cell0"))).as("best"))
-      .select(col("vec_id"), col("best.cell0").as("cell0"),
-        col("best.q8").as("q8"))
-    // one Lloyd step: integer centroid per cell (distributed: one reducer
-    // key per (cell, dim)), FLOOR(SUM/COUNT) for cross-engine exactness
-    val cent = assign0
-      .select(col("cell0"), posexplode(col("q8")).as(Seq("pos", "x")))
-      .groupBy("cell0", "pos")
-      .agg(expr("CAST(FLOOR(SUM(x)/COUNT(1)) AS DOUBLE)").as("m"))
-      .groupBy("cell0")
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cell0").as("cell"), expr("transform(pm, p -> p.m)").as("cv"))
-      .withColumn("cs", NX.dot(col("cv"), col("cv")))
-      .withColumn("cnrm", VF.l2Norm(col("cv")))
-    val assigned = e.join(broadcast(cent), lit(true))
-      .withColumn("d1", col("sq") + col("cs")
-        - lit(2.0) * NX.dot(col("q8"), col("cv")))
-      .groupBy("vec_id")
-      .agg(min_by(struct(col("cell"), col("cv"), col("cnrm"), col("v"), col("nrm")),
-        struct(col("d1"), col("cell"))).as("best"))
-      // c1 (the float cosine to the winning centroid) is what the radius
-      // bound and the pruning math consume — computed once here
-      .select(col("vec_id"), col("best.cell").as("cell"),
-        (NX.dot(col("best.v"), col("best.cv")) /
-          (col("best.nrm") * col("best.cnrm"))).as("c1"),
-        col("best.v").as("v"), col("best.nrm").as("nrm"))
-    val assignedP = graft.Caches.persist(assigned)
-    val radius = assignedP.groupBy("cell")
-      .agg(max(clampAcos(col("c1"))).as("r"), count(lit(1)).as("cnt"))
-    // cells is k ≈ √n rows but its PLAN contains the whole centroid
-    // aggregation — persist (registered, harness-drained) so the 4-6
-    // downstream consumers (probe branches, pair sides, radius) don't each
-    // re-run the build
-    Index(assignedP, cells = graft.Caches.persist(cent.join(radius, Seq("cell"))))
-  }
-
-  /** SHARDED build — a per-ingest-slice layout for the exact PAIR family
-    * ([[pairsExact]] and its consumers) on corpora whose slices are
-    * genuinely distribution-disjoint. One global k-means layout fits ONE
-    * geometry; a corpus assembled from differently-distributed slices
-    * (sources ingested at different times) mixes them inside each cell,
-    * the centroids land between the slices, radii widen to cover both,
-    * and the triangle test stops pruning. Sharding restores locality —
-    * at the cost of √(shards·n) > √n cells of pruning machinery, so it
-    * only pays when slice geometry actually separates: the r10 sf3
-    * ablation on the bench's rotated-replica corpus measured global+gate
-    * at or below the sharded layout on every pair query (47.8 s vs
-    * 65.4 s on x5_neardup_ivf), which is why the pair family defaults to
-    * the global artifact and sharding is opt-in
-    * (`graft.ivf.shardTarget`). Rows are range-partitioned by
-    * `vec_id` into `shards` contiguous id blocks (id locality ≈ ingest
-    * locality — at 100 TB each shard is a source/time slice and builds
-    * independently), and the k-means layout is trained WITHIN each shard
-    * (per-shard seeds, per-shard Lloyd step, assignment never crosses a
-    * shard boundary). Cell radii then describe one slice's geometry, so
-    * cross-slice cell pairs prune away and within-slice pruning works as
-    * designed. Exactness is untouched: [[pairsExact]]/[[knnExact]] need
-    * only r ≥ angle(member, centroid) per cell, which holds for any
-    * assignment. Cell count is Σ√m ≈ √(shards·n) — still sublinear,
-    * still broadcastable.
     *
-    * `shards <= 1` delegates to [[build]] (bit-identical layout — the one
-    * the knn oracles replay).
+    * SHARDS: `shards > 1` is the per-ingest-slice layout for the exact PAIR
+    * family on corpora whose slices are genuinely distribution-disjoint.
+    * One global k-means layout fits ONE geometry; a corpus assembled from
+    * differently-distributed slices mixes them inside each cell, the
+    * centroids land between the slices, radii widen to cover both, and the
+    * triangle test stops pruning. Rows are range-partitioned by `vec_id`
+    * into `shards` contiguous id blocks (id locality ≈ ingest locality — at
+    * 100 TB each shard is a source/time slice and builds independently),
+    * and seeding, the Lloyd step and assignment all stay WITHIN a shard, so
+    * cell radii describe one slice's geometry and cross-slice cell pairs
+    * prune away. Cell count is Σ√m ≈ √(shards·n) — still sublinear, still
+    * broadcastable — which is the cost: the r10 sf3 ablation on the bench's
+    * rotated-replica corpus measured the global layout at or below the
+    * sharded one on every pair query (47.8 s vs 65.4 s on x5_neardup_ivf),
+    * so every registered query but x3_knn_ivf_sharded uses one shard.
+    * One shard is a constant shard column — no range exchange, no eager
+    * checkpoint.
     */
-  def buildSharded(e0: DataFrame, shards: Int): Index = {
-    if (shards <= 1) return build(e0)
+  def build(e0: DataFrame, shards: Int = 1): Index = {
     val maxabs = array_max(transform(col("v"), x => abs(x)))
     val base = e0.select(col("vec_id"), col("v"))
       .withColumn("nrm", VF.l2Norm(col("v")))
@@ -458,21 +305,20 @@ object IvfIndex {
       .withColumn("sq", NX.dot(col("q8"), col("q8")))
       .drop("ma")
     val e = graft.Caches.persist(
-      RangedNtile(base, shards, Seq(col("vec_id")), out = "shard"))
-    val n = e.count()
-    val m = math.max(1L, n / shards)
+      if (shards > 1) RangedNtile(base, shards, Seq(col("vec_id")), out = "shard")
+      else base.withColumn("shard", lit(1L)))
+    val stats = e.groupBy("shard").agg(count(lit(1)), min("vec_id")).collect()
+    val n = stats.map(_.getLong(1)).sum
+    val m = math.max(1L, n / math.max(1, shards))
     val stride = math.max(1L, math.ceil(math.sqrt(m.toDouble)).toLong)
-    // per-shard seeds: the stride-divisible ids landing in the shard
-    // (≈ √m of them — shards are contiguous id ranges wider than the
-    // stride) plus each shard's minimum id, so no shard can end up seedless
-    val seedIds = e.filter(col("vec_id") % stride === 0).select("shard", "vec_id")
-      .unionByName(e.groupBy("shard").agg(min("vec_id").as("vec_id")))
-      .distinct()
-    val seeds = e.join(seedIds, Seq("shard", "vec_id"))
+    val seeds = e.filter(col("vec_id") % stride === 0 ||
+        col("vec_id").isin(stats.map(_.get(2)).toSeq: _*))
       .select(col("shard"), col("vec_id").as("cell0"),
         col("q8").as("s8"), col("sq").as("ss"))
-    // nearest IN-SHARD seed per vector: the same min_by shape as build(),
-    // with the all-pairs join keyed by shard instead of unconditional
+    // nearest in-shard seed per vector: min_by over (d, cell) —
+    // partial-aggregates map-side, so the n·k comparison fan-in shuffles n
+    // rows, not n·k. The vector rides inside the min_by tuple (constant per
+    // group), saving a join-back to `e` after the aggregation.
     val assign0 = e.join(broadcast(seeds), Seq("shard"))
       .withColumn("d0", col("sq") + col("ss")
         - lit(2.0) * NX.dot(col("q8"), col("s8")))
@@ -481,6 +327,8 @@ object IvfIndex {
         struct(col("d0"), col("cell0"))).as("best"))
       .select(col("shard"), col("vec_id"), col("best.cell0").as("cell0"),
         col("best.q8").as("q8"))
+    // one Lloyd step: integer centroid per cell (distributed: one reducer
+    // key per (cell, dim)), FLOOR(SUM/COUNT) for cross-engine exactness
     val cent = assign0
       .select(col("shard"), col("cell0"), posexplode(col("q8")).as(Seq("pos", "x")))
       .groupBy("shard", "cell0", "pos")
@@ -491,43 +339,26 @@ object IvfIndex {
         expr("transform(pm, p -> p.m)").as("cv"))
       .withColumn("cs", NX.dot(col("cv"), col("cv")))
       .withColumn("cnrm", VF.l2Norm(col("cv")))
-    val assigned = e.join(broadcast(cent), Seq("shard"))
+    val assigned = graft.Caches.persist(e.join(broadcast(cent), Seq("shard"))
       .withColumn("d1", col("sq") + col("cs")
         - lit(2.0) * NX.dot(col("q8"), col("cv")))
       .groupBy("vec_id")
       .agg(min_by(struct(col("cell"), col("cv"), col("cnrm"), col("v"), col("nrm")),
         struct(col("d1"), col("cell"))).as("best"))
+      // c1 (the float cosine to the winning centroid) is what the radius
+      // bound and the pruning math consume — computed once here
       .select(col("vec_id"), col("best.cell").as("cell"),
         (NX.dot(col("best.v"), col("best.cv")) /
           (col("best.nrm") * col("best.cnrm"))).as("c1"),
-        col("best.v").as("v"), col("best.nrm").as("nrm"))
-    val assignedP = graft.Caches.persist(assigned)
-    val radius = assignedP.groupBy("cell")
+        col("best.v").as("v"), col("best.nrm").as("nrm")))
+    val radius = assigned.groupBy("cell")
       .agg(max(clampAcos(col("c1"))).as("r"), count(lit(1)).as("cnt"))
-    Index(assignedP, cells = graft.Caches.persist(
+    // cells is k ≈ √n rows but its PLAN contains the whole centroid
+    // aggregation — persist (registered, harness-drained) so the 4-6
+    // downstream consumers (probe branches, pair sides, radius) don't each
+    // re-run the build
+    Index(assigned, cells = graft.Caches.persist(
       cent.select("cell", "cv", "cnrm").join(radius, Seq("cell"))))
-  }
-
-  /** [[loadOrBuild]] for the SHARDED layout — same parquet-cache contract,
-    * keyed additionally by the shard count (`key-sh<S>-n<N>-v<fmt>`).
-    * `shards <= 1` delegates to [[loadOrBuild]] so small corpora share the
-    * knn queries' artifact instead of building twice.
-    */
-  def loadOrBuildSharded(e0: DataFrame, key: String, shards: Int): Index = {
-    if (shards <= 1) return loadOrBuild(e0, key)
-    val spark = e0.sparkSession
-    val n = graft.Caches.countOnce(e0) // memoized — see loadOrBuild
-    val safe = key.replaceAll("[^A-Za-z0-9._-]", "_")
-    val dir = s"${cacheRoot(spark)}/$safe-sh$shards-n$n-v$fmtVersion"
-    val aPath = s"$dir/assigned"
-    val cPath = s"$dir/cells"
-    def complete(p: String) = new java.io.File(p, "_SUCCESS").isFile
-    if (!complete(aPath) || !complete(cPath)) {
-      val idx = buildSharded(e0, shards)
-      idx.assigned.write.mode("overwrite").parquet(aPath)
-      idx.cells.write.mode("overwrite").parquet(cPath)
-    }
-    Index(graft.Caches.readParquet(spark, aPath), graft.Caches.readParquet(spark, cPath))
   }
 
   /** Exact top-k cosine neighbors for each query row (`query_id`, `qv`).
@@ -682,48 +513,22 @@ object IvfIndex {
     // approaches the same n²/2 dot products as a block scan PLUS an n·√n
     // member-expansion exchange on top, and measured ~2× the block
     // scan's cost. Fall back when the surviving pairs would scan more
-    // than `graft.ivf.pairScanRatio` (default 0.5) of the brute total —
-    // but only while the corpus side fits the broadcast bound; above it
-    // the distributed cell-pair join is still the right plan even
-    // unpruned (never a driver-sized broadcast at 100 TB).
-    // dev knob for A/B-ing the gate's own cost: skip the eager statistics
-    // entirely and keep the cell-pair plan (NOT for production — an
-    // unpruned corpus would pay the member-expansion overhead unguarded)
-    if (spark.conf.getOption("graft.ivf.pairGateDisabled").contains("true")) {
-      recordPairsPath(spark, "cellpair gate-disabled")
-      return pairsCellPlan(idx, survivingCellPairs(idx, t), t)
-    }
-    // The statistics live on ≤ k ≈ √n cell rows. Below a cap, collect them
-    // once and compute scanned/total AND the surviving pair list in the
-    // DRIVER (k² float ops over a few hundred rows, identical IEEE
+    // than `graft.ivf.pairScanRatio` of the brute total — but only while
+    // the corpus side fits the broadcast bound; above it the distributed
+    // cell-pair join is still the right plan even unpruned (never a
+    // driver-sized broadcast at 100 TB).
+    // The statistics are computed, together with the surviving pair list,
+    // in the DRIVER (k² float ops over a few hundred rows, identical IEEE
     // arithmetic to survivingCellPairs — java.lang.Math acos/cos, dots in
     // array order): running them as Spark jobs cost ~1.5 s of fixed stage
     // overhead PER pairsExact CALL at local[32] (measured at the 10×
     // point), dwarfing the arithmetic, and the cell-pair plan can then
     // broadcast the surviving pairs as a LOCAL relation instead of
-    // re-deriving them through a cross-join subplan. Above the cap (a
-    // corpus far past the broadcast bound) the decision and the pair
-    // derivation stay distributed. The gate only picks between two EXACT
-    // plans, so a last-ulp divergence could never change results.
-    val statsCap = spark.conf.getOption("graft.ivf.gateCollectCap")
-      .map(_.toInt).getOrElse(4096)
+    // re-deriving them through a cross-join subplan. The gate only picks
+    // between two EXACT plans, so a last-ulp divergence could never change
+    // results.
     val cellRows = idx.cells
-      .select(col("cell"), col("cv"), col("cnrm"), col("r"), col("cnt"))
-      .limit(statsCap + 1).collect()
-    if (cellRows.length > statsCap) {
-      // distributed gate: one aggregation action over the lazy cross-join
-      val cp = survivingCellPairs(idx, t)
-      val cnts = idx.cells.select(col("cell"), col("cnt"))
-      val statsRow = cp
-        .join(cnts.select(col("cell").as("ca"), col("cnt").as("cca")), "ca")
-        .join(cnts.select(col("cell").as("cb"), col("cnt").as("ccb")), "cb")
-        .agg(sum(col("cca") * col("ccb")).as("sc"))
-        .crossJoin(idx.cells.agg(sum("cnt").as("tot")))
-        .head()
-      val scanned = if (statsRow.isNullAt(0)) 0L else statsRow.getLong(0)
-      val total = statsRow.getLong(1)
-      return pairsDecide(idx, t, scanned, total, cp)
-    }
+      .select(col("cell"), col("cv"), col("cnrm"), col("r"), col("cnt")).collect()
     val ids = cellRows.map(_.getLong(0))
     val cv = cellRows.map(_.getSeq[Double](1).toArray)
     val cn = cellRows.map(_.getDouble(2))
@@ -731,9 +536,9 @@ object IvfIndex {
     val cnt = cellRows.map(_.getLong(4))
     val k = cellRows.length
     val survived = Seq.newBuilder[(Long, Long)]
-    var sc = 0L; var tot = 0L; var i = 0
+    var scanned = 0L; var total = 0L; var i = 0
     while (i < k) {
-      tot += cnt(i)
+      total += cnt(i)
       var j = 0
       while (j < k) {
         var d = 0.0; var p = 0
@@ -741,25 +546,13 @@ object IvfIndex {
         while (p < a.length) { d += a(p) * b(p); p += 1 }
         val th = math.acos(math.min(1.0, math.max(-1.0, d / (cn(i) * cn(j)))))
         if (math.cos(math.max(th - r(i) - r(j), 0.0)) >= t - 1e-9) {
-          sc += cnt(i) * cnt(j)
+          scanned += cnt(i) * cnt(j)
           survived += ((ids(i), ids(j)))
         }
         j += 1
       }
       i += 1
     }
-    import spark.implicits._
-    pairsDecide(idx, t, sc, tot, broadcast(survived.result().toDF("ca", "cb")))
-  }
-
-  /** The gate decision + plan tail shared by [[pairsExact]]'s driver-side
-    * and distributed statistics paths. `cp` holds the surviving ordered
-    * cell pairs — a local broadcast relation (driver path) or the lazy
-    * [[survivingCellPairs]] cross-join (distributed path).
-    */
-  private def pairsDecide(idx: Index, t: Double, scanned: Long, total: Long,
-      cp: DataFrame): DataFrame = {
-    val spark = idx.assigned.sparkSession
     // CALIBRATION (r10, measured at ratio≈1.0 on the bench corpus, where
     // the triangle test prunes nothing): the cell-pair plan and the block
     // NLJ evaluate the same ~n²/2 dot products, so the ratio alone cannot
@@ -799,21 +592,20 @@ object IvfIndex {
           NX.dot(col("va"), col("vb")) / (col("na") * col("nb")))
         .filter(col("sim") >= t)
         .select(col("id_a"), col("id_b"), col("sim"))
-    } else pairsCellPlan(idx, cp, t)
-  }
-
-  /** The pruned cell-pair scan — the distributed branch of [[pairsExact]]. */
-  private def pairsCellPlan(idx: Index, cp: DataFrame, t: Double): DataFrame = {
-    val ma = idx.assigned.select(col("vec_id").as("id_a"), col("v").as("va"),
-      col("nrm").as("na"), col("cell").as("ca"))
-    val mb = idx.assigned.select(col("vec_id").as("id_b"), col("v").as("vb"),
-      col("nrm").as("nb"), col("cell").as("cb"))
-    ma.join(broadcast(cp), "ca")
-      .join(mb, Seq("cb"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("sim",
-        NX.dot(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(col("sim") >= t)
-      .select(col("id_a"), col("id_b"), col("sim"))
+    } else {
+      // the pruned cell-pair scan over the surviving pairs
+      import spark.implicits._
+      val ma = idx.assigned.select(col("vec_id").as("id_a"), col("v").as("va"),
+        col("nrm").as("na"), col("cell").as("ca"))
+      val mb = idx.assigned.select(col("vec_id").as("id_b"), col("v").as("vb"),
+        col("nrm").as("nb"), col("cell").as("cb"))
+      ma.join(broadcast(survived.result().toDF("ca", "cb")), "ca")
+        .join(mb, Seq("cb"))
+        .filter(col("id_a") < col("id_b"))
+        .withColumn("sim",
+          NX.dot(col("va"), col("vb")) / (col("na") * col("nb")))
+        .filter(col("sim") >= t)
+        .select(col("id_a"), col("id_b"), col("sim"))
+    }
   }
 }

@@ -41,41 +41,17 @@ object Llm {
     Tables.load(s, dir, "embeddings")
 
   // The IVF index over a table is a build-once-query-many artifact (exactly
-  // like a real vector index): the four vector queries (knn, near-dup pairs,
-  // two clusterings) share one PARQUET-BACKED build per (table, n) — built
-  // by whichever session touches it first, loaded (cheap) by every later
-  // query and session, so no per-session rebuild cost lands on a query.
+  // like a real vector index): the knn, near-dup pair and clustering
+  // queries share one PARQUET-BACKED build per (table, n) — built by
+  // whichever session touches it first, loaded (cheap) by every later query
+  // and session, so no per-session rebuild cost lands on a query. The pair
+  // family uses the same global layout: the r10 sf3 ablation measured the
+  // per-slice sharded layout slower on this corpus (x5_neardup_ivf 65.4 s
+  // vs 47.8 s global+gate), so only x3_knn_ivf_sharded builds one.
   private def ivfIndex(s: SparkSession, dir: String): graft.operators.IvfIndex.Index = {
     val e = embs(s, dir).select(col("vec_id"),
       VF.toDouble(col("embedding")).as("v"))
     graft.operators.IvfIndex.loadOrBuild(e, key = dir)
-  }
-
-  /** The PAIR family's index ([[graft.operators.IvfIndex.pairsExact]]
-    * consumers). DEFAULT: the same GLOBAL artifact as the knn family —
-    * build once, share everywhere. The r10 sf3 ablation measured the
-    * alternatives head-to-head on the 30× corpus: the r9 pair-family
-    * regression was entirely the statistics gate not engaging
-    * (`x5_neardup_ivf` 95.2 s → 47.8 s global+gate), while the sharded
-    * per-slice layout ([[graft.operators.IvfIndex.buildSharded]]) paid
-    * √(shards·n) > √n cells of extra pruning machinery for no win on this
-    * corpus's geometry (65.4 s on the identical run). Sharding stays
-    * available for corpora whose ingest slices are genuinely
-    * distribution-disjoint (where one global k-means layout mixes slices
-    * inside each cell and radii stop pruning): set
-    * `graft.ivf.shardTarget` to the intended rows-per-slice and the pair
-    * family builds the per-slice layout instead (0 = off, the default).
-    */
-  private def ivfPairIndex(s: SparkSession, dir: String): graft.operators.IvfIndex.Index = {
-    val target = s.conf.getOption("graft.ivf.shardTarget")
-      .map(_.toLong).getOrElse(0L)
-    if (target <= 0L) ivfIndex(s, dir)
-    else {
-      val e = embs(s, dir).select(col("vec_id"),
-        VF.toDouble(col("embedding")).as("v"))
-      val shards = ((e.count() + target - 1) / target).toInt
-      graft.operators.IvfIndex.loadOrBuildSharded(e, key = dir, shards)
-    }
   }
 
   /** Release this session's query-local caches (delegates to the registry —
@@ -125,10 +101,10 @@ object Llm {
 
   /** Shared DuckDB CTE prefix replaying [[graft.operators.IvfIndex.build]]'s
     * PORTABLE integer routing bit-for-bit — quantize (the PQ int8 rule) →
-    * stride seeds → integer-squared-L2 assign → one FLOOR(SUM/COUNT) Lloyd
-    * round → final assign. Defines `e` (vec_id, v DOUBLE[], q8), `cent`
-    * (cell, cv) and `a1` (vec_id, cell); ends mid-WITH so callers append
-    * their own CTEs. Every distance is a sum of exact integers in doubles
+    * stride seeds plus the minimum id → integer-squared-L2 assign → one
+    * FLOOR(SUM/COUNT) Lloyd round → final assign. Defines `e` (vec_id,
+    * v DOUBLE[], q8), `cent` (cell, cv) and `a1` (vec_id, cell); ends
+    * mid-WITH so callers append their own CTEs. Every distance is a sum of exact integers in doubles
     * (order-independent) and every tie breaks to the smallest cell id, so
     * DuckDB and the distributed build cannot diverge. Consumed by the
     * x3_knn_ivf_approx and x3_knn_ivfpq oracles.
@@ -145,7 +121,8 @@ object Llm {
       |seeds AS (
       |  SELECT vec_id AS cell0, q8 AS s8 FROM e
       |  WHERE vec_id % (SELECT GREATEST(CAST(CEIL(SQRT(COUNT(*))) AS BIGINT), 1)
-      |                  FROM e) = 0),
+      |                  FROM e) = 0
+      |     OR vec_id = (SELECT MIN(vec_id) FROM e)),
       |a0 AS (SELECT vec_id, cell0, q8 FROM (
       |    SELECT e.vec_id, s.cell0, e.q8,
       |      ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
@@ -2628,7 +2605,7 @@ object Llm {
     // scan and still answers exactly (OperatorsSpec pins both behaviors).
     Q("x5_neardup_ivf",
       (s, dir) => {
-        val idx = ivfPairIndex(s, dir)
+        val idx = ivfIndex(s, dir)
         graft.operators.IvfIndex.pairsExact(idx, 0.35)
           .select(col("id_a"), col("id_b"), round(col("sim"), 4).as("sim"))
           .orderBy("id_a", "id_b")
@@ -2648,7 +2625,7 @@ object Llm {
     // deterministic CC -> recursive-CTE oracle.
     Q("x5_embedding_clusters",
       (s, dir) => {
-        val idx = ivfPairIndex(s, dir)
+        val idx = ivfIndex(s, dir)
         val pairs = graft.operators.IvfIndex.pairsExact(idx, 0.35)
           .select(col("id_a").as("src"), col("id_b").as("dst"))
         labelClusters(idx.assigned.select(col("vec_id").as("id")), pairs, "vec_id")
@@ -2682,7 +2659,7 @@ object Llm {
     // pairs + recursive-CTE reachability.
     Q("x5_semdedup",
       (s, dir) => {
-        val idx = ivfPairIndex(s, dir)
+        val idx = ivfIndex(s, dir)
         val labels = graft.Caches.persist(
           embs(s, dir).select(col("vec_id"), col("label")))
         val pairs = graft.operators.IvfIndex.pairsExact(idx, 0.4)
@@ -2765,7 +2742,7 @@ object Llm {
     // the rank/degree table rides broadcast once AQE sees its size.
     Q("x5_pagerank",
       (s, dir) => {
-        val idx = ivfPairIndex(s, dir)
+        val idx = ivfIndex(s, dir)
         // edge supply + the shared walk (pagerankE12 holds the measured
         // checkpoint/materialization decisions — see its doc)
         val pairs = graft.operators.IvfIndex.pairsExact(idx, 0.35)
@@ -2813,7 +2790,7 @@ object Llm {
     // Output adds n_members so the contracted mass is visible.
     Q("x5_pagerank_contracted",
       (s, dir) => {
-        val idx = ivfPairIndex(s, dir)
+        val idx = ivfIndex(s, dir)
         // EAGER localCheckpoint, not persist: the contraction + loop below
         // reference this frame from many independently-planned stages, and
         // a lazy (or even count()-forced) cache still left the expensive
@@ -3026,8 +3003,8 @@ object Llm {
              |WHERE rk <= 10 ORDER BY query_id, rk""".stripMargin))),
 
     // ---- X3 exact top-k over the per-ingest-slice SHARDED layout
-    // (IvfIndex.buildSharded, shards=4 forced so the multi-shard path runs
-    // at every SF): the layout a 100 TB deployment uses when its ingest
+    // (IvfIndex.build with shards=4, so the multi-shard path runs at every
+    // SF): the layout a 100 TB deployment uses when its ingest
     // slices are distribution-disjoint — each slice's k-means is trained
     // locally, so cell radii describe one slice's geometry and cross-slice
     // cell pairs prune (the global layout mixes slices inside each cell
@@ -3041,8 +3018,7 @@ object Llm {
       (s, dir) => {
         val e = embs(s, dir).select(col("vec_id"),
           VF.toDouble(col("embedding")).as("v"))
-        val idx = graft.operators.IvfIndex.loadOrBuildSharded(
-          e, key = dir, shards = 4)
+        val idx = graft.operators.IvfIndex.loadOrBuild(e, key = dir, shards = 4)
         val q = idx.assigned.filter(
             col("vec_id") % knnQueryStride(graft.Caches.countOnce(idx.assigned)) === 0)
           .select(col("vec_id").as("query_id"), col("v").as("qv"))

@@ -9,7 +9,8 @@ package graft.sources
   */
 private[graft] object FileSwap {
 
-  private def rm(f: java.io.File): Unit = {
+  /** Recursive delete — the engine's one copy. */
+  private[graft] def rm(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm))
     f.delete()
   }

@@ -124,12 +124,7 @@ object Forget {
       marked.unpersist(blocking = false)
       // a failed write must not leave the scratch directory for the next
       // run to trip over (FileSwap consumed it on success)
-      if (tmp.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(tmp)
-      }
+      if (tmp.exists()) FileSwap.rm(tmp)
     }
   }
 }

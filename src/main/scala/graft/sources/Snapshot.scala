@@ -84,10 +84,6 @@ object Snapshot {
     graft.Caches.readParquet(spark, dir.getPath)
   }
 
-  private def rm(x: java.io.File): Unit = {
-    Option(x.listFiles()).foreach(_.foreach(rm)); x.delete()
-  }
-
   /** Serialize pointer mutations through a create-exclusive `_lock` file —
     * the local-FS stand-in for an object store's conditional PUT. A crash
     * while holding the lock leaves it behind; writers spin ~10 s and then
@@ -157,7 +153,7 @@ object Snapshot {
     } finally {
       // only ever deletes the staging directory THIS call created; on
       // success it was renamed away and this is a no-op
-      if (staged.exists()) rm(staged)
+      if (staged.exists()) FileSwap.rm(staged)
     }
   }
 
@@ -176,7 +172,7 @@ object Snapshot {
       throw new IllegalArgumentException(s"not a snapshot table: $path"))
     val entries = Option(new java.io.File(path).listFiles()).getOrElse(Array())
     entries.filter(f => f.isDirectory && f.getName.startsWith(".stage-"))
-      .foreach(rm)
+      .foreach(FileSwap.rm)
     val gens = entries
       .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
       .map(_.getName.stripPrefix("gen-").toLong)
@@ -184,7 +180,7 @@ object Snapshot {
     val retained =
       (gens.filter(g => g < live).takeRight(keepLast - 1) :+ live).toSet
     val doomed = gens.filterNot(retained)
-    doomed.foreach(g => rm(genDir(path, g)))
+    doomed.foreach(g => FileSwap.rm(genDir(path, g)))
     doomed.toSeq
   }
 }

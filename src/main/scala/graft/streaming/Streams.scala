@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.functions.{NativeExpressions => NX}
 import graft.model._
+import graft.sources.{FileSwap, IndexStore}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -313,7 +314,7 @@ object Streams {
     val s = corpus.sparkSession
     val n = graft.Caches.countOnce(corpus)
     var built: CorpusIndex = null
-    val (frames, meta) = IndexStore.loadOrBuild(s, s"neardup-$key", n,
+    val (frames, meta) = IndexStore.loadOrBuild(s, IndexStore.Screens, s"neardup-$key", n,
       Seq("bands", "shingles"),
       Map("bands" -> Seq("bk"), "shingles" -> Seq("corpus_id"))) {
       built = corpusIndex(corpus, numHashes, bands)
@@ -440,7 +441,7 @@ object Streams {
     val s = corpus.sparkSession
     val n = graft.Caches.countOnce(corpus)
     var built: ContainmentIndex = null
-    val (frames, meta) = IndexStore.loadOrBuild(s, s"containment-$key", n,
+    val (frames, meta) = IndexStore.loadOrBuild(s, IndexStore.Screens, s"containment-$key", n,
       Seq("bands2", "sigs", "sets"),
       Map("bands2" -> Seq("band", "bk"), "sigs" -> Seq("k", "sv"),
         "sets" -> Seq("corpus_id"))) {
@@ -590,7 +591,7 @@ object Streams {
   def simhashIndexLoadOrBuild(corpus: DataFrame, key: String): SimHashIndex = {
     val s = corpus.sparkSession
     val n = graft.Caches.countOnce(corpus)
-    val (frames, meta) = IndexStore.loadOrBuild(s, s"simhash-$key", n,
+    val (frames, meta) = IndexStore.loadOrBuild(s, IndexStore.Screens, s"simhash-$key", n,
       Seq("blocks"), Map("blocks" -> Seq("blk", "key"))) {
       val b = simhashIndex(corpus)
       (Map("blocks" -> b.blocks), Map("blocksBytes" -> b.blocksBytes))
@@ -663,7 +664,7 @@ object Streams {
   def phashIndexLoadOrBuild(corpusWithPpm: DataFrame, key: String): PhashIndex = {
     val s = corpusWithPpm.sparkSession
     val n = graft.Caches.countOnce(corpusWithPpm)
-    val (frames, meta) = IndexStore.loadOrBuild(s, s"phash-$key", n,
+    val (frames, meta) = IndexStore.loadOrBuild(s, IndexStore.Screens, s"phash-$key", n,
       Seq("blocks"), Map("blocks" -> Seq("blk", "key"))) {
       val b = phashIndex(corpusWithPpm)
       (Map("blocks" -> b.blocks), Map("blocksBytes" -> b.blocksBytes))
@@ -733,7 +734,7 @@ object Streams {
       key: String): VideoIndex = {
     val s = corpusWithY4m.sparkSession
     val n = graft.Caches.countOnce(corpusWithY4m.toDF())
-    val (frames, meta) = IndexStore.loadOrBuild(s, s"video-$key", n,
+    val (frames, meta) = IndexStore.loadOrBuild(s, IndexStore.Screens, s"video-$key", n,
       Seq("blocks"), Map("blocks" -> Seq("blk", "key"))) {
       val b = videoIndex(corpusWithY4m)
       (Map("blocks" -> b.blocks), Map("blocksBytes" -> b.blocksBytes))
@@ -1650,21 +1651,18 @@ object Streams {
       val merged = transform(s.read.schema(schema)
         .parquet(gens.map(b => s"$dir/batch_id=$b"): _*))
         .localCheckpoint(true) // sever lineage before rewriting sources
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
       // stage OUTSIDE the batch_id= listing namespace — a crashed
       // attempt can never be parsed as (or shadow) a generation
       val tmp = new java.io.File(dir, ".compact-tmp")
-      if (tmp.exists()) rm(tmp)
+      if (tmp.exists()) FileSwap.rm(tmp)
       merged.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
       java.nio.file.Files.write(
         new java.io.File(tmp, "_folded").toPath,
         gens.filter(_ != top).mkString("", "\n", "\n").getBytes("UTF-8"))
-      graft.sources.FileSwap.replace(
+      FileSwap.replace(
         new java.io.File(s"$dir/batch_id=$top"), tmp)
       gens.filter(_ != top)
-        .foreach(b => rm(new java.io.File(s"$dir/batch_id=$b")))
+        .foreach(b => FileSwap.rm(new java.io.File(s"$dir/batch_id=$b")))
       new java.io.File(s"$dir/batch_id=$top", "_folded").delete()
       releaseLocalCheckpoint(merged) // fold done — blocks are dead weight
       gens.length
@@ -1709,12 +1707,8 @@ object Streams {
     // the second-newest must survive compaction too.
     val repDir = s"$path/_state/memrep"
     val reps = stateBatchIds(s, repDir).sorted
-    reps.dropRight(2).foreach { b =>
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(new java.io.File(s"$repDir/batch_id=$b"))
-    }
+    reps.dropRight(2)
+      .foreach(b => FileSwap.rm(new java.io.File(s"$repDir/batch_id=$b")))
     folded + math.max(0, reps.length - 2)
   }
 }

@@ -41,9 +41,9 @@ class DeterminismSpec extends AnyFunSuite {
   }
 
   test("buildSharded layout is bit-identical under 8 vs 3 shuffle partitions") {
-    // The registry sweep above exercises the sharded pair index only at
-    // sf0.001, where it DELEGATES to the unsharded build (n < shardTarget).
-    // Force a multi-shard build here: the shard split rides a range
+    // The registry sweep above builds the sharded layout only through
+    // x3_knn_ivf_sharded at sf0.001. Build a multi-shard layout over
+    // sliced geometry here too: the shard split rides a range
     // exchange, whose boundaries re-sample per action (the RangedNtile
     // trap) — the k-means layout must not depend on the partitioning.
     import org.apache.spark.sql.functions.col
@@ -57,7 +57,7 @@ class DeterminismSpec extends AnyFunSuite {
     def layout(parts: Int): (Seq[String], Seq[String]) = {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try {
-        val idx = graft.operators.IvfIndex.buildSharded(
+        val idx = graft.operators.IvfIndex.build(
           vecs.toDF("vec_id", "v"), shards = 3)
         val a = idx.assigned.select("vec_id", "cell")
           .orderBy("vec_id").collect().toSeq.map(_.toString)

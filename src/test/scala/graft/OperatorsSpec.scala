@@ -588,32 +588,76 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("IvfIndex.pruneStaleCache deletes only stale index-shaped entries") {
-    val root = java.nio.file.Files.createTempDirectory("ivf-prune").toFile
-    def mk(parts: String*): java.io.File = {
-      val f = new java.io.File(root, parts.mkString("/")); f.mkdirs(); f
+    // the same fixtures under both family roots: one sweep covers both
+    import graft.sources.IndexStore
+    def fixtures(fam: IndexStore.Family) = {
+      val root = java.nio.file.Files.createTempDirectory("ivf-prune").toFile
+      def mk(parts: String*): java.io.File = {
+        val f = new java.io.File(root, parts.mkString("/")); f.mkdirs(); f
+      }
+      val stale = mk("emb-n100-v0", "assigned")
+      mk("emb-n100-v0", "cells")
+      val current = mk(s"emb-n100-v${fam.fmtVersion}", "assigned")
+      // a user directory that happens to live under the (configurable) cache
+      // root must NEVER be deleted, key-shaped or not
+      val precious = mk("precious-data")
+      java.nio.file.Files.writeString(
+        new java.io.File(precious, "keep.txt").toPath, "x")
+      val keyedButForeign = mk("backup-n5-v0")
+      java.nio.file.Files.writeString(
+        new java.io.File(keyedButForeign, "data.bin").toPath, "x")
+      (root, stale, current, precious, keyedButForeign)
     }
-    val stale = mk("emb-n100-v0", "assigned")
-    mk("emb-n100-v0", "cells")
-    val current =
-      mk(s"emb-n100-v${graft.operators.IvfIndex.fmtVersion}", "assigned")
-    // a user directory that happens to live under the (configurable) cache
-    // root must NEVER be deleted, key-shaped or not
-    val precious = mk("precious-data")
-    java.nio.file.Files.writeString(
-      new java.io.File(precious, "keep.txt").toPath, "x")
-    val keyedButForeign = mk("backup-n5-v0")
-    java.nio.file.Files.writeString(
-      new java.io.File(keyedButForeign, "data.bin").toPath, "x")
-    val old = spark.conf.getOption("graft.ivf.cacheDir")
-    spark.conf.set("graft.ivf.cacheDir", root.getAbsolutePath)
-    try graft.operators.IvfIndex.pruneStaleCache(spark)
-    finally old.fold(spark.conf.unset("graft.ivf.cacheDir"))(
-      spark.conf.set("graft.ivf.cacheDir", _))
-    assert(!stale.getParentFile.exists(), "stale versioned entry removed")
-    assert(current.exists(), "current-version entry kept")
-    assert(new java.io.File(precious, "keep.txt").isFile, "user dir untouched")
-    assert(new java.io.File(keyedButForeign, "data.bin").isFile,
-      "key-shaped dir without index children untouched")
+    val fams = Seq(IndexStore.Ivf, IndexStore.Screens)
+    val fx = fams.map(fixtures)
+    val old = fams.map(f => spark.conf.getOption(f.conf))
+    fams.zip(fx).foreach { case (f, x) => spark.conf.set(f.conf, x._1.getAbsolutePath) }
+    try IndexStore.pruneStale(spark)
+    finally fams.zip(old).foreach { case (f, o) =>
+      o.fold(spark.conf.unset(f.conf))(spark.conf.set(f.conf, _))
+    }
+    fx.foreach { case (_, stale, current, precious, keyedButForeign) =>
+      assert(!stale.getParentFile.exists(), "stale versioned entry removed")
+      assert(current.exists(), "current-version entry kept")
+      assert(new java.io.File(precious, "keep.txt").isFile, "user dir untouched")
+      assert(new java.io.File(keyedButForeign, "data.bin").isFile,
+        "key-shaped dir without index children untouched")
+    }
+  }
+
+  test("IvfIndex.build seeds the minimum id: odd ids with no stride multiple still index every vector") {
+    // 100 vectors with ids 1, 3, …, 199: stride ⌈√100⌉ = 10 divides none of
+    // them, so stride seeds alone give an empty index and silent 0-row answers
+    val rng = new scala.util.Random(53)
+    val vecs = (0 until 100).map(i =>
+      ((2 * i + 1).toLong, Array.fill(6)(rng.nextGaussian())))
+    val idx = graft.operators.IvfIndex.build(
+      vecs.map { case (i, v) => (i, v.toSeq) }.toDF("vec_id", "v"))
+    assert(idx.assigned.count() == 100)
+    def cos(a: Array[Double], b: Array[Double]): Double = {
+      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+      d / (math.sqrt(na) * math.sqrt(nb))
+    }
+    val q = idx.assigned.filter(col("vec_id") % 10 === 1)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"))
+    val got = graft.operators.IvfIndex.knnExact(idx, q, k = 5)
+      .select("query_id", "rk", "neighbor_id").as[(Long, Long, Long)]
+      .collect().toSeq.sorted
+    val expect = vecs.filter(_._1 % 10 == 1).flatMap { case (qid, qv) =>
+      vecs.filter(_._1 != qid).map { case (n, nv) => (n, cos(qv, nv)) }
+        .sortBy { case (n, s) => (-s, n) }.take(5).zipWithIndex
+        .map { case ((n, _), r) => (qid, (r + 1).toLong, n) }
+    }.sorted
+    assert(expect.nonEmpty && got == expect, s"knnExact: got=${got.take(8)}...")
+    val pairs = graft.operators.IvfIndex.pairsExact(idx, 0.5)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val naive = (for {
+      (a, va) <- vecs; (b, vb) <- vecs if a < b && cos(va, vb) >= 0.5
+    } yield (a, b)).toSet
+    assert(naive.nonEmpty && pairs == naive,
+      s"pairsExact: missing=${naive -- pairs} extra=${pairs -- naive}")
+    graft.Caches.drain(spark)
   }
 
   test("minhash-LSH hot-band skew guard: band join runs over distinct sets") {
@@ -718,7 +762,7 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         (i.toLong, Seq.fill(5)(rng.nextGaussian())))
       val e = all.toDF("vec_id", "v")
       graft.operators.IvfIndex.loadOrBuild(e, "embtest")
-      val v = graft.operators.IvfIndex.fmtVersion
+      val v = graft.sources.IndexStore.Ivf.fmtVersion
       assert(new java.io.File(root, s"embtest-n120-v$v").isDirectory)
       val goneIds = Seq(3L, 44L, 90L)
       val (rewritten, removed) = graft.operators.IvfIndex.forgetStored(
@@ -759,8 +803,8 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val e = all.toDF("vec_id", "v")
       // the same key stores BOTH layouts — erasure must rewrite both
       graft.operators.IvfIndex.loadOrBuild(e, "shtest")
-      graft.operators.IvfIndex.loadOrBuildSharded(e, "shtest", shards = 4)
-      val v = graft.operators.IvfIndex.fmtVersion
+      graft.operators.IvfIndex.loadOrBuild(e, "shtest", shards = 4)
+      val v = graft.sources.IndexStore.Ivf.fmtVersion
       assert(new java.io.File(root, s"shtest-n160-v$v").isDirectory &&
         new java.io.File(root, s"shtest-sh4-n160-v$v").isDirectory)
       val goneIds = Seq(7L, 62L, 133L, 140L)
@@ -782,7 +826,7 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       // the shrunken source cache-HITS the rewritten sharded artifact
       val mtime = shDir.lastModified()
       val shrunk = e.filter(!col("vec_id").isin(goneIds: _*))
-      val idx = graft.operators.IvfIndex.loadOrBuildSharded(shrunk, "shtest", 4)
+      val idx = graft.operators.IvfIndex.loadOrBuild(shrunk, "shtest", 4)
       assert(shDir.lastModified() == mtime,
         "loadOrBuildSharded rebuilt instead of hitting the forgotten index")
       assert(idx.assigned.count() == 156)
@@ -823,7 +867,7 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       if sim >= 0.9
     } yield (a, b)).toSet
     assert(naive.nonEmpty)
-    val sharded = graft.operators.IvfIndex.buildSharded(e, shards = 3)
+    val sharded = graft.operators.IvfIndex.build(e, shards = 3)
     // exactness on the CELL-PAIR plan itself (force the gate off the block
     // fallback so the pruned scan is the thing being verified)
     spark.conf.set("graft.ivf.pairScanRatio", "1000000000.0")
@@ -909,13 +953,13 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     try {
       val vecs = mixedSliceCorpus(slices = 2, per = 60, dim = 6, seed = 7)
       val e = vecs.toDF("vec_id", "v")
-      val i1 = graft.operators.IvfIndex.loadOrBuildSharded(e, "shtest", shards = 1)
+      val i1 = graft.operators.IvfIndex.loadOrBuild(e, "shtest", shards = 1)
       assert(i1.assigned.count() == 120)
       val names = new java.io.File(tmp).listFiles().map(_.getName).toSet
       assert(names.exists(n => n.startsWith("shtest-n120")),
         s"shards=1 must delegate to the shared unsharded artifact: $names")
       assert(!names.exists(_.contains("-sh1-")), s"no sh1 dir expected: $names")
-      val i2 = graft.operators.IvfIndex.loadOrBuildSharded(e, "shtest", shards = 2)
+      val i2 = graft.operators.IvfIndex.loadOrBuild(e, "shtest", shards = 2)
       assert(i2.assigned.count() == 120)
       val names2 = new java.io.File(tmp).listFiles().map(_.getName).toSet
       assert(names2.exists(_.contains("-sh2-")), s"sharded artifact missing: $names2")
@@ -958,13 +1002,13 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val all = (0 until 120).map(i =>
         (i.toLong, Seq.fill(5)(rng.nextGaussian())))
       val e = all.toDF("vec_id", "v")
-      val v = graft.operators.IvfIndex.fmtVersion
+      val v = graft.sources.IndexStore.Ivf.fmtVersion
       // two generations of the same key (the corpus shrank), one sharded
       // layout of the same key, and an unrelated key
       graft.operators.IvfIndex.loadOrBuild(e, "vac")
       graft.operators.IvfIndex.loadOrBuild(
         e.filter(col("vec_id") < 110), "vac")
-      graft.operators.IvfIndex.loadOrBuildSharded(e, "vac", shards = 4)
+      graft.operators.IvfIndex.loadOrBuild(e, "vac", shards = 4)
       graft.operators.IvfIndex.loadOrBuild(e, "vacother")
       // make the generation order unambiguous whatever the build timing
       assert(new java.io.File(root, s"vac-n120-v$v")

@@ -56,8 +56,11 @@ class QueriesSpec extends AnyFunSuite {
       case m: MapType => decimals(m.keyType, s"$path.key") ++ decimals(m.valueType, s"$path.value")
       case _ => Nil
     }
+    // drain after each build: a build's persisted frames (and the ones its
+    // gate counts prime eagerly) must not pile up across 158 builds
     val offenders = SparkEntry.registry.flatMap { q =>
-      decimals(q.fn(spark, sfDir).schema, q.name)
+      try decimals(q.fn(spark, sfDir).schema, q.name)
+      finally graft.Caches.drain(spark)
     }
     assert(offenders.isEmpty, s"DecimalType in query output (cast to double): $offenders")
   }
