@@ -3,7 +3,7 @@
 # this exiting 0. Rounds 3 and 6 were forfeited because the final commit did
 # not compile — this script makes that structurally impossible.
 #
-#   dev/preflight.sh            # compile + QueriesSpec/NativeColumnsSpec/ReadMemoSpec smoke (<2 min)
+#   dev/preflight.sh            # compile + QueriesSpec/NativeColumnsSpec/ReadMemoSpec/RetrievalJobsSpec smoke (<3 min)
 #   dev/preflight.sh full       # compile + the entire ScalaTest suite
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -38,9 +38,18 @@ check "artifact root conf read outside IndexStore" '"graft\.(ivf|screen)\.cacheD
 check "meta.json commit marker tested outside IndexStore" '"meta\.json"' "$store"
 check "recursive delete defined outside FileSwap" 'def rm\(' '^src/main/scala/graft/sources/FileSwap\.scala:'
 
+# One top-k path: IvfIndex ranks every per-query list with the bounded
+# top-k aggregate (IvfIndex.topKPerQuery), never a window.
+ranked=$(grep -nE 'row_number|Window\.' src/main/scala/graft/operators/IvfIndex.scala || true)
+if [[ -n "$ranked" ]]; then
+  echo "[preflight] window ranking in IvfIndex (use topKPerQuery):" >&2
+  echo "$ranked" >&2
+  exit 1
+fi
+
 if [[ "${1:-smoke}" == "full" ]]; then
   sbt -batch compile Test/compile test
 else
-  sbt -batch compile Test/compile "testOnly graft.QueriesSpec graft.NativeColumnsSpec graft.ReadMemoSpec"
+  sbt -batch compile Test/compile "testOnly graft.QueriesSpec graft.NativeColumnsSpec graft.ReadMemoSpec graft.RetrievalJobsSpec"
 fi
 echo "[preflight] OK — safe to commit"

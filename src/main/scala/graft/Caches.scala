@@ -106,6 +106,10 @@ object Caches {
     }
   }
 
+  /** The frames registered for `s` since the last drain, oldest first. */
+  private[graft] def registered(s: SparkSession): Seq[DataFrame] =
+    reg.synchronized(Option(reg.get(s)).map(_.toList).getOrElse(Nil))
+
   /** Unpersist every frame registered for `s` since the last drain. */
   def drain(s: SparkSession): Unit = {
     reg.synchronized {

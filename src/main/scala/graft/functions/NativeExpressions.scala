@@ -1,13 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.classic.ColumnConversions
 import org.apache.spark.sql.graft.ExpressionColumns
-import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, FloatType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, FloatType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native (codegen'd) dot product over two `array<double>` columns.
@@ -1084,6 +1086,197 @@ case class HyperplaneProbeKeys(child: Expression, bands: Int, bitsPerBand: Int,
     copy(child = newChild)
 }
 
+/** One key's bounded candidate list: at most `k` (id, score) entries in
+  * primitive arrays, kept as a heap whose root is the WORST entry, so an
+  * offer that cannot enter costs one comparison. `flags` marks nulls
+  * (bit 0: score, bit 1: id).
+  */
+final class TopKHeap(k: Int) {
+  val ids = new Array[Long](k)
+  val scores = new Array[Double](k)
+  val flags = new Array[Byte](k)
+  var n = 0
+
+  // < 0 when (s1, f1, id1) ranks before (s2, f2, id2): score descending in
+  // Spark's double order (NaN largest, -0.0 = 0.0) with nulls last, then id
+  // ascending with nulls first — exactly `desc(score), asc(id)`
+  private def cmp(s1: Double, id1: Long, f1: Int, s2: Double, id2: Long, f2: Int): Int = {
+    val n1 = f1 & 1; val n2 = f2 & 1
+    val bys =
+      if (n1 != 0 || n2 != 0) n1 - n2
+      else SQLOrderingUtil.compareDoubles(s2, s1)
+    if (bys != 0) bys
+    else {
+      val m1 = f1 & 2; val m2 = f2 & 2
+      if (m1 != 0 || m2 != 0) m2 - m1
+      else java.lang.Long.compare(id1, id2)
+    }
+  }
+  private def cmpAt(i: Int, j: Int): Int =
+    cmp(scores(i), ids(i), flags(i), scores(j), ids(j), flags(j))
+  private def swap(i: Int, j: Int): Unit = {
+    val id = ids(i); ids(i) = ids(j); ids(j) = id
+    val s = scores(i); scores(i) = scores(j); scores(j) = s
+    val f = flags(i); flags(i) = flags(j); flags(j) = f
+  }
+  private def siftDown(from: Int, size: Int): Unit = {
+    var i = from
+    var done = false
+    while (!done) {
+      val l = 2 * i + 1
+      if (l >= size) done = true
+      else {
+        val c = if (l + 1 < size && cmpAt(l + 1, l) > 0) l + 1 else l
+        if (cmpAt(c, i) > 0) { swap(c, i); i = c } else done = true
+      }
+    }
+  }
+
+  def offer(id: Long, s: Double, f: Int): Unit =
+    if (n < k) {
+      ids(n) = id; scores(n) = s; flags(n) = f.toByte
+      var i = n
+      n += 1
+      while (i > 0 && cmpAt(i, (i - 1) / 2) > 0) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+    } else if (k > 0 && cmp(s, id, f, scores(0), ids(0), flags(0)) < 0) {
+      ids(0) = id; scores(0) = s; flags(0) = f.toByte
+      siftDown(0, n)
+    }
+
+  /** A copy of the entries in rank order (heap-sort: worst moves last). */
+  def ranked(): TopKHeap = {
+    val r = new TopKHeap(n)
+    System.arraycopy(ids, 0, r.ids, 0, n)
+    System.arraycopy(scores, 0, r.scores, 0, n)
+    System.arraycopy(flags, 0, r.flags, 0, n)
+    r.n = n
+    var end = n - 1
+    while (end > 0) { r.swap(0, end); r.siftDown(0, end); end -= 1 }
+    r
+  }
+}
+
+/** The per-key buffer of [[TopKPerKey]]: one [[TopKHeap]] per key. */
+final class TopKState(val k: Int) {
+  val heaps = new scala.collection.mutable.LongMap[TopKHeap]()
+  var nullKey: TopKHeap = null
+
+  def heap(key: Long, keyNull: Boolean): TopKHeap =
+    if (keyNull) {
+      if (nullKey == null) nullKey = new TopKHeap(k)
+      nullKey
+    } else {
+      var h = heaps.getOrNull(key)
+      if (h == null) { h = new TopKHeap(k); heaps.update(key, h) }
+      h
+    }
+}
+
+/** Bounded per-key top-k as ONE aggregate: each key keeps its best `k`
+  * rows by (score desc, id asc) — the order, NaN/-0.0/null handling and
+  * therefore the ranks of `row_number() OVER (PARTITION BY key ORDER BY
+  * score DESC, id ASC)` — and the result is `array<struct<key, rk, id,
+  * score>>` with `rk` 1-based. The state is O(k) per key in primitive
+  * arrays, the partial aggregate runs per partition and one merge combines
+  * them, so a q-query top-k shuffles at most q·k rows per map task instead
+  * of every candidate through a window sort. Ungrouped, one row carries
+  * every key's list; grouped by the key, each group's row carries its own.
+  */
+case class TopKPerKey(key: Expression, id: Expression, score: Expression, k: Int,
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[TopKState] {
+  require(k >= 0, "topK needs k >= 0")
+
+  override def children: Seq[Expression] = Seq(key, id, score)
+  override def nullable: Boolean = false
+  override def dataType: DataType = TopKPerKey.resultType
+  override def prettyName: String = "top_k"
+
+  override def createAggregationBuffer(): TopKState = new TopKState(k)
+
+  override def update(buf: TopKState, input: InternalRow): TopKState = {
+    val kv = key.eval(input)
+    val iv = id.eval(input)
+    val sv = score.eval(input)
+    val f = (if (sv == null) 1 else 0) | (if (iv == null) 2 else 0)
+    buf.heap(if (kv == null) 0L else kv.asInstanceOf[Long], kv == null).offer(
+      if (iv == null) 0L else iv.asInstanceOf[Long],
+      if (sv == null) 0.0 else sv.asInstanceOf[Double], f)
+    buf
+  }
+
+  override def merge(buf: TopKState, other: TopKState): TopKState = {
+    def into(h: TopKHeap, o: TopKHeap): Unit = {
+      var i = 0
+      while (i < o.n) { h.offer(o.ids(i), o.scores(i), o.flags(i)); i += 1 }
+    }
+    other.heaps.foreachEntry((key, o) => into(buf.heap(key, keyNull = false), o))
+    if (other.nullKey != null) into(buf.heap(0L, keyNull = true), other.nullKey)
+    buf
+  }
+
+  override def eval(buf: TopKState): Any = {
+    val out = scala.collection.mutable.ArrayBuffer[InternalRow]()
+    def emit(key: Any, heap: TopKHeap): Unit = {
+      val h = heap.ranked()
+      var i = 0
+      while (i < h.n) {
+        out += InternalRow(key, (i + 1).toLong,
+          if ((h.flags(i) & 2) != 0) null else h.ids(i),
+          if ((h.flags(i) & 1) != 0) null else h.scores(i))
+        i += 1
+      }
+    }
+    if (buf.nullKey != null) emit(null, buf.nullKey)
+    buf.heaps.keys.toArray.sorted.foreach(key => emit(key, buf.heaps(key)))
+    new GenericArrayData(out.toArray[Any])
+  }
+
+  // wire format: per heap (keyNull, key, n, n × (flags, id, score))
+  override def serialize(buf: TopKState): Array[Byte] = {
+    val heaps = buf.heaps.toSeq.map { case (key, h) => (false, key, h) } ++
+      Option(buf.nullKey).map(h => (true, 0L, h))
+    val bb = java.nio.ByteBuffer.allocate(
+      4 + heaps.map { case (_, _, h) => 13 + 17 * h.n }.sum)
+    bb.putInt(heaps.size)
+    heaps.foreach { case (keyNull, key, h) =>
+      bb.put((if (keyNull) 1 else 0).toByte).putLong(key).putInt(h.n)
+      var i = 0
+      while (i < h.n) { bb.put(h.flags(i)).putLong(h.ids(i)).putDouble(h.scores(i)); i += 1 }
+    }
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): TopKState = {
+    val buf = new TopKState(k)
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    var heaps = bb.getInt()
+    while (heaps > 0) {
+      val keyNull = bb.get() != 0
+      val h = buf.heap(bb.getLong(), keyNull)
+      var n = bb.getInt()
+      while (n > 0) { val f = bb.get(); h.offer(bb.getLong(), bb.getDouble(), f); n -= 1 }
+      heaps -= 1
+    }
+    buf
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): TopKPerKey =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): TopKPerKey =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): TopKPerKey =
+    copy(key = c(0), id = c(1), score = c(2))
+}
+
+object TopKPerKey {
+  val resultType: DataType = ArrayType(StructType(Seq(
+    StructField("key", LongType), StructField("rk", LongType, nullable = false),
+    StructField("id", LongType), StructField("score", DoubleType))),
+    containsNull = false)
+}
+
 /** Typed Column constructors for the native kernels above — one per
   * kernel, each building its Catalyst expression directly, so a kernel
   * resolves in any session without a function registry. Arguments that
@@ -1136,4 +1329,10 @@ object NativeExpressions {
       flips: Int): Column =
     c(HyperplaneProbeKeys(e(v), bands, bitsPerBand, flips))
   def bigramStrings(tokens: Column): Column = c(BigramStringsAll(e(tokens)))
+  /** Aggregate: each `key`'s best `k` rows by (score desc, id asc) as
+    * `array<struct<key, rk, id, score>>` — see [[TopKPerKey]]. Key and id
+    * are read as longs, the score as a double. */
+  def topK(key: Column, id: Column, score: Column, k: Int): Column =
+    c(TopKPerKey(e(key.cast("long")), e(id.cast("long")), e(score.cast("double")), k)
+      .toAggregateExpression())
 }

@@ -3,7 +3,6 @@ package graft.operators
 import graft.functions.{NativeExpressions => NX, VectorFunctions => VF}
 import graft.sources.{FileSwap, IndexStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) vector index with DATA-DRIVEN cells and EXACT
@@ -256,7 +255,8 @@ object IvfIndex {
 
   /** Build the index over `e0(vec_id, v: array<double>)`. Runs one
     * statistics job (the row count and each shard's minimum id, which also
-    * primes the persisted input) and persists the assignment.
+    * primes the persisted input), collects the k ≈ √n centroids once, and
+    * persists the assignment.
     *
     * SEEDS: stride = ⌈√m⌉ for m = n/shards rows per shard; every vector
     * whose id divides the stride seeds a cell, plus each shard's minimum
@@ -328,8 +328,11 @@ object IvfIndex {
       .select(col("shard"), col("vec_id"), col("best.cell0").as("cell0"),
         col("best.q8").as("q8"))
     // one Lloyd step: integer centroid per cell (distributed: one reducer
-    // key per (cell, dim)), FLOOR(SUM/COUNT) for cross-engine exactness
-    val cent = assign0
+    // key per (cell, dim)), FLOOR(SUM/COUNT) for cross-engine exactness.
+    // Collected once: the k ≈ √n rows are broadcast anyway, and both the
+    // assignment and the cell table read them — left lazy, each consumer
+    // re-runs seeds → assign0 → both centroid aggregations
+    val centAgg = assign0
       .select(col("shard"), col("cell0"), posexplode(col("q8")).as(Seq("pos", "x")))
       .groupBy("shard", "cell0", "pos")
       .agg(expr("CAST(FLOOR(SUM(x)/COUNT(1)) AS DOUBLE)").as("m"))
@@ -339,6 +342,8 @@ object IvfIndex {
         expr("transform(pm, p -> p.m)").as("cv"))
       .withColumn("cs", NX.dot(col("cv"), col("cv")))
       .withColumn("cnrm", VF.l2Norm(col("cv")))
+    val cent = e.sparkSession.createDataFrame(
+      java.util.Arrays.asList(centAgg.collect(): _*), centAgg.schema)
     val assigned = graft.Caches.persist(e.join(broadcast(cent), Seq("shard"))
       .withColumn("d1", col("sq") + col("cs")
         - lit(2.0) * NX.dot(col("q8"), col("cv")))
@@ -353,10 +358,10 @@ object IvfIndex {
         col("best.v").as("v"), col("best.nrm").as("nrm")))
     val radius = assigned.groupBy("cell")
       .agg(max(clampAcos(col("c1"))).as("r"), count(lit(1)).as("cnt"))
-    // cells is k ≈ √n rows but its PLAN contains the whole centroid
-    // aggregation — persist (registered, harness-drained) so the 4-6
-    // downstream consumers (probe branches, pair sides, radius) don't each
-    // re-run the build
+    // cells is k ≈ √n rows but its PLAN contains the radius aggregation
+    // over the assignment — persist (registered, harness-drained) so the
+    // 4-6 downstream consumers (probe branches, pair sides) don't each
+    // re-run it
     Index(assigned, cells = graft.Caches.persist(
       cent.select("cell", "cv", "cnrm").join(radius, Seq("cell"))))
   }
@@ -368,10 +373,14 @@ object IvfIndex {
     *
     * Statistics-gated plan choice: below `graft.ivf.minCellsForPruning`
     * cells (default 128) the two-phase plan cannot win — its two extra
-    * windows and three per-query joins cost more than scanning every
-    * member once — so a single-phase exact scan is used instead (identical
-    * output). Cells ≈ √n, so production-scale corpora always take the
-    * pruning path.
+    * top-k aggregates and three per-query joins cost more than scanning
+    * every member once — so a single-phase exact scan is used instead
+    * (identical output). Cells ≈ √n, so production-scale corpora always
+    * take the pruning path.
+    *
+    * Every per-query ranking (the probe list, the phase-1 bound, the final
+    * top-k) is one [[topKPerQuery]] aggregate: O(k) state per query, a
+    * partial list per partition, one merge — no window sort.
     *
     * The QUERY-proportional frames (the query vectors, the per-query probe
     * lists, the per-query bounds) are broadcast only while the query set is
@@ -379,36 +388,31 @@ object IvfIndex {
     * queries): the query set here grows with the corpus (n/50), so an
     * unconditional broadcast is linear in the data — a driver/executor OOM
     * at 100×. Above the gate every query-keyed join falls back to a shuffle
-    * on `query_id`/`cell`, which Spark distributes. The CELL frame (k ≈ √n
-    * rows) stays broadcast unconditionally — sublinear in the corpus.
+    * on `query_id`/`cell`, which Spark distributes, and the top-k
+    * aggregates group by `query_id`. The CELL frame (k ≈ √n rows) stays
+    * broadcast unconditionally — sublinear in the corpus.
     */
   def knnExact(idx: Index, queries: DataFrame, k: Int, nprobe: Int = 3): DataFrame = {
     val spark = queries.sparkSession
-    // two cheap counts decide the plan shape — AQE-style statistics calls.
-    // Query rows carry a dim-length double vector (~550 B at dim 64): the
-    // 55 MB default admits ~100k queries, byte-equivalent to the old pin.
-    val bq = graft.Broadcasts.gate(spark, "ivfQueries",
-      graft.Caches.countOnce(queries),
-      rowBytes = 552, defaultBytes = 55L << 20)
+    val small = queriesFit(queries)
+    val bq: DataFrame => DataFrame = if (small) broadcast(_) else identity
     val minCells = spark.conf.getOption("graft.ivf.minCellsForPruning")
       .map(_.toLong).getOrElse(128L)
     val qn = queries.withColumn("qnrm", VF.l2Norm(col("qv")))
     if (graft.Caches.countOnce(idx.cells) <= minCells) {
       // SINGLE-PHASE exact scan: with this few cells the triangle bound
-      // cannot prune enough to pay for its own plan (two extra windows and
-      // three joins of per-query frames — measured slower than one pass at
-      // sf0.1's 45 cells). The two-phase path engages exactly when it
-      // matters: cells ≈ √n grows with the corpus, so a production-scale
-      // index clears the bar while small corpora take the short plan.
-      // Output identical by construction (same top-k, same tie-break).
-      val wkAll = Window.partitionBy("query_id").orderBy(desc("s"), asc("neighbor_id"))
-      return idx.assigned
+      // cannot prune enough to pay for its own plan (two extra top-k
+      // aggregates and three joins of per-query frames — measured slower
+      // than one pass at sf0.1's 45 cells). The two-phase path engages
+      // exactly when it matters: cells ≈ √n grows with the corpus, so a
+      // production-scale index clears the bar while small corpora take the
+      // short plan. Output identical by construction (same top-k, same
+      // tie-break).
+      return topKPerQuery(idx.assigned
         .select(col("vec_id").as("neighbor_id"), col("v").as("nv"), col("nrm").as("nn"))
         .join(bq(qn), col("neighbor_id") =!= col("query_id"))
-        .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
-        .withColumn("rk", row_number().over(wkAll).cast("long"))
-        .filter(col("rk") <= k)
-        .select(col("query_id"), col("rk"), col("neighbor_id"), col("s"))
+        .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qnrm") * col("nn"))),
+        "neighbor_id", "s", k, grouped = !small)
     }
     // NOTE: qn/qc/probed are cheap to recompute (a broadcast NLJ over
     // k ≈ √n cell rows) — persisting them was measured SLOWER at sf0.1
@@ -417,8 +421,7 @@ object IvfIndex {
         lit(true))
       .withColumn("qcos", NX.dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
       .withColumn("qtheta", clampAcos(col("qcos")))
-    val wp = Window.partitionBy("query_id").orderBy(desc("qcos"), asc("cell"))
-    val probed = qc.withColumn("prk", row_number().over(wp)).filter(col("prk") <= nprobe)
+    val probed = topKPerQuery(qc, "cell", "qcos", nprobe, grouped = !small)
       .select(col("query_id"), col("cell"))
     val members = idx.assigned.select(col("vec_id").as("neighbor_id"), col("cell"),
       col("v").as("nv"), col("nrm").as("nn"))
@@ -427,28 +430,24 @@ object IvfIndex {
         .filter(col("neighbor_id") =!= col("query_id"))
         .join(bq(qn), "query_id")
         .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
-    val wk = Window.partitionBy("query_id").orderBy(desc("s"), asc("neighbor_id"))
-    // phase 1: lower bound from the probed cells (-2 < any cosine when a
-    // query has fewer than k probed candidates — then nothing is pruned)
-    val sk = scanCells(probed)
-      .withColumn("rk", row_number().over(wk)).filter(col("rk") <= k)
-      .groupBy("query_id").agg(min("s").as("skv"), count(lit(1)).as("kc"))
-      .select(col("query_id"),
-        when(col("kc") >= k, col("skv")).otherwise(lit(-2.0)).as("sk"))
+    // phase 1: lower bound from the probed cells — the k-th best score. A
+    // query with fewer than k probed candidates has no rank-k row, so its
+    // bound stays -2 (< any cosine) and nothing is pruned for it
+    val sk = topKPerQuery(scanCells(probed), "neighbor_id", "s", k, grouped = !small)
+      .filter(col("rk") === k)
+      .select(col("query_id"), col("s").as("sk"))
     // phase 2: triangle-inequality pruning over ALL cells. LEFT join: a
-    // query whose probed cells held NO candidates at all (possible once the
-    // index is restricted to a metadata predicate — x3_knn_filtered — where
-    // a probed cell may contain zero eligible members) has no sk row; an
-    // inner join would silently drop it from phase 2 and return zero
+    // query whose probed cells held fewer than k candidates (possible once
+    // the index is restricted to a metadata predicate — x3_knn_filtered —
+    // where a probed cell may contain zero eligible members) has no sk row;
+    // an inner join would silently drop it from phase 2 and return too few
     // neighbors even when eligible vectors exist in other cells.
     val survivors = qc.join(bq(sk), Seq("query_id"), "left")
       .filter(cos(greatest(col("qtheta") - col("r"), lit(0.0))) >=
         coalesce(col("sk"), lit(-2.0)) - lit(1e-9))
       .select(col("query_id"), col("cell"))
-    scanCells(survivors.union(probed).distinct())
-      .withColumn("rk", row_number().over(wk).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("neighbor_id"), col("s"))
+    topKPerQuery(scanCells(survivors.union(probed).distinct()),
+      "neighbor_id", "s", k, grouped = !small)
   }
 
   /** APPROXIMATE top-k: scan only the `nprobe` nearest cells per query —
@@ -461,27 +460,48 @@ object IvfIndex {
     * `knnExact` (recall 1.0) remains the default engine path.
     */
   def knnApprox(idx: Index, queries: DataFrame, k: Int, nprobe: Int = 8): DataFrame = {
-    val spark = queries.sparkSession
-    val bq = graft.Broadcasts.gate(spark, "ivfQueries",
-      graft.Caches.countOnce(queries),
-      rowBytes = 552, defaultBytes = 55L << 20)
+    val small = queriesFit(queries)
+    val bq: DataFrame => DataFrame = if (small) broadcast(_) else identity
     val qn = queries.withColumn("qnrm", VF.l2Norm(col("qv")))
     val qc = qn.join(broadcast(idx.cells.select(col("cell"), col("cv"), col("cnrm"))),
         lit(true))
       .withColumn("qcos", NX.dot(col("qv"), col("cv")) / (col("qnrm") * col("cnrm")))
-    val wp = Window.partitionBy("query_id").orderBy(desc("qcos"), asc("cell"))
-    val probed = qc.withColumn("prk", row_number().over(wp)).filter(col("prk") <= nprobe)
+    val probed = topKPerQuery(qc, "cell", "qcos", nprobe, grouped = !small)
       .select(col("query_id"), col("cell"))
     val members = idx.assigned.select(col("vec_id").as("neighbor_id"), col("cell"),
       col("v").as("nv"), col("nrm").as("nn"))
-    val wk = Window.partitionBy("query_id").orderBy(desc("s"), asc("neighbor_id"))
-    members.join(bq(probed), "cell")
+    topKPerQuery(members.join(bq(probed), "cell")
       .filter(col("neighbor_id") =!= col("query_id"))
       .join(bq(qn), "query_id")
-      .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qnrm") * col("nn")))
-      .withColumn("rk", row_number().over(wk).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("rk"), col("neighbor_id"), col("s"))
+      .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qnrm") * col("nn"))),
+      "neighbor_id", "s", k, grouped = !small)
+  }
+
+  /** The `ivfQueries` broadcast gate over the query set. Query rows carry a
+    * dim-length double vector (~550 B at dim 64): the 55 MB default admits
+    * ~100k queries.
+    */
+  private def queriesFit(queries: DataFrame): Boolean =
+    graft.Broadcasts.fits(queries.sparkSession, "ivfQueries",
+      graft.Caches.countOnce(queries), rowBytes = 552, defaultBytes = 55L << 20)
+
+  /** Each query's best `k` rows of `scored` by (`score` desc, `id` asc) as
+    * (query_id, rk, `id`, `score`) — one [[NX.topK]] aggregate, whose ranks
+    * equal a row-number window's over that order. Ungrouped (the query set passed its
+    * broadcast gate, so q·k entries fit one task) the result is a single
+    * partition: a caller's `orderBy(query_id, rk)` is a local sort with no
+    * range exchange. Grouped by `query_id` (over the gate) no single
+    * task's work grows with the query count.
+    */
+  private[graft] def topKPerQuery(scored: DataFrame, id: String, score: String,
+      k: Int, grouped: Boolean): DataFrame = {
+    val t = NX.topK(col("query_id"), col(id), col(score), k).as("t")
+    // grouped: query_id stays the grouping column, so the output keeps its
+    // hash partitioning and a per-query consumer adds no exchange
+    val lists =
+      if (grouped) scored.groupBy("query_id").agg(t).select(col("query_id"), inline(col("t")))
+      else scored.agg(t).select(inline(col("t"))).withColumnRenamed("key", "query_id")
+    lists.select(col("query_id"), col("rk"), col("id").as(id), col("score").as(score))
   }
 
   /** Ordered cell pairs (both directions, plus the diagonal) whose triangle

@@ -579,7 +579,9 @@ object Llm {
     val arrs = tok.join(broadcast(idx), "w")
       .groupBy("doc_id")
       .agg(sort_array(collect_list("i")).as("arr"), count(lit(1)).as("n"))
-    graft.Caches.persist(arrs.groupBy("arr", "n")
+    // shared: the Jaccard and containment legs of one funnel build the
+    // same sets from one token frame
+    graft.Caches.persistShared(arrs.groupBy("arr", "n")
       .agg(collect_list("doc_id").as("ds"), min("doc_id").as("sid")))
   }
 
@@ -846,7 +848,8 @@ object Llm {
     */
   private[graft] def containmentPairsSized(s: SparkSession, tok0: DataFrame,
       num: Int, den: Int, minRatio: Int): DataFrame = {
-    val tok = graft.Caches.persist(tok0)
+    // shared: the funnel's cluster leg persisted this tokenization already
+    val tok = graft.Caches.persistShared(tok0)
     val (vocabSize, sumDf2) = setDispatchStats(tok)
     if (vocabSize <= vocabThreshold(s) || prefixWouldExplode(s, vocabSize, sumDf2))
       bitsetContainmentPairs(tok, vocabSize.toInt, num, den, minRatio)
@@ -1314,7 +1317,8 @@ object Llm {
     * set. Above it, AllPairs prefix filtering generates doc-level edges.
     */
   private[graft] def dedupClusters(s: SparkSession, d: DataFrame): DataFrame = {
-    val tok = graft.Caches.persist(d
+    // shared: the funnel's containment leg tokenizes the same keepers
+    val tok = graft.Caches.persistShared(d
       .select(col("doc_id"), explode(TF.tokenSet(col("text"))).as("w")))
     val (vocabSize, sumDf2) = setDispatchStats(tok)
     if (vocabSize <= vocabThreshold(s) || prefixWouldExplode(s, vocabSize, sumDf2)) {
@@ -2938,7 +2942,8 @@ object Llm {
 
     // ---- X3 brute-force top-k cosine similarity search: every 50th vector is
     // a query; queries are broadcast against the full corpus; per-query top-k
-    // via ranking window. This is the exact baseline for ANN.
+    // via the bounded top-k aggregate (ungrouped: the query set always
+    // broadcasts here). This is the exact baseline for ANN.
     Q("x3_knn_brute",
       (s, dir) => {
         // unpersisted: the stride's countOnce is then a statistics-memo hit
@@ -2950,12 +2955,11 @@ object Llm {
           .withColumn("nrm", VF.l2Norm(col("v")))
         val q = e.filter(col("vec_id") % knnQueryStride(graft.Caches.countOnce(e)) === 0)
           .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-        val w = Window.partitionBy("query_id").orderBy(desc("s"), asc("neighbor_id"))
-        e.select(col("vec_id").as("neighbor_id"), col("v").as("nv"), col("nrm").as("nn"))
-          .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-          .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-          .withColumn("rk", row_number().over(w).cast("long"))
-          .filter(col("rk") <= 10)
+        graft.operators.IvfIndex.topKPerQuery(
+            e.select(col("vec_id").as("neighbor_id"), col("v").as("nv"), col("nrm").as("nn"))
+              .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
+              .withColumn("s", NX.dot(col("qv"), col("nv")) / (col("qn") * col("nn"))),
+            "neighbor_id", "s", 10, grouped = false)
           .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("s"), 4).as("sim"))
           .orderBy("query_id", "rk")
       },
@@ -3212,40 +3216,45 @@ object Llm {
 
     // ---- X3 BM25 lexical top-k retrieval (Robertson/Spärck Jones; the
     // Lucene-style idf = ln(1 + (N-df+0.5)/(df+0.5)), k1=1.2, b=0.75): the
-    // keyword leg of a retrieval stack, expressed as pure posting-list
-    // relational algebra — filter the exploded tokens to the query terms
-    // FIRST (predicate lands before the tf groupBy, so the shuffle carries
-    // only matching postings: |postings(q)|, not corpus size), then tf/df/
-    // length-normalized scoring. Determinism contract: each term's
-    // contribution is floored to integer e6 units BEFORE the per-doc sum
-    // (order-independent integer sum, x4_lm_score precedent; floor(x·1e6+.5)
-    // not ROUND — round-half semantics differ cross-engine), and the final
-    // top-15 ranks on the integer score. At 100 TB: df/N/avgdl are corpus
-    // statistics a real deployment snapshots with the index; here they come
-    // from one extra aggregation over the same scan, and the ranked tail is
-    // TakeOrderedAndProject (per-partition top-k, no global sort).
+    // keyword leg of a retrieval stack in ONE statistics pass — one
+    // per-document projection gives the length dl and each query term's tf
+    // (size(filter(tokens, w = term)): the tokens never leave their row),
+    // one global aggregate gives N, the total length and each term's df,
+    // and that 1-row frame broadcasts back to score every document. No
+    // token explode and no tf/df shuffle: the only exchanges carry the
+    // statistics row. Determinism contract: each term's contribution is
+    // floored to integer e6 units BEFORE the per-doc sum (order-independent
+    // integer sum, x4_lm_score precedent; floor(x·1e6+.5) not ROUND —
+    // round-half semantics differ cross-engine), and the final top-15
+    // ranks on the integer score. At 100 TB: df/N/avgdl are corpus
+    // statistics a real deployment snapshots with the index, and the
+    // ranked tail is TakeOrderedAndProject (per-partition top-k, no global
+    // sort).
     Q("x3_bm25",
       (s, dir) => {
-        val d = docs(s, dir)
         val terms = Seq("hash", "join", "table")
-        val dl = d.select(col("doc_id"),
-          size(TF.tokens(col("text"))).cast("long").as("dl"))
-        val stats = d.agg(count(lit(1)).as("n"),
-          sum(size(TF.tokens(col("text"))).cast("long")).as("tot"))
-        val tf = d.select(col("doc_id"), explode(TF.tokens(col("text"))).as("w"))
-          .filter(col("w").isin(terms: _*))
-          .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-        val dfq = tf.groupBy("w").agg(count(lit(1)).as("df"))
-        tf.join(broadcast(dfq), "w")
-          .join(dl, "doc_id")
-          .crossJoin(broadcast(stats))
-          .withColumn("c_e6", floor(
-            log(lit(1.0) + (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-              (col("tf") * lit(2.2) /
-                (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) *
+        // two projections, so the per-document columns share one
+        // tokenization (CollapseProject does not inline a non-cheap
+        // expression that four columns reference)
+        val perDoc = docs(s, dir).select(col("doc_id"), TF.tokens(col("text")).as("tk"))
+          .select(col("doc_id") +: size(col("tk")).cast("long").as("dl") +:
+            terms.map(t => size(filter(col("tk"), _ === t)).cast("long").as(s"tf_$t")): _*)
+        val stats = perDoc.agg(count(lit(1)).as("n"), sum(col("dl")).as("tot") +:
+          terms.map(t => count_if(col(s"tf_$t") > 0).as(s"df_$t")): _*)
+        // one term's contribution, floored to e6 — the same expression the
+        // oracle's c_e6 spells, per term
+        def cE6(tf: Column, df: Column) =
+          when(tf > 0, floor(
+            log(lit(1.0) + (col("n") - df + lit(0.5)) / (df + lit(0.5))) *
+              (tf * lit(2.2) /
+                (tf + lit(1.2) * (lit(0.25) + lit(0.75) *
                   (col("dl") * col("n") / col("tot"))))) * lit(1000000) + lit(0.5)))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_terms"), sum(col("c_e6")).as("score_e6"))
+        perDoc.crossJoin(broadcast(stats))
+          .select(col("doc_id"),
+            terms.map(t => (col(s"tf_$t") > 0).cast("long")).reduce(_ + _).as("n_terms"),
+            terms.map(t => coalesce(cE6(col(s"tf_$t"), col(s"df_$t")), lit(0L)))
+              .reduce(_ + _).as("score_e6"))
+          .filter(col("n_terms") > 0)
           .withColumn("score", col("score_e6").cast("double") / 1000000)
           .orderBy(desc("score_e6"), asc("doc_id"))
           .limit(15)

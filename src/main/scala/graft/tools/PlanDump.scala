@@ -48,14 +48,19 @@ object PlanDump {
       |  predicate (codegen'd popcount kernel) inside the join condition — only
       |  qualifying pairs materialize.
       |- x3_knn_brute: BroadcastNestedLoopJoin over the broadcast query set with
-      |  codegen'd `DotProduct` in the projection.
+      |  codegen'd `DotProduct` in the projection, ranked by one `top_k`
+      |  ObjectHashAggregate (partial per partition, one SinglePartition
+      |  merge) — the final order is a local Sort, no window and no
+      |  rangepartitioning exchange.
       |- x3_knn_ivf: the exact IVF search over the PARQUET-BACKED index
       |  (FileScan of the graft-ivf cache, never the k-means build). At this
       |  cell count the statistics gate picks the single-phase exact scan;
       |  above `graft.ivf.minCellsForPruning` cells the two-phase
-      |  triangle-pruning plan appears (probe window -> bound -> survivor
+      |  triangle-pruning plan appears (probe top-k -> bound -> survivor
       |  scan), with query-side joins broadcast only below the
-      |  `graft.broadcast.ivfQueries` byte gate.
+      |  `graft.broadcast.ivfQueries` byte gate. Every per-query ranking is
+      |  the `top_k` aggregate — ungrouped (SinglePartition, local final
+      |  Sort) below that gate, grouped by query_id above it.
       |- x4_pack: PrefixSum's two-pass scan — range exchange, pid-keyed local
       |  windows, P-row offset aggregate broadcast back; no unaggregated
       |  single-partition exchange.
@@ -80,15 +85,16 @@ object PlanDump {
       |  O(k) map-side, the full per-lang sort never materializes.
       |- x2_containment: the bitset containment join — popcount predicate
       |  inside the join condition, qualifying pairs only.
-      |- x3_rrf_fusion: two k-bounded legs (IVF dense, token-Jaccard lexical)
-      |  each ending in WindowGroupLimit, fused by one outer join on
-      |  (query, neighbor) — no full-corpus exchange after the legs.
+      |- x3_rrf_fusion: two k-bounded legs (IVF dense ending in the `top_k`
+      |  aggregate, token-Jaccard lexical ending in WindowGroupLimit), fused
+      |  by one outer join on (query, neighbor) — no full-corpus exchange
+      |  after the legs.
       |- x5_pagerank: the persisted symmetric edge list reused by all 5
       |  iterations (one InMemoryRelation, 5 consumers); every contribution
       |  join broadcast (rank frame is node-sized), one sum shuffle per
       |  iteration, no materialization barriers between iterations.
-      |- x3_mmr_rerank: the candidate window (broadcast NL join +
-      |  WindowGroupLimit, x3_knn_brute's shape) feeding ONE
+      |- x3_mmr_rerank: the candidate top-20 (broadcast NL join + the `top_k`
+      |  aggregate, x3_knn_ivf's shape) feeding ONE
       |  MapGroups/SerializeFromObject stage — the greedy selection is a
       |  single shuffle on query_id, no per-step exchanges.
       |""".stripMargin

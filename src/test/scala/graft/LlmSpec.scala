@@ -871,4 +871,40 @@ class LlmSpec extends AnyFunSuite {
       s"DSIR sample is LESS target-like than the corpus: " +
         s"picked $tgtSharePicked vs corpus $tgtShareAll")
   }
+
+  test("x4_funnel_containment registers each shared cache once and never " +
+      "re-caches cached data") {
+    // the cluster leg (curationStages) and the containment leg
+    // (curationContainmentRejects) tokenize the same keepers and build the
+    // same rarity-ordered sets: both must land on ONE registered cache
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    graft.Caches.drain(spark)
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("funnel-recache", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.CacheManager").asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try {
+      assert(q("x4_funnel_containment").collect().length == 5)
+      val regs = graft.Caches.registered(spark)
+      assert(regs.nonEmpty)
+      for (i <- regs.indices; j <- 0 until i)
+        assert(!regs(i).queryExecution.analyzed.sameResult(regs(j).queryExecution.analyzed),
+          s"one cache registered twice:\n${regs(i).queryExecution.analyzed}")
+      assert(!warnings.toArray.exists(_.toString.contains("already cached")),
+        s"re-cached data: ${warnings.toArray.mkString("; ")}")
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+      graft.Caches.drain(spark)
+    }
+  }
 }

@@ -700,4 +700,73 @@ class NativeKernelsSpec extends AnyFunSuite {
     e8.unpersist()
     graft.Caches.drain(spark)
   }
+
+  /** NX.topK exploded to (key, rk, id, score) rows, ungrouped or grouped. */
+  private def topKRows(df: org.apache.spark.sql.DataFrame, k: Int,
+      grouped: Boolean): Seq[(Option[Long], Long, Option[Long], Option[Double])] = {
+    val t = NX.topK(col("key"), col("id"), col("score"), k).as("t")
+    val agg = if (grouped) df.groupBy("key").agg(t).select("t") else df.agg(t)
+    agg.select(inline(col("t")))
+      .as[(Option[Long], Long, Option[Long], Option[Double])].collect().toSeq
+  }
+
+  private def windowRows(df: org.apache.spark.sql.DataFrame, k: Int) = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("key")
+      .orderBy(desc("score"), asc("id"))
+    df.withColumn("rk", row_number().over(w).cast("long")).filter(col("rk") <= k)
+      .select("key", "rk", "id", "score")
+      .as[(Option[Long], Long, Option[Long], Option[Double])].collect().toSeq
+  }
+
+  // scores compare bit-exactly, so NaN equals NaN and -0.0 differs from 0.0
+  private def canon(rows: Seq[(Option[Long], Long, Option[Long], Option[Double])]) =
+    rows.map { case (key, rk, id, s) =>
+      (key, rk, id, s.map(java.lang.Double.doubleToRawLongBits))
+    }.sortBy { case (key, rk, _, _) => (key.getOrElse(Long.MinValue), rk) }
+
+  test("topK: ties go to the smaller id; k beyond the candidate count keeps all") {
+    val df = Seq((1L, 30L, 0.5), (1L, 10L, 0.5), (1L, 20L, 0.5), (1L, 5L, 0.1),
+      (2L, 7L, 0.9)).toDF("key", "id", "score")
+    assert(topKRows(df, 2, grouped = false).sortBy(r => (r._1, r._2)) == Seq(
+      (Some(1L), 1L, Some(10L), Some(0.5)), (Some(1L), 2L, Some(20L), Some(0.5)),
+      (Some(2L), 1L, Some(7L), Some(0.9))))
+    val all = topKRows(df, 50, grouped = false)
+    assert(all.size == 5 && all.filter(_._1.contains(1L)).map(_._2).sorted == Seq(1L, 2L, 3L, 4L))
+    assert(topKRows(df, 0, grouped = false).isEmpty)
+  }
+
+  test("topK: NaN, -0.0, infinities and nulls rank exactly as row_number() does") {
+    val rng = new Random(23)
+    val pool = Array[java.lang.Double](Double.NaN, -0.0, 0.0, 1.0, -1.0,
+      Double.PositiveInfinity, Double.NegativeInfinity, null, 0.25, 0.25)
+    // ids unique per key (a window over duplicate (score, id) is arbitrary);
+    // one id per key is null, and one key is null
+    val rows = for {
+      key <- Seq[java.lang.Long](1L, 2L, 3L, null)
+      i <- 0 until 40
+    } yield (key, if (i == 17) null else java.lang.Long.valueOf(rng.nextInt(1000) * 40L + i),
+      pool(rng.nextInt(pool.length)))
+    val df = rows.toDF("key", "id", "score").repartition(4)
+    for (k <- Seq(1, 3, 10, 40, 60)) {
+      val expect = canon(windowRows(df, k))
+      assert(canon(topKRows(df, k, grouped = false)) == expect, s"ungrouped k=$k")
+      assert(canon(topKRows(df, k, grouped = true)) == expect, s"grouped k=$k")
+    }
+  }
+
+  test("topK: empty input gives 0 rows, grouped and ungrouped") {
+    val df = Seq((1L, 1L, 1.0)).toDF("key", "id", "score").filter(lit(false))
+    assert(topKRows(df, 5, grouped = false).isEmpty)
+    assert(topKRows(df, 5, grouped = true).isEmpty)
+  }
+
+  test("topK: grouped and ungrouped outputs are equal across partitions") {
+    val rng = new Random(29)
+    val df = Seq.tabulate(3000)(i => (rng.nextInt(37).toLong, i.toLong,
+      math.floor(rng.nextDouble() * 50) / 50)).toDF("key", "id", "score").repartition(7)
+    val ungrouped = canon(topKRows(df, 10, grouped = false))
+    assert(ungrouped.size == 370)
+    assert(canon(topKRows(df, 10, grouped = true)) == ungrouped)
+    assert(ungrouped == canon(windowRows(df, 10)))
+  }
 }

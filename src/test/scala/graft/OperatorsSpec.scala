@@ -660,6 +660,31 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     graft.Caches.drain(spark)
   }
 
+  test("IvfIndex.build collects its centroids once: a cold build plus save " +
+      "runs 18 jobs") {
+    // the centroid table feeds both the assignment and the cell table; a
+    // lazy frame re-ran seeds, the first assignment and both centroid
+    // aggregations for the second consumer (21 jobs on this input)
+    val rng = new scala.util.Random(61)
+    val e = (0 until 400).map(i => (i.toLong, Seq.fill(8)(rng.nextGaussian())))
+      .toDF("vec_id", "v")
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf-jobs").toFile
+    val old = spark.conf.getOption("graft.ivf.cacheDir")
+    spark.conf.set("graft.ivf.cacheDir", root.getPath)
+    try {
+      graft.Caches.countOnce(e)
+      val jobs = SparkTestSession.jobsOf {
+        graft.operators.IvfIndex.loadOrBuild(e, key = "build-jobs")
+      }
+      info(s"cold build + save: $jobs jobs")
+      assert(jobs == 18, s"cold build + save ran $jobs jobs")
+    } finally {
+      old.fold(spark.conf.unset("graft.ivf.cacheDir"))(spark.conf.set("graft.ivf.cacheDir", _))
+      graft.Caches.drain(spark)
+      org.apache.commons.io.FileUtils.deleteDirectory(root)
+    }
+  }
+
   test("minhash-LSH hot-band skew guard: band join runs over distinct sets") {
     // adversarial boilerplate corpus: 400 IDENTICAL docs (every one lands in
     // the same bucket of all 16 bands) + two distinct near-dup docs + one

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan quality gates (SURVEY.md §4): these are the properties that
@@ -107,6 +108,21 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(!p.contains("CartesianProduct"))
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
       "cell lists and query vectors must broadcast against the corpus")
+  }
+
+  test("x3_knn_ivf, x3_knn_brute, x3_hybrid_search: the per-query top-k is " +
+      "one aggregate and the final order a local sort") {
+    // the query set passes its broadcast gate, so the top-k aggregates
+    // ungrouped into one partition: no window and no range exchange
+    for (name <- Seq("x3_knn_ivf", "x3_knn_brute", "x3_hybrid_search")) {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.collect()
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("partial_top_k"), s"$name: no top-k aggregate:\n$p")
+      assert(!p.contains("Window") && !p.contains("rangepartitioning"),
+        s"$name: window or range exchange in the top-k tail:\n$p")
+      graft.Caches.drain(spark)
+    }
   }
 
   test("x4_decontam: probe set joins on the shingle key, never a cartesian") {
@@ -340,28 +356,36 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"expected one (doc_id, text) scan; got ${scans.map(_.requiredSchema)}")
   }
 
-  test("x3_bm25: term filter sits below the tf aggregate; top-15 is " +
-      "TakeOrderedAndProject, not a global sort") {
+  test("x3_bm25: one statistics pass and no exchange carries tokens; top-15 " +
+      "is TakeOrderedAndProject, not a global sort") {
     val df = SparkEntry.queries("x3_bm25")(spark, sfDir)
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("TakeOrderedAndProject"),
-      s"BM25 top-k must be a partial top-k, not a global sort:\n$p")
-    // the posting filter must run before the first aggregation: in the
-    // plan string the Filter on the query terms appears BELOW (after) the
-    // partial HashAggregate that computes tf — i.e. the aggregate never
-    // sees non-matching tokens
-    val filterIdx = p.indexOf("Filter w#")
-    val aggIdx = p.indexOf("partial_count")
-    assert(filterIdx > 0 && aggIdx > 0 && filterIdx > aggIdx,
-      s"term filter is not below the tf aggregate:\n$p")
+    val plan = df.queryExecution.executedPlan
+    assert(plan.toString.contains("TakeOrderedAndProject"),
+      s"BM25 top-k must be a partial top-k, not a global sort:\n$plan")
+    // tokens never leave their document row: no explode, and the only
+    // exchanges (the statistics aggregate and its broadcast) carry numbers
+    val explodes = collectWithSubqueries(plan) {
+      case g: org.apache.spark.sql.execution.GenerateExec => g
+    }
+    assert(explodes.isEmpty, s"BM25 explodes tokens:\n$plan")
+    val tokenExchanges = collectWithSubqueries(plan) {
+      case e: org.apache.spark.sql.execution.exchange.Exchange
+          if e.output.exists(a => a.dataType.isInstanceOf[StringType] ||
+            a.dataType.isInstanceOf[ArrayType]) => e
+    }
+    assert(tokenExchanges.isEmpty, s"an exchange carries text or tokens:\n$plan")
   }
 
-  test("x3_rrf_fusion: every per-query top-k is a WindowGroupLimit and the " +
-      "legs meet in an equi-key outer join") {
+  test("x3_rrf_fusion: every per-query top-k keeps O(k) state per query and " +
+      "the legs meet in an equi-key outer join") {
     val df = SparkEntry.queries("x3_rrf_fusion")(spark, sfDir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
+    // the dense leg is the top-k aggregate; the lexical and fused rank
+    // cutoffs are WindowGroupLimit partial top-k
+    assert(p.contains("partial_top_k"),
+      s"the dense leg must rank with the partial top-k aggregate:\n$p")
     assert(p.contains("WindowGroupLimit"),
       s"rank cutoffs must plan as WindowGroupLimit partial top-k:\n$p")
     assert(p.contains("FullOuter"),
@@ -419,8 +443,10 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("MapGroups"), s"greedy step must be mapGroups:\n$p")
-    assert(p.contains("WindowGroupLimit"),
-      s"candidate top-20 must be a WindowGroupLimit partial top-k:\n$p")
+    // candidate top-20: O(k) state per query on the map side, never a
+    // window over every candidate
+    assert(p.contains("partial_top_k") && !p.contains("Window"),
+      s"candidate top-20 must be the partial top-k aggregate:\n$p")
     graft.Caches.drain(spark)
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,24 +18,7 @@ class ReadMemoSpec extends AnyFunSuite {
     finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
-  /** Jobs launched by `body` on this thread (tagged by a job group, so a
-    * straggling job of another suite cannot count). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"read-memo-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "ReadMemoSpec")
-    try { body; org.apache.spark.ListenerBusDrain(sc) }
-    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-    jobs.get()
-  }
+  private def jobsOf(body: => Unit): Int = SparkTestSession.jobsOf(body)
 
   test("a second build of each retrieval query launches no job") {
     val old = spark.conf.getOption("graft.ivf.cacheDir")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM. */
@@ -18,4 +19,23 @@ object SparkTestSession {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Jobs launched by `body` on this thread (tagged by a job group, so a
+    * straggling job of another suite cannot count). */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsOf")
+    try { body; org.apache.spark.ListenerBusDrain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    jobs.get()
+  }
 }
