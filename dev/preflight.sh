@@ -38,6 +38,11 @@ check "artifact root conf read outside IndexStore" '"graft\.(ivf|screen)\.cacheD
 check "meta.json commit marker tested outside IndexStore" '"meta\.json"' "$store"
 check "recursive delete defined outside FileSwap" 'def rm\(' '^src/main/scala/graft/sources/FileSwap\.scala:'
 
+# One set encoding: exact Jaccard and containment run over Llm.raritySets,
+# dispatched by named constants — no set-similarity conf, no doc-level
+# prefix join.
+check "set-similarity conf or doc-level prefix join" 'graft\.setsim\.|prefixJaccardPairs' '^$'
+
 # One top-k path: IvfIndex ranks every per-query list with the bounded
 # top-k aggregate (IvfIndex.topKPerQuery), never a window.
 ranked=$(grep -nE 'row_number|Window\.' src/main/scala/graft/operators/IvfIndex.scala || true)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a collapsed-set frame, evaluated as packed-bitmask intersections in a
   * tight per-partition loop against a BROADCAST flat copy of the sets —
   * the kernel form of the S² comparison that the closed-vocabulary corpora
-  * (vocab ≤ the mask limit, sets dense in it) force on the exact
+  * (small vocabularies, sets dense in them) force on the exact
   * similarity family.
   *
   * Why a kernel and not the relational join: in this regime content

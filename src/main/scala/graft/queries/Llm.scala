@@ -350,25 +350,20 @@ object Llm {
       .select(col("id_a"), col("id_b"), col("sim"))
   }
 
-  /** Exact all-pairs Jaccard >= t, dispatching on vocabulary size (counted
-    * with one tiny action — an AQE-style statistics-driven plan choice):
-    *
-    *  - vocab <= 4096: BITSET path. Encode each doc's set as ceil(V/64)
-    *    longs over a broadcast vocabulary index, collapse identical sets,
-    *    and compare DISTINCT SETS pairwise with popcount(a&b) (native
-    *    kernel) under a length prefilter, then expand back to doc pairs.
-    *    Small vocabularies make every token a hot join key — ANY
-    *    token-explode join (including prefix filtering) degenerates to
-    *    ~|docs|^2 fanout, while set-level bit math is S^2 * V/64 primitive
-    *    ops with no shuffle amplification at all.
-    *  - vocab > 4096: AllPairs prefix filtering (prefixJaccardPairs below) —
-    *    the rarest-token prefix join that scales to open vocabularies.
-    *
-    * Both paths produce intersection/union counts identical to the naive
-    * token join, so j is bit-equal either way.
+  /** Exact all-pairs Jaccard >= t over `tok(doc_id, w)` set-element rows.
+    * Identical token sets collapse to DISTINCT SETS stored as rarity-ordered
+    * sorted index arrays ([[raritySets]]), and [[bitsetSetsAndPairs]]
+    * compares sets, not docs: the S² `SetPairScan` kernel when the
+    * vocabulary is in the S² regime ([[s2PlansWin]]) and the sets fit its
+    * gate, otherwise the (prefix element, size band) blocking join with
+    * AllPairs' prefix and length filters and PPJoin's indexing-prefix and
+    * positional bounds, verified by one merge-scan intersection per
+    * candidate. Qualifying set pairs expand back to doc pairs. Every plan
+    * counts the same intersection, so j is bit-equal to the naive token
+    * join.
     */
-  /** Test hook: NativeKernelsSpec cross-checks both dispatch paths against a
-    * naive all-pairs reference on synthetic vocabularies.
+  /** Test hook: NativeKernelsSpec cross-checks the plans against a naive
+    * all-pairs reference on synthetic vocabularies.
     */
   private[graft] def jaccardPairsForTest(s: SparkSession, tok: DataFrame,
       t: Double): DataFrame = jaccardPairs(s, tok, t)
@@ -485,16 +480,21 @@ object Llm {
   }
 
   private def jaccardPairs(s: SparkSession, tok0: DataFrame, t: Double): DataFrame = {
-    // persisted: consumed by the vocab count action, the vocabulary index,
-    // and the mask build — tokenization (interpreted HOFs over text) would
+    // persisted: consumed by the dispatch statistics, the vocabulary index,
+    // and the set build — tokenization (interpreted HOFs over text) would
     // otherwise re-run per consumer; registered so the harness drains it
     // after the query (leaked, it slows every later query in the session)
-    val tok = graft.Caches.persist(tok0)
-    val (vocabSize, sumDf2) = setDispatchStats(tok)
-    if (vocabSize <= vocabThreshold(s)) bitsetJaccardPairs(tok, t, vocabSize.toInt)
-    else if (prefixWouldExplode(s, vocabSize, sumDf2))
-      bitsetJaccardPairs(tok, t, vocabSize.toInt)
-    else prefixJaccardPairs(tok, t)
+    val (sets, pairs) = bitsetSetsAndPairs(graft.Caches.persist(tok0), t)
+    pairs
+      .join(sets.select(col("sid").as("sa"), col("ds").as("da")), "sa")
+      .join(sets.select(col("sid").as("sb"), col("ds").as("db")), "sb")
+      .select(col("sa"), col("sb"), col("j"), explode(col("da")).as("x"), col("db"))
+      .select(col("sa"), col("sb"), col("j"), col("x"), explode(col("db")).as("y"))
+      .filter((col("sa") === col("sb") && col("x") < col("y")) || col("sa") < col("sb"))
+      .select(least(col("x"), col("y")).as("doc_a"),
+        greatest(col("x"), col("y")).as("doc_b"),
+        round(col("j"), 4).as("jaccard"))
+      .orderBy("doc_a", "doc_b")
   }
 
   /** The two set-similarity dispatch statistics — distinct vocabulary size
@@ -522,61 +522,51 @@ object Llm {
   private def dfreqOf(tok: DataFrame): DataFrame =
     graft.Caches.persistShared(tok.groupBy("w").agg(count(lit(1)).as("df")))
 
-  /** Second dispatch stage for corpora ABOVE the vocab threshold: prefix
-    * filtering assumes an OPEN vocabulary (rare elements make prefix dfs
-    * small); a closed-ish vocabulary at scale keeps every df high and the
-    * candidate join goes quadratic — the r08 sf1 run caught x2_jaccard_bigram
-    * (931 bigrams/replica x 10 replicas = 9310 vocab, dfs ~270) filling the
-    * disk on the prefix path while the bitset NLJ over DISTINCT SETS handles
-    * the same corpus in bounded memory. Σdf² over the inverted index is a
-    * one-aggregation upper bound on the prefix join size (prefixes only
-    * shrink it); when it exceeds the budget and masks stay bounded
-    * (vocab ≤ maskVocabLimit longs·64), fall back to bitsets. Zipf-shaped
-    * open corpora are untouched: their vocab exceeds the mask limit long
-    * before Σdf² matters at this budget. vocabThreshold=0 (the spec's
-    * force-prefix override) bypasses this stage too.
+  /** The two set-plan dispatch constants, shared by the containment
+    * dispatch and [[lexicalJaccardTopK]]. Both are hand-set crossovers,
+    * not yet derived from measured per-operator costs.
+    *
+    *  - `SmallVocab`: at or below this many distinct tokens every token is
+    *    a hot join key, so any token-keyed join (prefix filtering, posting
+    *    intersection) fans out to ~|docs|² rows, while S² set comparisons
+    *    need no token fanout at all.
+    *  - `PrefixJoinBudget`: Σdf² over the inverted index bounds the prefix
+    *    join's candidate rows from above. A closed-ish vocabulary at scale
+    *    keeps every df high (the r08 sf1 bigram corpus, 9310 tokens at df
+    *    ~270, filled the disk on the prefix join), so above the budget the
+    *    S² plans run instead.
     */
-  private def prefixWouldExplode(s: SparkSession, vocabSize: Long,
-      sumDf2: Long): Boolean = {
-    if (vocabThreshold(s) == 0L) return false
-    val maskLimit = s.conf.getOption("graft.setsim.maskVocabLimit")
-      .map(_.toLong).getOrElse(65536L)
-    if (vocabSize > maskLimit) return false
-    val budget = s.conf.getOption("graft.setsim.prefixJoinBudget")
-      .map(_.toLong).getOrElse(200000000L)
-    // Σdf² arrives precomputed from setDispatchStats' single merged
-    // aggregation (r13) — this stage is now pure arithmetic, no job
-    sumDf2 > budget
-  }
+  private val SmallVocab = 4096L
+  private val PrefixJoinBudget = 200000000L
 
-  /** Bitset-vs-prefix dispatch threshold (distinct vocabulary size). The
-    * 4096 default bounds masks at 64 longs/set; overriding to 0 forces the
-    * open-vocabulary prefix path — used by the @scale sweep and specs to
-    * measure/verify that path on corpora whose vocabulary would otherwise
-    * dispatch to bitsets.
+  /** True iff the S² set plans (SetPairScan kernel or the NLJ) beat a
+    * token-keyed join on a corpus with these dispatch statistics.
     */
-  private def vocabThreshold(s: SparkSession): Long =
-    s.conf.getOption("graft.setsim.vocabThreshold").map(_.toLong).getOrElse(4096L)
+  private def s2PlansWin(vocabSize: Long, sumDf2: Long): Boolean =
+    vocabSize <= SmallVocab || sumDf2 > PrefixJoinBudget
 
-  /** Bitset core: distinct sets (mask, doc list, set id = min doc, size) and
-    * the QUALIFYING SET PAIRS (sa, sb, j) — shared by pair expansion and by
-    * set-level dedup clustering (which never needs doc-level edges).
-    */
   /** Collapsed distinct sets over `tok` as GLOBAL-RARITY-ordered index
     * arrays: (arr, n, ds, sid) with arr the sorted (document frequency
     * asc, element asc) vocabulary indices, ds the doc ids sharing the set,
-    * sid = min doc id. ONE construction shared by the Jaccard AND
-    * containment bitset paths — the funnel runs both legs over the same
-    * keepers tokens, and separate set encodings paid the multi-shuffle
-    * build (index window, array aggregation, collapse) twice for frames
-    * the cache could share (canonical-plan equality is what dedups the
-    * persist AND the countOnce statistics).
+    * sid = min doc id. The ONE set encoding behind exact Jaccard and
+    * containment — the funnel runs both legs over the same keepers
+    * tokens, and one encoding lets the cache share the multi-shuffle
+    * build (index window, array aggregation, collapse) between them
+    * (canonical-plan equality is what dedups the persist AND the
+    * countOnce statistics). `vocab` is the distinct token count from
+    * [[setDispatchStats]].
     */
-  private[graft] def raritySets(tok: DataFrame): DataFrame = {
+  private[graft] def raritySets(tok: DataFrame, vocab: Long): DataFrame = {
+    // the index is numbered by one single-partition window over the
+    // vocabulary (SCALING.md records the largest measured width)
     val w = Window.orderBy("df", "w")
     val idx = dfreqOf(tok)
       .select(col("w"), (row_number().over(w) - 1).cast("long").as("i"))
-    val arrs = tok.join(broadcast(idx), "w")
+    // open vocabularies make the index corpus-sized: ~64 B per (token,
+    // index) row against the jaccard site's byte limit, shuffled above it
+    val bs = graft.Broadcasts.gate(tok.sparkSession, "jaccard",
+      vocab, rowBytes = 64, defaultBytes = 40L << 20)
+    val arrs = tok.join(bs(idx), "w")
       .groupBy("doc_id")
       .agg(sort_array(collect_list("i")).as("arr"), count(lit(1)).as("n"))
     // shared: the Jaccard and containment legs of one funnel build the
@@ -585,8 +575,14 @@ object Llm {
       .agg(collect_list("doc_id").as("ds"), min("doc_id").as("sid")))
   }
 
-  private[graft] def bitsetSetsAndPairs(tok: DataFrame, t: Double,
-      vocab: Int): (DataFrame, DataFrame) = {
+  /** Set-pair core: the [[raritySets]] frame and its QUALIFYING SET PAIRS
+    * (sa, sb, j) — shared by pair expansion and by set-level dedup
+    * clustering (which never needs doc-level edges). `tok` is persisted by
+    * the caller.
+    */
+  private[graft] def bitsetSetsAndPairs(tok: DataFrame,
+      t: Double): (DataFrame, DataFrame) = {
+    val (vocab, sumDf2) = setDispatchStats(tok)
     // vocabulary index in GLOBAL RARITY order (document frequency asc,
     // element asc), so a set's sorted index array is ordered rarest-first
     // and its AllPairs/PPJoin prefix is a SLICE of the array. Sets are
@@ -594,16 +590,14 @@ object Llm {
     // vocabulary width — the r09 sf3 probe caught the previous bitmask
     // form paying vocab/64 longs per set (437-word masks over 10-element
     // bigram sets, 40× the bytes) and scanning words instead of elements
-    // in the verify kernel. Single-partition window over <= maskVocabLimit
-    // rows (the dispatcher routes truly open vocabularies to the prefix
-    // path; the closed-vocab fallback is bounded at 65536 by default).
-    val sets = raritySets(tok)
+    // in the verify kernel.
+    val sets = raritySets(tok, vocab)
       // consumed by both sides of the set-pair join + 2 expansions
     // (PREFIX-ELEMENT, SIZE-BAND) blocking + POSITIONAL filter — all
     // implied by J >= t, so the blocking is pure pruning:
     //   * prefix: a qualifying pair shares an element within each side's
-    //     n − ⌈t·n⌉ + 1 rarest (AllPairs/PPJoin; the same bound the
-    //     open-vocabulary path uses) — CONTENT blocks the join, so
+    //     n − ⌈t·n⌉ + 1 rarest (AllPairs, Bayardo et al. WWW'07; PPJoin)
+    //     — CONTENT blocks the join, so
     //     vocabulary-disjoint regions of a corpus (the r09 sf3 probe: 30
     //     replicas with suffixed tokens, where size bands alone left an
     //     80×-growing S² kernel stream) generate ZERO cross-region
@@ -633,8 +627,8 @@ object Llm {
     //     of closed-vocabulary candidates) never reach the aggregation.
     // The candidate join carries IDS ONLY (sa, sb) — arrays re-attach per
     // DEDUPED candidate pair, so prefix fan-out never replicates set
-    // payloads through the shuffle (the same ids-only rule the open-vocab
-    // prefix path learned at the r08 sf1 point).
+    // payloads through the shuffle (the r08 sf1 point measured a near-TB
+    // shuffle when a prefix join carried the token arrays).
     // DISTINCT SETS don't always collapse — an adversarial corpus keeps
     // S ≈ n docs — so the build side is broadcast only below a threshold
     // (the count forces the persisted sets frame once; every later consumer
@@ -646,18 +640,22 @@ object Llm {
     val bs = graft.Broadcasts.gate(tok.sparkSession, "jaccard",
       nSets, rowBytes = 400, defaultBytes = 40L << 20)
     val tMicros = math.round(t * 1e6)
-    val words = (vocab + 63) / 64
-    // dense-regime kernel: when the collapsed sets fit the pairscan gate,
-    // the full S² bitmask scan (SetPairScan) replaces candidate blocking +
-    // verify outright — on closed vocabularies every set shares high-df
-    // elements with most others, so the (prefix, band) join degenerates to
-    // ~S² candidate visits anyway and the kernel wins on the per-pair
-    // constant. Masks are rebuilt from the rarity arrays only on this
+    val words = ((vocab + 63) / 64).toInt
+    // dense-regime kernel: on the vocabularies where the S² plans win
+    // (s2PlansWin) and the collapsed sets fit the pairscan gate, the full
+    // S² bitmask scan (SetPairScan) replaces candidate blocking + verify
+    // outright — on closed vocabularies every set shares high-df elements
+    // with most others, so the (prefix, band) join degenerates to ~S²
+    // candidate visits anyway and the kernel wins on the per-pair
+    // constant. On open vocabularies the blocking prunes almost every pair
+    // and the kernel's words-long masks lose to it (ProfileMain @prefix,
+    // SCALING.md). Masks are rebuilt from the rarity arrays only on this
     // path (words·8 B/set; the gate bounds the total). Exact in the SAME
     // integer form as the relational verify below, so the dispatch is
     // invisible to the oracle.
     val pairs =
-      if (graft.operators.SetPairScan.fits(tok.sparkSession, nSets, words))
+      if (s2PlansWin(vocab, sumDf2) &&
+          graft.operators.SetPairScan.fits(tok.sparkSession, nSets, words))
         graft.operators.SetPairScan.pairs(
           sets.select(col("sid"),
             NX.mask(col("arr"), words).as("mask"),
@@ -735,68 +733,6 @@ object Llm {
     candIds
   }
 
-  private def bitsetJaccardPairs(tok: DataFrame, t: Double, vocab: Int): DataFrame = {
-    val (sets, pairs) = bitsetSetsAndPairs(tok, t, vocab)
-    pairs
-      .join(sets.select(col("sid").as("sa"), col("ds").as("da")), "sa")
-      .join(sets.select(col("sid").as("sb"), col("ds").as("db")), "sb")
-      .select(col("sa"), col("sb"), col("j"), explode(col("da")).as("x"), col("db"))
-      .select(col("sa"), col("sb"), col("j"), col("x"), explode(col("db")).as("y"))
-      .filter((col("sa") === col("sb") && col("x") < col("y")) || col("sa") < col("sb"))
-      .select(least(col("x"), col("y")).as("doc_a"),
-        greatest(col("x"), col("y")).as("doc_b"),
-        round(col("j"), 4).as("jaccard"))
-      .orderBy("doc_a", "doc_b")
-  }
-
-  /** Exact all-pairs Jaccard >= t via AllPairs prefix filtering (Bayardo et
-    * al., WWW'07), over `tok(doc_id, w)` set-element rows. Sort each doc's
-    * set in a global (document-frequency asc, element asc) order; two sets
-    * with J >= t MUST share an element within each one's first
-    * n - ceil(t*n) + 1 — so the self-join only explodes that ~(1-t) prefix
-    * (the RAREST elements — small fanout per key when the vocabulary is
-    * large). A length filter (min/max >= t, implied by J >= t) prunes
-    * further; candidates are verified with the exact intersection, so this
-    * is pure pruning, not approximation.
-    */
-  private[graft] def prefixJaccardPairs(tok: DataFrame, t: Double): DataFrame = {
-    val dfreq = dfreqOf(tok)
-    // persisted: the prefix explode + the two verify re-joins — registered
-    // so the harness drains it after the query
-    val sorted = graft.Caches.persist(tok.join(dfreq, "w")
-      .groupBy("doc_id")
-      .agg(array_sort(collect_list(struct(col("df"), col("w")))).as("sw"))
-      .select(col("doc_id"),
-        expr("transform(sw, p -> p.w)").as("toks"),
-        size(col("sw")).cast("long").as("n")))
-    // candidate generation carries IDS ONLY. The r08 sf1 scale run caught
-    // the full token arrays riding the PRE-dedup candidate join: on a
-    // closed-vocabulary corpus prefix dfs stay high, and ~2e8 join rows
-    // each dragging two ~KB arrays was a near-TB shuffle (filled the disk);
-    // id rows make the same join ~5 GB. Arrays re-attach per DEDUPED pair.
-    val pref = sorted.select(col("doc_id"), col("n"),
-      explode(slice(col("toks"), lit(1),
-        (col("n") - ceil(col("n") * t) + 1).cast("int"))).as("w"))
-    val cand = pref.as("a")
-      .join(pref.as("b"),
-        col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id") &&
-          least(col("a.n"), col("b.n")).cast("double") >=
-            greatest(col("a.n"), col("b.n")) * t)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    cand
-      .join(sorted.select(col("doc_id").as("doc_a"), col("toks").as("ta"),
-        col("n").as("na")), "doc_a")
-      .join(sorted.select(col("doc_id").as("doc_b"), col("toks").as("tb"),
-        col("n").as("nb")), "doc_b")
-      .withColumn("i", size(array_intersect(col("ta"), col("tb"))).cast("long"))
-      .withColumn("j", col("i").cast("double") /
-        (col("na") + col("nb") - col("i")).cast("double"))
-      .filter(col("j") >= t)
-      .select(col("doc_a"), col("doc_b"), round(col("j"), 4).as("jaccard"))
-      .orderBy("doc_a", "doc_b")
-  }
-
   /** Exact all-pairs CONTAINMENT C(a,b) = |A∩B| / min(|A|,|B|) ≥ num/den
     * over `tok(doc_id, w)` set-element rows — the asymmetric criterion that
     * catches a snippet EMBEDDED in a larger document (a 50-word quote in a
@@ -804,25 +740,27 @@ object Llm {
     * arithmetic (den·i ≥ num·min ⟺ C ≥ num/den) and outputs are e4 integer
     * ratios, so no quotient ever meets ROUND cross-engine.
     *
-    * Adaptive like [[jaccardPairs]], and in BOTH paths sub-quadratic in
-    * docs (the r04 plan paired raw doc masks all-pairs — O(n²) however many
-    * docs shared a token set):
-    *  - vocab ≤ 4096: the bitset popcount NLJ, but over DISTINCT SETS
-    *    (identical masks collapse first, exactly as `bitsetSetsAndPairs`
-    *    does for Jaccard) — S² primitive ops, not n², and corpora worth
+    * Three exact plans over one [[raritySets]] build, all comparing
+    * DISTINCT SETS (the r04 plan paired raw doc masks all-pairs — O(n²)
+    * however many docs shared a token set), all sharing one member
+    * expansion back to doc pairs:
+    *  - the S² plans, when the vocabulary is small or Σdf² predicts a
+    *    quadratic prefix join ([[s2PlansWin]]): the `SetPairScan` kernel
+    *    when the sets fit its gate, otherwise the set-pair NLJ with an
+    *    early-exit qualifier — S² primitive ops, not n², and corpora worth
     *    deduping are precisely the ones where S ≪ n.
-    *  - vocab > 4096: prefix-filtered candidate join from the SSJoin
+    *  - otherwise the prefix-filtered candidate join from the SSJoin
     *    overlap family (Chaudhuri et al. ICDE'06; PPJoin+ Xiao et al.
     *    WWW'08 extends it with positional bounds): a qualifying pair needs
     *    i ≥ ⌈t·min(na,nb)⌉, and for the SMALLER set that bound is
-    *    ⌈t·n_small⌉ — so its (df asc, w)-ordered prefix of
-    *    n − ⌈t·n⌉ + 1 rarest elements must share an element with the
-    *    larger set. Probe small-side prefixes against the full inverted
-    *    index of docs with n ≥ the probe's n, verify candidates exactly.
-    *    (Unlike Jaccard, the index side must stay full-width — a huge doc
-    *    can contain a tiny one, so no symmetric length filter is legal —
-    *    which is exactly why containment costs more than Jaccard in every
-    *    published SSJoin variant.)
+    *    ⌈t·n_small⌉ — so its rarest n − ⌈t·n⌉ + 1 elements (a slice of
+    *    its rarity array) must share an element with the larger set.
+    *    Probe small-side prefixes against the full arrays of sets with
+    *    n ≥ the probe's n, verify candidates exactly. (Unlike Jaccard, the
+    *    index side must stay full-width — a huge doc can contain a tiny
+    *    one, so no symmetric length filter is legal — which is exactly why
+    *    containment costs more than Jaccard in every published SSJoin
+    *    variant.)
     */
   private[graft] def containmentPairsForTest(s: SparkSession, tok: DataFrame,
       num: Int, den: Int): DataFrame = containmentPairs(s, tok, num, den)
@@ -835,6 +773,14 @@ object Llm {
         expr("i * 10000 div (na + nb - i)").as("jaccard_e4"))
       .orderBy("doc_a", "doc_b")
 
+  /** The three exact containment plans of [[containmentPairsForTest]]. */
+  private[graft] sealed trait ContainmentPlan
+  private[graft] object ContainmentPlan {
+    case object Kernel extends ContainmentPlan
+    case object Nlj extends ContainmentPlan
+    case object Prefix extends ContainmentPlan
+  }
+
   /** The containment pair machinery WITHOUT the presentation projection:
     * rows (doc_a, doc_b, i, na, nb) with doc_a < doc_b (except the exact
     * set-dup self-pairs, doc_a < doc_b always), na/nb the two docs'
@@ -844,66 +790,71 @@ object Llm {
     * consumes pairs with a ≥2× size gap, and filtering the full pair list
     * after the fact paid the doc expansion + a global sort of millions of
     * C ≥ t pairs (dense near-dup corpora qualify most set pairs) to keep
-    * hundreds.
+    * hundreds. `plan` names the plan instead of letting the statistics
+    * choose it (the specs run every plan on one corpus).
     */
   private[graft] def containmentPairsSized(s: SparkSession, tok0: DataFrame,
-      num: Int, den: Int, minRatio: Int): DataFrame = {
+      num: Int, den: Int, minRatio: Int,
+      plan: Option[ContainmentPlan] = None): DataFrame = {
     // shared: the funnel's cluster leg persisted this tokenization already
     val tok = graft.Caches.persistShared(tok0)
     val (vocabSize, sumDf2) = setDispatchStats(tok)
-    if (vocabSize <= vocabThreshold(s) || prefixWouldExplode(s, vocabSize, sumDf2))
-      bitsetContainmentPairs(tok, vocabSize.toInt, num, den, minRatio)
-    else prefixContainmentPairs(tok, num, den, minRatio)
-  }
-
-  private[graft] def bitsetContainmentPairs(tok: DataFrame, vocab: Int,
-      num: Int, den: Int, minRatio: Int = 1): DataFrame = {
-    val words = (vocab + 63) / 64
+    val words = ((vocabSize + 63) / 64).toInt
     // the SAME rarity-array sets as the Jaccard path — when a caller (the
     // funnel) runs both legs over one token frame, the persist and the
     // countOnce statistics below dedup by canonical-plan equality
-    val sets = raritySets(tok)
+    val sets = raritySets(tok, vocabSize)
     val nSets = graft.Caches.countOnce(sets)
     // over-gate broadcast estimate: rows carry the full index array —
     // n ≤ vocab elements of 8 B (a conservative bound; dense closed-vocab
     // sets really do approach it)
     val bs = graft.Broadcasts.gate(tok.sparkSession, "jaccard",
-      nSets, rowBytes = 8L * math.max(vocab, 1) + 32, defaultBytes = 40L << 20)
-    // dense-regime kernel vs relational NLJ — both exact S² plans; the
-    // kernel drops the ~300 ns/pair row-iterator+expression-eval constant
-    // to ~words popcounts (see SetPairScan). The NLJ survives as the
-    // over-gate fallback AND the spec-pinned shuffle-regime plan.
-    val pairs =
-      if (graft.operators.SetPairScan.fits(tok.sparkSession, nSets, words))
+      nSets, rowBytes = 8L * math.max(vocabSize, 1L) + 32, defaultBytes = 40L << 20)
+    val a = sets.select(col("arr").as("arra"), col("n").as("na"),
+      col("sid").as("sa"))
+    val b = sets.select(col("arr").as("arrb"), col("n").as("nb"),
+      col("sid").as("sb"))
+    // the exact overlap both relational plans verify with: one merge scan
+    // of the two sorted arrays per surviving set pair
+    def withIsect(pairs: DataFrame): DataFrame =
+      pairs.withColumn("i", NX.isect(col("arra"), col("arrb")))
+        .select(col("sa"), col("sb"), col("i"), col("na"), col("nb"))
+    val pairs = plan.getOrElse(
+      if (!s2PlansWin(vocabSize, sumDf2)) ContainmentPlan.Prefix
+      else if (graft.operators.SetPairScan.fits(tok.sparkSession, nSets, words))
+        ContainmentPlan.Kernel
+      else ContainmentPlan.Nlj) match {
+      // dense-regime kernel: drops the NLJ's ~300 ns/pair row-iterator +
+      // expression-eval constant to ~words popcounts (see SetPairScan)
+      case ContainmentPlan.Kernel =>
         graft.operators.SetPairScan.pairs(
           sets.select(col("sid"),
             NX.mask(col("arr"), words).as("mask"),
             col("n")),
           graft.operators.SetPairScan.Containment(num, den, minRatio))
-      else {
-        val a = sets.select(col("arr").as("arra"), col("n").as("na"),
-          col("sid").as("sa"))
-        val b = sets.select(col("arr").as("arrb"), col("n").as("nb"),
-          col("sid").as("sb"))
-        // sa ≤ sb admits the IDENTICAL-set pair (C = 1.0 trivially
-        // qualifies: its docs are exact set-dups of each other) — expanded
-        // with x < y below. The size-ratio guard sits FIRST in the
-        // conjunction: two long compares short-circuit the per-pair
-        // merge-scan intersection for every pair the caller's ratio gate
-        // would drop anyway (at minRatio = 1 it folds to a tautology).
-        a.join(bs(b),
-            col("sa") <= col("sb") &&
-              least(col("na"), col("nb")) * minRatio <=
-                greatest(col("na"), col("nb")) &&
-              // early-exit qualifier (na = |arra|, nb = |arrb|): the S²
-              // NLJ evaluates this per enumerated pair, so bailing as soon
-              // as the containment outcome is decided — instead of a full
-              // merge scan + two array copies — is the dominant per-pair
-              // cost here; the exact count below runs on survivors only
-              NX.isectGeq(col("arra"), col("arrb"), num, den))
-          .withColumn("i", NX.isect(col("arra"), col("arrb")))
-          .select(col("sa"), col("sb"), col("i"), col("na"), col("nb"))
-      }
+      // sa ≤ sb admits the IDENTICAL-set pair (C = 1.0 trivially
+      // qualifies: its docs are exact set-dups of each other) — expanded
+      // with x < y below. The size-ratio guard sits FIRST in the
+      // conjunction: two long compares short-circuit the per-pair
+      // merge-scan intersection for every pair the caller's ratio gate
+      // would drop anyway (at minRatio = 1 it folds to a tautology).
+      case ContainmentPlan.Nlj =>
+        withIsect(a.join(bs(b),
+          col("sa") <= col("sb") &&
+            least(col("na"), col("nb")) * minRatio <=
+              greatest(col("na"), col("nb")) &&
+            // early-exit qualifier (na = |arra|, nb = |arrb|): the S²
+            // NLJ evaluates this per enumerated pair, so bailing as soon
+            // as the containment outcome is decided — instead of a full
+            // merge scan + two array copies — is the dominant per-pair
+            // cost here; the exact count runs on survivors only
+            NX.isectGeq(col("arra"), col("arrb"), num, den)))
+      // arrays re-attach per DEDUPED candidate pair, then verify exactly
+      case ContainmentPlan.Prefix =>
+        withIsect(prefixContainmentCandIds(sets, num, den, minRatio)
+            .join(bs(a), "sa").join(bs(b), "sb"))
+          .filter(col("i") * den >= least(col("na"), col("nb")) * num)
+    }
     pairs
       .join(sets.select(col("sid").as("sa"), col("ds").as("da")), "sa")
       .join(sets.select(col("sid").as("sb"), col("ds").as("db")), "sb")
@@ -918,49 +869,32 @@ object Llm {
         when(col("x") < col("y"), col("nb")).otherwise(col("na")).as("nb"))
   }
 
-  private[graft] def prefixContainmentPairs(tok: DataFrame,
-      num: Int, den: Int, minRatio: Int = 1): DataFrame = {
-    val dfreq = dfreqOf(tok)
-    // persisted: probe (prefix) and index (full) sides + nothing else —
-    // registered so the harness drains it after the query
-    val sorted = graft.Caches.persist(tok.join(dfreq, "w")
-      .groupBy("doc_id")
-      .agg(array_sort(collect_list(struct(col("df"), col("w")))).as("sw"))
-      .select(col("doc_id"),
-        expr("transform(sw, p -> p.w)").as("toks"),
-        size(col("sw")).cast("long").as("n")))
+  /** Candidate (sa, sb) set ids of the prefix containment plan, sa ≤ sb:
+    * every qualifying pair's smaller set exposes an intersection element
+    * in its prefix, and that element appears SOMEWHERE in the larger set's
+    * full array — so prefix(small) ⋈ full(large) on the element, sizes
+    * ordered, is a complete candidate generator. Equal sizes probe both
+    * directions (deduped), and a set probes itself: the identical-set pair
+    * the member expansion needs. Carries IDS ONLY — the r08 sf1 point
+    * measured a near-TB shuffle when a prefix join carried the arrays.
+    */
+  private def prefixContainmentCandIds(sets: DataFrame, num: Int, den: Int,
+      minRatio: Int): DataFrame = {
     // prefix length n − ⌈num·n/den⌉ + 1 in EXACT integer arithmetic
     // (⌈a/b⌉ = (a + b − 1) div b) — an FP ceil(0.9·n) can round up a
     // half-ulp and silently shorten the prefix below the safe bound
-    // candidate generation carries IDS ONLY (same sf1 lesson as
-    // prefixJaccardPairs: arrays on the pre-dedup join rows are the
-    // shuffle-volume bomb); arrays re-attach per DEDUPED pair for verify
-    val pref = sorted.select(col("doc_id"), col("n"),
-      explode(slice(col("toks"), lit(1),
-        expr(s"cast(n - ((n * $num + ${den - 1}) div $den) + 1 as int)"))).as("w"))
-    val full = sorted.select(col("doc_id"), col("n"),
-      explode(col("toks")).as("w"))
-    // every qualifying pair's smaller set exposes an intersection element in
-    // its prefix, and that element appears SOMEWHERE in the larger set — so
-    // prefix(small) ⋈ full(large) on the element, sizes ordered (ties probe
-    // both directions and dedup), is a complete candidate generator
-    val cand = pref.as("a").join(full.as("b"),
-        col("a.w") === col("b.w") &&
-          (col("b.n") > col("a.n") ||
-            (col("b.n") === col("a.n") && col("a.doc_id") =!= col("b.doc_id"))) &&
-          least(col("a.n"), col("b.n")) * minRatio <=
-            greatest(col("a.n"), col("b.n")))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    cand
-      .join(sorted.select(col("doc_id").as("doc_a"), col("toks").as("ta"),
-        col("n").as("na")), "doc_a")
-      .join(sorted.select(col("doc_id").as("doc_b"), col("toks").as("tb"),
-        col("n").as("nb")), "doc_b")
-      .withColumn("i", size(array_intersect(col("ta"), col("tb"))).cast("long"))
-      .filter(col("i") * den >= least(col("na"), col("nb")) * num)
-      .select("doc_a", "doc_b", "i", "na", "nb")
+    val pref = sets.select(col("sid").as("sa"), col("n").as("na"),
+      explode(expr(
+        s"slice(arr, 1, cast(n - ((n * $num + ${den - 1}) div $den) + 1 as int))"))
+        .as("pw"))
+    val full = sets.select(col("sid").as("sb"), col("n").as("nb"),
+      explode(col("arr")).as("fw"))
+    // nb ≥ na makes na the least side of the size-ratio guard
+    pref.join(full, col("pw") === col("fw") && col("nb") >= col("na") &&
+        col("na") * minRatio <= col("nb"))
+      .select(least(col("sa"), col("sb")).as("sa"),
+        greatest(col("sa"), col("sb")).as("sb"))
+      .dropDuplicates("sa", "sb")
   }
 
   /** Band budget for the cross-stratum tier of [[containmentLshPairs]] —
@@ -1299,9 +1233,9 @@ object Llm {
   /** Pairs→components→decisions: the shared step that turns a similarity
     * pair list into cluster labels. Vertices carry `id`; undirected edges
     * carry (`src`,`dst`); every vertex comes back labeled with its cluster
-    * representative (min reachable id). Used by x1_dedup_clusters (text
-    * modality, doc-level branch) and x5_embedding_clusters (embedding
-    * modality) so the CC invocation + label projection live in one place.
+    * representative (min reachable id). Used by the LSH and embedding
+    * cluster queries so the CC invocation + label projection live in one
+    * place.
     */
   private[graft] def labelClusters(vertices: DataFrame, edges: DataFrame,
       outId: String): DataFrame =
@@ -1310,30 +1244,23 @@ object Llm {
 
   /** Text near-dup dedup clustering over `d` (doc_id, text): tokenize, find
     * Jaccard >= 0.9 pairs, connected-components, label every doc with its
-    * cluster representative. Below the vocab threshold CC runs over DISTINCT
-    * SETS (~S nodes, qualifying set pairs as edges), not the quadratically
-    * larger doc-pair graph — docs inherit their set's component, and
-    * min-reachable-sid == min-reachable-doc-id since sid = min doc of its
-    * set. Above it, AllPairs prefix filtering generates doc-level edges.
+    * cluster representative. CC runs over DISTINCT SETS (~S nodes,
+    * qualifying set pairs from [[bitsetSetsAndPairs]] as edges), not the
+    * quadratically larger doc-pair graph — docs inherit their set's
+    * component, and min-reachable-sid == min-reachable-doc-id since sid =
+    * min doc of its set.
     */
   private[graft] def dedupClusters(s: SparkSession, d: DataFrame): DataFrame = {
     // shared: the funnel's containment leg tokenizes the same keepers
     val tok = graft.Caches.persistShared(d
       .select(col("doc_id"), explode(TF.tokenSet(col("text"))).as("w")))
-    val (vocabSize, sumDf2) = setDispatchStats(tok)
-    if (vocabSize <= vocabThreshold(s) || prefixWouldExplode(s, vocabSize, sumDf2)) {
-      val (sets, pairs) = bitsetSetsAndPairs(tok, 0.9, vocabSize.toInt)
-      val comp = graft.operators.ConnectedComponents(
-        sets.select(col("sid").as("id")),
-        pairs.filter(col("sa") =!= col("sb"))
-          .select(col("sa").as("src"), col("sb").as("dst")))
-      sets.join(comp, sets("sid") === comp("id"))
-        .select(explode(col("ds")).as("doc_id"), col("component").as("cluster_id"))
-    } else {
-      val edges = prefixJaccardPairs(tok, 0.9)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      labelClusters(tok.select(col("doc_id").as("id")).distinct(), edges, "doc_id")
-    }
+    val (sets, pairs) = bitsetSetsAndPairs(tok, 0.9)
+    val comp = graft.operators.ConnectedComponents(
+      sets.select(col("sid").as("id")),
+      pairs.filter(col("sa") =!= col("sb"))
+        .select(col("sa").as("src"), col("sb").as("dst")))
+    sets.join(comp, sets("sid") === comp("id"))
+      .select(explode(col("ds")).as("doc_id"), col("component").as("cluster_id"))
   }
 
   /** The funnel's quality-gate predicate over a `text` column — ONE
@@ -1858,60 +1785,82 @@ object Llm {
   /** Lexical token-set-Jaccard top-k retrieval (query docs vs the corpus) —
     * the lexical leg of x3_rrf_fusion, ranked on the integer-floored e9
     * quotient with neighbor-id tie-break so the order is engine-exact.
-    * Adaptive like the pair dispatchers: on a bounded vocabulary
-    * (<= graft.setsim.vocabThreshold) each doc becomes a bitmask and the
-    * |Q| broadcast query masks stream codegen'd popcounts over the corpus
-    * scan — |C|·|Q| cheap rows, no token fanout (a closed vocabulary makes
-    * the posting join quadratic-ish per token); on open vocabularies the
-    * term-at-a-time posting intersection (explode + equi-join on the token
-    * + partial-aggregated pair counts) is the classic sparse-retrieval
-    * shape. Both paths produce identical rows (LlmSpec pins the swap).
+    * Adaptive like the containment dispatch: on a vocabulary of at most
+    * `SmallVocab` tokens [[lexicalMaskScores]] streams the broadcast query
+    * masks over the corpus scan (a closed vocabulary makes the posting
+    * join quadratic-ish per token); on open vocabularies the
+    * term-at-a-time [[lexicalPostingScores]] is the classic
+    * sparse-retrieval shape. Both scorers produce identical rows (LlmSpec
+    * runs both on one corpus).
     */
   private[graft] def lexicalJaccardTopK(s: SparkSession, d: DataFrame,
       queryPred: Column, k: Int): DataFrame = {
+    val tok = lexicalTokens(d)
+    val vocabSize = graft.Caches.countOnce(tok.select("w").distinct())
+    val scored =
+      if (vocabSize <= SmallVocab) lexicalMaskScores(tok, vocabSize, queryPred)
+      else lexicalPostingScores(tok, queryPred)
+    val wl = Window.partitionBy("query_id").orderBy(desc("jr_e9"), asc("neighbor_id"))
+    scored.withColumn("rank_lex", row_number().over(wl).cast("long"))
+      .filter(col("rank_lex") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("rank_lex"))
+  }
+
+  /** Persisted (doc_id, w, nt) token rows of `d`: one row per distinct
+    * token, nt the doc's distinct-token count.
+    */
+  private[graft] def lexicalTokens(d: DataFrame): DataFrame =
     // tokenize ONCE into a projected column below the Generate (r14): a
     // select mixing explode(tokenSet(text)) with size(tokenSet(text))
     // evaluates the sibling expression per EXPLODED row — ~|tokens|
     // tokenizations per doc (measured 0.85 vs 0.17 s for this frame at
     // sf0.1); the pre-projected column is computed once per input row
-    val tok = graft.Caches.persist(
+    graft.Caches.persist(
       d.select(col("doc_id"), TF.tokenSet(col("text")).as("ts"))
         .select(col("doc_id"), explode(col("ts")).as("w"),
           size(col("ts")).cast("long").as("nt")))
-    val vocabSize = graft.Caches.countOnce(tok.select("w").distinct())
-    val scored =
-      if (vocabSize <= vocabThreshold(s)) {
-        val words = ((vocabSize + 63) / 64).toInt
-        // single-partition vocab window is fine: <= threshold rows by dispatch
-        val wv = Window.orderBy("w")
-        val idx = tok.select("w").distinct()
-          .select(col("w"), (row_number().over(wv) - 1).cast("long").as("i"))
-        val masks = graft.Caches.persist(tok.join(broadcast(idx), "w")
-          .groupBy("doc_id")
-          .agg(NX.mask(collect_list("i"), words).as("mask"),
-            count(lit(1)).as("n")))
-        val q = masks.filter(queryPred)
-          .select(col("doc_id").as("query_id"), col("mask").as("qmask"),
-            col("n").as("nq"))
-        masks.join(broadcast(q), col("doc_id") =!= col("query_id"))
-          .withColumn("i", NX.maskIsect(col("mask"), col("qmask")))
-          .filter(col("i") > 0)
-          .select(col("query_id"), col("doc_id").as("neighbor_id"),
-            expr("i * 1000000000L div (n + nq - i)").as("jr_e9"))
-      } else {
-        val qtok = tok.filter(queryPred)
-          .select(col("doc_id").as("query_id"), col("w"), col("nt").as("nq"))
-        tok.join(broadcast(qtok), Seq("w"))
-          .filter(col("doc_id") =!= col("query_id"))
-          .groupBy(col("query_id"), col("doc_id").as("neighbor_id"))
-          .agg(count(lit(1)).as("i"), max("nt").as("nd"), max("nq").as("nq"))
-          .select(col("query_id"), col("neighbor_id"),
-            expr("i * 1000000000L div (nq + nd - i)").as("jr_e9"))
-      }
-    val wl = Window.partitionBy("query_id").orderBy(desc("jr_e9"), asc("neighbor_id"))
-    scored.withColumn("rank_lex", row_number().over(wl).cast("long"))
-      .filter(col("rank_lex") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank_lex"))
+
+  /** Mask scorer over [[lexicalTokens]] rows: each doc becomes a bitmask
+    * over the `vocabSize`-token vocabulary and the |Q| broadcast query
+    * masks stream codegen'd popcounts over the corpus scan — |C|·|Q| cheap
+    * rows, no token fanout. Rows (query_id, neighbor_id, jr_e9) for every
+    * pair sharing a token.
+    */
+  private[graft] def lexicalMaskScores(tok: DataFrame, vocabSize: Long,
+      queryPred: Column): DataFrame = {
+    val words = ((vocabSize + 63) / 64).toInt
+    // single-partition vocab window is fine: <= SmallVocab rows by dispatch
+    val wv = Window.orderBy("w")
+    val idx = tok.select("w").distinct()
+      .select(col("w"), (row_number().over(wv) - 1).cast("long").as("i"))
+    val masks = graft.Caches.persist(tok.join(broadcast(idx), "w")
+      .groupBy("doc_id")
+      .agg(NX.mask(collect_list("i"), words).as("mask"),
+        count(lit(1)).as("n")))
+    val q = masks.filter(queryPred)
+      .select(col("doc_id").as("query_id"), col("mask").as("qmask"),
+        col("n").as("nq"))
+    masks.join(broadcast(q), col("doc_id") =!= col("query_id"))
+      .withColumn("i", NX.maskIsect(col("mask"), col("qmask")))
+      .filter(col("i") > 0)
+      .select(col("query_id"), col("doc_id").as("neighbor_id"),
+        expr("i * 1000000000L div (n + nq - i)").as("jr_e9"))
+  }
+
+  /** Posting scorer over [[lexicalTokens]] rows: term-at-a-time posting
+    * intersection (explode + equi-join on the token + partial-aggregated
+    * pair counts). Same rows as [[lexicalMaskScores]].
+    */
+  private[graft] def lexicalPostingScores(tok: DataFrame,
+      queryPred: Column): DataFrame = {
+    val qtok = tok.filter(queryPred)
+      .select(col("doc_id").as("query_id"), col("w"), col("nt").as("nq"))
+    tok.join(broadcast(qtok), Seq("w"))
+      .filter(col("doc_id") =!= col("query_id"))
+      .groupBy(col("query_id"), col("doc_id").as("neighbor_id"))
+      .agg(count(lit(1)).as("i"), max("nt").as("nd"), max("nq").as("nq"))
+      .select(col("query_id"), col("neighbor_id"),
+        expr("i * 1000000000L div (nq + nd - i)").as("jr_e9"))
   }
 
   /** Substring-level duplicate profile behind x1_span_dedup (exposed so
@@ -2227,10 +2176,9 @@ object Llm {
              |FROM spans s JOIN occ o USING (h)
              |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin)),
 
-    // ---- X2 exact n-gram (unigram-set) Jaccard near-dup pairs, via AllPairs
-    // prefix filtering (Bayardo et al., WWW'07): sort each doc's token set in a
-    // adaptive exact algorithm — see jaccardPairs above (bitset path on the
-    // driver's 31-token vocabulary; prefix filtering on open vocabularies)
+    // ---- X2 exact n-gram (unigram-set) Jaccard near-dup pairs over
+    // distinct rarity-array sets — see jaccardPairs above (SetPairScan
+    // kernel when the sets fit, (prefix, size-band) blocking otherwise)
     Q("x2_jaccard_exact",
       (s, dir) => {
         val tok = docs(s, dir)
@@ -2253,9 +2201,9 @@ object Llm {
     // ---- X2 exact CONTAINMENT near-dup: C(a,b) = |A∩B| / min(|A|,|B|) —
     // the asymmetric criterion that catches a snippet EMBEDDED in a larger
     // document, which symmetric Jaccard misses. Adaptive sub-quadratic
-    // algorithm — see containmentPairs above (distinct-set bitset popcount
-    // NLJ at this bounded vocabulary; SSJoin-family prefix filtering on
-    // open vocabularies). 10·i ≥ 9·min ⟺ C ≥ 0.9, exact integer arithmetic.
+    // algorithm — see containmentPairsForTest above (distinct-set S² plans
+    // at this bounded vocabulary; SSJoin-family prefix filtering on open
+    // vocabularies). 10·i ≥ 9·min ⟺ C ≥ 0.9, exact integer arithmetic.
     Q("x2_containment",
       (s, dir) => {
         val tok = docs(s, dir)

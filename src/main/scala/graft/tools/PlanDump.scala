@@ -44,9 +44,9 @@ object PlanDump {
       |- q_ntile: range exchange + per-partition window (keyed by partition id)
       |  + broadcast offset join — the only single-partition stage is the P-row
       |  counts aggregate, never the table.
-      |- x2_jaccard_exact: broadcast set-pair join with the whole Jaccard
-      |  predicate (codegen'd popcount kernel) inside the join condition — only
-      |  qualifying pairs materialize.
+      |- x2_jaccard_exact: the `SetPairScan` kernel (MapPartitions) over the
+      |  distinct rarity-array sets — every set pair tested in one
+      |  per-partition loop, only qualifying pairs expanded back to docs.
       |- x3_knn_brute: BroadcastNestedLoopJoin over the broadcast query set with
       |  codegen'd `DotProduct` in the projection, ranked by one `top_k`
       |  ObjectHashAggregate (partial per partition, one SinglePartition
@@ -74,17 +74,19 @@ object PlanDump {
       |  share the user_id partitioning; the exact distinct count adds its
       |  two-phase dedup exchanges — every exchange equi-keyed and
       |  partial-aggregated, no window, nothing single-partition.
-      |- x1_dedup_clusters: the set-level dispatch — masks grouped to DISTINCT
-      |  SETS, the qualifying-pair join over sets (never docs), CC's iteration
-      |  plans absent (converged), label projection via one explode.
+      |- x1_dedup_clusters: the set-level plan — rarity-ordered index arrays
+      |  grouped to DISTINCT SETS, the qualifying-pair join over sets (never
+      |  docs), CC's iteration plans absent (converged), label projection via
+      |  one explode.
       |- x2_jaccard_bigram: the native `BigramSet` kernel in the tokenize
       |  projection (no interpreted HOF lambda), then the same broadcast
       |  set-pair join as x2_jaccard_exact.
       |- x4_ngram_topk: partial+final hash agg on (lang, ngram) then
       |  `WindowGroupLimit` below the rank shuffle — per-lang top-k state is
       |  O(k) map-side, the full per-lang sort never materializes.
-      |- x2_containment: the bitset containment join — popcount predicate
-      |  inside the join condition, qualifying pairs only.
+      |- x2_containment: the `SetPairScan` containment kernel over the same
+      |  distinct rarity-array sets — qualifying set pairs only, expanded to
+      |  doc pairs by two explodes.
       |- x3_rrf_fusion: two k-bounded legs (IVF dense ending in the `top_k`
       |  aggregate, token-Jaccard lexical ending in WindowGroupLimit), fused
       |  by one outer join on (query, neighbor) — no full-corpus exchange

@@ -43,7 +43,6 @@ object ProfileMain {
       case "@lshknn" => lshKnnSweep(spark)
       case "@bglm" => bigramLmPieces(spark, sfDir)
       case "@rrf" => rrfPieces(spark, sfDir)
-      case "@bigramstats" => bigramStats(spark, sfDir)
       case "@screens" => screenPieces(spark, sfDir)
       case "@funnel" => funnelPieces(spark, sfDir)
       case "@containlsh" => containmentLshPieces(spark, sfDir)
@@ -122,70 +121,6 @@ object ProfileMain {
     graft.Caches.drain(spark)
   }
 
-  /** Staged row-count statistics for the bigram prefix-filter pair mining
-    * (formerly the one-off DiagBigram main): counts rows per stage WITHOUT
-    * the array payloads, to localize shuffle blowups at scale points —
-    * prefix fan-out, candidate join upper bounds, and the bitset path's
-    * (prefix, band) key distribution.
-    */
-  private def bigramStats(spark: SparkSession, dir: String): Unit = {
-    val t = 0.7
-    val tok = graft.Tables.load(spark, dir, "documents").select(col("doc_id"),
-      explode(NX.bigrams(TF.tokens(col("text")))).as("w"))
-    println(s"[diag] tok rows      = ${tok.count()}")
-    println(s"[diag] vocab         = ${tok.select("w").distinct().count()}")
-    val dfreq = tok.groupBy("w").agg(count(lit(1)).as("df"))
-    val sorted = tok.join(dfreq, "w")
-      .groupBy("doc_id")
-      .agg(array_sort(collect_list(struct(col("df"), col("w")))).as("sw"))
-      .select(col("doc_id"), size(col("sw")).cast("long").as("n"),
-        expr("transform(slice(sw, 1, cast(size(sw) - ceil(size(sw) * 0.7) + 1 as int)), p -> p.w)").as("pw"))
-    val pref = sorted.select(col("doc_id"), col("n"), explode(col("pw")).as("w"))
-    println(s"[diag] prefix rows   = ${pref.count()}")
-    val pdf = pref.groupBy("w").agg(count(lit(1)).as("pdf"))
-    println("[diag] top prefix dfs:")
-    pdf.orderBy(desc("pdf")).limit(10).collect().foreach(r => println(s"  ${r}"))
-    val joinRows = pdf.agg(sum(col("pdf") * col("pdf"))).head().getLong(0)
-    println(s"[diag] sum pdf^2 (join rows upper bound) = $joinRows")
-    val p2 = pref.select(col("doc_id"), col("n"), col("w"))
-    val cand = p2.as("a").join(p2.as("b"),
-        col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id") &&
-          least(col("a.n"), col("b.n")).cast("double") >=
-            greatest(col("a.n"), col("b.n")) * t)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    println(s"[diag] cand rows (pre-dedup)  = ${cand.count()}")
-    println(s"[diag] cand pairs (deduped)   = ${cand.dropDuplicates("doc_a", "doc_b").count()}")
-    // ---- SET-level stats for the bitset path's (prefix, band) blocking
-    val sets = tok.groupBy("doc_id")
-      .agg(sort_array(collect_set("w")).as("ws"))
-      .groupBy("ws").agg(count(lit(1)).as("members"))
-      .select(col("ws"), size(col("ws")).cast("long").as("n"), col("members"))
-    println(s"[diag] distinct sets S        = ${sets.count()}")
-    val bandExpr = floor(log(col("n").cast("double")) / lit(math.log(1.0 / t)))
-    println("[diag] sets per size band:")
-    sets.groupBy(bandExpr.as("band")).agg(count(lit(1)).as("s"))
-      .orderBy("band").collect().foreach(r => println(s"  $r"))
-    // prefix of each distinct set = its (set-df asc, w asc)-rarest
-    // n - ceil(t*n) + 1 elements; measure the (prefix element, band) key
-    // distribution the bitset path's candidate join would see
-    val sdf = sets.select(explode(col("ws")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("sdf"))
-    val sid = sets.withColumn("sid", monotonically_increasing_id())
-    val spref = sid.select(col("sid"), col("n"), bandExpr.as("band"),
-        explode(col("ws")).as("w"))
-      .join(sdf, "w")
-      .groupBy("sid", "n", "band")
-      .agg(array_sort(collect_list(struct(col("sdf"), col("w")))).as("sw"))
-      .select(col("sid"), col("n"), col("band"),
-        explode(expr(s"transform(slice(sw, 1, cast(n - ((n * ${math.round(t*1e6)} + 999999) div 1000000) + 1 as int)), p -> p.w)")).as("pw"))
-    println(s"[diag] set prefix rows        = ${spref.count()}")
-    val keyDf = spref.groupBy("pw", "band").agg(count(lit(1)).as("kdf"))
-    println("[diag] top (prefix, band) key dfs:")
-    keyDf.orderBy(desc("kdf")).limit(10).collect().foreach(r => println(s"  $r"))
-    val est = keyDf.agg(sum(col("kdf") * col("kdf"))).head().getLong(0)
-    println(s"[diag] sum kdf^2 (same-band candidate rows, x3 for band+-1) = $est")
-  }
-
   private def clusterPieces(spark: SparkSession, dir: String): Unit = {
     (1 to 2).foreach { round =>
       println(s"[profile] --- clusters round $round ---")
@@ -193,7 +128,7 @@ object ProfileMain {
         .select(col("doc_id"),
           explode(graft.functions.TextFunctions.tokenSet(col("text"))).as("w")))
       val vocab = time("tok + vocab count") { tok.select("w").distinct().count() }
-      val (sets, pairs) = graft.queries.Llm.bitsetSetsAndPairs(tok, 0.9, vocab.toInt)
+      val (sets, pairs) = graft.queries.Llm.bitsetSetsAndPairs(tok, 0.9)
       val nSets = time("sets") { sets.count() }
       val nPairs = time("pairs") { pairs.filter(col("sa") =!= col("sb")).count() }
       println(s"[profile] vocab=$vocab sets=$nSets cross-set pairs=$nPairs")
@@ -210,10 +145,6 @@ object ProfileMain {
     }
   }
 
-  /** @rrf — decompose x3_rrf_fusion into its stages: index load, dense
-    * knnExact leg, lexical token materialization / posting intersection /
-    * per-query top-k, and the fused end-to-end query.
-    */
   /** Decompose containmentLshVerified's execution (the x2_containment_lsh /
     * _dedup engine): sets/sig construction, tier-1 same-stratum banding,
     * tier-2 cross-strata probing, exact verify, doc expansion — mirrors the
@@ -307,8 +238,11 @@ object ProfileMain {
     }
   }
 
+  /** @rrf — decompose x3_rrf_fusion into its stages: index load, dense
+    * knnExact leg, lexical token materialization, both lexical scorers,
+    * the lexical top-k leg, and the fused end-to-end query.
+    */
   private def rrfPieces(spark: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
     (1 to 2).foreach { round =>
       println(s"[profile] --- rrf round $round ---")
       val e = graft.Tables.load(spark, dir, "embeddings").select(col("vec_id"),
@@ -319,35 +253,19 @@ object ProfileMain {
         .select(col("vec_id").as("query_id"), col("v").as("qv"))
       time("dense leg knnExact k=20") {
         graft.operators.IvfIndex.knnExact(idx, qv, k = 20, nprobe = 3).count() }
-      val d = graft.Tables.load(spark, dir, "documents")
-      val tok = graft.Caches.persist(d.select(col("doc_id"),
-        explode(TF.tokenSet(col("text"))).as("w"),
-        size(TF.tokenSet(col("text"))).cast("long").as("nt")))
-      time("tok materialize") { tok.count() }
-      val qtok = tok.filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id").as("query_id"), col("w"), col("nt").as("nq"))
-      val inter = tok.join(broadcast(qtok), Seq("w"))
-        .filter(col("doc_id") =!= col("query_id"))
-        .groupBy(col("query_id"), col("doc_id").as("neighbor_id"))
-        .agg(count(lit(1)).as("i"), max("nt").as("nd"), max("nq").as("nq"))
-      time("lexical posting intersection") { inter.count() }
-      val wl = Window.partitionBy("query_id").orderBy(desc("jr_e9"), asc("neighbor_id"))
-      time("lexical topk") {
-        inter.withColumn("jr_e9", expr("i * 1000000000L div (nq + nd - i)"))
-          .withColumn("rank_lex", row_number().over(wl).cast("long"))
-          .filter(col("rank_lex") <= 20).count() }
+      val tok = graft.queries.Llm.lexicalTokens(
+        graft.Tables.load(spark, dir, "documents"))
+      val vocab = time("tok materialize + vocab count") {
+        tok.select("w").distinct().count() }
+      val pred = col("doc_id") % 50 === 0
+      time("lexical mask scores") {
+        graft.queries.Llm.lexicalMaskScores(tok, vocab, pred).count() }
+      time("lexical posting scores") {
+        graft.queries.Llm.lexicalPostingScores(tok, pred).count() }
       graft.Caches.drain(spark)
-      time("lexical leg: bitset dispatch") {
+      time("lexical leg top-k") {
         graft.queries.Llm.lexicalJaccardTopK(spark,
-          graft.Tables.load(spark, dir, "documents"),
-          col("doc_id") % 50 === 0, k = 20).count() }
-      graft.Caches.drain(spark)
-      spark.conf.set("graft.setsim.vocabThreshold", "0")
-      try time("lexical leg: posting dispatch") {
-        graft.queries.Llm.lexicalJaccardTopK(spark,
-          graft.Tables.load(spark, dir, "documents"),
-          col("doc_id") % 50 === 0, k = 20).count() }
-      finally spark.conf.unset("graft.setsim.vocabThreshold")
+          graft.Tables.load(spark, dir, "documents"), pred, k = 20).count() }
       graft.Caches.drain(spark)
       time("full query e2e") {
         SparkEntry.queries("x3_rrf_fusion")(spark, dir).count() }
@@ -376,19 +294,6 @@ object ProfileMain {
         "x1_lsh_clusters", "x4_mlm_mask", "x4_hash_embed",
         "x5_image_phash", "x5_phash_neardup", "x5_audio_fingerprint"))
 
-  /** @prefix — scaling sweep for the OPEN-VOCABULARY prefix-filtered path,
-    * on a corpus actually shaped like that regime: G topic groups, each
-    * with its own 192-token vocabulary (total vocab = 192·G ≫ 4096, so the
-    * dispatcher picks the prefix path on its own — no conf override) and
-    * 50 docs of 28 tokens sampled from the group vocabulary, plus planted
-    * near-dup pairs (1-token edits) and embedded snippets (6-token
-    * subsets). Scaling G scales docs AND vocabulary together — per-token
-    * fanout stays bounded (≈ docs-per-group), which is the property that
-    * makes prefix filtering sub-quadratic. Forcing the prefix path onto
-    * the driver corpus's ~31-token vocabulary instead measures its
-    * WORST case (every prefix token shared by thousands of docs) — that
-    * regime correctly dispatches to bitsets and is not measured here.
-    */
   /** Adversarial hot-band corpus: m IDENTICAL boilerplate docs (every one
     * lands in the same bucket of all 16 bands) + a distinct tail. Compares
     * the shipped distinct-set-collapsed LSH against the doc-level band join
@@ -574,6 +479,16 @@ object ProfileMain {
     graft.Caches.drain(spark)
   }
 
+  /** @prefix — scaling sweep for exact Jaccard and containment on an
+    * OPEN vocabulary: G topic groups, each with its own 192-token
+    * vocabulary (total vocab = 192·G ≫ 4096, so containment dispatches to
+    * its prefix plan on its own — no conf override) and 50 docs of 28
+    * tokens sampled from the group vocabulary, plus planted near-dup pairs
+    * (1-token edits) and embedded snippets (6-token subsets). Scaling G
+    * scales docs AND vocabulary together — per-token fanout stays bounded
+    * (≈ docs-per-group), which is the property that makes prefix
+    * filtering sub-quadratic.
+    */
   private def prefixSweep(spark: SparkSession, baseDir: String): Unit = {
     import spark.implicits._
     Seq(40, 80, 160, 320).foreach { groups =>
@@ -595,13 +510,17 @@ object ProfileMain {
           case _ => (id, base.mkString(" "))
         }
       }.toDF("doc_id", "text")
+        // out of the plan: a LocalRelation carries its rows in every
+        // analyzer pass, so each DataFrame step over it costs O(docs)
+        .localCheckpoint()
       val tok = graft.Caches.persist(docs.select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("w")))
       val vocabSize = tok.select("w").distinct().count()
       for ((label, run) <- Seq[(String, () => Long)](
-          ("jaccard", () => graft.queries.Llm.prefixJaccardPairs(tok, 0.7).count()),
+          ("jaccard", () =>
+            graft.queries.Llm.jaccardPairsForTest(spark, tok, 0.7).count()),
           ("containment", () =>
-            graft.queries.Llm.prefixContainmentPairs(tok, 9, 10).count()))) {
+            graft.queries.Llm.containmentPairsForTest(spark, tok, 9, 10).count()))) {
         val t = (1 to 2).map { _ =>
           val t0 = System.nanoTime()
           val n = run()
@@ -762,8 +681,8 @@ object ProfileMain {
         tok.select("w").distinct().count()
       }
       println(s"[profile] vocab=$vocab")
-      val (sets, pairs) = graft.queries.Llm.bitsetSetsAndPairs(tok, 0.7, vocab.toInt)
-      val nSets = time("sets (masks+collapse)") { sets.count() }
+      val (sets, pairs) = graft.queries.Llm.bitsetSetsAndPairs(tok, 0.7)
+      val nSets = time("sets (index arrays+collapse)") { sets.count() }
       println(s"[profile] distinct sets=$nSets")
       val nCand = time("candidate ids (gen+dedup)") {
         graft.queries.Llm.bitsetCandIds(sets, 0.7, identity).count()
@@ -775,18 +694,6 @@ object ProfileMain {
         SparkEntry.queries("x2_jaccard_bigram")(spark, dir).count()
       }
       println(s"[profile] output pairs=$nOut")
-      // prefix-path comparison only when its join bound is inside the
-      // dispatcher's budget: the r08 sf1 run measured this exact corpus
-      // shape filling the disk on the prefix path, and a profiler must not
-      // re-run the plan the dispatcher exists to avoid
-      val sumDf2 = tok.groupBy("w").agg(count(lit(1)).as("df"))
-        .agg(sum(col("df") * col("df"))).head().getLong(0)
-      println(s"[profile] sum df^2 = $sumDf2")
-      if (sumDf2 <= 200000000L) {
-        time("prefix path (for comparison)") {
-          graft.queries.Llm.prefixJaccardPairs(tok, 0.7).count()
-        }
-      } else println("[profile] prefix path skipped (sum df^2 over budget)")
       graft.Caches.drain(spark)
     }
   }

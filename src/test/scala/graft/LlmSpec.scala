@@ -12,49 +12,49 @@ class LlmSpec extends AnyFunSuite {
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sfDir)
 
-  test("vocabThreshold=0 forces the prefix path with identical results") {
-    // the adaptive set-similarity queries dispatch bitset-vs-prefix on a
-    // measured vocabulary count; overriding the threshold to 0 must swap
-    // the physical algorithm (open-vocabulary prefix filtering) without
-    // changing a single output row — the dispatcher is a pure plan choice
-    for (name <- Seq("x2_jaccard_exact", "x2_containment", "x1_dedup_clusters",
-        "x3_rrf_fusion")) {
-      val bitset = q(name).collect().toSeq
-      graft.Caches.drain(spark)
-      spark.conf.set("graft.setsim.vocabThreshold", "0")
-      val prefix = try q(name).collect().toSeq
-        finally spark.conf.unset("graft.setsim.vocabThreshold")
-      graft.Caches.drain(spark)
-      assert(prefix == bitset, s"$name: prefix path diverged from bitset path")
-    }
-  }
-
-  test("closed-vocab fallback (prefixJoinBudget=0) swaps the algorithm, " +
-      "not the answer") {
-    // the r08 sf1 dispatch stage: above the vocab threshold, a corpus whose
-    // sum(df^2) predicts a quadratic prefix join reroutes to the bitset
-    // NLJ. Force both routes on the same corpus (vocabThreshold=1 puts
-    // every query above the threshold; prefixJoinBudget 0 vs huge picks
-    // the branch) — identical rows is the dispatch-is-a-pure-plan-choice
-    // contract, same as the vocabThreshold=0 test above.
-    for (name <- Seq("x2_jaccard_exact", "x2_containment")) {
-      spark.conf.set("graft.setsim.vocabThreshold", "1")
-      val viaPrefix = try {
-        spark.conf.set("graft.setsim.prefixJoinBudget", Long.MaxValue.toString)
-        q(name).collect().toSeq
-      } finally spark.conf.unset("graft.setsim.prefixJoinBudget")
-      graft.Caches.drain(spark)
-      val viaBitset = try {
-        spark.conf.set("graft.setsim.prefixJoinBudget", "0")
-        q(name).collect().toSeq
-      } finally {
-        spark.conf.unset("graft.setsim.prefixJoinBudget")
-        spark.conf.unset("graft.setsim.vocabThreshold")
+  test("containment plans and lexical scorers emit identical rows on one corpus") {
+    // the containment dispatch and the lexical-leg dispatch are pure plan
+    // choices: each plan, called directly, must emit the same rows on a
+    // closed vocabulary (the sf0.001 word tokens) and an open one (its
+    // bigrams, plus a planted open-vocabulary snippet corpus)
+    import spark.implicits._
+    import graft.queries.Llm.ContainmentPlan
+    val docs = graft.Tables.load(spark, sfDir, "documents")
+    val rng = new scala.util.Random(29)
+    val bigs = (1L to 40L).map(i => i -> List.fill(30)(s"w${rng.nextInt(5000)}").distinct)
+    val snips = bigs.map { case (i, ws) => (i + 40L) -> ws.take(6) }
+    val corpora = Seq(
+      "words" -> docs.select(col("doc_id"), explode(TF.tokenSet(col("text"))).as("w")),
+      "bigrams" -> docs.select(col("doc_id"),
+        explode(NX.bigrams(TF.tokens(col("text")))).as("w")),
+      "open" -> (bigs ++ snips).flatMap { case (i, ws) => ws.map(w => (i, w)) }
+        .toDF("doc_id", "w"))
+    for ((name, tok) <- corpora; minRatio <- Seq(1, 2)) {
+      val rows = Seq(ContainmentPlan.Kernel, ContainmentPlan.Nlj,
+          ContainmentPlan.Prefix).map { plan =>
+        val r = graft.queries.Llm.containmentPairsSized(spark, tok, 9, 10,
+          minRatio, Some(plan)).collect().toSet
+        graft.Caches.drain(spark)
+        plan -> r
       }
-      graft.Caches.drain(spark)
-      assert(viaPrefix.nonEmpty && viaBitset == viaPrefix,
-        s"$name: bitset fallback diverged from the prefix path")
+      // sf0.001 has no bigram snippet pair with a 2× size gap
+      assert(rows.head._2.nonEmpty || (name == "bigrams" && minRatio == 2),
+        s"$name minRatio=$minRatio: no pairs")
+      rows.tail.foreach { case (plan, r) =>
+        assert(r == rows.head._2, s"$name minRatio=$minRatio: $plan diverged " +
+          s"from Kernel (missing=${(rows.head._2 -- r).take(3)} " +
+          s"extra=${(r -- rows.head._2).take(3)})")
+      }
     }
+    val tok = graft.queries.Llm.lexicalTokens(docs.select("doc_id", "text"))
+    val vocab = tok.select("w").distinct().count()
+    val pred = col("doc_id") % 7 === 0
+    val mask = graft.queries.Llm.lexicalMaskScores(tok, vocab, pred).collect().toSet
+    val posting = graft.queries.Llm.lexicalPostingScores(tok, pred).collect().toSet
+    graft.Caches.drain(spark)
+    assert(mask.nonEmpty && mask == posting,
+      s"lexical scorers diverged: missing=${(mask -- posting).take(3)} " +
+        s"extra=${(posting -- mask).take(3)}")
   }
 
   test("x4_quality_classifier: >=90% agreement with the gate it distills; " +

@@ -336,10 +336,43 @@ class NativeKernelsSpec extends AnyFunSuite {
     }
   }
 
+  test("raritySets' index join skips broadcast when jaccard=0, same sets") {
+    val docs = (1L to 60L).map { i =>
+      val words = (0 until 20).map(k => s"w${(i * 7 + k * 3) % 120}").distinct
+      (i, words.mkString(" "))
+    }.toDF("doc_id", "text")
+    val tok = docs.select(col("doc_id"),
+      explode(array_distinct(split(col("text"), " "))).as("w"))
+    val vocab = tok.select("w").distinct().count()
+    // (rows, the persisted set frame's own plan) — ds order is free
+    def build(): (Set[(Seq[Long], Long, Seq[Long], Long)], String) = {
+      val sets = graft.queries.Llm.raritySets(tok, vocab)
+      val rows = sets.collect().map(r => (r.getSeq[Long](0), r.getLong(1),
+        r.getSeq[Long](2).sorted, r.getLong(3))).toSet
+      // the scan of the persisted frame prints the plan that built it
+      val plan = sets.queryExecution.executedPlan.toString
+      graft.Caches.drain(spark)
+      (rows, plan)
+    }
+    val (base, basePlan) = build()
+    assert(basePlan.contains("BroadcastHashJoin"),
+      s"a 120-token index broadcasts by default; plan=\n$basePlan")
+    spark.conf.set("graft.broadcast.jaccard", "0")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val (gated, gatedPlan) = try build() finally {
+      spark.conf.unset("graft.broadcast.jaccard")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+    assert(!gatedPlan.contains("Broadcast"),
+      s"closed jaccard site must not broadcast the index; plan=\n$gatedPlan")
+    assert(base.nonEmpty && gated == base, "gated index join changed the sets")
+  }
+
   test("prefix-path Jaccard (open-vocabulary branch) agrees with naive") {
     val rng = new Random(23)
-    // open-ish vocabulary with planted near-dup pairs; call the prefix path
-    // DIRECTLY (the dispatcher would pick bitset at this vocab size)
+    // open-ish vocabulary with planted near-dup pairs, through both set-pair
+    // plans: the SetPairScan kernel (these sets fit its gate) and, with the
+    // kernel's site closed, the (prefix, size-band) blocking join
     val base = (1L to 40L).map { i =>
       i -> List.fill(30)(s"w${rng.nextInt(5000)}").distinct
     }
@@ -360,9 +393,14 @@ class NativeKernelsSpec extends AnyFunSuite {
     assert(naive.nonEmpty, "planted near-dups must qualify")
     val tok = docs.select(col("doc_id"),
       explode(array_distinct(split(col("text"), " "))).as("w"))
-    val got = graft.queries.Llm.prefixJaccardPairs(tok, 0.8)
+    def got() = try graft.queries.Llm.jaccardPairsForTest(spark, tok, 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == naive, s"missing=${naive -- got} extra=${got -- naive}")
+      finally graft.Caches.drain(spark)
+    val kernel = got()
+    assert(kernel == naive, s"missing=${naive -- kernel} extra=${kernel -- naive}")
+    spark.conf.set("graft.broadcast.pairscan", "0")
+    val blocked = try got() finally spark.conf.unset("graft.broadcast.pairscan")
+    assert(blocked == naive, s"missing=${naive -- blocked} extra=${blocked -- naive}")
   }
 
   /** Driver-side all-pairs containment reference: (doc_a, doc_b,
@@ -454,32 +492,30 @@ class NativeKernelsSpec extends AnyFunSuite {
     val all = base ++ snips ++ dups
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-    Seq(4096L, 0L).foreach { vt => // bitset path, then force-prefix path
-      spark.conf.set("graft.setsim.vocabThreshold", vt)
-      try {
-        val tok = all.flatMap { case (i, ws) => ws.map(w => (i, w)) }
-          .toDF("doc_id", "w")
-        val expect = graft.queries.Llm
-          .containmentPairsSized(spark, tok, 9, 10, minRatio = 1)
-          .filter(least(col("na"), col("nb")) * 2 <= greatest(col("na"), col("nb")))
-          .collect().map(key).toSet
-        graft.Caches.drain(spark)
-        val got = graft.queries.Llm
-          .containmentPairsSized(spark, tok, 9, 10, minRatio = 2)
-          .collect().map(key).toSet
-        graft.Caches.drain(spark)
-        assert(expect.nonEmpty, "planted snippets must survive the guard")
-        assert(got == expect,
-          s"vt=$vt missing=${expect -- got} extra=${got -- expect}")
-      } finally spark.conf.unset("graft.setsim.vocabThreshold")
+    import graft.queries.Llm.ContainmentPlan
+    val tok = all.flatMap { case (i, ws) => ws.map(w => (i, w)) }
+      .toDF("doc_id", "w")
+    Seq(ContainmentPlan.Prefix, ContainmentPlan.Nlj).foreach { plan =>
+      val expect = graft.queries.Llm
+        .containmentPairsSized(spark, tok, 9, 10, minRatio = 1, Some(plan))
+        .filter(least(col("na"), col("nb")) * 2 <= greatest(col("na"), col("nb")))
+        .collect().map(key).toSet
+      graft.Caches.drain(spark)
+      val got = graft.queries.Llm
+        .containmentPairsSized(spark, tok, 9, 10, minRatio = 2, Some(plan))
+        .collect().map(key).toSet
+      graft.Caches.drain(spark)
+      assert(expect.nonEmpty, "planted snippets must survive the guard")
+      assert(got == expect,
+        s"$plan missing=${expect -- got} extra=${got -- expect}")
     }
   }
 
   test("prefix-path containment (open-vocabulary branch) agrees with naive") {
     val rng = new Random(31)
     // open-ish vocabulary; snippets embedded in larger docs are the pairs a
-    // symmetric-length-filtered join would miss — call the prefix path
-    // DIRECTLY (the dispatcher would pick bitset at this vocab size)
+    // symmetric-length-filtered join would miss — call the prefix plan
+    // DIRECTLY (the dispatcher would pick an S² plan at this vocab size)
     val base = (1L to 40L).map { i =>
       i -> List.fill(30)(s"w${rng.nextInt(5000)}").distinct
     }
@@ -492,7 +528,8 @@ class NativeKernelsSpec extends AnyFunSuite {
     assert(naive.nonEmpty, "planted snippets must qualify")
     val tok = all.flatMap { case (i, ws) => ws.map(w => (i, w)) }
       .toDF("doc_id", "w")
-    val got = graft.queries.Llm.prefixContainmentPairs(tok, 9, 10)
+    val got = graft.queries.Llm.containmentPairsSized(spark, tok, 9, 10,
+        minRatio = 1, Some(graft.queries.Llm.ContainmentPlan.Prefix))
       .selectExpr("doc_a", "doc_b", "i * 10000 div least(na, nb)",
         "i * 10000 div (na + nb - i)")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -601,14 +638,15 @@ class NativeKernelsSpec extends AnyFunSuite {
     assert(naive.size >= 25, s"planted twins must qualify: ${naive.size}")
     val tok = all.flatMap { case (i, ws) => ws.map(w => (i, w)) }
       .toDF("doc_id", "w")
-    // exactness through the REAL path, forced onto the prefix branch (the
-    // dispatcher would pick bitsets at this vocabulary size)
-    spark.conf.set("graft.setsim.vocabThreshold", "0")
+    // exactness through the REAL path, with the SetPairScan kernel's site
+    // closed so the (prefix, size-band) join runs (the kernel would take
+    // these few sets)
+    spark.conf.set("graft.broadcast.pairscan", "0")
     val got = try {
       graft.queries.Llm.jaccardPairsForTest(spark, tok, t)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     } finally {
-      spark.conf.unset("graft.setsim.vocabThreshold")
+      spark.conf.unset("graft.broadcast.pairscan")
       graft.Caches.drain(spark)
     }
     assert(got == naive,
