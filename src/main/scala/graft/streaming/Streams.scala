@@ -1075,9 +1075,16 @@ object Streams {
         // `b`). The checkpoint also severs the forget/append plan chain —
         // one layer deeper per batch otherwise — and frees every frame the
         // fold registered via Caches.persist, so a long-running stream
-        // holds O(index) cached state instead of O(batches).
+        // holds O(index) cached state instead of O(batches). append's union
+        // adds the batch's shuffle partitions to the member table's, so the
+        // rebase coalesces back to the previous checkpoint's count. Without
+        // it every scan of the store ran 8 more tasks for each batch ever
+        // ingested (at 8 shuffle partitions): the per-batch latency drift
+        // the 100-batch soak test caught.
+        val assigned = prevCp.fold(cur.assigned)(p =>
+          cur.assigned.coalesce(p.assigned.rdd.getNumPartitions))
         cur = graft.operators.IvfIndex.Index(
-          cur.assigned.localCheckpoint(true), cur.cells.localCheckpoint(true))
+          assigned.localCheckpoint(true), cur.cells.localCheckpoint(true))
         // the new checkpoints are fully materialized — release the previous
         // batch's blocks NOW instead of waiting for a driver GC
         prevCp.foreach { p =>

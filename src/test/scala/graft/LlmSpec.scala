@@ -12,24 +12,13 @@ class LlmSpec extends AnyFunSuite {
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sfDir)
 
-  test("containment plans and lexical scorers emit identical rows on one corpus") {
-    // the containment dispatch and the lexical-leg dispatch are pure plan
-    // choices: each plan, called directly, must emit the same rows on a
-    // closed vocabulary (the sf0.001 word tokens) and an open one (its
-    // bigrams, plus a planted open-vocabulary snippet corpus)
-    import spark.implicits._
+  // containment's dispatch is a pure plan choice: every plan, called
+  // directly on the same token rows, must emit the same pairs at minRatio
+  // 1 and 2 (sf0.001 has no bigram snippet pair with a 2× size gap)
+  private def assertContainmentPlansAgree(name: String,
+      tok: org.apache.spark.sql.DataFrame): Unit = {
     import graft.queries.Llm.ContainmentPlan
-    val docs = graft.Tables.load(spark, sfDir, "documents")
-    val rng = new scala.util.Random(29)
-    val bigs = (1L to 40L).map(i => i -> List.fill(30)(s"w${rng.nextInt(5000)}").distinct)
-    val snips = bigs.map { case (i, ws) => (i + 40L) -> ws.take(6) }
-    val corpora = Seq(
-      "words" -> docs.select(col("doc_id"), explode(TF.tokenSet(col("text"))).as("w")),
-      "bigrams" -> docs.select(col("doc_id"),
-        explode(NX.bigrams(TF.tokens(col("text")))).as("w")),
-      "open" -> (bigs ++ snips).flatMap { case (i, ws) => ws.map(w => (i, w)) }
-        .toDF("doc_id", "w"))
-    for ((name, tok) <- corpora; minRatio <- Seq(1, 2)) {
+    for (minRatio <- Seq(1, 2)) {
       val rows = Seq(ContainmentPlan.Kernel, ContainmentPlan.Nlj,
           ContainmentPlan.Prefix).map { plan =>
         val r = graft.queries.Llm.containmentPairsSized(spark, tok, 9, 10,
@@ -37,7 +26,6 @@ class LlmSpec extends AnyFunSuite {
         graft.Caches.drain(spark)
         plan -> r
       }
-      // sf0.001 has no bigram snippet pair with a 2× size gap
       assert(rows.head._2.nonEmpty || (name == "bigrams" && minRatio == 2),
         s"$name minRatio=$minRatio: no pairs")
       rows.tail.foreach { case (plan, r) =>
@@ -46,6 +34,17 @@ class LlmSpec extends AnyFunSuite {
           s"extra=${(r -- rows.head._2).take(3)})")
       }
     }
+  }
+
+  test("vocabThreshold=0 forces the prefix path with identical results") {
+    // below the small-vocabulary bound both set-similarity dispatchers take
+    // their S² plan; a zero bound would force the open-vocabulary plans —
+    // containment's prefix join and the lexical leg's posting scorer. On a
+    // closed vocabulary (the sf0.001 word tokens) each forced plan must
+    // emit exactly the rows of the plan the dispatcher picks.
+    val docs = graft.Tables.load(spark, sfDir, "documents")
+    assertContainmentPlansAgree("words",
+      docs.select(col("doc_id"), explode(TF.tokenSet(col("text"))).as("w")))
     val tok = graft.queries.Llm.lexicalTokens(docs.select("doc_id", "text"))
     val vocab = tok.select("w").distinct().count()
     val pred = col("doc_id") % 7 === 0
@@ -55,6 +54,24 @@ class LlmSpec extends AnyFunSuite {
     assert(mask.nonEmpty && mask == posting,
       s"lexical scorers diverged: missing=${(mask -- posting).take(3)} " +
         s"extra=${(posting -- mask).take(3)}")
+  }
+
+  test("closed-vocab fallback (prefixJoinBudget=0) swaps the algorithm, " +
+      "not the answer") {
+    // above the small-vocabulary bound, a corpus whose Σdf² predicts a
+    // quadratic prefix join reroutes containment to the S² plans (kernel
+    // or NLJ). A zero budget would take that fallback on every corpus, so
+    // on open vocabularies — the sf0.001 bigrams and a planted snippet
+    // corpus — the fallback plans must emit exactly the prefix plan's rows.
+    import spark.implicits._
+    val docs = graft.Tables.load(spark, sfDir, "documents")
+    assertContainmentPlansAgree("bigrams", docs.select(col("doc_id"),
+      explode(NX.bigrams(TF.tokens(col("text")))).as("w")))
+    val rng = new scala.util.Random(29)
+    val bigs = (1L to 40L).map(i => i -> List.fill(30)(s"w${rng.nextInt(5000)}").distinct)
+    val snips = bigs.map { case (i, ws) => (i + 40L) -> ws.take(6) }
+    assertContainmentPlansAgree("open", (bigs ++ snips)
+      .flatMap { case (i, ws) => ws.map(w => (i, w)) }.toDF("doc_id", "w"))
   }
 
   test("x4_quality_classifier: >=90% agreement with the gate it distills; " +
