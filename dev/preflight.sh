@@ -25,9 +25,9 @@ fi
 # One artifact store: only IndexStore reads the artifact roots and tests an
 # entry's meta.json commit marker; only FileSwap defines the recursive delete.
 store='^src/main/scala/graft/sources/IndexStore\.scala:'
-check() { # <message> <pattern> <allowed-file regex>
+check() { # <message> <pattern> <allowed-file regex> [root, default src/main/scala]
   local hits
-  hits=$(grep -rnE "$2" src/main/scala | grep -Ev "$3" || true)
+  hits=$(grep -rnE "$2" "${4:-src/main/scala}" | grep -Ev "$3" || true)
   if [[ -n "$hits" ]]; then
     echo "[preflight] $1:" >&2
     echo "$hits" >&2
@@ -42,6 +42,15 @@ check "recursive delete defined outside FileSwap" 'def rm\(' '^src/main/scala/gr
 # dispatched by named constants — no set-similarity conf, no doc-level
 # prefix join.
 check "set-similarity conf or doc-level prefix join" 'graft\.setsim\.|prefixJaccardPairs' '^$'
+
+# One profiler: jobs and gate decisions are recorded by graft.QueryProfile,
+# the only SparkListener in the engine and its tests. Gate decisions are
+# never logged through session confs, and the listener-bus drain under
+# src/main keeps a name of its own (the benchmark's build compiles src/main
+# beside its own org.apache.spark.ListenerBusDrain).
+check "gate decision logged through a session conf" 'graft\.ivf\.(lastPairsPath|pairsPathLog|pairsPathSeq)' '^$' src
+check "SparkListener outside QueryProfile" 'new SparkListener' '^src/main/scala/graft/QueryProfile\.scala:' src
+check "ListenerBusDrain defined under src/main" 'object ListenerBusDrain' '^$' src/main
 
 # One top-k path: IvfIndex ranks every per-query list with the bounded
 # top-k aggregate (IvfIndex.topKPerQuery), never a window.

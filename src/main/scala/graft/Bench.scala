@@ -10,14 +10,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF: semicolon-separated key=value session confs for
-    // one-off ablations (e.g. graft.ivf.pairScanRatio=1000000000 to keep
-    // every pair query on the pruned cell-pair plan) — full runs leave it
-    // unset
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); spark.conf.set(k.trim, v.trim)
-      })
+    SparkEntry.applyConfEnv(spark)
     // stale index artifacts from older fmtVersions accumulate across
     // harness runs — prune once per run (current-version entries are kept)
     graft.sources.IndexStore.pruneStale(spark)

@@ -39,13 +39,18 @@ object Broadcasts {
     * `site`.
     */
   def fits(s: SparkSession, site: String, rows: Long, rowBytes: Long,
-      defaultBytes: Long): Boolean =
+      defaultBytes: Long): Boolean = {
+    val limit = limitBytes(s, site, defaultBytes)
     // checked multiply: byte estimates scale with corpus statistics
     // (e.g. vocabulary-width bitset rows), and a silent Long overflow
     // would flip the gate OPEN — the one direction it must never fail.
     // A product beyond Long.MaxValue bytes fits nowhere by definition.
-    try Math.multiplyExact(rows, rowBytes) <= limitBytes(s, site, defaultBytes)
-    catch { case _: ArithmeticException => false }
+    val ok = try Math.multiplyExact(rows, rowBytes) <= limit
+      catch { case _: ArithmeticException => false }
+    QueryProfile.decide(s, site, s"$rows rows x $rowBytes B, limit $limit B",
+      if (ok) "broadcast" else "no broadcast")
+    ok
+  }
 
   /** The gate itself: `broadcast` below the limit, `identity` above it —
     * drop-in for the `bs(frame)` pattern at every join site.

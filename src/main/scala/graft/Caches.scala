@@ -250,8 +250,8 @@ object Caches {
     * parquet reads and unpersisted derived frames.
     */
   def countOnce(df: DataFrame): Long = {
-    // UI/profiler attribution: gate-site statistics jobs are otherwise
-    // indistinguishable blips between the real stages (guide §1.5)
+    // UI/profile attribution: gate-site statistics jobs are otherwise
+    // indistinguishable blips between the real stages
     def labeled(body: => Long): Long = Caches.labeled(df.sparkSession,
       s"countOnce:${df.schema.fieldNames.take(4).mkString(",")}" +
         (if (df.storageLevel !=
@@ -284,7 +284,7 @@ object Caches {
   }
 
   /** Run `body` under a job description so gate/statistics jobs are
-    * attributable in the UI and the joblog profiler (guide §1.5). */
+    * attributable in the UI and in [[QueryProfile]]'s job records. */
   def labeled[T](s: SparkSession, desc: String)(body: => T): T = {
     val sc = s.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")

@@ -28,4 +28,17 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** SPARK_GRAFT_CONF: semicolon-separated key=value session confs for
+    * one-off ablations (e.g. graft.ivf.pairScanRatio=1000000000 keeps every
+    * pair query on the pruned cell-pair plan) and for dev/check.py runs
+    * that force a statistics-gated operator onto its non-default path
+    * (e.g. graft.hamming.bucketThreshold=0). Bench, Verify and ProfileMain
+    * apply it; full runs leave it unset.
+    */
+  def applyConfEnv(spark: SparkSession): Unit =
+    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
+      .foreach { kv =>
+        val Array(k, v) = kv.split("=", 2); spark.conf.set(k.trim, v.trim)
+      })
 }

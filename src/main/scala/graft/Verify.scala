@@ -18,14 +18,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF: semicolon-separated key=value session confs — used
-    // by dev/check.py --sf runs to FORCE a statistics-gated operator onto
-    // its non-default path (e.g. graft.hamming.bucketThreshold=0) and
-    // hash-match that plan against the same oracle
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); spark.conf.set(k.trim, v.trim)
-      })
+    SparkEntry.applyConfEnv(spark)
     new java.io.File(outDir).mkdirs()
     // stale index artifacts from older fmtVersions accumulate across
     // harness runs — prune once per run (current-version entries are kept)

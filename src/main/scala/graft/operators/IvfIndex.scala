@@ -231,25 +231,6 @@ object IvfIndex {
     superseded.size
   }
 
-  /** Record a pairsExact plan decision. `graft.ivf.lastPairsPath` keeps the
-    * most recent decision (the quick probe tests pin); because a query can
-    * call pairsExact several times — or two queries can share a session —
-    * every decision is ALSO appended (seq-numbered, bounded to the last 64)
-    * to `graft.ivf.pairsPathLog`, so an after-the-fact audit sees each
-    * call's choice instead of only whichever call planned last.
-    */
-  private def recordPairsPath(spark: SparkSession, entry: String): Unit =
-    synchronized {
-      spark.conf.set("graft.ivf.lastPairsPath", entry)
-      val seq = spark.conf.getOption("graft.ivf.pairsPathSeq")
-        .map(_.toLong).getOrElse(0L) + 1
-      spark.conf.set("graft.ivf.pairsPathSeq", seq.toString)
-      val prior = spark.conf.getOption("graft.ivf.pairsPathLog")
-        .map(_.split('\n').toSeq).getOrElse(Seq.empty)
-      spark.conf.set("graft.ivf.pairsPathLog",
-        (prior :+ s"#$seq $entry").takeRight(64).mkString("\n"))
-    }
-
   private def clampAcos(c: org.apache.spark.sql.Column) =
     acos(least(greatest(c, lit(-1.0)), lit(1.0)))
 
@@ -594,11 +575,12 @@ object IvfIndex {
       total > minRows &&
       graft.Broadcasts.fits(spark, "ivfPairs", total, rowBytes = 552,
         defaultBytes = 55L << 20)
-    // make the plan choice OBSERVABLE: tests pin it, and a bench run can be
-    // audited after the fact instead of inferring the path from timings
-    recordPairsPath(spark,
-      s"${if (takeBlock) "block" else "cellpair"} scanned=$scanned " +
-        s"total=$total ratio=${scanned.toDouble / math.max(1.0, total.toDouble * total.toDouble)}")
+    // make the plan choice OBSERVABLE: tests pin it, and a profiled run
+    // shows it instead of leaving the path to be inferred from timings
+    graft.QueryProfile.decide(spark, "pairsExact",
+      s"scanned=$scanned total=$total " +
+        s"ratio=${scanned.toDouble / math.max(1.0, total.toDouble * total.toDouble)}",
+      if (takeBlock) "block" else "cellpair")
     if (takeBlock) {
       // block scan over the same index members — identical norm and dot
       // expressions, so sim (and the surviving pair set, by exactness of

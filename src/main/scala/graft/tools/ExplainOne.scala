@@ -2,7 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev-only: print the optimized + physical plan of one registered query.
+/** Dev-only: print the profile (jobs and gate decisions) and the optimized
+  * + physical plan of one registered query.
   * Usage: sbt "runMain graft.tools.ExplainOne <sfDir> <query>"
   */
 object ExplainOne {
@@ -16,12 +17,11 @@ object ExplainOne {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val df = graft.SparkEntry.queries(name)(spark, sfDir)
-    df.collect()
-    // surface the pair-scan gate's recorded decisions when the query hit it
-    // (the seq-numbered log covers queries that call pairsExact repeatedly)
-    spark.conf.getOption("graft.ivf.pairsPathLog")
-      .foreach(p => println(s"==== graft.ivf.pairsPathLog:\n$p"))
+    // the run's jobs and gate decisions, then the plans they produced
+    val profile = graft.QueryProfile.query(spark)(
+      graft.SparkEntry.queries(name)(spark, sfDir))(df => { df.collect(); df })
+    println(profile.render(name))
+    val df = profile.result
     println(s"==== $name optimized ====")
     println(df.queryExecution.optimizedPlan.toString)
     println(s"==== $name physical ====")

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Build a k×-scaled replica of a testdata directory (default k=10: the
-  * sf1 point from sf0.1) for full-bench scale runs — every table, not just
-  * the LLM corpus (ProfileMain @scale covers that pair).
+  * sf1 point from sf0.1) for full-bench scale runs and query-list sweeps.
   *
   * Replication preserves the QUERY-RELEVANT structure instead of
   * manufacturing artifacts:
@@ -19,11 +18,11 @@ import org.apache.spark.sql.functions._
   *     windowed/sessionized plans feel the growth in group SIZE);
   *   - document tokens are suffixed `_r` per replica (disjoint vocabularies
   *     — no manufactured cross-replica near-dups) and embeddings are
-  *     circularly shifted (within-replica geometry exact), the same remaps
-  *     as ProfileMain's sweep.
+  *     circularly shifted (within-replica geometry exact).
   *
   * Usage: runMain graft.tools.ScaleCorpus [baseDir] [outDir] [k]
   * then:  SPARK_GRAFT_SF_DIR=<outDir> runMain graft.Bench
+  * or:    runMain graft.tools.ProfileMain <outDir> <query...>
   */
 object ScaleCorpus {
   def main(args: Array[String]): Unit = {
@@ -85,9 +84,9 @@ object ScaleCorpus {
     replicate("events")((d, r) =>
       d.select(id(r)("event_id"), col("ts"), id(r)("user_id"),
         col("event_type"), col("value"), col("props")))
-    // LLM corpus: ProfileMain @scale's token-suffix remap (disjoint
-    // vocabularies across replicas — no manufactured token-level near-dups)
-    // PLUS an r-char leading pad token: byte-level fingerprints (image row
+    // LLM corpus: a token-suffix remap (disjoint vocabularies across
+    // replicas — no manufactured token-level near-dups) PLUS an r-char
+    // leading pad token: byte-level fingerprints (image row
     // hashes, audio frame energies, video luma sums) window the raw bytes,
     // and un-shifted replicas of one doc differ by a single digit per
     // token — hamming-2 "near-dups" the corpus never asked for. The pad

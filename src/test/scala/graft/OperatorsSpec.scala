@@ -90,35 +90,23 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("ConnectedComponents resolves on the driver AT its edge threshold " +
       "and in the distributed loop one edge over it") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (vertices, edges, expect) = ccGraph
-    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).foreach(labels.add)
-    }
     // the distributed loop labels its convergence jobs "cc:init"/"cc:iter<i>"
     def run(threshold: Long): (Seq[(Long, Long)], Boolean) = {
       spark.conf.set("graft.cc.driverThreshold", threshold)
-      labels.clear()
       try {
-        val r = graft.operators.ConnectedComponents(vertices, edges)
-          .orderBy("id").as[(Long, Long)].collect().toSeq
-        org.apache.spark.ListenerBusDrain(spark.sparkContext)
-        (r, labels.contains("cc:init"))
+        val p = graft.QueryProfile.of(spark)(graft.operators.ConnectedComponents(
+          vertices, edges).orderBy("id").as[(Long, Long)].collect().toSeq)
+        (p.result, p.jobs.exists(_.label == "cc:init"))
       } finally spark.conf.unset("graft.cc.driverThreshold")
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val e = edges.count()
-      val (atThreshold, loopAt) = run(e)
-      assert(atThreshold == expect)
-      assert(!loopAt, s"$e edges at threshold $e must resolve on the driver")
-      val (overThreshold, loopOver) = run(e - 1)
-      assert(overThreshold == expect)
-      assert(loopOver, s"$e edges over threshold ${e - 1} must take the loop")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val e = edges.count()
+    val (atThreshold, loopAt) = run(e)
+    assert(atThreshold == expect)
+    assert(!loopAt, s"$e edges at threshold $e must resolve on the driver")
+    val (overThreshold, loopOver) = run(e - 1)
+    assert(overThreshold == expect)
+    assert(loopOver, s"$e edges over threshold ${e - 1} must take the loop")
   }
 
   test("AsOfJoin attaches the whole right row atomically when carried columns hold nulls") {
@@ -673,9 +661,8 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     spark.conf.set("graft.ivf.cacheDir", root.getPath)
     try {
       graft.Caches.countOnce(e)
-      val jobs = SparkTestSession.jobsOf {
-        graft.operators.IvfIndex.loadOrBuild(e, key = "build-jobs")
-      }
+      val jobs = graft.QueryProfile.of(spark)(
+        graft.operators.IvfIndex.loadOrBuild(e, key = "build-jobs")).jobs.size
       info(s"cold build + save: $jobs jobs")
       assert(jobs == 18, s"cold build + save ran $jobs jobs")
     } finally {
@@ -920,21 +907,26 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     graft.Caches.drain(spark)
   }
 
-  test("IvfIndex.pairsExact records its plan choice in graft.ivf.lastPairsPath") {
+  test("IvfIndex.pairsExact records its plan choice as a profile decision") {
     val rng = new scala.util.Random(29)
     val e = (0L until 150L).map(i => (i, Seq.fill(6)(rng.nextGaussian())))
       .toDF("vec_id", "v")
     val idx = graft.operators.IvfIndex.build(e)
+    // the plan pairsExact chose on this call, as its profile recorded it
+    def path(idx: graft.operators.IvfIndex.Index, t: Double): String = {
+      val d = graft.QueryProfile.of(spark)(graft.operators.IvfIndex.pairsExact(idx, t)
+        .count()).decisions.filter(_.site == "pairsExact")
+      assert(d.size == 1, s"one pairsExact call must record one decision: $d")
+      s"${d.head.chosen} ${d.head.input}"
+    }
     // the row floor would veto block on these tiny fixtures — disable it so
     // the ratio logic is the thing under test (its own default is pinned
     // separately below)
     spark.conf.set("graft.ivf.blockMinRows", "0")
     def pathAfter(ratio: String): String = {
       spark.conf.set("graft.ivf.pairScanRatio", ratio)
-      try {
-        graft.operators.IvfIndex.pairsExact(idx, 0.6).count()
-        spark.conf.get("graft.ivf.lastPairsPath")
-      } finally spark.conf.unset("graft.ivf.pairScanRatio")
+      try path(idx, 0.6)
+      finally spark.conf.unset("graft.ivf.pairScanRatio")
     }
     assert(pathAfter("0.0").startsWith("block "),
       "ratio=0 must record the block-scan path")
@@ -944,10 +936,9 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // widen every radius until pruning dies (the r09 sf3 full-bench
     // regression was this gate NOT engaging) -> block; tight clusters
     // prune nearly everything -> cellpair
-    graft.operators.IvfIndex.pairsExact(idx, 0.6).count()
-    assert(spark.conf.get("graft.ivf.lastPairsPath").startsWith("block "),
-      s"default ratio must take the block scan on isotropic data: " +
-        spark.conf.get("graft.ivf.lastPairsPath"))
+    val isotropic = path(idx, 0.6)
+    assert(isotropic.startsWith("block "),
+      s"default ratio must take the block scan on isotropic data: $isotropic")
     val rng2 = new scala.util.Random(31)
     val centers = Seq.fill(12)(Array.fill(6)(rng2.nextGaussian() * 3))
     val clustered = (0L until 240L).map { i =>
@@ -955,19 +946,17 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       (i, c.map(x => x + rng2.nextGaussian() * 0.02).toSeq)
     }
     val cidx = graft.operators.IvfIndex.build(clustered.toDF("vec_id", "v"))
-    graft.operators.IvfIndex.pairsExact(cidx, 0.95).count()
-    assert(spark.conf.get("graft.ivf.lastPairsPath").startsWith("cellpair "),
-      s"default gate must keep the pruned cell-pair plan on clustered data: " +
-        spark.conf.get("graft.ivf.lastPairsPath"))
+    val tight = path(cidx, 0.95)
+    assert(tight.startsWith("cellpair "),
+      s"default gate must keep the pruned cell-pair plan on clustered data: $tight")
     spark.conf.unset("graft.ivf.blockMinRows")
     // the ROW FLOOR's default: on a corpus below graft.ivf.blockMinRows the
     // NLJ's constants lose to the cell-pair plan even at ratio 1.0
     // (measured: 3.99 s vs 8.6 s at the 10x point), so dead pruning alone
     // must NOT flip a small corpus to block
-    graft.operators.IvfIndex.pairsExact(idx, 0.6).count()
-    assert(spark.conf.get("graft.ivf.lastPairsPath").startsWith("cellpair "),
-      s"default row floor must keep small corpora on the cell-pair plan: " +
-        spark.conf.get("graft.ivf.lastPairsPath"))
+    val small = path(idx, 0.6)
+    assert(small.startsWith("cellpair "),
+      s"default row floor must keep small corpora on the cell-pair plan: $small")
     graft.Caches.drain(spark)
   }
 
@@ -1128,39 +1117,30 @@ class OperatorsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("Caches.countOnce runs ONE count job per distinct input per session") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val docs = graft.Tables.load(spark, SparkTestSession.sfDir, "documents")
     graft.Caches.invalidateCounts(spark)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    // the count jobs each call submits from this thread, as its profile saw
+    def counted(df: org.apache.spark.sql.DataFrame): (Long, Int) = {
+      val p = graft.QueryProfile.of(spark)(graft.Caches.countOnce(df))
+      (p.result, p.jobs.size)
     }
-    // listener events are async; the bus drains in ms once jobs finish
-    def settle(): Int = { Thread.sleep(500); jobs.get() }
     // two separately-CONSTRUCTED but plan-identical frames — the memo
     // key is the canonicalized analyzed plan, not object identity. Both
-    // are built BEFORE the listener attaches: spark.read.parquet runs its
-    // own eager file-listing/schema job which is not the count under test.
+    // are built outside the profiles: a first read of a path may run its
+    // own schema job, which is not the count under test.
     val f1 = docs.select("doc_id", "text")
     val f2 = graft.Tables.load(spark, SparkTestSession.sfDir, "documents")
       .select("doc_id", "text")
     val f3 = docs.select("doc_id", "text").filter("doc_id % 2 = 0")
-    spark.sparkContext.addSparkListener(listener)
     try {
-      val n1 = graft.Caches.countOnce(f1)
-      val after1 = settle()
-      assert(after1 >= 1, "first countOnce must run a real count job")
-      val n2 = graft.Caches.countOnce(f2)
+      val (n1, jobs1) = counted(f1)
+      assert(jobs1 >= 1, "first countOnce must run a real count job")
+      val (n2, jobs2) = counted(f2)
       assert(n2 == n1)
-      assert(settle() == after1,
-        "second countOnce over the same input re-ran the count job")
+      assert(jobs2 == 0, "second countOnce over the same input re-ran the count job")
       // a DIFFERENT input misses the memo and pays its own scan
-      val n3 = graft.Caches.countOnce(f3)
-      assert(n3 < n1 && settle() > after1)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      graft.Caches.invalidateCounts(spark)
-    }
+      val (n3, jobs3) = counted(f3)
+      assert(n3 < n1 && jobs3 > 0)
+    } finally graft.Caches.invalidateCounts(spark)
   }
 }

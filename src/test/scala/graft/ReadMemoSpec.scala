@@ -18,7 +18,7 @@ class ReadMemoSpec extends AnyFunSuite {
     finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 
-  private def jobsOf(body: => Unit): Int = SparkTestSession.jobsOf(body)
+  private def jobsOf(body: => Unit): Int = QueryProfile.of(spark)(body).jobs.size
 
   test("a second build of each retrieval query launches no job") {
     val old = spark.conf.getOption("graft.ivf.cacheDir")

@@ -22,10 +22,8 @@ class RetrievalJobsSpec extends AnyFunSuite {
       val q = SparkEntry.queries(name)
       val cold = q(spark, SparkTestSession.sfDir).collect()
       Caches.drain(spark)
-      var warm: Array[org.apache.spark.sql.Row] = null
-      val jobs = SparkTestSession.jobsOf {
-        warm = q(spark, SparkTestSession.sfDir).collect()
-      }
+      val p = QueryProfile.of(spark)(q(spark, SparkTestSession.sfDir).collect())
+      val (warm, jobs) = (p.result, p.jobs.size)
       Caches.drain(spark)
       info(s"$name: $jobs jobs")
       assert(warm.nonEmpty && warm.toSeq == cold.toSeq, name)

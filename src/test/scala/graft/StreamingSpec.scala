@@ -1977,7 +1977,6 @@ class StreamingSpec extends AnyFunSuite {
   test("curation pipeline: steady batches fit Spark's codegen cache and a " +
       "per-batch job budget") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.functions.col
     // Spark caches compiled classes by (class loader, source text) in a
     // 100-entry LRU of four segments. A batch whose plans generate more
@@ -1992,24 +1991,15 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, String)](spark)
     val q = Streams.curationPipelineSink(
       in.toDF().toDF("doc_id", "text"), s"$dir/out", s"$dir/ckpt", t = 0.9)
-    // the stream runs every batch's jobs under its run id as job group
-    val runId = q.runId.toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            js.properties.getProperty("spark.jobGroup.id") == runId)
-          jobs.incrementAndGet()
-    }
     def compilations = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    spark.sparkContext.addSparkListener(listener)
     try {
       warm.foreach { c => in.addData(c.toSeq); q.processAllAvailable() }
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      val (jobs0, comp0) = (jobs.get(), compilations)
-      steady.foreach { c => in.addData(c.toSeq); q.processAllAvailable() }
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      val jobsPerBatch = (jobs.get() - jobs0).toDouble / steady.length
+      val comp0 = compilations
+      // the stream runs every batch's jobs under its run id as job group
+      val steadyJobs = graft.QueryProfile.of(spark, group = Some(q.runId.toString)) {
+        steady.foreach { c => in.addData(c.toSeq); q.processAllAvailable() }
+      }.jobs.size
+      val jobsPerBatch = steadyJobs.toDouble / steady.length
       val compPerBatch = (compilations - comp0).toDouble / steady.length
       info(f"steady batch: $jobsPerBatch%.1f jobs, $compPerBatch%.1f compilations")
       // Measured: 25 jobs; 0.4 compilations, or 23 in the ~1 in 10 test
@@ -2021,9 +2011,6 @@ class StreamingSpec extends AnyFunSuite {
         s"$compPerBatch compilations per steady batch: the sink's plans " +
           "no longer fit the codegen cache")
       assert(jobsPerBatch <= 30, s"$jobsPerBatch jobs per steady batch")
-    } finally {
-      q.stop()
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally q.stop()
   }
 }
