@@ -52,6 +52,10 @@ check "gate decision logged through a session conf" 'graft\.ivf\.(lastPairsPath|
 check "SparkListener outside QueryProfile" 'new SparkListener' '^src/main/scala/graft/QueryProfile\.scala:' src
 check "ListenerBusDrain defined under src/main" 'object ListenerBusDrain' '^$' src/main
 
+# One state log: the curation sink keeps its four state families in
+# `_state/log`; the per-family directories it replaced are never written.
+check "per-family curation state directory (use the state log)" '_state/(digests|toks|memrep|crej)' '^$'
+
 # One top-k path: IvfIndex ranks every per-query list with the bounded
 # top-k aggregate (IvfIndex.topKPerQuery), never a window.
 ranked=$(grep -nE 'row_number|Window\.' src/main/scala/graft/operators/IvfIndex.scala || true)

@@ -583,7 +583,7 @@ object Streams {
         graft.operators.HammingJoin.blockIds(4).as("blk"))
       .withColumn("key", graft.operators.HammingJoin.blockKeyFor(
         col("corpus_fp"), col("blk"), 4)),
-      blocksBytes = corpus.count() * 4 * 40L)
+      blocksBytes = graft.Caches.countOnce(corpus) * 4 * 40L)
   }
 
   /** [[simhashIndex]] behind the build-once store — blocks sharded by the
@@ -656,7 +656,7 @@ object Streams {
         graft.operators.HammingJoin.blockIds(3).as("blk"))
       .withColumn("key", graft.operators.HammingJoin.blockKeyFor(
         col("corpus_fp"), col("blk"), 3)),
-      blocksBytes = corpusWithPpm.count() * 3 * 40L)
+      blocksBytes = graft.Caches.countOnce(corpusWithPpm) * 3 * 40L)
   }
 
   /** [[phashIndex]] behind the build-once store — a restart re-reads the
@@ -725,7 +725,7 @@ object Streams {
         graft.operators.HammingJoin.blockIds(3).as("blk"))
       .withColumn("key", graft.operators.HammingJoin.blockKeyFor(
         col("corpus_fp"), col("blk"), 3)),
-      blocksBytes = corpusWithY4m.count() * 3 * 40L)
+      blocksBytes = graft.Caches.countOnce(corpusWithY4m.toDF()) * 3 * 40L)
   }
 
   /** [[videoIndex]] behind the build-once store — a restart re-reads the
@@ -1300,7 +1300,6 @@ object Streams {
       }
       .start()
 
-  /** Batch-id subdirectories of a state dir (names `batch_id=N`). */
   /** List the committed `batch_id=N` generations under `path`, HEALING any
     * crashed maintenance first so readers never see a torn compaction:
     * (a) a `batch_id=N.old` left by a kill mid-FileSwap is renamed back
@@ -1351,26 +1350,34 @@ object Streams {
     */
   private def readStateBefore(s: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType,
-      batchId: Long): DataFrame = {
-    val prior = stateBatchIds(s, path).filter(_ < batchId)
-    if (prior.isEmpty)
+      batchId: Long): DataFrame =
+    readGenerations(s, path, schema, stateBatchIds(s, path).filter(_ < batchId))
+
+  /** Read the named `batch_id=N` generations of a state dir, or an empty
+    * frame with `schema` when there are none. */
+  private def readGenerations(s: SparkSession, path: String,
+      schema: org.apache.spark.sql.types.StructType,
+      gens: Seq[Long]): DataFrame =
+    if (gens.isEmpty)
       s.createDataFrame(s.sparkContext
         .emptyRDD[org.apache.spark.sql.Row], schema)
     else s.read.schema(schema)
-      .parquet(prior.map(b => s"$path/batch_id=$b"): _*)
-  }
+      .parquet(gens.map(b => s"$path/batch_id=$b"): _*)
 
-  /** Read the LATEST snapshot generation strictly before `batchId` from a
-    * snapshot-per-batch state dir (the member->rep map), or empty.
+  /** The curation sink's state log, `path/_state/log/batch_id=N`: one
+    * parquet file per generation of rows tagged by `family` — `digests`
+    * (h), `toks` (member_id, nb, w), `memrep` (member_id, rep_id) and
+    * `crej` (doc_id) — each carrying `g`, the generation that wrote it.
+    * `g` is a string so that the batch id reaches generated code as a
+    * reference, not an inlined constant: the batch's classes then stay
+    * the same from one batch to the next.
     */
-  private def readSnapshotBefore(s: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType,
-      batchId: Long): DataFrame = {
-    val prior = stateBatchIds(s, path).filter(_ < batchId)
-    if (prior.isEmpty)
-      s.createDataFrame(s.sparkContext
-        .emptyRDD[org.apache.spark.sql.Row], schema)
-    else s.read.schema(schema).parquet(s"$path/batch_id=${prior.max}")
+  private val curationLog = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("family", StringType), StructField("g", StringType),
+      StructField("h", StringType), StructField("member_id", LongType),
+      StructField("nb", LongType), StructField("w", StringType),
+      StructField("rep_id", LongType), StructField("doc_id", LongType)))
   }
 
   /** COMPOSED streaming curation pipeline — the streaming twin of the batch
@@ -1391,8 +1398,7 @@ object Streams {
     * only accumulate), so streaming decisions are monotone and match the
     * batch funnel on every prefix. Candidates ride the near-dup stage's
     * own inverted-token join (one extra filter pass, no new join); the
-    * containment-rejected registry (`_state/crej`) is the fourth state
-    * family, log-structured like the digest registry.
+    * containment-rejected registry is the fourth state family.
     *
     * Per batch the body builds few, stable physical plans — one eager
     * checkpoint per stage, batch-bounded join sides broadcast — so their
@@ -1417,25 +1423,30 @@ object Streams {
     * it (the standard compaction/tombstone reconciliation of streaming
     * dedup stores), so current survivors = admitted − retracted, exactly.
     *
-    * State is parquet-backed under `path/_state`: the digest registry
-    * (16-byte keys — at 100 TB the same GB-scale digest shuffle as
-    * x1_dedup_exact; on a cluster a compacted keyed store), the keepers'
-    * token inversion (w -> member) for the candidate join (grows by
-    * distinct texts — the post-exact-dedup corpus), and the member->rep
-    * cluster map (one row per keeper, rewritten as a snapshot per batch —
-    * rep-level, small; the object-store analog is a compacted changelog).
-    * Candidate generation via the shared-token inverted join is the
-    * funnel's own sub-quadratic prefix shape; the scale path swaps in the
-    * banded MinHash index ([[corpusIndex]]/[[nearDupScreen]]) with
-    * identical verify semantics. State is RETRY-IDEMPOTENT the
-    * way a log-structured store is: every batch commits each state family
-    * to its own `batch_id=N` generation with overwrite, and a batch reads
-    * only generations strictly BEFORE itself — so a replayed batch (crash
-    * after a state write, before the epoch commit) recomputes from exactly
-    * the pre-batch state instead of anti-joining away its own failed
-    * attempt's digests. The member->rep map reads the latest prior
-    * snapshot; superseded generations are reclaimable like Snapshot's
-    * vacuum.
+    * State is ONE parquet log, `path/_state/log` (see [[curationLog]]),
+    * holding four families: the digest registry (16-byte keys — at 100 TB
+    * the same GB-scale digest shuffle as x1_dedup_exact; on a cluster a
+    * compacted keyed store), the keepers' token inversion (w -> member)
+    * for the candidate join (grows by distinct texts — the post-exact-
+    * dedup corpus), the member->rep cluster map (one row per keeper,
+    * rewritten as a snapshot per batch — rep-level, small; the object-
+    * store analog is a compacted changelog), and the containment-rejected
+    * registry. Candidate generation via the shared-token inverted join is
+    * the funnel's own sub-quadratic prefix shape; the scale path swaps in
+    * the banded MinHash index ([[corpusIndex]]/[[nearDupScreen]]) with
+    * identical verify semantics. State is RETRY-IDEMPOTENT the way a
+    * log-structured store is: every batch commits one generation,
+    * `batch_id=N`, with overwrite, and a batch reads only generations
+    * strictly BEFORE itself — so a replayed batch (crash after the state
+    * write, before the epoch commit) recomputes from exactly the pre-batch
+    * state instead of anti-joining away its own failed attempt's digests.
+    * The member->rep map is read from the latest prior generation only;
+    * [[curationStateCompact]] folds the rest.
+    *
+    * Per batch the sink writes twice, both from checkpointed frames: the
+    * state generation, then the decisions. A path still holding the
+    * per-family state directories this log replaced fails the first
+    * batch: read as an empty log, it would re-admit every earlier doc.
     *
     * Decision parity with the batch funnel (pinned in StreamingSpec): at
     * EVERY batch, the cumulative survivor sets of all three gates equal
@@ -1455,22 +1466,23 @@ object Streams {
       // containment stage threshold, integer num/den like the batch twin
       cNum: Int = 9, cDen: Int = 10,
       // test seam: invoked after each durable write of a batch —
-      // ("digests" | "toks" | "memrep" | "crej" | "decisions") — the
-      // injection points for the kill-mid-batch recovery golden in StreamingSpec
+      // ("state" | "decisions") — the injection points for the
+      // kill-mid-batch recovery golden in StreamingSpec
       onBatchProgress: (Long, String) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.types._
-    val digestSchema = StructType(Seq(StructField("h", StringType)))
-    val tokSchema = StructType(Seq(StructField("member_id", LongType),
-      StructField("nb", LongType), StructField("w", StringType)))
-    val repSchema = StructType(Seq(StructField("member_id", LongType),
-      StructField("rep_id", LongType)))
-    val crejSchema = StructType(Seq(StructField("doc_id", LongType)))
+    val logDir = s"$path/_state/log"
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         val TF = graft.functions.TextFunctions
+        val legacy = Seq("digests", "toks", "memrep", "crej")
+          .map(f => new java.io.File(s"$path/_state", f)).filter(_.exists)
+        if (legacy.nonEmpty) throw new IllegalStateException(
+          s"$path/_state holds per-family state directories " +
+            s"(${legacy.mkString(", ")}): the curation sink now keeps one " +
+            s"state log in $logDir and cannot read that layout. Start it on " +
+            "a new path and replay the stream from its source.")
         // the batch-scoped localCheckpoints are released in the finally
         // below even when the batch DIES mid-write (the crash-injection
         // tests keep the JVM alive, and a real foreachBatch failure is
@@ -1496,23 +1508,33 @@ object Streams {
             df.localCheckpoint(true))
           checkpointed += c; c
         }
-        def write(family: String, dir: String)(df: DataFrame): Unit = {
-          graft.Caches.labeled(s, s"curation:w:$family")(
-            df.write.mode("overwrite").parquet(s"$path/$dir/batch_id=$batchId"))
-          onBatchProgress(batchId, family)
+        def write(stage: String, dir: String)(df: DataFrame): Unit = {
+          graft.Caches.labeled(s, s"curation:w:$stage")(
+            df.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId"))
+          onBatchProgress(batchId, stage)
         }
+        // one family's rows in the log's schema: absent columns are null
+        def tagged(family: String, df: DataFrame): DataFrame =
+          df.select(curationLog.fields.toSeq.map(f => f.name match {
+            case "family" => lit(family).as(f.name)
+            case "g" => lit(batchId.toString).as(f.name)
+            case n if df.columns.contains(n) => col(n).cast(f.dataType)
+            case n => lit(null).cast(f.dataType).as(n)
+          }): _*)
         try {
+        val prior = stateBatchIds(s, logDir).filter(_ < batchId)
+        val log = readGenerations(s, logDir, curationLog, prior)
+        def family(f: String) = log.filter(col("family") === f)
         val in = cp("in")(batch.select("doc_id", "text"))
         // stages 1+2: quality — the funnel's own predicate — then exact
         // dedup: the min-id keeper per text (the funnel groups by its md5
         // digest; every text in a digest group is the same text), anti-
         // joined against the cumulative digest registry. A keeper carries
         // its token set, the only part of the text later stages read.
-        val seen = readStateBefore(s, s"$path/_state/digests", digestSchema, batchId)
         val keepers = cp("keepers")(in.filter(graft.queries.Llm.qualityPredicate)
           .groupBy("text").agg(min("doc_id").as("doc_id"))
           .withColumn("h", md5(col("text")))
-          .join(seen, Seq("h"), "left_anti")
+          .join(family("digests").select("h"), Seq("h"), "left_anti")
           .select(col("doc_id"), col("h"), TF.tokenSet(col("text")).as("ws")))
         // stage 3: near-dup and containment share ONE tagged inverted-token
         // join — each batch keeper (a, na) against the prior keepers' tokens
@@ -1521,8 +1543,9 @@ object Streams {
         // pair; nothing else leaves the join.
         val batchToks = keepers.select(col("doc_id"),
           size(col("ws")).cast("long").as("n"), explode(col("ws")).as("w"))
-        val stateToks = readStateBefore(s, s"$path/_state/toks", tokSchema, batchId)
-        val memRep = readSnapshotBefore(s, s"$path/_state/memrep", repSchema, batchId)
+        // the member->rep map is a snapshot: the latest prior generation's
+        val memRep = family("memrep").filter(col("g") === prior.maxOption.mkString)
+          .select("member_id", "rep_id")
         val (na, nb, i) = (col("na"), col("nb"), col("i"))
         val near = i.cast("double") / (na + nb - i).cast("double") >= t
         // stage 3.5's SNIPPET rule — the batch twin's
@@ -1533,7 +1556,7 @@ object Streams {
         val snippet = least(na, nb) * 2 <= greatest(na, nb) &&
           i * cDen >= least(na, nb) * cNum
         val hits = cp("hits")(broadcast(batchToks.toDF("a", "na", "w"))
-          .join(stateToks.select(col("member_id").as("b"), nb, col("w"),
+          .join(family("toks").select(col("member_id").as("b"), nb, col("w"),
               lit(false).as("cur"))
             .union(batchToks.select(col("doc_id").as("b"), col("n").as("nb"),
               col("w"), lit(true).as("cur"))), "w")
@@ -1545,14 +1568,15 @@ object Streams {
           .join(memRep, col("b") === col("member_id") && !col("cur"), "left")
           .select(col("a"), na, col("b"), nb, col("cur"), i,
             when(near, when(col("cur"), col("b")).otherwise(col("rep_id"))).as("rep")))
-        // the contained doc is the smaller side; isNew = it is this batch's.
-        // Containers are ALL keepers, a per-pair time-stable predicate, so
-        // the stream applies it monotonically: later batches only ADD
-        // rejections and retractions.
-        val contained = cp("contained")(hits.filter(snippet)
-          .select(when(na < nb, col("a")).otherwise(col("b")).as("doc_id"),
-            (col("cur") || na < nb).as("isNew"))
-          .coalesce(1).distinct())
+        // the contained doc is the smaller side: a batch keeper (rejected)
+        // or a prior doc (retracted). Containers are ALL keepers, a per-pair
+        // time-stable predicate, so the stream applies it monotonically:
+        // later batches only ADD rejections and retractions. A cheap filter
+        // of `hits` that `out` broadcasts once for both uses (the two joins
+        // share one exchange), so it is not checkpointed.
+        val contained = hits.filter(snippet)
+          .select(when(na < nb, col("a")).otherwise(col("b")).as("doc_id"))
+          .coalesce(1).distinct()
         val edges = hits.filter(col("rep").isNotNull)
           .select(col("a").as("src"), col("rep").as("dst"))
         // contracted-graph CC: component label = min id = the funnel's
@@ -1564,19 +1588,15 @@ object Streams {
           .join(broadcast(keepers.select(col("doc_id").as("id"), lit(true).as("kept"))),
             Seq("id"), "left")
           .select(col("id"), col("component"), col("kept").isNotNull.as("kept")))
-        // stage 4: extend state — ALL new keeper digests + token rows
-        // (cluster membership must stay matchable through dropped members),
-        // and the member->rep snapshot remapped through this batch's CC
-        write("digests", "_state/digests")(keepers.select("h"))
-        write("toks", "_state/toks")(batchToks.select(col("doc_id").as("member_id"),
-          col("n").as("nb"), col("w")))
+        // the member->rep snapshot remapped through this batch's CC;
+        // `prior` marks the members of earlier batches
         val remapped = cp("remapped")(memRep
           .join(broadcast(comp.select(col("id").as("rep_id"), col("component").as("newrep"))),
             Seq("rep_id"), "left")
-          .select(col("member_id"), coalesce(col("newrep"), col("rep_id")).as("rep_id"))
-          .union(comp.filter(col("kept"))
-            .select(col("id").as("member_id"), col("component").as("rep_id"))))
-        write("memrep", "_state/memrep")(remapped)
+          .select(col("member_id"), coalesce(col("newrep"), col("rep_id")).as("rep_id"),
+            lit(true).as("prior"))
+          .union(comp.filter(col("kept")).select(col("id").as("member_id"),
+            col("component").as("rep_id"), lit(false).as("prior"))))
         // decisions: one row per input doc — a keeper's verdict from CC and
         // the containment gate (CC non-reps keep rejected_near_dup: stage
         // order) — plus two tombstone sets, since appended admissions
@@ -1586,11 +1606,10 @@ object Streams {
         // rep after this batch's CC, not containment-rejected before) is
         // retracted_containment
         val verdict = comp.filter(col("kept"))
-          .join(broadcast(contained.filter(col("isNew")).select(col("doc_id").as("id"),
-            lit(true).as("cj"))), Seq("id"), "left")
+          .join(broadcast(contained), col("id") === col("doc_id"), "left")
           .select(col("id").as("doc_id"),
             when(col("id") =!= col("component"), "rejected_near_dup")
-              .when(col("cj").isNotNull, "rejected_containment")
+              .when(col("doc_id").isNotNull, "rejected_containment")
               .otherwise("admitted").as("v"))
         val out = cp("out")(in.join(broadcast(verdict), Seq("doc_id"), "left")
           .select(col("doc_id"),
@@ -1599,18 +1618,26 @@ object Streams {
               .otherwise("rejected_quality").as("outcome"))
           .union(comp.filter(!col("kept") && col("id") =!= col("component"))
             .select(col("id").as("doc_id"), lit("retracted_near_dup")))
-          .union(broadcast(contained.filter(!col("isNew")))
-            .join(remapped.filter(col("member_id") === col("rep_id"))
-              .select(col("member_id").as("doc_id")), "doc_id")
-            .join(readStateBefore(s, s"$path/_state/crej", crejSchema, batchId),
-              Seq("doc_id"), "left_anti")
+          .union(remapped.filter(col("prior") && col("member_id") === col("rep_id"))
+            .select(col("member_id").as("doc_id"))
+            .join(broadcast(contained), Seq("doc_id"), "left_semi")
+            .join(family("crej").select("doc_id"), Seq("doc_id"), "left_anti")
             .select(col("doc_id"), lit("retracted_containment"))))
-        // the containment-rejected registry (this batch's rejections +
-        // retractions) — the state later batches consult so a doc is
-        // tombstoned at most once and never counted a survivor again
-        write("crej", "_state/crej")(out.filter(col("outcome")
-          .isin("rejected_containment", "retracted_containment")).select("doc_id"))
-        write("decisions", "decisions")(out)
+        // stage 4: this batch's state generation, in one file — ALL new
+        // keeper digests and token rows (cluster membership must stay
+        // matchable through dropped members), the remapped member->rep
+        // snapshot, and the containment-rejected registry (this batch's
+        // rejections and retractions), which later batches consult so a
+        // doc is tombstoned at most once and never a survivor again
+        write("state", logDir)(Seq(
+          tagged("digests", keepers.select("h")),
+          tagged("toks", batchToks.select(col("doc_id").as("member_id"),
+            col("n").as("nb"), col("w"))),
+          tagged("memrep", remapped),
+          tagged("crej", out.filter(col("outcome")
+            .isin("rejected_containment", "retracted_containment")).select("doc_id"))
+        ).reduce(_ union _).coalesce(1))
+        write("decisions", s"$path/decisions")(out)
         } finally {
           checkpointed.foreach(releaseLocalCheckpoint)
           graft.Caches.drain(s) // operators' query-local persists
@@ -1619,20 +1646,9 @@ object Streams {
       .start()
   }
 
-  /** Compact the curation pipeline's log-structured state: fold every
-    * committed `batch_id=N` generation of the digest registry and token
-    * inversion into one base generation (keeping the highest folded id, so
-    * "read strictly before batch B" sees identical content), and drop the
-    * member->rep snapshots superseded by the latest. Run BETWEEN batches
-    * (stop the query or call from a maintenance window) — after
-    * compaction, only batches newer than the fold can replay, which is
-    * exactly the committed-epoch guarantee foreachBatch already gives.
-    * The 100 TB analog is the keyed-store compaction the scaladoc above
-    * promises; returns the number of generations folded.
-    */
   /** Fold every committed `batch_id=N` generation of one state directory
-    * into the highest id, crash-safely: write the (optionally
-    * `transform`ed) union to a staging dir OUTSIDE the listing namespace,
+    * into the highest id, crash-safely: write the union, `transform`ed
+    * given that id, to a staging dir OUTSIDE the listing namespace,
     * attach a `_folded` manifest naming the superseded generations, SWAP
     * FIRST (originals still on disk), DELETE AFTER — a crash at any point
     * leaves either the originals intact or the manifest for
@@ -1644,7 +1660,7 @@ object Streams {
     */
   private def foldStateDir(s: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType,
-      transform: DataFrame => DataFrame = identity): Int = {
+      transform: (DataFrame, Long) => DataFrame): Int = {
     val all = stateBatchIds(s, dir).sorted // also heals a prior crash
     // the HIGHEST generation is written mid-batch, before the checkpoint
     // commit — after a mid-batch crash it belongs to a batch that will be
@@ -1655,8 +1671,7 @@ object Streams {
     if (gens.length <= 1) 0
     else {
       val top = gens.max
-      val merged = transform(s.read.schema(schema)
-        .parquet(gens.map(b => s"$dir/batch_id=$b"): _*))
+      val merged = transform(readGenerations(s, dir, schema, gens), top)
         .localCheckpoint(true) // sever lineage before rewriting sources
       // stage OUTSIDE the batch_id= listing namespace — a crashed
       // attempt can never be parsed as (or shadow) a generation
@@ -1689,7 +1704,7 @@ object Streams {
     val schema = StructType(Seq(StructField("b", LongType),
       StructField("op", StringType), StructField("doc_id", LongType),
       StructField("v", ArrayType(DoubleType))))
-    foldStateDir(s, s"$path/_state/ops", schema, df =>
+    foldStateDir(s, s"$path/_state/ops", schema, (df, _) =>
       df.groupBy("doc_id")
         .agg(max_by(struct(col("b"), col("op"), col("v")),
           struct(col("b"), (col("op") === "put").cast("int"))).as("last"))
@@ -1697,25 +1712,17 @@ object Streams {
           col("doc_id"), col("last.v").as("v")))
   }
 
-  def curationStateCompact(s: SparkSession, path: String): Int = {
-    import org.apache.spark.sql.types._
-    def fold(dir: String, schema: StructType): Int =
-      foldStateDir(s, dir, schema)
-    val digestSchema = StructType(Seq(StructField("h", StringType)))
-    val tokSchema = StructType(Seq(StructField("member_id", LongType),
-      StructField("nb", LongType), StructField("w", StringType)))
-    val crejSchema = StructType(Seq(StructField("doc_id", LongType)))
-    val folded = fold(s"$path/_state/digests", digestSchema) +
-      fold(s"$path/_state/toks", tokSchema) +
-      fold(s"$path/_state/crej", crejSchema)
-    // member->rep is snapshot-per-batch: keep the latest COMMITTED one.
-    // The newest snapshot may belong to a mid-batch crash (written before
-    // checkpoint commit); a replayed batch reads strictly before it, so
-    // the second-newest must survive compaction too.
-    val repDir = s"$path/_state/memrep"
-    val reps = stateBatchIds(s, repDir).sorted
-    reps.dropRight(2)
-      .foreach(b => FileSwap.rm(new java.io.File(s"$repDir/batch_id=$b")))
-    folded + math.max(0, reps.length - 2)
-  }
+  /** Compact the curation sink's state log: fold every committed
+    * generation into the highest committed one, so "read strictly before
+    * batch B" sees identical content. The member->rep map is a snapshot,
+    * so only the fold target's own `memrep` rows are kept. Run BETWEEN
+    * batches (stop the query or call from a maintenance window) — after
+    * compaction, only batches newer than the fold can replay, which is
+    * exactly the committed-epoch guarantee foreachBatch already gives.
+    * The 100 TB analog is a keyed-store compaction. Returns the number of
+    * generations folded.
+    */
+  def curationStateCompact(s: SparkSession, path: String): Int =
+    foldStateDir(s, s"$path/_state/log", curationLog, (df, top) =>
+      df.filter(col("family") =!= "memrep" || col("g") === top.toString))
 }
